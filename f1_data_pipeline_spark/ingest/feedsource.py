@@ -60,14 +60,19 @@ becomes one ``readStream``/``writeStream`` pair end to end.
 
 Scale/deployment note: offset planning reads ONLY manifest JSON (KBs per
 version); executors read their one parquet file each via Arrow and yield
-RecordBatches (zero row-at-a-time Python). Manifest access goes through
-``pyarrow.fs`` resolved from the table dir's own URI — the stream
-reader's driver process has no JVM/SparkSession, so Hadoop's FileSystem
-(the route ``storage.py`` takes) is out of reach, but ``pyarrow.fs``
-gives the same capability: plain paths, ``file:`` URIs and any
-object-store scheme pyarrow's filesystem registry resolves (s3/gcs/hdfs
-where the native bindings exist) all work for BOTH the manifest JSON and
-the data files (``pq.read_table`` resolves the identical URIs).
+RecordBatches (zero row-at-a-time Python). The stream reader's and the
+writer's driver process has no JVM/SparkSession, so all commit-log IO —
+head resolution, manifest and checkpoint reads, the staging claim, the
+commit record and checkpoint writes — goes through ``snaplog``, the one
+``pyarrow.fs`` implementation ``storage.py`` shares. Supported table
+dirs are plain paths, ``file:`` URIs, ``hdfs://``/``viewfs://`` and the
+object-store schemes pyarrow's filesystem registry resolves (s3/gs/abfs
+where the native bindings exist), for BOTH the manifest JSON and the
+data files (``pq.read_table`` resolves the identical URIs). The commit
+record is published once: atomically by hard link on local paths,
+check-then-write (single writer) on HDFS and object stores, where
+pyarrow.fs has no create-no-overwrite; Hadoop-only schemes such as
+``s3a://`` fail typed at first touch.
 """
 
 from __future__ import annotations
@@ -86,8 +91,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-_MANIFEST_DIR = "_manifests"
-_CKPT_POINTER = "_last_checkpoint"
+from f1_data_pipeline_spark import snaplog
+from f1_data_pipeline_spark.snaplog import SnapshotConflictError
 
 # commit ops that never change table CONTENT — the stream skips them
 # silently (re-emitting rows a rewrite merely moved would duplicate the
@@ -113,104 +118,6 @@ def _norm_dir(path: str) -> str:
     return path.rstrip("/")
 
 
-def _fs(path: str):
-    """``(pyarrow FileSystem, fs-internal path)`` for a table dir — the
-    URI-capable manifest IO (parity with ``storage._read_manifest``'s
-    Hadoop-FS route, minus the JVM the stream reader process lacks)."""
-    from pyarrow import fs as pafs
-
-    if "://" in path or path.startswith("file:"):
-        return pafs.FileSystem.from_uri(path)
-    return pafs.LocalFileSystem(), path
-
-
-def _list_versions(table_dir: str) -> list[int]:
-    from pyarrow import fs as pafs
-
-    f, root = _fs(table_dir)
-    sel = pafs.FileSelector(
-        f"{root.rstrip('/')}/{_MANIFEST_DIR}", allow_not_found=True
-    )
-    out = []
-    for info in f.get_file_info(sel):
-        name = info.base_name
-        if name.endswith(".json") and name[:-5].isdigit():
-            out.append(int(name[:-5]))
-    return sorted(out)
-
-
-def _latest_version(table_dir: str) -> int:
-    """The head version, checkpoint-accelerated (0 = no commit): read the
-    table's ``_last_checkpoint`` pointer and probe FORWARD from it —
-    versions are contiguous by the commit protocol — instead of listing
-    the whole manifest directory. ``latestOffset`` runs on EVERY trigger,
-    so on a long-lived table (100k+ commits) the listing is the hot cost
-    this avoids. Any pointer problem falls back to the full listing."""
-    from pyarrow import fs as pafs
-
-    f, root = _fs(table_dir)
-    mdir = f"{root.rstrip('/')}/{_MANIFEST_DIR}"
-    v = _ckpt_pointer_version(table_dir)
-    if v is None:
-        versions = _list_versions(table_dir)
-        return versions[-1] if versions else 0
-    head = v
-    while f.get_file_info(f"{mdir}/{head + 1}.json").type != pafs.FileType.NotFound:
-        head += 1
-    if head == v and f.get_file_info(f"{mdir}/{v}.json").type == pafs.FileType.NotFound:
-        # corrupt pointer (its own version was never committed): fall
-        # back to the listing rather than report a phantom head
-        versions = _list_versions(table_dir)
-        return versions[-1] if versions else 0
-    return head
-
-
-def _ckpt_pointer_version(table_dir: str) -> int | None:
-    """POINTER-ONLY read of ``_manifests/_last_checkpoint``'s version
-    field (None when absent/torn) — the ONE implementation shared by
-    version resolution and the retention-horizon diagnosis; phantom-
-    pointer trust validation stays with the callers that need it."""
-    try:
-        f, root = _fs(table_dir)
-        with f.open_input_stream(
-            f"{root.rstrip('/')}/{_MANIFEST_DIR}/{_CKPT_POINTER}"
-        ) as s:
-            return int(json.loads(s.read())["version"])
-    except Exception:
-        return None
-
-
-def _read_json(table_dir: str, version: int) -> dict:
-    f, root = _fs(table_dir)
-    p = f"{root.rstrip('/')}/{_MANIFEST_DIR}/{version}.json"
-    try:
-        with f.open_input_stream(p) as s:
-            return json.loads(s.read())
-    except FileNotFoundError:
-        # distinguish "never committed" from "committed, then retired by
-        # snapshot_expire_log": a lagging stream whose cursor fell behind
-        # the retention horizon must be told WHY its offsets are gone
-        # (Delta's 'offsets no longer available' shape), not pointed at
-        # corruption. At or below the checkpoint pointer the version was
-        # provably committed once — the pointer only ever trails commits.
-        ck = _ckpt_pointer_version(table_dir)
-        if ck is not None and version <= ck:
-            raise FileNotFoundError(
-                f"snapshotfeed: version {version} of {table_dir} is no "
-                f"longer available — it is at or behind the table's "
-                f"manifest-log checkpoint (v{ck}), so snapshot_expire_log "
-                f"retention most likely removed its commit record. A "
-                f"stream must restart with a FRESH checkpoint (the "
-                f"initial snapshot re-baselines); a batch changeFeed must "
-                f"raise its starting bound above the horizon. Raise the "
-                f"table's keep_last if readers can lag this far"
-            ) from None
-        raise FileNotFoundError(
-            f"snapshotfeed: version {version} was never committed (or was "
-            f"removed) under {table_dir} — cannot plan the batch"
-        ) from None
-
-
 def _abs_entry(table_dir: str, path: str) -> str:
     # shallow-clone manifests hold ABSOLUTE entry paths; regular entries
     # are table-relative (same resolution rule as storage._entry_uri).
@@ -219,10 +126,6 @@ def _abs_entry(table_dir: str, path: str) -> str:
     if path.startswith("/") or "://" in path or path.startswith("file:"):
         return path
     return f"{table_dir}/{path}"
-
-
-def _dv_key(entry_path: str) -> str:
-    return "/".join(entry_path.rstrip("/").split("/")[-2:])
 
 
 class _FeedFile(InputPartition):
@@ -455,7 +358,9 @@ def _live_file_partitions(
     the manifest envelope/Bloom stats against pushed-down where-triples
     — a superset guarantee (pruning never drops a matching row; the
     engine still applies the exact filters to the surviving rows)."""
-    m = _read_json(table_dir, version)
+    from f1_data_pipeline_spark.storage import _dv_key, _entry_prunable
+
+    m = snaplog.read_manifest(table_dir, version)
     if m.get("files") is None:
         raise ValueError(
             "snapshotfeed needs file-list manifests — rewrite the table "
@@ -465,8 +370,6 @@ def _live_file_partitions(
     dv_files = (dv or {}).get("files", {})
     dv_dir = _abs_entry(table_dir, dv["dir"]) if dv else None
     parts: list[_FeedFile] = []
-    if where:
-        from f1_data_pipeline_spark.storage import _entry_prunable
     for entry in m["files"]:
         if not entry.get("rows", 0):
             continue
@@ -484,32 +387,6 @@ def _live_file_partitions(
     if not parts:
         parts.append(_FeedFile(None))  # zero-row scan, planner satisfied
     return parts
-
-
-def _read_checkpoint_pa(table_dir: str) -> dict | None:
-    """pyarrow twin of ``storage._read_checkpoint`` for the JVM-less
-    reader processes: pointer → compacted ``{"version", "log"}``, None
-    when absent/torn/phantom (same trust validation — a pointer whose own
-    version was never committed is corruption, not a checkpoint)."""
-    from pyarrow import fs as pafs
-
-    try:
-        f, root = _fs(table_dir)
-        mdir = f"{root.rstrip('/')}/{_MANIFEST_DIR}"
-        with f.open_input_stream(f"{mdir}/{_CKPT_POINTER}") as s:
-            meta = json.loads(s.read())
-        with f.open_input_stream(f"{mdir}/{meta['path']}") as s:
-            ck = json.loads(s.read())
-        if int(ck["version"]) != int(meta["version"]) or "log" not in ck:
-            return None
-        if (
-            f.get_file_info(f"{mdir}/{int(ck['version'])}.json").type
-            == pafs.FileType.NotFound
-        ):
-            return None
-        return ck
-    except Exception:
-        return None
 
 
 def _parse_ts_option(opt, name: str) -> float:
@@ -569,12 +446,12 @@ def _version_bound_asof(
     shape); ``after=False`` → the LAST version committed at-or-before
     ``ts`` (0 when the first commit is later) — an exactly-at-``ts``
     stamp belongs to BOTH bounds, so the stop test is ``>=`` for after
-    and strict ``>`` for before (the JVM twin's contract; a shared ``>=``
-    silently dropped the equal-stamped commit from ``endingTimestamp``).
-    Pre-stamp-era records count as infinitely old; retention-expired
-    manifests in the tail are skipped like the JVM twin skips them.
-    ``latest`` and ``ck`` (``_read_checkpoint_pa``) come from the caller
-    so a two-bound resolution parses the compacted log once."""
+    and strict ``>`` for before (``snapshot_version_asof``'s contract; a
+    shared ``>=`` silently dropped the equal-stamped commit from
+    ``endingTimestamp``). Pre-stamp-era records count as infinitely old;
+    retention-expired manifests in the tail are skipped, as there.
+    ``latest`` and ``ck`` (``snaplog.read_checkpoint``) come from the
+    caller so a two-bound resolution parses the compacted log once."""
     eff = float("-inf")
     best_before = 0
 
@@ -592,7 +469,7 @@ def _version_bound_asof(
         start = int(ck["version"]) + 1
     for v in range(start, latest + 1):
         try:
-            m = _read_json(table_dir, v)
+            m = snaplog.read_manifest(table_dir, v)
         except FileNotFoundError:
             continue  # retention-expired record: resolve past the gap
         if m.get("ts") is not None:
@@ -619,18 +496,18 @@ def _replay_span_partitions(
     resurrected inserts) when ``change_feed``, maintenance commits emit
     nothing, and rewrite commits raise (``remedy`` names the consumer's
     way out) unless ``skip_changes``. Pure manifest JSON; no data IO."""
+    from f1_data_pipeline_spark.storage import _dv_key, _entry_prunable
+
     parts: list[_FeedFile] = []
-    if exact:
-        from f1_data_pipeline_spark.storage import _entry_prunable
     for v in range(s + 1, e + 1):
-        m = _read_json(table_dir, v)
+        m = snaplog.read_manifest(table_dir, v)
         op = m.get("op")
         if op in _MAINTENANCE_OPS or (
             op is None and any(k in m for k in _MAINTENANCE_KEYS)
         ):
             continue  # content-preserving: nothing to emit
         # v=1 is table birth: its predecessor is the empty table
-        prev = _read_json(table_dir, v - 1) if v > 1 else {"files": []}
+        prev = snaplog.read_manifest(table_dir, v - 1) if v > 1 else {"files": []}
         if m.get("files") is None or prev.get("files") is None:
             raise ValueError(
                 "snapshotfeed needs file-list manifests on both "
@@ -742,9 +619,6 @@ def _replay_span_partitions(
     return parts
 
 
-_WHERE_OPS = ("=", "<", "<=", ">", ">=", "in", "is_null", "is_not_null")
-
-
 def _coerce_where_value(col: str, val, dtype):
     """Plan-time check/coercion of a where-triple literal against the
     column's DECLARED Spark type. JSON has no time types, so an ISO-8601
@@ -824,6 +698,8 @@ def _parse_where_option(opt, schema) -> list[tuple]:
     triples, e.g. ``[["event_id", ">=", 100]]``) and validate it against
     the declared data schema — a typo'd column or op must fail at plan
     time, not silently prune nothing."""
+    from f1_data_pipeline_spark.storage import _WHERE_OPS
+
     if not opt:
         return []
     try:
@@ -928,7 +804,7 @@ class SnapshotFeedBatchReader(DataSourceReader):
             yield f
 
     def partitions(self):
-        latest = _latest_version(self._dir)
+        latest = snaplog.latest_version(self._dir)
         if latest < 1:
             raise FileNotFoundError(
                 f"snapshotfeed: no committed snapshot in {self._dir}"
@@ -1013,13 +889,13 @@ class SnapshotFeedChangesReader(DataSourceReader):
         self._exact = _parse_where_option(options.get("where"), data_schema)
 
     def partitions(self):
-        latest = _latest_version(self._dir)
+        latest = snaplog.latest_version(self._dir)
         if latest < 1:
             raise FileNotFoundError(
                 f"snapshotfeed: no committed snapshot in {self._dir}"
             )
         ck = (
-            _read_checkpoint_pa(self._dir)
+            snaplog.read_checkpoint(self._dir)
             if (self._start_ts is not None or self._end_ts is not None)
             else None
         )
@@ -1060,7 +936,7 @@ class SnapshotFeedChangesReader(DataSourceReader):
             # instead of surfacing as a confusing miss on a version the
             # caller never asked for.
             try:
-                _read_json(self._dir, s - 1)
+                snaplog.read_manifest(self._dir, s - 1)
             except FileNotFoundError:
                 raise FileNotFoundError(
                     f"snapshotfeed: changeFeed from version {s} needs "
@@ -1185,17 +1061,13 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
     # precedes the higher prune's listing.
 
     def _cursor_markers(self) -> list[tuple[int, str]]:
-        from pyarrow import fs as pafs
-
-        f, root = _fs(self._pacing_dir)
-        sel = pafs.FileSelector(root, allow_not_found=True)
         out = []
-        for info in f.get_file_info(sel):
+        for info in snaplog.listdir(self._pacing_dir):
             name = info.base_name
             if name.startswith("cursor.") and name.endswith(".json"):
                 mid = name[len("cursor."):-len(".json")]
                 if mid.isdigit():
-                    out.append((int(mid), f"{root}/{name}"))
+                    out.append((int(mid), info.path))
         return sorted(out)
 
     def _recover_cursor(self) -> int | None:
@@ -1211,7 +1083,7 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
             if not markers:
                 return None
             end, path = markers[-1]
-            f, _ = _fs(self._pacing_dir)
+            f, _ = snaplog.resolve(self._pacing_dir)
             with f.open_input_stream(path) as s:
                 cur = json.loads(s.read())
             if cur.get("table") != self._dir:
@@ -1227,7 +1099,7 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
         (unpaced first batch, never a wrong offset). Failures raise — a
         misconfigured pacingStateDir should fail the query loudly, not
         silently disable the pacing it was set up for."""
-        f, root = _fs(self._pacing_dir)
+        f, root = snaplog.resolve(self._pacing_dir)
         f.create_dir(root, recursive=True)
         own = f"{root}/cursor.{int(end):020d}.json"
         with f.open_output_stream(own) as s:
@@ -1261,7 +1133,7 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
         pace (or point at retention-expired versions for) a new stream."""
         self._last_end = None
         try:
-            f, _ = _fs(self._pacing_dir)
+            f, _ = snaplog.resolve(self._pacing_dir)
             for _n, path in self._cursor_markers():
                 try:
                     f.delete_file(path)
@@ -1283,7 +1155,7 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
             # baseline; it can never sit behind a committed offset,
             # because a fresh checkpoint has none)
             self._drop_cursor()
-        latest = _latest_version(self._dir)
+        latest = snaplog.latest_version(self._dir)
         if latest < 1:
             raise FileNotFoundError(
                 f"snapshotfeed: no committed snapshot in {self._dir}"
@@ -1297,7 +1169,7 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
                 self._starting_ts,
                 after=True,
                 latest=latest,
-                ck=_read_checkpoint_pa(self._dir),
+                ck=snaplog.read_checkpoint(self._dir),
             )
             return {"version": v - 1, "mode": "replay"}
         if self._starting is not None:
@@ -1320,7 +1192,7 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
         return {"version": 0, "mode": "snapshot"}
 
     def latestOffset(self) -> dict:
-        cur = _latest_version(self._dir)
+        cur = snaplog.latest_version(self._dir)
         # cap only against a KNOWN cursor — set by this run's previous
         # partitions() call, or recovered from pacingStateDir (where the
         # previous run's partitions() persisted it, so it is never behind
@@ -1341,7 +1213,7 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
             total, v = 0, self._last_end
             prev = None  # carried forward: one manifest read per version
             while v < cur:
-                m = _read_json(self._dir, v + 1)
+                m = snaplog.read_manifest(self._dir, v + 1)
                 op = m.get("op")
                 if op in _MAINTENANCE_OPS or (
                     op is None and any(k in m for k in _MAINTENANCE_KEYS)
@@ -1354,7 +1226,11 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
                     prev = m
                     continue
                 if prev is None:
-                    prev = _read_json(self._dir, v) if v > 0 else {"files": []}
+                    prev = (
+                        snaplog.read_manifest(self._dir, v)
+                        if v > 0
+                        else {"files": []}
+                    )
                 prev_paths = (
                     {x["path"] for x in prev["files"]}
                     if prev.get("files") is not None
@@ -1558,7 +1434,7 @@ def _write_staged_file(table_dir: str, subdir: str, it, schema_json: str):
     if not batches:
         return _StagedFile()
     tbl = pa.Table.from_batches(batches, schema=target)
-    f, root = _fs(table_dir)
+    f, root = snaplog.resolve(table_dir)
     sdir = f"{root.rstrip('/')}/{_STAGING}/{subdir}"
     f.create_dir(sdir, recursive=True)
     name = f"part-{uuid.uuid4().hex}.parquet"
@@ -1569,97 +1445,22 @@ def _write_staged_file(table_dir: str, subdir: str, it, schema_json: str):
     return _StagedFile(name, subdir, tbl.num_rows, nbytes, _arrow_stats(tbl))
 
 
-# schemes whose commit publication is a genuinely ATOMIC claim: local
-# paths publish by hard link (EEXIST-atomic syscall), HDFS-family stores
-# by tmp-write + rename (an atomic namespace operation that refuses an
-# existing destination). Object stores expose no conditional PUT through
-# pyarrow.fs, so they fall back to check-then-write — the documented
-# single-writer caveat every log-structured format carries there, and
-# the reason multiWriter=true refuses them at plan time.
-_ATOMIC_COMMIT_SCHEMES = ("file", "hdfs", "viewfs")
-
-
-def _commit_scheme(path: str) -> str | None:
-    """The table dir's URI scheme (None for a plain local path)."""
-    if "://" in path:
-        return path.split("://", 1)[0]
-    if path.startswith("file:"):
-        return "file"
-    return None
-
-
 def _require_atomic_store(path: str, caller: str) -> None:
     """The multiWriter=true plan-time gate: refuse typed on stores whose
     commit publication is check-then-write (no conditional PUT through
     pyarrow.fs) — concurrent commits there can silently overwrite each
     other, exactly the lost-update the option exists to rule out."""
-    sch = _commit_scheme(path)
-    if sch is None or sch in _ATOMIC_COMMIT_SCHEMES:
+    sch = snaplog.scheme(path)
+    if sch in snaplog.ATOMIC_SCHEMES:
         return
     raise ValueError(
         f"{caller}: multiWriter=true requires a store with an atomic "
-        f"create-no-overwrite — local/file: paths (hard-link publish) or "
-        f"hdfs:/viewfs: (rename publish). {sch}:// offers no conditional "
-        f"PUT through this writer, so concurrent commits could silently "
-        f"lose updates. Coordinate writers externally and drop the "
-        f"option, or point the table at a posix/HDFS dir"
+        f"create-no-overwrite — local/file: paths (hard-link publish). "
+        f"{sch}:// offers no conditional PUT through this writer, so "
+        f"concurrent commits could silently lose updates. Coordinate "
+        f"writers externally and drop the option, or point the table at "
+        f"a posix dir"
     )
-
-
-def _publish_record(table_dir: str, version: int, payload: dict) -> bool:
-    """Atomically create ``_manifests/N.json`` (the commit). False = lost
-    the race to a concurrent writer. Local paths publish by hard link
-    (complete-at-visibility + EEXIST atomicity, exactly
-    ``storage._commit_record``); HDFS-family stores publish by tmp-write
-    + rename (atomic, refuses an existing destination — the same claim
-    the JVM twin gets from ``create(overwrite=false)`` there); other
-    stores check-then-write with the single-writer caveat every
-    log-structured format carries there (gated by ``multiWriter``)."""
-    import os
-    import time
-    import uuid
-
-    from pyarrow import fs as pafs
-
-    f, root = _fs(table_dir)
-    mdir = f"{root.rstrip('/')}/{_MANIFEST_DIR}"
-    rec = f"{mdir}/{version}.json"
-    payload.setdefault("ts", round(time.time(), 3))
-    data = json.dumps(payload).encode()
-    if isinstance(f, pafs.LocalFileSystem):
-        os.makedirs(mdir, exist_ok=True)
-        tmp = f"{mdir}/.{version}.json.{uuid.uuid4().hex}.tmp"
-        with open(tmp, "wb") as out:
-            out.write(data)
-        try:
-            os.link(tmp, rec)
-        except FileExistsError:
-            return False
-        finally:
-            os.unlink(tmp)
-        return True
-    if _commit_scheme(table_dir) in ("hdfs", "viewfs"):
-        f.create_dir(mdir, recursive=True)
-        tmp = f"{mdir}/.{version}.json.{uuid.uuid4().hex}.tmp"
-        with f.open_output_stream(tmp) as out:
-            out.write(data)
-        try:
-            f.move(tmp, rec)  # HDFS rename: atomic, fails on existing dst
-        except Exception:
-            try:
-                f.delete_file(tmp)
-            except FileNotFoundError:
-                pass
-            if f.get_file_info(rec).type != pafs.FileType.NotFound:
-                return False  # lost the race: someone committed first
-            raise
-        return True
-    if f.get_file_info(rec).type != pafs.FileType.NotFound:
-        return False
-    f.create_dir(mdir, recursive=True)
-    with f.open_output_stream(rec) as out:
-        out.write(data)
-    return True
 
 
 def _commit_staged(
@@ -1675,19 +1476,18 @@ def _commit_staged(
     batch already landed — the streaming replay case). Runs in the
     driver's Python worker, which has no SparkSession — all IO is
     pyarrow.fs, all decisions manifest JSON."""
-    import os
     import time
 
     from pyspark.sql.types import StructType
 
     files = [m for m in messages if m is not None and m.name]
-    f, root = _fs(table_dir)
+    f, root = snaplog.resolve(table_dir)
     write_schema = StructType.fromJson(json.loads(schema_json))
     write_types = {x.name: x.dataType.simpleString() for x in write_schema.fields}
 
     for attempt in range(25):
-        latest = _latest_version(table_dir)
-        cur = _read_json(table_dir, latest) if latest >= 1 else None
+        latest = snaplog.latest_version(table_dir)
+        cur = snaplog.read_manifest(table_dir, latest) if latest >= 1 else None
         if cur is not None:
             # txn replay gate FIRST (SetTransaction semantics): a batchId
             # at or below the stamped watermark already committed — skip
@@ -1744,9 +1544,9 @@ def _commit_staged(
                     )
         version = latest + 1
         vdir = f"{root.rstrip('/')}/v={version}"
-        from pyarrow import fs as pafs
-
-        if f.get_file_info(vdir).type != pafs.FileType.NotFound:
+        try:
+            snaplog.claim_version(table_dir, version, "snapshotfeed writer")
+        except SnapshotConflictError:
             # a concurrent writer is staging this version (or a crashed
             # one left an orphan): wait for its commit to move `latest`
             # forward, then retry; persistent orphans surface below
@@ -1758,22 +1558,7 @@ def _commit_staged(
                     f"writer's orphan: run storage.snapshot_clean_orphans("
                     f"spark, table_dir) (it also sweeps leftover _staging "
                     f"files), then retry the write"
-                )
-            time.sleep(0.05 * (attempt + 1))
-            continue
-        claimed = True
-        if isinstance(f, pafs.LocalFileSystem):
-            os.makedirs(vdir, exist_ok=True)
-            try:
-                fd = os.open(f"{vdir}/_CLAIM", os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.close(fd)
-            except FileExistsError:
-                claimed = False
-        else:
-            f.create_dir(vdir, recursive=True)
-            with f.open_output_stream(f"{vdir}/_CLAIM") as out:
-                out.write(b"")
-        if not claimed:
+                ) from None
             time.sleep(0.05 * (attempt + 1))
             continue
         for m in files:
@@ -1829,96 +1614,28 @@ def _commit_staged(
             merged_txn[txn_app] = int(txn_batch)
         if merged_txn:
             payload["properties"] = {"txn": merged_txn}
-        if _publish_record(table_dir, version, payload):
-            _maybe_checkpoint_pa(table_dir, version, payload)
-            return version
-        # lost the publish race (e.g. a metadata-only commit took N):
-        # move our files back to staging and re-derive against the head
-        for m in files:
-            f.move(
-                f"{vdir}/{m.name}",
-                f"{root.rstrip('/')}/{_STAGING}/{m.subdir}/{m.name}",
-            )
-        f.delete_dir(vdir)
-        time.sleep(0.05 * (attempt + 1))
+        try:
+            snaplog.commit(table_dir, version, payload)
+        except SnapshotConflictError:
+            # lost the publish race (e.g. a metadata-only commit took N):
+            # move our files back to staging and re-derive against the head
+            for m in files:
+                f.move(
+                    f"{vdir}/{m.name}",
+                    f"{root.rstrip('/')}/{_STAGING}/{m.subdir}/{m.name}",
+                )
+            f.delete_dir(vdir)
+            time.sleep(0.05 * (attempt + 1))
+            continue
+        return version
     raise RuntimeError(
         f"snapshotfeed writer: lost {25} consecutive commit races under "
         f"{table_dir} — a runaway concurrent writer?"
     )
 
 
-def _maybe_checkpoint_pa(table_dir: str, version: int, payload: dict) -> None:
-    """Manifest-log checkpoint parity for the writer path: storage.py
-    auto-checkpoints on its interval through Hadoop FS inside
-    ``_commit_record``; commits published HERE (the DataSource writer's
-    Python worker, no JVM) would otherwise skip the cadence, letting the
-    pointer age on writer-only tables. Same format, same interval, same
-    best-effort contract — any failure costs speed, never correctness."""
-    import uuid
-
-    try:
-        from f1_data_pipeline_spark.storage import (
-            SNAPSHOT_CHECKPOINT_INTERVAL as interval,
-        )
-        from f1_data_pipeline_spark.storage import _history_rec
-
-        if not interval or interval < 1 or version % interval:
-            return
-        from pyarrow import fs as pafs
-
-        f, root = _fs(table_dir)
-        mdir = f"{root.rstrip('/')}/{_MANIFEST_DIR}"
-        prev = _read_checkpoint_pa(table_dir)  # trust rules live in ONE place
-        if prev is not None and int(prev["version"]) >= version:
-            return
-        log, start = (
-            ([], 1)
-            if prev is None
-            else (list(prev["log"]), int(prev["version"]) + 1)
-        )
-        for v in range(start, version + 1):
-            if v == version:
-                log.append(_history_rec(v, payload))
-                continue
-            try:
-                log.append(_history_rec(v, _read_json(table_dir, v)))
-            except FileNotFoundError:
-                continue
-        ck = f"{mdir}/{version}.ckpt.json"
-        if f.get_file_info(ck).type == pafs.FileType.NotFound:
-            tmp = f"{mdir}/.{version}.ckpt.{uuid.uuid4().hex}.tmp"
-            with f.open_output_stream(tmp) as out:
-                out.write(json.dumps({"version": version, "log": log}).encode())
-            try:
-                f.move(tmp, ck)
-            except Exception:
-                try:
-                    f.delete_file(tmp)
-                except FileNotFoundError:
-                    pass
-        ptr = f"{mdir}/{_CKPT_POINTER}"
-        tmp2 = f"{mdir}/.{_CKPT_POINTER}.{uuid.uuid4().hex}.tmp"
-        with f.open_output_stream(tmp2) as out:
-            out.write(
-                json.dumps(
-                    {"version": version, "path": f"{version}.ckpt.json"}
-                ).encode()
-            )
-        for stale in (ptr, f"{mdir}/.{_CKPT_POINTER}.crc"):
-            # the pointer may have been written JVM-side last: Hadoop's
-            # local FS keeps a checksum sidecar that would fail the next
-            # JVM read of a pyarrow-rewritten pointer — drop both
-            try:
-                f.delete_file(stale)
-            except FileNotFoundError:
-                pass
-        f.move(tmp2, ptr)
-    except Exception:
-        pass
-
-
 def _abort_staged(table_dir: str, messages) -> None:
-    f, root = _fs(table_dir)
+    f, root = snaplog.resolve(table_dir)
     for m in messages or []:
         if m is not None and getattr(m, "name", None):
             try:
@@ -2024,13 +1741,13 @@ class SnapshotFeedDataSource(DataSource):
                 "snapshotfeed requires a table dir: .load('/path/to/table')"
             )
         tdir = _norm_dir(path)
-        latest = _latest_version(tdir)
+        latest = snaplog.latest_version(tdir)
         if latest < 1:
             raise FileNotFoundError(f"snapshotfeed: no committed snapshot in {tdir}")
         # batch time travel reads the TARGET version's committed schema
         # (a later evolution must not leak columns into an old snapshot)
         v = self.options.get("version")
-        m = _read_json(tdir, int(v) if v is not None else latest)
+        m = snaplog.read_manifest(tdir, int(v) if v is not None else latest)
         sch = m.get("schema")
         if not sch:
             raise ValueError(

@@ -1,7 +1,8 @@
-"""Join operators beyond vanilla equi-joins: as-of, range, and the
-broadcast/semi/anti helper surface (SURVEY §2.7; as-of declared at §2.12 as
-an engine capability the reference's data model implies — latest weather at
-telemetry time — but never implements).
+"""Join operators beyond vanilla equi-joins: as-of and range (SURVEY §2.7;
+as-of declared at §2.12 as an engine capability the reference's data model
+implies — latest weather at telemetry time — but never implements). Plain
+broadcast, semi and anti joins are ``DataFrame.join`` one-liners and need
+no helper.
 
 As-of is implemented with the union + running-last-value trick rather than a
 join: both sides shuffle ONCE on the key, sort by time, and a single window
@@ -15,21 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def broadcast_lookup(fact: DataFrame, dim: DataFrame, on, how: str = "inner") -> DataFrame:
-    """J3/J6: dimension join that is guaranteed broadcast at any fact scale."""
-    return fact.join(F.broadcast(dim), on, how)
-
-
-def semi_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
-    """J2: existence filter without row multiplication."""
-    return left.join(right, on, "left_semi")
-
-
-def anti_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
-    """A10: NOT EXISTS."""
-    return left.join(right, on, "left_anti")
 
 
 def as_of_join(

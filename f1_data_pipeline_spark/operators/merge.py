@@ -29,20 +29,6 @@ def last_non_null_merge(
     return df.groupBy(*keys).agg(*aggs)
 
 
-def first_non_null_merge(
-    df: DataFrame, keys: list[str], order_col: str, cols: list[str] | None = None
-) -> DataFrame:
-    """First-wins variant (``min_by``): the K4 upsert flavor where an
-    existing value is kept and only missing fields are filled."""
-    if cols is None:
-        cols = [c for c in df.columns if c not in keys and c != order_col]
-    aggs = [
-        F.min_by(c, F.when(F.col(c).isNotNull(), F.col(order_col))).alias(c)
-        for c in cols
-    ]
-    return df.groupBy(*keys).agg(*aggs)
-
-
 def scd2_history(
     df: DataFrame,
     keys: list[str],

@@ -124,12 +124,6 @@ def winnow_fingerprint_array(text: str = "text", k: int = 8, w: int = 4) -> Colu
     )
 
 
-def winnow_fingerprint(text: str = "text", k: int = 8, w: int = 4) -> Column:
-    """CSV serialization of ``winnow_fingerprint_array`` (hashable by any
-    downstream comparator; empty string for sub-``k`` documents)."""
-    return F.array_join(winnow_fingerprint_array(text, k, w), ",")
-
-
 @functools.lru_cache(maxsize=None)
 def winnow_fingerprint_array_fast(k: int = 8, w: int = 4):
     """Vectorized twin of ``winnow_fingerprint_array``: an Arrow-batched
@@ -170,19 +164,6 @@ def winnow_fingerprint_array_fast(k: int = 8, w: int = 4):
         return pd.Series(out)
 
     return _winnow
-
-
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full stat bundle — single narrow projection, no shuffle."""
-    return df.withColumns(
-        {
-            "n_tokens": token_count(text_col),
-            "stop_ratio": stopword_ratio(text_col),
-            "awl": avg_word_len(text_col),
-            "pred_lang": lang_id(text_col),
-            "fp": fingerprint(text_col),
-        }
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1892,21 +1873,6 @@ def _encode_words(words: "DataFrame", merges: list, with_pieces: bool) -> "DataF
             yield pdf
 
     return words.mapInPandas(kernel, out_schema)
-
-
-def bpe_encode_vocab(
-    df: DataFrame, merges: list, text_col: str = "text"
-) -> DataFrame:
-    """Encode each DISTINCT corpus word once: the vocabulary table
-    (``word -> n_pieces, pieces``) under a learned merge table. One
-    vocab-pass shuffle (the same word-frequency aggregate ``bpe_train``
-    starts from), then the merge loop runs as a scan-local Arrow kernel
-    over n_vocab rows — not n_tokens. Zipf makes this the whole trick:
-    re-encoding every word *occurrence* (what ``bpe_encode`` does) walks
-    the same few thousand hot words billions of times at 100 TB; encoding
-    the vocabulary walks each exactly once."""
-    vocab = df.select(F.explode(tokens(text_col)).alias("word")).distinct()
-    return _encode_words(vocab, merges, with_pieces=True)
 
 
 def bpe_encode_fast(

@@ -1464,8 +1464,8 @@ def x_snapshot_cdc(t: Tables) -> DataFrame:
     import tempfile
     import uuid
 
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_read,
         snapshot_upsert,
         snapshot_write,
@@ -1492,7 +1492,7 @@ def x_snapshot_cdc(t: Tables) -> DataFrame:
         .withColumn("val", F.col("val") + 1000)
     )
     snapshot_upsert(spark, tdir, updates, key="event_id", cluster_files=2)
-    manifest = _read_manifest(spark, tdir, 2)
+    manifest = read_manifest(tdir, 2)
     if not any(e["path"].startswith("v=1/") for e in manifest["files"]):
         raise RuntimeError(
             "snapshot CDC upsert rewrote every file — copy-on-write regressed"
@@ -1550,8 +1550,8 @@ def x_snapshot_changes(t: Tables) -> DataFrame:
     import tempfile
     import uuid
 
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_changes,
         snapshot_delete,
         snapshot_upsert,
@@ -1589,8 +1589,8 @@ def x_snapshot_changes(t: Tables) -> DataFrame:
         spark, tdir, where=[("event_id", ">=", 200), ("event_id", "<=", 209)]
     )
     feed = snapshot_changes(spark, tdir, "event_id", 1, v3)
-    m1 = {e["path"] for e in _read_manifest(spark, tdir, 1)["files"]}
-    m3 = {e["path"] for e in _read_manifest(spark, tdir, v3)["files"]}
+    m1 = {e["path"] for e in read_manifest(tdir, 1)["files"]}
+    m3 = {e["path"] for e in read_manifest(tdir, v3)["files"]}
     if not (m1 & m3):
         raise RuntimeError(
             "no files carried across v1→v3 — copy-on-write regressed"
@@ -1651,8 +1651,8 @@ def x_table_changes(t: Tables) -> DataFrame:
     import uuid
 
     from f1_data_pipeline_spark.ingest import feedsource
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_append,
         snapshot_delete,
         snapshot_restamp,
@@ -1678,7 +1678,7 @@ def x_table_changes(t: Tables) -> DataFrame:
         mode="dv",
     )                                                                # v4
     snapshot_append(slice_(200, 299), tdir)                          # v5
-    m4 = _read_manifest(spark, tdir, 4)
+    m4 = read_manifest(tdir, 4)
     if not all(e["path"].startswith(("v=1/", "v=2/")) for e in m4["files"]):
         raise RuntimeError(
             "x_table_changes: the DV delete rewrote data files — "
@@ -1739,8 +1739,8 @@ def x_cdf_timestamps(t: Tables) -> DataFrame:
     import uuid
 
     from f1_data_pipeline_spark.ingest import feedsource
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_append,
         snapshot_delete,
     )
@@ -1764,7 +1764,7 @@ def x_cdf_timestamps(t: Tables) -> DataFrame:
         mode="dv",
     )                                                                # v3
     snapshot_append(slice_(200, 299), tdir)                          # v4
-    stamps = [float(_read_manifest(spark, tdir, v)["ts"]) for v in (1, 2, 3, 4)]
+    stamps = [float(read_manifest(tdir, v)["ts"]) for v in (1, 2, 3, 4)]
     if not all(a < b for a, b in zip(stamps, stamps[1:])):
         raise RuntimeError(
             "x_cdf_timestamps: commit stamps did not strictly increase — "
@@ -1852,8 +1852,8 @@ def x_cdf_rewrite(t: Tables) -> DataFrame:
     import uuid
 
     from f1_data_pipeline_spark.ingest import feedsource
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_delete,
         snapshot_restore,
         snapshot_upsert,
@@ -1885,7 +1885,7 @@ def x_cdf_rewrite(t: Tables) -> DataFrame:
     snapshot_delete(spark, tdir, [("event_id", "<", 50)], mode="cow")   # v3
     snapshot_restore(spark, tdir, 2)                                    # v4
     for v in (2, 3, 4):
-        if not _read_manifest(spark, tdir, v).get("changes"):
+        if not read_manifest(tdir, v).get("changes"):
             raise RuntimeError(
                 f"x_cdf_rewrite: rewrite commit v={v} recorded no change "
                 f"files — CDF materialization regressed"
@@ -2002,8 +2002,8 @@ def x_snapshot_dv(t: Tables) -> DataFrame:
     import tempfile
     import uuid
 
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_delete,
         snapshot_read,
         snapshot_write,
@@ -2021,12 +2021,12 @@ def x_snapshot_dv(t: Tables) -> DataFrame:
     snapshot_write(
         base.repartitionByRange(8, "event_id"), tdir, stats_cols=["event_id"]
     )
-    m1 = _read_manifest(spark, tdir, 1)
+    m1 = read_manifest(tdir, 1)
     _, n1 = snapshot_delete(
         spark, tdir, [("event_id", ">=", 100), ("event_id", "<=", 119)], mode="dv"
     )
     v, n2 = snapshot_delete(spark, tdir, [("user_id", "=", 5)], mode="dv")
-    m = _read_manifest(spark, tdir, v)
+    m = read_manifest(tdir, v)
     if m["files"] != m1["files"]:
         raise RuntimeError(
             "deletion-vector delete rewrote data files — merge-on-read regressed"
@@ -2775,8 +2775,8 @@ def x_snapshot_append(t: Tables) -> DataFrame:
     import tempfile
     import uuid
 
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_append,
         snapshot_read,
         snapshot_write,
@@ -2805,10 +2805,10 @@ def x_snapshot_append(t: Tables) -> DataFrame:
         evolve_schema=True,
     )
     for v in (2, 3):
-        m = _read_manifest(spark, tdir, v)
+        m = read_manifest(tdir, v)
         if m.get("op") != "append":
             raise RuntimeError(f"v{v} lost its append op label: {m.get('op')}")
-        prior = {e["path"] for e in _read_manifest(spark, tdir, v - 1)["files"]}
+        prior = {e["path"] for e in read_manifest(tdir, v - 1)["files"]}
         if not prior <= {e["path"] for e in m["files"]}:
             raise RuntimeError(
                 f"append v{v} rewrote prior files — the O(new rows) "
@@ -2910,6 +2910,7 @@ def x_asof_checkpoint(t: Tables) -> DataFrame:
     import tempfile
     import uuid
 
+    from f1_data_pipeline_spark import snaplog
     from f1_data_pipeline_spark import storage as st
 
     spark = t.spark
@@ -2926,7 +2927,7 @@ def x_asof_checkpoint(t: Tables) -> DataFrame:
     _ASOF_CKPT_DIRS[t.sf_dir] = tdir
     for i in range(12):
         st.snapshot_append(sl(i * 80, (i + 1) * 80), tdir, stats_cols=["event_id"])
-    ck = st._read_checkpoint(spark, tdir)
+    ck = snaplog.read_checkpoint(tdir)
     if ck is None or int(ck["version"]) < 10:
         raise RuntimeError(
             f"auto-checkpoint missing after 12 commits (got {ck}) — the "
@@ -2940,7 +2941,7 @@ def x_asof_checkpoint(t: Tables) -> DataFrame:
     # every manifest directly and rebuild the records the checkpointed
     # history must match
     full = [
-        st._history_rec(v, st._read_manifest(spark, tdir, v))
+        snaplog.history_rec(v, snaplog.read_manifest(tdir, v))
         for v in range(1, 13)
     ]
     if hist != full:
@@ -2990,7 +2991,7 @@ def x_sql_writer(t: Tables) -> DataFrame:
     import uuid
 
     from f1_data_pipeline_spark.ingest import feedsource
-    from f1_data_pipeline_spark.storage import _read_manifest
+    from f1_data_pipeline_spark.snaplog import read_manifest
 
     spark = t.spark
     feedsource.register(spark)
@@ -3017,10 +3018,10 @@ def x_sql_writer(t: Tables) -> DataFrame:
         f"CAST(42 AS BIGINT) AS user_id, CAST(1.5 AS DOUBLE) AS val"
     )
     for v in (2, 3):
-        m = _read_manifest(spark, tdir, v)
+        m = read_manifest(tdir, v)
         if m.get("op") != "append":
             raise RuntimeError(f"writer v{v} lost its append op label")
-        prior = {e["path"] for e in _read_manifest(spark, tdir, v - 1)["files"]}
+        prior = {e["path"] for e in read_manifest(tdir, v - 1)["files"]}
         if not prior <= {e["path"] for e in m["files"]}:
             raise RuntimeError(f"writer v{v} rewrote prior files")
         own = [e for e in m["files"] if e["path"].startswith(f"v={v}/")]
@@ -3052,11 +3053,11 @@ def x_expire_log(t: Tables) -> DataFrame:
     history (including the expired versions' summaries) still serves
     from the forced checkpoint, kept-version time travel works, expired
     time travel raises, and a second expiry is a no-op."""
-    import os
     import shutil
     import tempfile
     import uuid
 
+    from f1_data_pipeline_spark import snaplog
     from f1_data_pipeline_spark import storage as st
 
     spark = t.spark
@@ -3077,11 +3078,7 @@ def x_expire_log(t: Tables) -> DataFrame:
     expired = st.snapshot_expire_log(spark, tdir, keep_last=4)
     if expired != list(range(1, 9)):
         raise RuntimeError(f"expire removed {expired}, expected v1..v8")
-    left = sorted(
-        int(n[:-5])
-        for n in os.listdir(f"{tdir}/{st.SNAPSHOT_MANIFEST_DIR}")
-        if n.endswith(".json") and n[:-5].isdigit()
-    )
+    left = snaplog.list_versions(tdir)
     if left != list(range(9, 13)):
         raise RuntimeError(f"manifest dir holds {left}, expected v9..v12")
     if st.snapshot_history(spark, tdir) != hist_before:

@@ -31,12 +31,6 @@ from pyspark.sql import functions as F
 from f1_data_pipeline_spark.operators.merge import last_non_null_merge
 
 
-def parquet_append(df: DataFrame, path: str) -> None:
-    """K1/K2: bulk append. Parquet writers are per-partition-parallel — the
-    analog of the reference's executemany batching falls out of partitioning."""
-    df.write.mode("append").parquet(path)
-
-
 def insert_on_conflict_sql(
     table: str,
     columns: list[str],

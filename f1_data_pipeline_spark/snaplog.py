@@ -1,0 +1,418 @@
+"""The snapshot log: its on-disk format and every read and write of it.
+
+A snapshot table is a directory of immutable ``v=N`` data dirs plus a
+commit log under ``_manifests/``:
+
+* ``N.json`` — the commit record of version N. Creating it IS the
+  commit, so it is published exactly once (see ``publish_once``);
+  readers only ever follow committed records.
+* ``v=N/_CLAIM`` — the staging claim. A writer publishes it once before
+  writing anything under ``v=N`` so two writers deriving the same next
+  version never interleave files in one directory.
+* ``N.ckpt.json`` + ``_last_checkpoint`` — the manifest-log checkpoint
+  (the Delta shape): every ``SNAPSHOT_CHECKPOINT_INTERVAL`` commits the
+  per-version summary records are compacted into one immutable file and
+  the overwritable pointer is moved to it. An optimization, never a
+  correctness dependency: a missing, torn or phantom pointer falls back
+  to listing ``_manifests/``.
+
+Both writers — ``storage.py`` on the driver and the ``snapshotfeed``
+DataSource writer/stream reader, whose Python worker has no JVM — call
+this module, so the protocol exists once. All IO is ``pyarrow.fs``
+resolved from the table dir's own URI:
+
+===================  ===========================================
+table dir            publish-once
+===================  ===========================================
+plain / ``file:``    hard link of a fully-written temp file
+                     (EEXIST-atomic, complete at visibility)
+every other pyarrow  check-then-write: single writer only.
+scheme (``hdfs``,    pyarrow.fs has no create-no-overwrite, and its
+``viewfs``, s3, gs…) ``move`` REPLACES an existing destination (HDFS
+                     included: Arrow's HadoopFileSystem deletes and
+                     renames again), so no rename publish is atomic
+===================  ===========================================
+
+Hadoop connector schemes pyarrow.fs cannot resolve (``s3a://`` …) fail
+typed at first touch, naming the pyarrow equivalent.
+"""
+
+from __future__ import annotations
+
+import json
+import math
+import os
+import time
+import uuid
+
+MANIFEST_DIR = "_manifests"
+CKPT_POINTER = "_last_checkpoint"
+SNAPSHOT_CHECKPOINT_INTERVAL = 10
+
+# schemes whose publish-once is a genuinely atomic claim (see the table in
+# the module docstring); everywhere else it is check-then-write
+ATOMIC_SCHEMES = ("file",)
+
+# Hadoop-only connector schemes and the pyarrow.fs scheme for the same store
+_PYARROW_EQUIVALENT = {"s3a": "s3", "s3n": "s3", "wasb": "abfs", "wasbs": "abfss"}
+
+
+class SnapshotConflictError(RuntimeError):
+    """A concurrent writer won the staging or commit race. The loser's
+    work was never exposed (readers only follow committed records); the
+    caller may re-derive its write against the NEW current version and
+    try again — blind full-replace writers can do so automatically via
+    ``snapshot_write(..., retries=N)``, read-modify-write maintainers
+    must re-read first (which ``expected_version`` enforces)."""
+
+
+# ---------------------------------------------------------------------------
+# URI resolution
+# ---------------------------------------------------------------------------
+
+
+def scheme(path: str) -> str:
+    """``"file"`` for plain paths and ``file:`` URIs, else the URI scheme.
+    Never connects; raises ``ValueError`` for Hadoop connector schemes
+    pyarrow.fs cannot resolve."""
+    if "://" not in path:
+        return "file"
+    sch = path.split("://", 1)[0].lower()
+    if sch in _PYARROW_EQUIVALENT:
+        raise ValueError(
+            f"snapshot log: {sch}:// is a Hadoop connector scheme that "
+            f"pyarrow.fs cannot resolve ({path}) — address the same store "
+            f"as {_PYARROW_EQUIVALENT[sch]}://"
+        )
+    return sch
+
+
+def resolve(path: str):
+    """``(pyarrow FileSystem, fs-internal path)`` for a path or URI. Any
+    other scheme pyarrow.fs does not know raises its ``ArrowInvalid``,
+    itself a ``ValueError``."""
+    from pyarrow import fs as pafs
+
+    if scheme(path) == "file" and not path.startswith("file:"):
+        return pafs.LocalFileSystem(), path
+    return pafs.FileSystem.from_uri(path)
+
+
+def _found(f, p: str) -> bool:
+    from pyarrow import fs as pafs
+
+    return f.get_file_info(p).type != pafs.FileType.NotFound
+
+
+def exists(path: str) -> bool:
+    f, p = resolve(path)
+    return _found(f, p)
+
+
+def listdir(path: str, recursive: bool = False) -> list:
+    """``FileInfo`` of each child of ``path`` ([] when missing)."""
+    from pyarrow import fs as pafs
+
+    f, p = resolve(path)
+    return f.get_file_info(
+        pafs.FileSelector(p, allow_not_found=True, recursive=recursive)
+    )
+
+
+def remove(path: str) -> None:
+    """Delete a file or a directory tree; a missing path is a no-op."""
+    from pyarrow import fs as pafs
+
+    f, p = resolve(path)
+    kind = f.get_file_info(p).type
+    if kind == pafs.FileType.Directory:
+        f.delete_dir(p)
+    elif kind != pafs.FileType.NotFound:
+        f.delete_file(p)
+
+
+def read_json(path: str):
+    f, p = resolve(path)
+    with f.open_input_stream(p) as s:
+        return json.loads(s.read())
+
+
+def _write(f, p: str, data: bytes) -> None:
+    with f.open_output_stream(p) as out:
+        out.write(data)
+
+
+def _delete_quietly(f, p: str) -> None:
+    try:
+        f.delete_file(p)
+    except FileNotFoundError:
+        pass
+
+
+# ---------------------------------------------------------------------------
+# Publish-once: the one atomic primitive of the protocol
+# ---------------------------------------------------------------------------
+
+
+def _link(src: str, dst: str) -> None:
+    """``link(src, dst)`` — the atomic syscall that publishes on local
+    paths. Module-level so failure-injection tests can substitute a
+    non-EEXIST error."""
+    os.link(src, dst)
+
+
+def publish_once(path: str, data: bytes) -> bool:
+    """Create ``path`` holding ``data`` unless the name already exists.
+    True = created; False = lost the race (the name exists). The content
+    is complete the instant the name becomes visible on atomic schemes.
+    Any other failure raises ``RuntimeError`` — never a lost race, so
+    callers don't burn retries on a hopeless IO error."""
+    f, p = resolve(path)
+    parent, name = p.rstrip("/").rsplit("/", 1)
+    f.create_dir(parent, recursive=True)
+    if scheme(path) not in ATOMIC_SCHEMES:
+        # no create-no-overwrite through pyarrow.fs: single-writer caveat
+        if _found(f, p):
+            return False
+        _write(f, p, data)
+        return True
+    tmp = f"{parent}/.{name}.{uuid.uuid4().hex}.tmp"
+    _write(f, tmp, data)
+    try:
+        _link(tmp, p)
+    except OSError as e:
+        if _found(f, p):
+            return False
+        raise RuntimeError(
+            f"publishing {path} failed for a non-conflict reason "
+            f"(permissions? cross-device tmp? no hard-link support?): {e}"
+        ) from e
+    finally:
+        _delete_quietly(f, tmp)
+    return True
+
+
+def claim_version(table_dir: str, version: int, caller: str = "snapshot_write") -> str:
+    """Claim the ``v=N`` staging dir for ``version`` and return it — the
+    mutual-exclusion step every writer of version-N side files (staged
+    parquet, deletion vectors, change files) takes before writing.
+    Raises ``SnapshotConflictError`` when the dir already exists or the
+    ``_CLAIM`` publish is lost."""
+    vdir = f"{table_dir.rstrip('/')}/v={version}"
+    if exists(vdir):
+        raise SnapshotConflictError(
+            f"{caller}: staging dir v={version} already exists under "
+            f"{table_dir} — either a concurrent writer is staging version "
+            f"{version} or a crashed writer left an orphan; if "
+            f"_manifests/{version}.json is absent, the orphan was never "
+            f"committed and is safe to delete"
+        )
+    if not publish_once(f"{vdir}/_CLAIM", b""):
+        raise SnapshotConflictError(
+            f"{caller}: lost the staging race for v={version} under "
+            f"{table_dir} to a concurrent writer"
+        )
+    return vdir
+
+
+def commit(table_dir: str, version: int, payload: dict) -> None:
+    """Publish the commit record ``_manifests/N.json`` (stamping ``ts``
+    when absent) and auto-checkpoint on the interval. Raises
+    ``SnapshotConflictError`` when a concurrent writer committed version
+    N first. The stamp is truncated to the millisecond, never rounded
+    up, so an as-of at any instant taken after the commit returns sees
+    the commit."""
+    payload.setdefault("ts", math.floor(time.time() * 1000) / 1000)
+    record = f"{table_dir.rstrip('/')}/{MANIFEST_DIR}/{version}.json"
+    if not publish_once(record, json.dumps(payload).encode()):
+        raise SnapshotConflictError(
+            f"snapshot_write: commit record for v={version} already exists "
+            f"under {table_dir} — a concurrent writer committed first; "
+            f"re-derive against the new current version and retry"
+        )
+    maybe_checkpoint(table_dir, version, payload)
+
+
+# ---------------------------------------------------------------------------
+# Reading the log
+# ---------------------------------------------------------------------------
+
+
+def _mdir(table_dir: str) -> str:
+    return f"{table_dir.rstrip('/')}/{MANIFEST_DIR}"
+
+
+def list_versions(table_dir: str) -> list[int]:
+    """Every committed version, ascending (a full ``_manifests`` listing)."""
+    out = []
+    for info in listdir(_mdir(table_dir)):
+        name = info.base_name
+        if name.endswith(".json") and name[:-5].isdigit():
+            out.append(int(name[:-5]))
+    return sorted(out)
+
+
+def checkpoint_version(table_dir: str) -> int | None:
+    """POINTER-ONLY read of the checkpointed version (None when absent or
+    torn). Version resolution must never pay for the compacted log
+    itself, which is O(all versions) bytes."""
+    try:
+        return int(read_json(f"{_mdir(table_dir)}/{CKPT_POINTER}")["version"])
+    except Exception:
+        return None
+
+
+def latest_version(table_dir: str) -> int:
+    """The head version (0 = no commit yet), checkpoint-accelerated:
+    versions are CONTIGUOUS by the staging protocol, so probing forward
+    from the checkpointed version finds the head in O(tail) existence
+    probes instead of listing a 100k-record ``_manifests/``. A pointer
+    whose own version was never committed is corrupt — fall back to the
+    listing rather than report a phantom head."""
+    ckv = checkpoint_version(table_dir)
+    if ckv is not None:
+        f, mdir = resolve(_mdir(table_dir))
+        v = ckv
+        while _found(f, f"{mdir}/{v + 1}.json"):
+            v += 1
+        if v > ckv or _found(f, f"{mdir}/{v}.json"):
+            return v
+    versions = list_versions(table_dir)
+    return versions[-1] if versions else 0
+
+
+def read_manifest(table_dir: str, version: int) -> dict:
+    """The commit record of ``version``. A missing record at or below the
+    checkpoint pointer was provably committed once (the pointer only
+    trails commits), so the error names log retention, not corruption."""
+    try:
+        return read_json(f"{_mdir(table_dir)}/{version}.json")
+    except FileNotFoundError:
+        pass
+    ck = checkpoint_version(table_dir)
+    if ck is not None and version <= ck:
+        raise FileNotFoundError(
+            f"snapshot log: version {version} of {table_dir} is no "
+            f"longer available — it is at or behind the table's "
+            f"manifest-log checkpoint (v{ck}), so snapshot_expire_log "
+            f"retention most likely removed its commit record. A "
+            f"stream must restart with a FRESH checkpoint (the "
+            f"initial snapshot re-baselines); a batch changeFeed must "
+            f"raise its starting bound above the horizon. Raise the "
+            f"table's keep_last if readers can lag this far"
+        )
+    raise FileNotFoundError(
+        f"snapshot log: version {version} was never committed (or was "
+        f"removed) under {table_dir}"
+    )
+
+
+def read_checkpoint(table_dir: str) -> dict | None:
+    """The latest checkpoint ``{"version": N, "log": [rec, ...]}``, or
+    None when absent, torn or phantom. A genuine checkpoint's own version
+    is always a committed record (commits precede checkpoints; expiry
+    never deletes at-or-above the checkpoint); trusting a phantom would
+    make as-of/history answer from a fake log and let expiry delete
+    history the log does not carry."""
+    mdir = _mdir(table_dir)
+    try:
+        meta = read_json(f"{mdir}/{CKPT_POINTER}")
+        ck = read_json(f"{mdir}/{meta['path']}")
+        if int(ck["version"]) != int(meta["version"]) or "log" not in ck:
+            return None
+        if not exists(f"{mdir}/{int(ck['version'])}.json"):
+            return None
+        return ck
+    except Exception:
+        return None
+
+
+# ---------------------------------------------------------------------------
+# Checkpoint writing
+# ---------------------------------------------------------------------------
+
+
+def history_rec(v: int, m: dict) -> dict:
+    """The per-version summary record shared by ``snapshot_history`` and
+    the checkpoint (they must agree byte-for-byte — the checkpoint IS
+    cached history)."""
+    rec: dict = {"version": v}
+    if m.get("ts") is not None:
+        rec["ts"] = m["ts"]
+    if m.get("op"):
+        rec["op"] = m["op"]
+    for k in ("restored_from", "optimized_from", "restamped_from",
+              "cloned_from", "constraint_added", "constraint_dropped"):
+        if k in m:
+            rec[k] = m[k]
+    files = m.get("files")
+    if files is None:
+        rec.update(
+            {"n_files": None, "rows": None, "bytes": None,
+             "n_staged": None, "n_carried": None}
+        )
+    else:
+        own = f"v={v}/"
+        rec.update(
+            {
+                "n_files": len(files),
+                "rows": sum(e.get("rows", 0) for e in files),
+                "bytes": sum(e.get("bytes", 0) for e in files),
+                "n_staged": sum(e["path"].startswith(own) for e in files),
+                "n_carried": sum(not e["path"].startswith(own) for e in files),
+            }
+        )
+    return rec
+
+
+def write_checkpoint(
+    table_dir: str, version: int, payload: dict | None = None
+) -> None:
+    """Compact the log up to ``version`` (previous checkpoint + tail
+    manifest reads; ``payload`` short-circuits the newest read when the
+    caller just committed it) and move the pointer to it."""
+    prev = read_checkpoint(table_dir)
+    if prev is not None and int(prev["version"]) >= version:
+        return  # a concurrent writer already checkpointed at-or-past us
+    log, start = ([], 1) if prev is None else (list(prev["log"]), int(prev["version"]) + 1)
+    for v in range(start, version + 1):
+        if v == version and payload is not None:
+            log.append(history_rec(v, payload))
+            continue
+        try:
+            log.append(history_rec(v, read_manifest(table_dir, v)))
+        except FileNotFoundError:
+            continue
+    mdir = _mdir(table_dir)
+    # an immutable file: a lost duplicate-checkpoint race is fine
+    publish_once(
+        f"{mdir}/{version}.ckpt.json",
+        json.dumps({"version": version, "log": log}).encode(),
+    )
+    # repoint: tmp + move, which replaces the old pointer in one step. The
+    # pointer is the ONLY overwritten file in the protocol; a reader hitting
+    # a torn pointer falls back to the listing — never a wrong answer.
+    f, fmdir = resolve(mdir)
+    ptr = f"{fmdir}/{CKPT_POINTER}"
+    tmp = f"{fmdir}/.{CKPT_POINTER}.{uuid.uuid4().hex}.tmp"
+    _write(
+        f, tmp,
+        json.dumps({"version": version, "path": f"{version}.ckpt.json"}).encode(),
+    )
+    try:
+        f.move(tmp, ptr)
+    except OSError:
+        _delete_quietly(f, tmp)
+
+
+def maybe_checkpoint(table_dir: str, version: int, payload: dict) -> None:
+    """Checkpoint on the interval cadence, best-effort: called after every
+    successful commit by either writer; any failure is swallowed (the
+    next interval retries, and readers never depend on a checkpoint)."""
+    interval = SNAPSHOT_CHECKPOINT_INTERVAL
+    if not interval or interval < 1 or version % interval:
+        return
+    try:
+        write_checkpoint(table_dir, version, payload)
+    except Exception:
+        pass

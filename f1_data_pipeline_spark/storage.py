@@ -17,6 +17,9 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from f1_data_pipeline_spark import snaplog
+from f1_data_pipeline_spark.snaplog import SnapshotConflictError
+
 
 def write_bucketed(
     df: DataFrame,
@@ -77,14 +80,16 @@ def salted_join(
 
 
 def dataset_exists(spark: SparkSession, path: str) -> bool:
-    """URI-capable existence probe through the Hadoop FileSystem API:
-    ``os.path.exists`` only sees the local filesystem, so index/existence
-    checks that must also work on ``hdfs://``/``s3a://`` paths go through
-    the path's own FileSystem (resolved from the Hadoop conf, same as
-    every Spark reader/writer); local paths short-circuit to a syscall
-    (the `_snap_fs` fast path — no py4j round-trip)."""
-    fs, jvm = _snap_fs(spark, path)
-    return bool(fs.exists(_snap_path(jvm, path)))
+    """URI-capable existence probe for artifacts Spark's writer produced
+    (``write_json_artifact``): ``os.path.exists`` only sees the local
+    filesystem, so remote paths go through the path's own Hadoop
+    FileSystem — the layer that wrote them, so every scheme the writer
+    speaks (``hdfs://``, ``s3a://`` …) can be probed. Local paths
+    short-circuit to a syscall (no py4j round-trip)."""
+    if "://" not in path or path.startswith("file:"):
+        return snaplog.exists(path)
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return bool(p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p))
 
 
 def write_json_artifact(spark: SparkSession, path: str, obj) -> None:
@@ -213,13 +218,6 @@ def compact(
     return n
 
 
-def repartition_for(df: DataFrame, keys: list[str], partitions: int | None = None) -> DataFrame:
-    """Pre-partition once, reuse across several keyed operations — the
-    'reuse a partitioning across stages' rule: groupBy/join on the same keys
-    afterwards reuse this exchange instead of re-shuffling."""
-    return df.repartition(partitions, *[F.col(k) for k in keys]) if partitions else df.repartition(*[F.col(k) for k in keys])
-
-
 # ---------------------------------------------------------------------------
 # Snapshot tables: versioned parquet + immutable commit log (time travel)
 # ---------------------------------------------------------------------------
@@ -231,24 +229,14 @@ def repartition_for(df: DataFrame, keys: list[str], partitions: int | None = Non
 # what object stores without atomic rename need; Delta's _delta_log uses
 # the same shape). A crashed writer can never expose a half-written table,
 # concurrent readers always see a complete snapshot, and old versions stay
-# readable until vacuumed. Every filesystem touch goes through the Hadoop
-# FileSystem API resolved from the path itself, so a table dir may be
-# ``file:``/``hdfs://``/``s3a://`` — never the driver's local os module.
-# Caveat inherited from the substrate: create-no-overwrite is atomic on
-# HDFS/POSIX; on S3 proper single-writer discipline (or a commit service)
-# is still required, as with every log-structured table format.
-
-SNAPSHOT_MANIFEST_DIR = "_manifests"
-
-
-class SnapshotConflictError(RuntimeError):
-    """A concurrent writer won the staging or commit race. The loser's
-    work was never exposed (readers only follow committed records); the
-    caller may re-derive its write against the NEW current version and
-    try again — blind full-replace writers can do so automatically via
-    ``snapshot_write(..., retries=N)``, read-modify-write maintainers
-    must re-read first (which ``expected_version`` enforces)."""
-
+# readable until vacuumed. The log's format and every filesystem touch
+# live in ``snaplog`` (pyarrow.fs resolved from the path itself), shared
+# with the ``snapshotfeed`` DataSource writer — so a table dir may be a
+# plain path, ``file:``, ``hdfs://``/``viewfs://`` or a pyarrow object
+# store, never the driver's local os module. Publish-once is atomic on
+# POSIX (hard link); on HDFS and object stores pyarrow.fs offers no
+# create-no-overwrite, so single-writer discipline (or a commit service)
+# is required, as with every log-structured table format.
 
 class ConstraintViolationError(ValueError):
     """A PERSISTENT table CHECK constraint (``snapshot_add_constraint``)
@@ -288,8 +276,7 @@ def _enforce_constraints(
         if int(got[f"c{i}"] or 0)
     }
     if bad:
-        fs, jvm = _snap_fs(spark, table_dir)
-        fs.delete(_snap_path(jvm, vdir), True)
+        snaplog.remove(vdir)
         raise ConstraintViolationError(
             f"{what}: table CHECK constraint violations {bad} under "
             f"{table_dir} — nothing was committed; fix the batch or "
@@ -297,497 +284,24 @@ def _enforce_constraints(
         )
 
 
-# ---------------------------------------------------------------------------
-# Local-filesystem fast path for the commit protocol's metadata IO.
-#
-# Every manifest read, claim, existence probe and pointer write used to go
-# through the JVM Hadoop FileSystem via py4j — ~0.5-2 ms of socket
-# round-trips PER CALL from the driver's Python process, against ~3 µs for
-# the same syscall issued directly (measured r13; a 12-commit protocol
-# round-trip makes ~1k such calls, so the chatter alone was ~1s/query of
-# pure driver latency, multiplied per trigger in streaming). For `file:`
-# paths the classes below implement the exact slice of the Hadoop
-# FileSystem/Path/FileStatus surface this module uses, on plain Python
-# syscalls, with Hadoop's observable semantics (rename refuses an existing
-# destination, delete returns False on a missing path, createNewFile is the
-# create-no-overwrite probe — here genuinely O_EXCL-atomic, strictly
-# stronger than RawLocalFileSystem's check-then-create). Remote schemes
-# (hdfs:, viewfs:, s3a:, …) keep the JVM FileSystem unchanged — the fast
-# path is a dispatch in `_snap_fs`, never a semantics fork: the hard-link /
-# EEXIST commit protocol is identical on both faces.
-# ---------------------------------------------------------------------------
-
-
-class _PyHadoopPath:
-    """org.apache.hadoop.fs.Path stand-in for local paths: carries the
-    string, answers the URI/parent/name surface the module uses."""
-
-    __slots__ = ("_s",)
-
-    def __init__(self, s):
-        self._s = str(s)
-
-    def __str__(self):
-        return self._s
-
-    def __repr__(self):
-        return self._s
-
-    def toUri(self):
-        return self
-
-    # URI face (Java Path.toUri().getScheme()/getPath())
-    def getScheme(self):
-        return "file" if self._s.startswith("file:") else None
-
-    def getPath(self):
-        s = self._s
-        if s.startswith("file://"):
-            return s[len("file://"):] or "/"
-        if s.startswith("file:"):
-            return s[len("file:"):]
-        return s
-
-    def getParent(self):
-        import posixpath
-
-        return _PyHadoopPath(posixpath.dirname(self.getPath().rstrip("/")))
-
-    def getName(self):
-        import posixpath
-
-        return posixpath.basename(self.getPath().rstrip("/"))
-
-
-class _PyFileStatus:
-    __slots__ = ("_p", "_is_dir", "_len", "_mtime_ms")
-
-    def __init__(self, p: str, is_dir: bool, length: int, mtime_ms: int):
-        self._p = p
-        self._is_dir = is_dir
-        self._len = length
-        self._mtime_ms = mtime_ms
-
-    def getPath(self):
-        return _PyHadoopPath(self._p)
-
-    def getLen(self):
-        return self._len
-
-    def getModificationTime(self):
-        return self._mtime_ms
-
-    def isDirectory(self):
-        return self._is_dir
-
-
-class _PyContentSummary:
-    __slots__ = ("_length",)
-
-    def __init__(self, length: int):
-        self._length = length
-
-    def getLength(self):
-        return self._length
-
-
-def _py_local(p) -> str:
-    """The os-level path of a str or _PyHadoopPath (file: scheme stripped)."""
-    if isinstance(p, _PyHadoopPath):
-        return p.getPath()
-    s = str(p)
-    if s.startswith("file://"):
-        return s[len("file://"):] or "/"
-    if s.startswith("file:"):
-        return s[len("file:"):]
-    return s
-
-
-class _PyLocalFS:
-    """The slice of org.apache.hadoop.fs.FileSystem this module uses,
-    on direct syscalls, mimicking Hadoop's local-FS observable behavior."""
-
-    def exists(self, p) -> bool:
-        return os.path.exists(_py_local(p))
-
-    def mkdirs(self, p) -> bool:
-        os.makedirs(_py_local(p), exist_ok=True)
-        return True
-
-    def create(self, p, overwrite=True):
-        path = _py_local(p)
-        parent = os.path.dirname(path)
-        if parent:
-            os.makedirs(parent, exist_ok=True)  # Hadoop create() makes parents
-        if overwrite:
-            return open(path, "wb")
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        return os.fdopen(fd, "wb")
-
-    def createNewFile(self, p) -> bool:
-        path = _py_local(p)
-        parent = os.path.dirname(path)
-        if parent:
-            os.makedirs(parent, exist_ok=True)
-        try:
-            os.close(os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
-            return True
-        except FileExistsError:
-            return False
-
-    def open(self, p):
-        return open(_py_local(p), "rb")
-
-    def delete(self, p, recursive=False) -> bool:
-        path = _py_local(p)
-        try:
-            if os.path.isdir(path):
-                if recursive:
-                    shutil.rmtree(path)
-                else:
-                    os.rmdir(path)
-            else:
-                os.remove(path)
-            return True
-        except FileNotFoundError:
-            return False
-
-    def rename(self, src, dst) -> bool:
-        s, d = _py_local(src), _py_local(dst)
-        # Hadoop local rename REFUSES an existing destination (returns
-        # false); POSIX rename would silently replace it — preserve the
-        # Hadoop contract the checkpoint/pointer writers rely on
-        if os.path.exists(d) or not os.path.exists(s):
-            return False
-        try:
-            os.rename(s, d)
-            return True
-        except OSError:
-            return False
-
-    def listStatus(self, p):
-        path = _py_local(p)
-        out = []
-        with os.scandir(path) as it:
-            for e in it:
-                st = e.stat()
-                out.append(
-                    _PyFileStatus(
-                        f"{path.rstrip('/')}/{e.name}",
-                        e.is_dir(),
-                        st.st_size,
-                        int(st.st_mtime * 1000),
-                    )
-                )
-        return out
-
-    def getContentSummary(self, p):
-        total = 0
-        for root, _dirs, files in os.walk(_py_local(p)):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-        return _PyContentSummary(total)
-
-
-class _PyIOUtils:
-    @staticmethod
-    def toString(stream, charset):
-        return stream.read().decode(charset)
-
-
-class _PyJavaFile:
-    __slots__ = ("_p",)
-
-    def __init__(self, p):
-        self._p = str(p)
-
-    def toPath(self):
-        return self._p
-
-
-class _PyFiles:
-    @staticmethod
-    def createLink(link, existing):
-        os.link(str(existing), str(link))
-
-
-class _Ns:
-    """Attribute-chain namespace so the shim answers the same dotted jvm
-    paths the py4j gateway does (jvm.org.apache.hadoop.fs.Path, …)."""
-
-    def __init__(self, **kw):
-        self.__dict__.update(kw)
-
-
-_PY_JVM = _Ns(
-    org=_Ns(
-        apache=_Ns(
-            hadoop=_Ns(fs=_Ns(Path=_PyHadoopPath)),
-            commons=_Ns(io=_Ns(IOUtils=_PyIOUtils)),
-        )
-    ),
-    java=_Ns(
-        io=_Ns(File=_PyJavaFile),
-        nio=_Ns(file=_Ns(Files=_PyFiles)),
-    ),
-)
-_PY_LOCAL_FS = _PyLocalFS()
-
-
-def _is_local_uri(path: str) -> bool:
-    if "://" in path:
-        return path.split("://", 1)[0] == "file"
-    return True  # plain paths and file:/ forms are local
-
-
-def _snap_fs(spark: SparkSession, path: str):
-    if _is_local_uri(path):
-        return _PY_LOCAL_FS, _PY_JVM
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
-
-
-def _snap_path(jvm, *parts: str):
-    return jvm.org.apache.hadoop.fs.Path("/".join(str(x).rstrip("/") for x in parts))
-
-
 def snapshot_version(spark: SparkSession, table_dir: str) -> int:
-    """Current committed version (0 = no commit yet).
-
-    With a manifest-log checkpoint present (written every
-    ``SNAPSHOT_CHECKPOINT_INTERVAL`` commits — the Delta
-    ``_last_checkpoint`` shape), resolution is O(1) pointer read +
-    O(tail) existence probes: versions are CONTIGUOUS by the staging
-    protocol, so probing forward from the checkpointed version finds the
-    head without listing the whole ``_manifests/`` directory — after a
-    year of streaming appends (100k+ commits) a full listing per version
-    read is the difference between metadata ops and a directory scan.
-    Without a checkpoint (young table, or a torn pointer) it falls back
-    to the full listing — correctness never depends on the checkpoint."""
-    fs, jvm = _snap_fs(spark, table_dir)
-    ckv = _checkpoint_version(spark, table_dir)
-    if ckv is not None:
-        v = ckv
-        while fs.exists(
-            _snap_path(jvm, table_dir, SNAPSHOT_MANIFEST_DIR, f"{v + 1}.json")
-        ):
-            v += 1
-        if v > ckv or fs.exists(
-            _snap_path(jvm, table_dir, SNAPSHOT_MANIFEST_DIR, f"{v}.json")
-        ):
-            return v
-        # a pointer whose own version was never committed is corrupt —
-        # fall through to the listing rather than report a phantom head
-    mdir = _snap_path(jvm, table_dir, SNAPSHOT_MANIFEST_DIR)
-    if not fs.exists(mdir):
-        return 0
-    versions = []
-    for st in fs.listStatus(mdir):
-        name = st.getPath().getName()
-        if name.endswith(".json") and name[:-5].isdigit():
-            versions.append(int(name[:-5]))
-    return max(versions, default=0)
-
-
-# Manifest-log checkpointing (the Delta `_last_checkpoint` shape): every
-# N commits the writer compacts the per-version SUMMARY records (version,
-# commit time, op label, file/row/byte totals, lineage markers — exactly
-# the `snapshot_history` row) into an immutable `_manifests/N.ckpt.json`
-# and repoints the overwritable `_manifests/_last_checkpoint` at it.
-# History / as-of / version resolution then read O(1) + O(tail) instead
-# of O(all versions). The checkpoint is an OPTIMIZATION, never a
-# correctness dependency: a missing, torn, or stale pointer falls back to
-# the full manifest scan, and checkpoint writes are best-effort (a failed
-# checkpoint can never fail a commit). Data-bearing manifests are still
-# read individually when file lists are needed — each N.json is already
-# self-contained, so unlike Delta no state reconstruction is involved.
-SNAPSHOT_CHECKPOINT_INTERVAL = 10
-_CKPT_POINTER = "_last_checkpoint"
-
-
-def _history_rec(v: int, m: dict) -> dict:
-    """The per-version summary record shared by ``snapshot_history`` and
-    the manifest-log checkpoint (they must agree byte-for-byte — the
-    checkpoint IS cached history)."""
-    rec: dict = {"version": v}
-    if m.get("ts") is not None:
-        rec["ts"] = m["ts"]
-    if m.get("op"):
-        rec["op"] = m["op"]
-    for k in ("restored_from", "optimized_from", "restamped_from",
-              "cloned_from", "constraint_added", "constraint_dropped"):
-        if k in m:
-            rec[k] = m[k]
-    files = m.get("files")
-    if files is None:
-        rec.update(
-            {"n_files": None, "rows": None, "bytes": None,
-             "n_staged": None, "n_carried": None}
-        )
-    else:
-        own = f"v={v}/"
-        rec.update(
-            {
-                "n_files": len(files),
-                "rows": sum(e.get("rows", 0) for e in files),
-                "bytes": sum(e.get("bytes", 0) for e in files),
-                "n_staged": sum(e["path"].startswith(own) for e in files),
-                "n_carried": sum(not e["path"].startswith(own) for e in files),
-            }
-        )
-    return rec
-
-
-def _checkpoint_version(spark: SparkSession, table_dir: str) -> int | None:
-    """POINTER-ONLY read of the checkpointed version cursor — what
-    ``snapshot_version`` needs. The compacted log itself is O(all
-    versions) bytes (MBs on a 100k-commit table); version resolution
-    must never pay that, only history/as-of consumers do."""
-    import json
-
-    try:
-        fs, jvm = _snap_fs(spark, table_dir)
-        ptr = _snap_path(jvm, table_dir, SNAPSHOT_MANIFEST_DIR, _CKPT_POINTER)
-        if not fs.exists(ptr):
-            return None
-        stream = fs.open(ptr)
-        try:
-            txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        finally:
-            stream.close()
-        return int(json.loads(txt)["version"])
-    except Exception:
-        return None
-
-
-def _read_checkpoint(spark: SparkSession, table_dir: str) -> dict | None:
-    """The latest manifest-log checkpoint ``{"version": N, "log":
-    [rec, ...]}`` — or None when absent/torn (callers fall back to the
-    full manifest scan; the pointer is overwritten non-atomically by
-    design, exactly Delta's `_last_checkpoint` contract)."""
-    import json
-
-    fs, jvm = _snap_fs(spark, table_dir)
-
-    def _read(path) -> str:
-        stream = fs.open(path)
-        try:
-            return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        finally:
-            stream.close()
-
-    try:
-        ptr = _snap_path(jvm, table_dir, SNAPSHOT_MANIFEST_DIR, _CKPT_POINTER)
-        if not fs.exists(ptr):
-            return None
-        meta = json.loads(_read(ptr))
-        ck = json.loads(
-            _read(_snap_path(jvm, table_dir, SNAPSHOT_MANIFEST_DIR, meta["path"]))
-        )
-        if int(ck["version"]) != int(meta["version"]) or "log" not in ck:
-            return None
-        # a genuine checkpoint's own version is always a committed record
-        # (commits precede checkpoints; expiry never deletes at-or-above
-        # the checkpoint). A PHANTOM version here is pointer corruption —
-        # trusting it would make as-of/history answer from a fake log and
-        # would let snapshot_expire_log delete history the log does not
-        # actually carry. One exists() probe; consumers fall back to the
-        # full manifest scan.
-        if not fs.exists(
-            _snap_path(
-                jvm, table_dir, SNAPSHOT_MANIFEST_DIR, f"{int(ck['version'])}.json"
-            )
-        ):
-            return None
-        return ck
-    except Exception:
-        return None
+    """Current committed version (0 = no commit yet), resolved from the
+    manifest-log checkpoint plus O(tail) existence probes
+    (``snaplog.latest_version``)."""
+    return snaplog.latest_version(table_dir)
 
 
 def snapshot_checkpoint(spark: SparkSession, table_dir: str) -> int:
     """Force a manifest-log checkpoint at the CURRENT version and return
-    it (the automatic cadence is every ``SNAPSHOT_CHECKPOINT_INTERVAL``
+    it (the automatic cadence is every ``snaplog.SNAPSHOT_CHECKPOINT_INTERVAL``
     commits; this is the explicit lever — e.g. before handing a table to
     a high-frequency streaming tail). Incremental: only the manifests
     since the previous checkpoint are read."""
     version = snapshot_version(spark, table_dir)
     if version < 1:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    _checkpoint_now(spark, table_dir, version, None)
+    snaplog.write_checkpoint(table_dir, version, None)
     return version
-
-
-def _checkpoint_now(
-    spark: SparkSession, table_dir: str, version: int, payload: dict | None
-) -> None:
-    """Build the compacted log up to ``version`` (previous checkpoint +
-    tail manifest reads; ``payload`` short-circuits the newest read when
-    the caller just committed it) and publish it."""
-    import json
-    import uuid
-
-    prev = _read_checkpoint(spark, table_dir)
-    if prev is not None and int(prev["version"]) >= version:
-        return  # a concurrent writer already checkpointed at-or-past us
-    log, start = ([], 1) if prev is None else (list(prev["log"]), int(prev["version"]) + 1)
-    for v in range(start, version + 1):
-        if v == version and payload is not None:
-            log.append(_history_rec(v, payload))
-            continue
-        try:
-            log.append(_history_rec(v, _read_manifest(spark, table_dir, v)))
-        except FileNotFoundError:
-            continue
-    fs, jvm = _snap_fs(spark, table_dir)
-    mdir = _snap_path(jvm, table_dir, SNAPSHOT_MANIFEST_DIR)
-    ck = _snap_path(jvm, table_dir, SNAPSHOT_MANIFEST_DIR, f"{version}.ckpt.json")
-    if not fs.exists(ck):
-        tmp = _snap_path(jvm, str(mdir), f".{version}.ckpt.{uuid.uuid4().hex}.tmp")
-        out = fs.create(tmp, True)
-        try:
-            out.write(bytearray(json.dumps({"version": version, "log": log}).encode()))
-        finally:
-            out.close()
-        if not fs.rename(tmp, ck):
-            fs.delete(tmp, False)  # lost a duplicate-checkpoint race: fine
-    # repoint: tmp + delete + rename. The pointer is the ONLY overwritten
-    # file in the protocol; a reader hitting the delete/rename window (or
-    # a torn write) falls back to the listing — never a wrong answer.
-    ptr = _snap_path(jvm, table_dir, SNAPSHOT_MANIFEST_DIR, _CKPT_POINTER)
-    tmp2 = _snap_path(jvm, str(mdir), f".{_CKPT_POINTER}.{uuid.uuid4().hex}.tmp")
-    out = fs.create(tmp2, True)
-    try:
-        out.write(
-            bytearray(
-                json.dumps(
-                    {"version": version, "path": f"{version}.ckpt.json"}
-                ).encode()
-            )
-        )
-    finally:
-        out.close()
-    fs.delete(ptr, False)
-    if not fs.rename(tmp2, ptr):
-        fs.delete(tmp2, False)
-
-
-def _maybe_checkpoint(
-    spark: SparkSession, table_dir: str, version: int, payload: dict
-) -> None:
-    """Auto-checkpoint on the interval cadence, best-effort: called after
-    every successful commit publish; any failure is swallowed (the next
-    interval retries, and readers never depend on checkpoint presence)."""
-    interval = SNAPSHOT_CHECKPOINT_INTERVAL
-    if not interval or interval < 1 or version % interval:
-        return
-    try:
-        _checkpoint_now(spark, table_dir, version, payload)
-    except Exception:
-        pass
 
 
 def snapshot_version_asof(spark: SparkSession, table_dir: str, ts: float) -> int:
@@ -811,7 +325,7 @@ def snapshot_version_asof(spark: SparkSession, table_dir: str, ts: float) -> int
     (version, ts) log first — tiny records, zero manifest reads — and
     touches real manifests only for the post-checkpoint tail."""
     best = 0
-    ck = _read_checkpoint(spark, table_dir)
+    ck = snaplog.read_checkpoint(table_dir)
     start, stopped = 1, False
     if ck is not None:
         for rec in ck["log"]:
@@ -823,7 +337,7 @@ def snapshot_version_asof(spark: SparkSession, table_dir: str, ts: float) -> int
     if not stopped:
         for v in range(start, snapshot_version(spark, table_dir) + 1):
             try:
-                m = _read_manifest(spark, table_dir, v)
+                m = snaplog.read_manifest(table_dir, v)
             except FileNotFoundError:
                 continue
             if m.get("ts") is not None and float(m["ts"]) > ts:
@@ -925,8 +439,7 @@ def _check_staged_against(
     removed and a retryable conflict raised instead. Blind full-replace
     writes (``snapshot_write``) don't need this — they carry nothing."""
     if version != derived_from + 1:
-        fs, jvm = _snap_fs(spark, table_dir)
-        fs.delete(_snap_path(jvm, vdir), True)
+        snaplog.remove(vdir)
         raise SnapshotConflictError(
             f"{what}: staged v={version} but the write was derived from "
             f"v={derived_from} — a concurrent writer committed in between "
@@ -939,87 +452,24 @@ def _stage_version(df: DataFrame, table_dir: str) -> tuple[int, str]:
     commit protocol); returns ``(version, staging_dir)``. See
     ``snapshot_write`` for the protocol rationale.
 
-    The claim must be ATOMIC, not check-then-create: Hadoop's
-    ``createNewFile`` on the local FS is exists()-then-create, so two
-    threads racing the same version could both "claim" it and then write
+    The claim must be ATOMIC, not check-then-create: with an
+    exists()-then-create claim two threads racing the same version
+    could both "claim" it and then write
     parquet jobs into ONE directory — each job's commit tears down the
     other's ``_temporary`` tree, and worse, the winner's manifest would
     list the loser's committed part-files (duplicate rows once the loser
-    retries). Found by the concurrent-append stress test. On ``file:``
-    paths the claim is therefore published by hard link (the same
-    EEXIST-atomic syscall the commit record uses); elsewhere
-    ``create(overwrite=false)`` is the namespace-atomic primitive."""
+    retries). Found by the concurrent-append stress test. The claim is
+    therefore ``snaplog.publish_once`` — the same primitive the commit
+    record uses."""
     spark = df.sparkSession
     version = snapshot_version(spark, table_dir) + 1
-    vdir = _claim_version_dir(spark, table_dir, version)
-    fs, jvm = _snap_fs(spark, table_dir)
+    vdir = snaplog.claim_version(table_dir, version)
     # append, not overwrite: overwrite would delete the dir and with it the
     # _CLAIM marker that holds the stage against concurrent writers
     df.write.mode("append").parquet(vdir)
-    if not fs.exists(_snap_path(jvm, vdir, "_SUCCESS")):
+    if not snaplog.exists(f"{vdir}/_SUCCESS"):
         raise RuntimeError(f"snapshot stage at {vdir} missing _SUCCESS marker")
     return version, vdir
-
-
-def _claim_version_dir(spark: SparkSession, table_dir: str, version: int) -> str:
-    """ATOMICALLY claim the ``v=N`` staging dir for ``version`` and
-    return it — the mutual-exclusion step every writer of version-N side
-    files (staged parquet, deletion vectors, materialized change files)
-    must take before writing, so two writers deriving the same next
-    version can never interleave into one directory. Raises
-    ``SnapshotConflictError`` on a lost race."""
-    import uuid
-
-    fs, jvm = _snap_fs(spark, table_dir)
-    vdir = f"{table_dir.rstrip('/')}/v={version}"
-    vpath = _snap_path(jvm, vdir)
-    if fs.exists(vpath):
-        raise SnapshotConflictError(
-            f"snapshot_write: staging dir v={version} already exists under "
-            f"{table_dir} — either a concurrent writer is staging version "
-            f"{version} or a crashed writer left an orphan; if "
-            f"_manifests/{version}.json is absent, the orphan was never "
-            f"committed and is safe to delete"
-        )
-    claim = _snap_path(jvm, vdir, "_CLAIM")
-    lost = SnapshotConflictError(
-        f"snapshot_write: lost the staging race for v={version} under "
-        f"{table_dir} to a concurrent writer"
-    )
-    if claim.toUri().getScheme() in (None, "file"):
-        fs.mkdirs(vpath)
-        tmp = _snap_path(jvm, vdir, f"._claim.{uuid.uuid4().hex}.tmp")
-        fs.create(tmp, True).close()
-        try:
-            _publish_by_link(jvm, claim, tmp)
-        except Exception as e:
-            # same trichotomy as the commit record: only a LOST RACE is a
-            # conflict (retryable); IO/config failures must fail loudly or
-            # they'd burn every retry on a hopeless loop
-            if fs.exists(claim):
-                raise lost from e
-            raise RuntimeError(
-                f"snapshot_write: publishing staging claim {claim} failed "
-                f"for a non-conflict reason (permissions? no hard-link "
-                f"support?): {e}"
-            ) from e
-        finally:
-            fs.delete(tmp, False)
-    else:
-        try:
-            out = fs.create(claim, False)
-            out.close()
-        except Exception as e:
-            # same trichotomy on remote stores: the claim now existing
-            # proves a lost race; anything else (permissions, network) is
-            # a real IO failure that must not burn retries as "conflicts"
-            if fs.exists(claim):
-                raise lost from e
-            raise RuntimeError(
-                f"snapshot_write: creating staging claim {claim} failed "
-                f"for a non-conflict reason: {e}"
-            ) from e
-    return vdir
 
 
 def _merge_txn(manifest: dict, properties: dict | None) -> dict | None:
@@ -1069,17 +519,6 @@ def _json_safe(v):
     return str(v)
 
 
-def _pa_fs(path: str):
-    """``(pyarrow FileSystem, fs-internal path)`` — the same URI-capable
-    resolution ``feedsource._fs`` uses, local here so the storage module
-    stays importable without the ingest package."""
-    from pyarrow import fs as pafs
-
-    if "://" in path or path.startswith("file:"):
-        return pafs.FileSystem.from_uri(path)
-    return pafs.LocalFileSystem(), path
-
-
 # Parquet physical types whose FOOTER statistics decode to the same
 # Python values the Spark stats job collects (so the two stat sources are
 # interchangeable byte-for-byte in the manifest): integrals, UTF-8
@@ -1112,7 +551,7 @@ def _footer_file_entries(
     try:
         import pyarrow.parquet as pq
 
-        f, root = _pa_fs(table_dir)
+        f, root = snaplog.resolve(table_dir)
     except Exception:
         return None
     vroot = f"{root.rstrip('/')}/v={version}"
@@ -1198,13 +637,12 @@ def _staged_file_entries(
     Spark-job parity (float/double stats, INT96 timestamps, truncated
     string bounds …). Either way the entries are what lets readers and
     upserts skip whole files without listing or opening them."""
-    fs, jvm = _snap_fs(spark, table_dir)
     vdir = f"{table_dir.rstrip('/')}/v={version}"
-    names: dict[str, int] = {}
-    for st in fs.listStatus(_snap_path(jvm, vdir)):
-        name = st.getPath().getName()
-        if name.endswith(".parquet"):
-            names[name] = int(st.getLen())
+    names = {
+        info.base_name: int(info.size)
+        for info in snaplog.listdir(vdir)
+        if info.base_name.endswith(".parquet")
+    }
     if not names:
         return []
     footer = _footer_file_entries(table_dir, version, names, stats_cols)
@@ -1382,83 +820,6 @@ def _apply_blooms(
             e["bloom"] = bl[name]
 
 
-def _publish_by_link(jvm, record, tmp) -> None:
-    """``link(tmp, record)`` — the single atomic syscall that IS the
-    commit on ``file:`` paths. Module-level so failure-injection tests
-    can substitute a non-EEXIST error."""
-    jvm.java.nio.file.Files.createLink(
-        jvm.java.io.File(record.toUri().getPath()).toPath(),
-        jvm.java.io.File(tmp.toUri().getPath()).toPath(),
-    )
-
-
-def _commit_record(spark: SparkSession, table_dir: str, version: int, payload: dict) -> None:
-    """Step 3 of the protocol: atomically create the immutable commit
-    record ``_manifests/N.json`` (create-no-overwrite IS the commit).
-
-    On ``file:`` paths the record is PUBLISHED BY HARD LINK: the payload
-    is fully written to a hidden per-writer temp file first, then
-    ``link(tmp, N.json)`` claims the name — a single atomic syscall that
-    fails with EEXIST if any other writer committed first (closing the
-    check-then-create race Hadoop's RawLocalFileSystem has in
-    ``create(overwrite=false)``), and the record is complete the instant
-    it becomes visible, so a concurrent ``_read_manifest`` can never see
-    a half-written commit. On HDFS, ``create(overwrite=false)`` is
-    already an atomic namespace operation and is used directly; object
-    stores without conditional PUT keep the documented single-writer
-    caveat, as with every log-structured table format."""
-    import json
-    import uuid
-
-    fs, jvm = _snap_fs(spark, table_dir)
-    record = _snap_path(jvm, table_dir, SNAPSHOT_MANIFEST_DIR, f"{version}.json")
-    payload.setdefault("ts", round(__import__("time").time(), 3))
-    conflict = SnapshotConflictError(
-        f"snapshot_write: commit record for v={version} already exists "
-        f"under {table_dir} — a concurrent writer committed first; "
-        f"re-derive against the new current version and retry"
-    )
-    if record.toUri().getScheme() in (None, "file"):
-        mdir = record.getParent()
-        fs.mkdirs(mdir)
-        tmp = _snap_path(jvm, str(mdir), f".{version}.json.{uuid.uuid4().hex}.tmp")
-        out = fs.create(tmp, True)
-        try:
-            out.write(bytearray(json.dumps(payload).encode()))
-        finally:
-            out.close()
-        try:
-            _publish_by_link(jvm, record, tmp)
-        except Exception as e:
-            # only a LOST RACE is a conflict (retryable); permissions,
-            # cross-device links, or a filesystem without hard links are
-            # real failures — mapping them to SnapshotConflictError would
-            # burn snapshot_write(retries=N) on a hopeless retry loop and
-            # let stream maintainers swallow a persistent IO error forever.
-            # The race check is the record itself: if the name now exists,
-            # someone committed first.
-            if fs.exists(record):
-                raise conflict from e
-            raise RuntimeError(
-                f"snapshot_write: publishing commit record {record} failed "
-                f"for a non-conflict reason (permissions? cross-device "
-                f"tmp? no hard-link support?): {e}"
-            ) from e
-        finally:
-            fs.delete(tmp, False)
-        _maybe_checkpoint(spark, table_dir, version, payload)
-        return
-    try:
-        out = fs.create(record, False)  # create-no-overwrite: THE commit
-    except Exception as e:
-        raise conflict from e
-    try:
-        out.write(bytearray(json.dumps(payload).encode()))
-    finally:
-        out.close()
-    _maybe_checkpoint(spark, table_dir, version, payload)
-
-
 def _manifest_schema(manifest: dict):
     """The committed read-contract schema as a StructType (None for
     pre-schema v1-era records). Single parse point for every consumer —
@@ -1478,25 +839,6 @@ def _manifest_reader(spark: SparkSession, manifest: dict):
     inference only for v1-era records with no recorded schema."""
     sch = _manifest_schema(manifest)
     return spark.read.schema(sch) if sch is not None else spark.read
-
-
-def _read_manifest(spark: SparkSession, table_dir: str, version: int) -> dict:
-    """Load the commit record for ``version`` through the path's own
-    Hadoop FileSystem (URI-capable — no driver-local ``open``)."""
-    import json
-
-    fs, jvm = _snap_fs(spark, table_dir)
-    record = _snap_path(jvm, table_dir, SNAPSHOT_MANIFEST_DIR, f"{version}.json")
-    if not fs.exists(record):
-        raise FileNotFoundError(
-            f"snapshot version {version} was never committed in {table_dir}"
-        )
-    stream = fs.open(record)
-    try:
-        txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return json.loads(txt)
 
 
 def check_expectations(df: DataFrame, expectations: dict[str, str]) -> None:
@@ -1689,7 +1031,7 @@ def snapshot_write(
             # new rows INSIDE the staging write — no extra pass.
             cur = snapshot_version(spark, table_dir)
             prior_manifest = (
-                _read_manifest(spark, table_dir, cur) if cur >= 1 else {}
+                snaplog.read_manifest(table_dir, cur) if cur >= 1 else {}
             )
             prior = prior_manifest.get("constraints")
             cdf = (
@@ -1781,14 +1123,13 @@ def snapshot_write(
                     )
             if properties:
                 payload["properties"] = _props_payload(properties)
-            _commit_record(spark, table_dir, version, payload)
+            snaplog.commit(table_dir, version, payload)
             return version
         except SnapshotConflictError:
             # our stage (if we got that far) was never committed — remove
             # the orphan so it can't trip the next claimant's exists-check
             if vdir is not None:
-                fs, jvm = _snap_fs(spark, table_dir)
-                fs.delete(_snap_path(jvm, vdir), True)
+                snaplog.remove(vdir)
             if attempt + 1 >= attempts or expected_version is not None:
                 raise
             import time
@@ -1893,7 +1234,7 @@ def snapshot_append(
                     expected_version=0 if expected_version is None else expected_version,
                     _op="append",
                 )
-            manifest = _read_manifest(spark, table_dir, cur)
+            manifest = snaplog.read_manifest(table_dir, cur)
             entries = manifest.get("files")
             if entries is None:
                 raise ValueError(
@@ -2020,12 +1361,11 @@ def snapshot_append(
             props = _merge_txn(manifest, properties)
             if props:
                 payload["properties"] = _props_payload(props)
-            _commit_record(spark, table_dir, version, payload)
+            snaplog.commit(table_dir, version, payload)
             return version
         except SnapshotConflictError:
             if vdir is not None:
-                fs, jvm = _snap_fs(spark, table_dir)
-                fs.delete(_snap_path(jvm, vdir), True)
+                snaplog.remove(vdir)
             if attempt + 1 >= attempts or expected_version is not None:
                 raise
             import time
@@ -2042,7 +1382,7 @@ def snapshot_properties(
     v = version if version is not None else snapshot_version(spark, table_dir)
     if v < 1:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    return _read_manifest(spark, table_dir, v).get("properties") or {}
+    return snaplog.read_manifest(table_dir, v).get("properties") or {}
 
 
 _WHERE_OPS = ("=", "<", "<=", ">", ">=", "in", "is_null", "is_not_null")
@@ -2454,7 +1794,6 @@ def snapshot_read(
     store ISO-8601 string stats; pass the literal in the same form."""
     from pyspark.errors import AnalysisException
 
-    fs, jvm = _snap_fs(spark, table_dir)
     if as_of_ts is not None:
         if version is not None:
             raise ValueError("snapshot_read: pass version OR as_of_ts, not both")
@@ -2462,12 +1801,12 @@ def snapshot_read(
     v = version if version is not None else snapshot_version(spark, table_dir)
     if v < 1:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    manifest = _read_manifest(spark, table_dir, v)
+    manifest = snaplog.read_manifest(table_dir, v)
     entries = manifest.get("files")
     if entries is None:
         # v1 record (no file list): whole-directory read, filter only
         vdir = f"{table_dir.rstrip('/')}/v={v}"
-        if not fs.exists(_snap_path(jvm, vdir, "_SUCCESS")):
+        if not snaplog.exists(f"{vdir}/_SUCCESS"):
             raise FileNotFoundError(f"snapshot version {v} not found in {table_dir}")
         df = spark.read.parquet(vdir)
         return df.where(_where_expr(where)) if where else df
@@ -2643,7 +1982,7 @@ def _merge_into_snapshot(
             f"change batch was derived from version {expected_version} — "
             f"a concurrent writer committed in between; re-read and re-derive"
         )
-    manifest = _read_manifest(spark, table_dir, current)
+    manifest = snaplog.read_manifest(table_dir, current)
     entries = manifest.get("files")
     if entries is None or any(
         "stats" not in e or any(k not in e["stats"] for k in keys)
@@ -2811,7 +2150,7 @@ def _merge_into_snapshot(
                 spark.read.schema(staged_df.schema).parquet(vdir).select(cols),
                 keys, cols,
             )
-    _commit_record(spark, table_dir, version, payload)
+    snaplog.commit(table_dir, version, payload)
     return version
 
 
@@ -2907,7 +2246,7 @@ def snapshot_merge(
             f"caller expected {expected_version}"
         )
     keys = [key] if isinstance(key, str) else list(key)
-    manifest = _read_manifest(spark, table_dir, current)
+    manifest = snaplog.read_manifest(table_dir, current)
     entries = manifest.get("files")
     if entries is None or any(
         "stats" not in e or any(k not in e["stats"] for k in keys)
@@ -3089,8 +2428,7 @@ def snapshot_merge(
     metrics = {k: int(v or 0) for k, v in obs.get.items()}
     if not (metrics["updated"] or metrics["deleted"] or metrics["inserted"]):
         # pure no-op merge: don't commit a version that only re-copies
-        fs, jvm = _snap_fs(spark, table_dir)
-        fs.delete(_snap_path(jvm, vdir), True)
+        snaplog.remove(vdir)
         return current, metrics
     staged = _staged_file_entries(spark, table_dir, version, stats_cols)
     bloom_spec = manifest.get("bloom_spec")
@@ -3138,10 +2476,9 @@ def snapshot_merge(
                 keys, cols,
             )
     try:
-        _commit_record(spark, table_dir, version, payload)
+        snaplog.commit(table_dir, version, payload)
     except SnapshotConflictError:
-        fs, jvm = _snap_fs(spark, table_dir)
-        fs.delete(_snap_path(jvm, vdir), True)  # never committed
+        snaplog.remove(vdir)  # never committed
         raise
     return version, metrics
 
@@ -3233,26 +2570,20 @@ def _materialize_changes(
     )
     cdir = f"{table_dir.rstrip('/')}/_changes/v={version}"
     changes.write.mode("overwrite").parquet(cdir)
-    fs, jvm = _snap_fs(spark, table_dir)
-    names: dict[str, int] = {}
-    for st in fs.listStatus(_snap_path(jvm, cdir)):
-        name = st.getPath().getName()
-        if name.endswith(".parquet"):
-            names[name] = int(st.getLen())
     import pyarrow.parquet as pq
 
-    f, root = _pa_fs(table_dir)
+    f, root = snaplog.resolve(cdir)
     entries = []
-    for name in sorted(names):
-        with f.open_input_file(
-            f"{root.rstrip('/')}/_changes/v={version}/{name}"
-        ) as srcf:
+    for info in sorted(snaplog.listdir(cdir), key=lambda i: i.base_name):
+        if not info.base_name.endswith(".parquet"):
+            continue
+        with f.open_input_file(info.path) as srcf:
             rows = int(pq.ParquetFile(srcf).metadata.num_rows)
         entries.append(
             {
-                "path": f"_changes/v={version}/{name}",
+                "path": f"_changes/v={version}/{info.base_name}",
                 "rows": rows,
-                "bytes": names[name],
+                "bytes": int(info.size),
             }
         )
     return entries
@@ -3292,8 +2623,8 @@ def snapshot_changes(
         raise ValueError(
             f"snapshot_changes: from_version {from_version} > to_version {v_to}"
         )
-    m_from = _read_manifest(spark, table_dir, from_version)
-    m_to = _read_manifest(spark, table_dir, v_to)
+    m_from = snaplog.read_manifest(table_dir, from_version)
+    m_to = snaplog.read_manifest(table_dir, v_to)
     old_df, new_df, cols = _state_diff_sides(
         spark, table_dir, m_from, m_to, "snapshot_changes"
     )
@@ -3504,7 +2835,7 @@ def snapshot_ack(spark: SparkSession, offset_dir: str, version: int) -> None:
 
 def _manifest_blooms_for_test(spark: SparkSession, table_dir: str, version: int) -> dict:
     """Test hook: {path: bloom-entry} for a committed version."""
-    m = _read_manifest(spark, table_dir, version)
+    m = snaplog.read_manifest(table_dir, version)
     return {e["path"]: e["bloom"] for e in m.get("files", []) if e.get("bloom")}
 
 
@@ -3527,10 +2858,9 @@ def snapshot_history(
     ``available=False`` (their data files are unverifiable and typically
     vacuumed past the horizon), so both flag values return the SAME
     version set."""
-    fs, jvm = _snap_fs(spark, table_dir)
     out = []
     start = 1
-    ck = _read_checkpoint(spark, table_dir)
+    ck = snaplog.read_checkpoint(table_dir)
     if not check_available:
         if ck is not None:
             out.extend(dict(rec) for rec in ck["log"])
@@ -3544,21 +2874,22 @@ def snapshot_history(
     )
     for v in range(start, snapshot_version(spark, table_dir) + 1):
         try:
-            m = _read_manifest(spark, table_dir, v)
+            m = snaplog.read_manifest(table_dir, v)
         except FileNotFoundError:
             if v in ck_recs:
                 out.append({**dict(ck_recs[v]), "available": False})
             continue
-        rec = _history_rec(v, m)
+        rec = snaplog.history_rec(v, m)
         if check_available:
             files = m.get("files")
             if files is None:
-                rec["available"] = bool(
-                    fs.exists(_snap_path(jvm, table_dir, f"v={v}", "_SUCCESS"))
+                rec["available"] = snaplog.exists(
+                    f"{table_dir.rstrip('/')}/v={v}/_SUCCESS"
                 )
             else:
                 rec["available"] = all(
-                    fs.exists(_snap_path(jvm, table_dir, e["path"])) for e in files
+                    snaplog.exists(_entry_uri(table_dir.rstrip("/"), e["path"]))
+                    for e in files
                 )
         out.append(rec)
     return out
@@ -3594,7 +2925,7 @@ def snapshot_stats_agg(
     v = version if version is not None else snapshot_version(spark, table_dir)
     if v < 1:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    manifest = _read_manifest(spark, table_dir, v)
+    manifest = snaplog.read_manifest(table_dir, v)
     entries = manifest.get("files")
     if entries is None:
         raise ValueError(
@@ -3703,7 +3034,7 @@ def snapshot_count(
     v = version if version is not None else snapshot_version(spark, table_dir)
     if v < 1:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    manifest = _read_manifest(spark, table_dir, v)
+    manifest = snaplog.read_manifest(table_dir, v)
     entries = manifest.get("files")
     if entries is None:
         raise ValueError(
@@ -3785,7 +3116,7 @@ def snapshot_delete(
     current = snapshot_version(spark, table_dir)
     if current < 1:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    manifest = _read_manifest(spark, table_dir, current)
+    manifest = snaplog.read_manifest(table_dir, current)
     entries = manifest.get("files")
     if entries is None:
         raise ValueError(
@@ -3827,23 +3158,13 @@ def snapshot_delete(
                 side = F.broadcast(old_dv)
             matches = matches.join(side, ["path", "pos"], "left_anti")
         new_dv = matches if old_dv is None else old_dv.unionByName(matches)
-        fs, jvm = _snap_fs(spark, table_dir)
         version = current + 1
-        vdir = f"{base}/v={version}"
-        if fs.exists(_snap_path(jvm, vdir)):
-            raise SnapshotConflictError(
-                f"snapshot_delete: staging dir v={version} already exists "
-                f"under {table_dir} — concurrent writer or crashed orphan"
-            )
-        if not fs.createNewFile(_snap_path(jvm, vdir, "_CLAIM")):
-            raise SnapshotConflictError(
-                f"snapshot_delete: lost the staging race for v={version}"
-            )
+        vdir = snaplog.claim_version(table_dir, version, "snapshot_delete")
         dv_block = _write_dv(spark, table_dir, version, new_dv)
         old_total = (manifest.get("dv") or {}).get("deleted", 0)
         deleted_now = (dv_block["deleted"] if dv_block else 0) - old_total
         if deleted_now == 0:
-            fs.delete(_snap_path(jvm, vdir), True)  # no match: nothing to commit
+            snaplog.remove(vdir)  # no match: nothing to commit
             return current, 0
         payload = {
             "version": version,
@@ -3861,9 +3182,9 @@ def snapshot_delete(
             # streaming writers' idempotence stamps survive a delete
             payload["properties"] = _props_payload(txn)
         try:
-            _commit_record(spark, table_dir, version, payload)
+            snaplog.commit(table_dir, version, payload)
         except SnapshotConflictError:
-            fs.delete(_snap_path(jvm, vdir), True)  # never committed
+            snaplog.remove(vdir)  # never committed
             raise
         return version, deleted_now
     keep = ~F.coalesce(_where_expr(where), F.lit(False))
@@ -3931,7 +3252,7 @@ def snapshot_delete(
     if txn:
         # streaming writers' idempotence stamps survive a delete
         payload["properties"] = _props_payload(txn)
-    _commit_record(spark, table_dir, version, payload)
+    snaplog.commit(table_dir, version, payload)
     return version, deleted
 
 
@@ -3975,7 +3296,7 @@ def snapshot_clone(
         raise ValueError(
             f"snapshot_clone: {clone_dir} already holds a committed table"
         )
-    manifest = _read_manifest(spark, source_dir, current)
+    manifest = snaplog.read_manifest(source_dir, current)
     entries = manifest.get("files")
     if entries is None:
         raise ValueError("snapshot_clone needs a file-list manifest")
@@ -4010,34 +3331,19 @@ def snapshot_clone(
     if manifest.get("dv"):
         dv = manifest["dv"]
         payload["dv"] = {**dv, "dir": _entry_uri(src_base, dv["dir"])}
-    _commit_record(spark, clone_dir, 1, payload)
+    snaplog.commit(clone_dir, 1, payload)
     # register with the source so ITS vacuum can protect the pinned
     # version (idempotent create; registration loss only reopens the
     # documented keep_last caveat, never corrupts either table)
     import json
     import uuid
 
-    fs, jvm = _snap_fs(spark, source_dir)
-    fs.mkdirs(_snap_path(jvm, src_base, "_clones"))
-    token = uuid.uuid4().hex
-    reg = _snap_path(jvm, src_base, "_clones", f"{token}.json")
-    # write-then-rename: a crash mid-write leaves only a dot-hidden tmp
-    # (invisible to vacuum's registry scan), never a torn .json that
-    # would block every future non-force vacuum on the source
-    tmp = _snap_path(jvm, src_base, "_clones", f".{token}.tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(
-            bytearray(
-                json.dumps(
-                    {"clone": clone_dir.rstrip("/"), "source_version": current}
-                ).encode()
-            )
-        )
-    finally:
-        out.close()
-    if not fs.rename(tmp, reg):
-        fs.delete(tmp, False)
+    # publish-once of a fresh name: a crash mid-write leaves only a
+    # dot-hidden tmp (invisible to vacuum's registry scan), never a torn
+    # .json that would block every future non-force vacuum on the source
+    reg = f"{src_base}/_clones/{uuid.uuid4().hex}.json"
+    body = {"clone": clone_dir.rstrip("/"), "source_version": current}
+    if not snaplog.publish_once(reg, json.dumps(body).encode()):
         raise RuntimeError(
             f"snapshot_clone: failed to publish clone registration {reg} — "
             f"the clone is committed but unprotected from the source's "
@@ -4064,7 +3370,7 @@ def snapshot_restamp(
             f"snapshot_restamp: table {table_dir} is at version {current}, "
             f"caller expected {expected_version}"
         )
-    manifest = _read_manifest(spark, table_dir, current)
+    manifest = snaplog.read_manifest(table_dir, current)
     if manifest.get("files") is None:
         raise ValueError("snapshot_restamp needs a file-list manifest")
     payload = {
@@ -4083,7 +3389,7 @@ def snapshot_restamp(
     for carry in ("bloom_spec", "dv", "constraints", "cdf"):
         if manifest.get(carry):
             payload[carry] = manifest[carry]
-    _commit_record(spark, table_dir, current + 1, payload)
+    snaplog.commit(table_dir, current + 1, payload)
     return current + 1
 
 
@@ -4122,48 +3428,45 @@ def snapshot_clean_orphans(
     writer is active, exactly like VACUUM's single-operator assumption."""
     import re
 
-    fs, jvm = _snap_fs(spark, table_dir)
-    if not fs.exists(_snap_path(jvm, table_dir)):
+    base = table_dir.rstrip("/")
+    if not snaplog.exists(base):
         return []
     current = snapshot_version(spark, table_dir)
     removed = []
-    for st in fs.listStatus(_snap_path(jvm, table_dir)):
-        name = st.getPath().getName()
-        m = re.fullmatch(r"v=(\d+)", name)
+    for info in snaplog.listdir(base):
+        m = re.fullmatch(r"v=(\d+)", info.base_name)
         if not m:
             continue
         v = int(m.group(1))
         if v <= current:
             continue
-        if not fs.exists(_snap_path(jvm, table_dir, name, "_CLAIM")):
+        if not snaplog.exists(f"{base}/{info.base_name}/_CLAIM"):
             continue
-        if fs.exists(
-            _snap_path(jvm, table_dir, SNAPSHOT_MANIFEST_DIR, f"{v}.json")
-        ):
+        if snaplog.exists(f"{base}/{snaplog.MANIFEST_DIR}/{v}.json"):
             continue  # committed between the version read and here
         if not dry_run:
-            fs.delete(st.getPath(), True)
+            snaplog.remove(f"{base}/{info.base_name}")
         removed.append(v)
     swept = []
-    sdir = _snap_path(jvm, table_dir, "_staging")
-    if fs.exists(sdir):
+    sdir = f"{base}/_staging"
+    if snaplog.exists(sdir):
         import time
 
-        cutoff_ms = (time.time() - max(0.0, staging_grace_sec)) * 1000.0
+        cutoff_ns = (time.time() - max(0.0, staging_grace_sec)) * 1e9
         leftover = False
-        for sub in fs.listStatus(sdir):
-            newest = sub.getModificationTime()
-            if sub.isDirectory():
-                for fst in fs.listStatus(sub.getPath()):
-                    newest = max(newest, fst.getModificationTime())
-            if newest < cutoff_ms:
+        for sub in snaplog.listdir(sdir):
+            newest = sub.mtime_ns
+            if not sub.is_file:
+                for fst in snaplog.listdir(f"{sdir}/{sub.base_name}"):
+                    newest = max(newest, fst.mtime_ns)
+            if newest < cutoff_ns:
                 if not dry_run:
-                    fs.delete(sub.getPath(), True)
-                swept.append(f"_staging/{sub.getPath().getName()}")
+                    snaplog.remove(f"{sdir}/{sub.base_name}")
+                swept.append(f"_staging/{sub.base_name}")
             else:
                 leftover = True  # possibly a LIVE writer's stage: keep
         if not leftover and not dry_run:
-            fs.delete(sdir, True)
+            snaplog.remove(sdir)
     return sorted(removed) + sorted(swept)
 
 
@@ -4173,7 +3476,7 @@ def snapshot_constraints(spark: SparkSession, table_dir: str) -> dict:
     v = snapshot_version(spark, table_dir)
     if v < 1:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    return dict(_read_manifest(spark, table_dir, v).get("constraints") or {})
+    return dict(snaplog.read_manifest(table_dir, v).get("constraints") or {})
 
 
 def snapshot_add_constraint(
@@ -4197,7 +3500,7 @@ def snapshot_add_constraint(
     current = snapshot_version(spark, table_dir)
     if current < 1:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    manifest = _read_manifest(spark, table_dir, current)
+    manifest = snaplog.read_manifest(table_dir, current)
     if manifest.get("files") is None:
         raise ValueError("snapshot_add_constraint needs a file-list manifest")
     existing = dict(manifest.get("constraints") or {})
@@ -4221,7 +3524,7 @@ def snapshot_add_constraint(
     for carry in ("bloom_spec", "dv", "properties", "cdf"):
         if manifest.get(carry):
             payload[carry] = manifest[carry]
-    _commit_record(spark, table_dir, current + 1, payload)
+    snaplog.commit(table_dir, current + 1, payload)
     return current + 1
 
 
@@ -4234,7 +3537,7 @@ def snapshot_drop_constraint(
     current = snapshot_version(spark, table_dir)
     if current < 1:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    manifest = _read_manifest(spark, table_dir, current)
+    manifest = snaplog.read_manifest(table_dir, current)
     existing = dict(manifest.get("constraints") or {})
     if name not in existing:
         raise KeyError(
@@ -4254,7 +3557,7 @@ def snapshot_drop_constraint(
     for carry in ("bloom_spec", "dv", "properties", "cdf"):
         if manifest.get(carry):
             payload[carry] = manifest[carry]
-    _commit_record(spark, table_dir, current + 1, payload)
+    snaplog.commit(table_dir, current + 1, payload)
     return current + 1
 
 
@@ -4268,8 +3571,7 @@ def snapshot_restore(spark: SparkSession, table_dir: str, to_version: int) -> in
     files as current, so a restore also PROTECTS them. Raises if the
     target's data is no longer fully present (vacuumed) — restoring to a
     hole would commit a version that cannot be read."""
-    fs, jvm = _snap_fs(spark, table_dir)
-    manifest = _read_manifest(spark, table_dir, to_version)
+    manifest = snaplog.read_manifest(table_dir, to_version)
     files = manifest.get("files")
     if files is None:
         raise ValueError(
@@ -4280,10 +3582,10 @@ def snapshot_restore(spark: SparkSession, table_dir: str, to_version: int) -> in
     missing = [
         e["path"]
         for e in files
-        if not fs.exists(_snap_path(jvm, _entry_uri(table_dir.rstrip("/"), e["path"])))
+        if not snaplog.exists(_entry_uri(table_dir.rstrip("/"), e["path"]))
     ]
-    if manifest.get("dv") and not fs.exists(
-        _snap_path(jvm, _entry_uri(table_dir.rstrip("/"), manifest["dv"]["dir"]))
+    if manifest.get("dv") and not snaplog.exists(
+        _entry_uri(table_dir.rstrip("/"), manifest["dv"]["dir"])
     ):
         missing.append(manifest["dv"]["dir"])
     if missing:
@@ -4293,7 +3595,7 @@ def snapshot_restore(spark: SparkSession, table_dir: str, to_version: int) -> in
             f"missing, e.g. {missing[0]}"
         )
     current = snapshot_version(spark, table_dir)
-    m_cur = _read_manifest(spark, table_dir, current)
+    m_cur = snaplog.read_manifest(table_dir, current)
     version = current + 1
     payload = {
         "version": version,
@@ -4323,7 +3625,7 @@ def snapshot_restore(spark: SparkSession, table_dir: str, to_version: int) -> in
             # concurrent writer deriving the same next version must not
             # interleave its own change files into our directory (the
             # merge family holds this claim implicitly via its staging)
-            claimed = _claim_version_dir(spark, table_dir, version)
+            claimed = snaplog.claim_version(table_dir, version)
             # a restore only re-references immutable files, so the
             # file-wise multiset diff is exact net CDC once identical
             # rows cancel: restoring across a COW rewrite puts a
@@ -4353,13 +3655,13 @@ def snapshot_restore(spark: SparkSession, table_dir: str, to_version: int) -> in
         # the restored content IS the target version's: its stamp applies
         payload["properties"] = manifest["properties"]
     try:
-        _commit_record(spark, table_dir, version, payload)
+        snaplog.commit(table_dir, version, payload)
     except SnapshotConflictError:
         if claimed is not None:
             # our claim and change files were never published — remove
             # them so the next claimant's exists-check doesn't trip
-            fs.delete(_snap_path(jvm, claimed), True)
-            fs.delete(_snap_path(jvm, table_dir, "_changes", f"v={version}"), True)
+            snaplog.remove(claimed)
+            snaplog.remove(f"{table_dir.rstrip('/')}/_changes/v={version}")
         raise
     return version
 
@@ -4376,26 +3678,17 @@ def _live_clone_pins(
     registration fails typed — it is indistinguishable from a live
     clone's protection record, and silently skipping it could let the
     caller destroy state that clone still reads."""
-    import json
-
-    fs, jvm = _snap_fs(spark, table_dir)
-    cdir = _snap_path(jvm, table_dir, "_clones")
+    cdir = f"{table_dir.rstrip('/')}/_clones"
     regs = [
-        r
-        for r in (fs.listStatus(cdir) if fs.exists(cdir) else [])
+        f"{cdir}/{r.base_name}"
+        for r in snaplog.listdir(cdir)
         # dot-hidden names are in-flight registration tmps
-        if r.getPath().getName().endswith(".json")
-        and not r.getPath().getName().startswith(".")
+        if r.base_name.endswith(".json") and not r.base_name.startswith(".")
     ]
     pins: list[tuple[str, int]] = []
-    for rst in regs:
-        stream = fs.open(rst.getPath())
+    for rpath in regs:
         try:
-            txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        finally:
-            stream.close()
-        try:
-            reg = json.loads(txt)
+            reg = snaplog.read_json(rpath)
             clone, pin = reg["clone"], int(reg["source_version"])
         except (ValueError, KeyError, TypeError) as e:
             # a torn registration (clone writer crashed mid-write on a
@@ -4403,7 +3696,7 @@ def _live_clone_pins(
             # fail typed and actionable instead of guessing (force=True
             # on vacuum ignores registrations entirely)
             raise ValueError(
-                f"{caller}: unreadable clone registration {rst.getPath()} "
+                f"{caller}: unreadable clone registration {rpath} "
                 f"— if no live clone references this table, delete the "
                 f"file (or, for vacuum, run force=True, which ignores "
                 f"clone protection entirely): {e}"
@@ -4414,7 +3707,7 @@ def _live_clone_pins(
             alive = False  # unreachable storage: assume gone
         if not alive:
             if drop_stale:
-                fs.delete(rst.getPath(), False)  # stale registration
+                snaplog.remove(rpath)  # stale registration
             continue
         pins.append((clone, pin))
     return pins
@@ -4476,44 +3769,34 @@ def snapshot_expire_log(
         cut = min(cut, min(p for _, p in pins) - 1)
         if cut < 1:
             return []
-    fs, jvm = _snap_fs(spark, table_dir)
-    expired = [
-        v
-        for v in range(1, cut + 1)
-        if fs.exists(
-            _snap_path(jvm, table_dir, SNAPSHOT_MANIFEST_DIR, f"{v}.json")
-        )
-    ]
+    expired = [v for v in snaplog.list_versions(table_dir) if v <= cut]
     if dry_run or not expired:
         return expired
     # checkpoint BEFORE deleting: the compacted log is what keeps
     # history/as-of whole across the horizon
-    _checkpoint_now(spark, table_dir, current, None)
-    ck = _read_checkpoint(spark, table_dir)
+    snaplog.write_checkpoint(table_dir, current, None)
+    ck = snaplog.read_checkpoint(table_dir)
     if ck is None or int(ck["version"]) < current:
         raise RuntimeError(
             f"snapshot_expire_log: could not establish a checkpoint at "
             f"v{current} under {table_dir} — refusing to delete history "
             f"the compacted log does not carry"
         )
+    base = table_dir.rstrip("/")
+    mdir = f"{base}/{snaplog.MANIFEST_DIR}"
     for v in expired:
-        fs.delete(
-            _snap_path(jvm, table_dir, SNAPSHOT_MANIFEST_DIR, f"{v}.json"), False
-        )
+        snaplog.remove(f"{mdir}/{v}.json")
         # a version's materialized change files (_changes/v=N, cdf
         # tables) live exactly as long as its commit record: the feed
         # plans them FROM the manifest, so they are unreadable past it
-        cdir = _snap_path(jvm, table_dir, "_changes", f"v={v}")
-        if fs.exists(cdir):
-            fs.delete(cdir, True)
+        snaplog.remove(f"{base}/_changes/v={v}")
     # checkpoint files below the live pointer are superseded
-    mdir = _snap_path(jvm, table_dir, SNAPSHOT_MANIFEST_DIR)
-    for st in fs.listStatus(mdir):
-        name = st.getPath().getName()
+    for info in snaplog.listdir(mdir):
+        name = info.base_name
         if name.endswith(".ckpt.json"):
             head = name[: -len(".ckpt.json")]
             if head.isdigit() and int(head) < int(ck["version"]):
-                fs.delete(st.getPath(), False)
+                snaplog.remove(f"{mdir}/{name}")
     return expired
 
 
@@ -4552,7 +3835,6 @@ def snapshot_vacuum(
     missing (out-of-band loss), vacuum fails typed rather than guess."""
     import re
 
-    fs, jvm = _snap_fs(spark, table_dir)
     keep_last = max(1, keep_last)
     current = snapshot_version(spark, table_dir)
     reachable: set[str] = set()
@@ -4560,7 +3842,7 @@ def snapshot_vacuum(
     dv_dirs: set[str] = set()
     for v in range(max(1, current - keep_last + 1), current + 1):
         try:
-            m = _read_manifest(spark, table_dir, v)
+            m = snaplog.read_manifest(table_dir, v)
         except FileNotFoundError:
             continue
         files = m.get("files")
@@ -4579,7 +3861,7 @@ def snapshot_vacuum(
             spark, table_dir, "snapshot_vacuum", drop_stale=not dry_run
         ):
             try:
-                m = _read_manifest(spark, table_dir, pin)
+                m = snaplog.read_manifest(table_dir, pin)
             except FileNotFoundError:
                 # the pin's manifest is the ONLY file-level record of what
                 # the clone carries (checkpoint summaries are counts, not
@@ -4604,9 +3886,10 @@ def snapshot_vacuum(
                 reachable.update(e["path"] for e in files)
             if m.get("dv"):
                 dv_dirs.add(m["dv"]["dir"])
+    base = table_dir.rstrip("/")
     removed = []
-    for st in fs.listStatus(_snap_path(jvm, table_dir)):
-        name = st.getPath().getName()
+    for info in snaplog.listdir(base):
+        name = info.base_name
         m = re.fullmatch(r"v=(\d+)", name)
         if not m or name in whole_dirs:
             continue
@@ -4615,17 +3898,17 @@ def snapshot_vacuum(
             continue
         kept_any = False
         swept_any = False
-        for fst in fs.listStatus(st.getPath()):
-            rel = f"{name}/{fst.getPath().getName()}"
+        for fst in snaplog.listdir(f"{base}/{name}"):
+            rel = f"{name}/{fst.base_name}"
             if rel in reachable or rel in dv_dirs:
                 kept_any = True
-            elif fst.getPath().getName().endswith(".parquet"):
+            elif fst.base_name.endswith(".parquet"):
                 if not dry_run:
-                    fs.delete(fst.getPath(), False)
+                    snaplog.remove(f"{base}/{rel}")
                 swept_any = True
         if not kept_any:
             if not dry_run:
-                fs.delete(st.getPath(), True)
+                snaplog.remove(f"{base}/{name}")
             removed.append(v)
         elif swept_any:
             removed.append(v)  # swept of unreachable data; carried files stay
@@ -4635,9 +3918,8 @@ def snapshot_vacuum(
     # residue — reclaimable under the same single-operator assumption
     # that covers orphan `v=N` stages (a LIVE writer's in-flight stage
     # looks identical; run vacuum only when no writer is active).
-    sdir = _snap_path(jvm, table_dir, "_staging")
-    if not dry_run and fs.exists(sdir):
-        fs.delete(sdir, True)
+    if not dry_run:
+        snaplog.remove(f"{base}/_staging")
     return sorted(removed)
 
 
@@ -4661,15 +3943,16 @@ def snapshot_compact(
     Returns (new_version, file_count)."""
     import math
 
-    fs, jvm = _snap_fs(spark, table_dir)
     v = snapshot_version(spark, table_dir)
     if v < 1:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    manifest = _read_manifest(spark, table_dir, v)
+    manifest = snaplog.read_manifest(table_dir, v)
     entries = manifest.get("files")
     if entries is None:
         vdir = f"{table_dir.rstrip('/')}/v={v}"
-        total = fs.getContentSummary(_snap_path(jvm, vdir)).getLength()
+        total = sum(
+            i.size for i in snaplog.listdir(vdir, recursive=True) if i.is_file
+        )
     else:
         total = sum(e.get("bytes", 0) for e in entries)
         if stats_cols is None:
@@ -4739,7 +4022,7 @@ def snapshot_optimize(
     v = snapshot_version(spark, table_dir)
     if v < 1:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    manifest = _read_manifest(spark, table_dir, v)
+    manifest = snaplog.read_manifest(table_dir, v)
     entries = manifest.get("files")
     if entries is None:
         raise ValueError(
@@ -4849,5 +4132,5 @@ def snapshot_optimize(
     if manifest.get("properties"):
         # content-preserving: carry the exactly-once consumer stamp
         payload["properties"] = manifest["properties"]
-    _commit_record(spark, table_dir, version, payload)
+    snaplog.commit(table_dir, version, payload)
     return version, len(small), len(carried)

@@ -636,15 +636,13 @@ def test_starting_timestamp_resolves_against_commit_times(spark, tmp_path):
     skew-clamped commit stamps."""
     import datetime
 
-    from f1_data_pipeline_spark.ingest.feedsource import (
-        SnapshotFeedStreamReader,
-        _read_json,
-    )
+    from f1_data_pipeline_spark.ingest.feedsource import SnapshotFeedStreamReader
+    from f1_data_pipeline_spark.snaplog import read_manifest
 
     tdir = tmp_path / "tbl"
     for i in range(3):
         snapshot_append(_batch(spark, i * 10, i * 10 + 10).coalesce(1), str(tdir))
-    ts = [_read_json(str(tdir), v)["ts"] for v in (1, 2, 3)]
+    ts = [read_manifest(str(tdir), v)["ts"] for v in (1, 2, 3)]
     assert ts == sorted(ts)
     schema = spark.read.schema("k long, v double").parquet(str(tdir / "v=1")).schema
 
@@ -755,10 +753,11 @@ def test_batch_reader_pushes_filters_to_manifest(spark, tmp_path):
         _batch(spark, 0, 1000).repartitionByRange(5, "k"), tdir, stats_cols=["k"]
     )
     feedsource.register(spark)
-    from f1_data_pipeline_spark.storage import _entry_prunable, _read_manifest
+    from f1_data_pipeline_spark.snaplog import read_manifest
+    from f1_data_pipeline_spark.storage import _entry_prunable
 
     where = [("k", ">=", 0), ("k", "<", 150)]
-    m = _read_manifest(spark, tdir, 1)
+    m = read_manifest(tdir, 1)
     pruned = [e["path"] for e in m["files"] if _entry_prunable(e, where)]
     assert pruned  # the range clustering must make some files prunable
     for p in pruned:
@@ -800,9 +799,10 @@ def test_dv_read_bit_equality_and_order(spark, tmp_path):
     got = spark.read.format("snapshotfeed").load(tdir).toPandas()
     got = list(map(tuple, got.itertuples(index=False)))
 
-    from f1_data_pipeline_spark.storage import _read_manifest, snapshot_version
+    from f1_data_pipeline_spark.snaplog import read_manifest
+    from f1_data_pipeline_spark.storage import snapshot_version
 
-    m = _read_manifest(spark, tdir, snapshot_version(spark, tdir))
+    m = read_manifest(tdir, snapshot_version(spark, tdir))
     (entry,) = m["files"]
     raw = pq.read_table(f"{tdir}/{entry['path']}")
     dv = pq.read_table(f"{tdir}/{m['dv']['dir']}")
@@ -876,10 +876,8 @@ def test_lagging_stream_behind_retention_names_the_cause(spark, tmp_path):
     must be told retention removed its offsets (Delta's 'offsets no
     longer available' shape), not pointed at corruption; a genuinely
     never-committed version keeps the old message."""
-    from f1_data_pipeline_spark.ingest.feedsource import (
-        SnapshotFeedStreamReader,
-        _read_json,
-    )
+    from f1_data_pipeline_spark.ingest.feedsource import SnapshotFeedStreamReader
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import snapshot_expire_log
 
     tdir = tmp_path / "tbl"
@@ -893,10 +891,10 @@ def test_lagging_stream_behind_retention_names_the_cause(spark, tmp_path):
             {"version": 4, "mode": "replay"}, {"version": 15, "mode": "replay"}
         )
     with pytest.raises(FileNotFoundError, match="FRESH checkpoint"):
-        _read_json(str(tdir), 3)
+        read_manifest(str(tdir), 3)
     # above the checkpoint pointer nothing was ever committed: old wording
     with pytest.raises(FileNotFoundError, match="never committed"):
-        _read_json(str(tdir), 99)
+        read_manifest(str(tdir), 99)
 
 
 def test_batch_changefeed_floor_is_one_above_oldest_retained(spark, tmp_path):
@@ -972,9 +970,9 @@ def test_stream_where_prunes_at_manifest_level(spark, tmp_path):
     # straddling it (must be opened and exactly filtered)
     snapshot_append(_batch(spark, 500, 600).coalesce(1), str(tdir))
     snapshot_append(_batch(spark, 150, 250).coalesce(1), str(tdir))
-    from f1_data_pipeline_spark.storage import _read_manifest
+    from f1_data_pipeline_spark.snaplog import read_manifest
 
-    m = _read_manifest(spark, str(tdir), 3)
+    m = read_manifest(str(tdir), 3)
     outside = [e["path"] for e in m["files"] if e["path"].startswith("v=2/")]
     assert outside
     for p in outside:
@@ -1054,8 +1052,8 @@ def test_writer_timestamp_stats_match_pruning_frame(spark, tmp_path):
     the where literal. Pinned at the equality boundary, both ops and
     'in'; the safety net (_tz_suffix_mixed) keeps legacy mixed manifests
     unpruned rather than wrong."""
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         _stats_comparable,
         _tz_suffix_mixed,
     )
@@ -1069,7 +1067,7 @@ def test_writer_timestamp_stats_match_pruning_frame(spark, tmp_path):
             + F.make_interval(mins=F.col("id"))
         ).alias("ts"),
     ).coalesce(1).write.format("snapshotfeed").mode("append").save(tdir)
-    st = _read_manifest(spark, tdir, 1)["files"][0]["stats"]["ts"]
+    st = read_manifest(tdir, 1)["files"][0]["stats"]["ts"]
     assert "+" not in st["min"] and not st["min"].endswith("Z")  # UTC-naive
     # equality at the file's exact min boundary: must NOT be pruned
     for w, want in [
@@ -1198,8 +1196,8 @@ def test_where_filtered_replica(spark, tmp_path):
 def test_multiwriter_gate_refuses_non_atomic_stores(spark, tmp_path):
     """multiWriter=true declares concurrent writers; stores whose commit
     publication is check-then-write (no conditional PUT through
-    pyarrow.fs) are refused at PLAN time — atomic stores (posix hard
-    link, HDFS rename) pass and the write commits."""
+    pyarrow.fs, HDFS included) are refused at PLAN time — posix paths
+    (hard-link publish) pass and the write commits."""
     from f1_data_pipeline_spark.ingest.feedsource import _require_atomic_store
     from f1_data_pipeline_spark.storage import snapshot_read
 
@@ -1215,12 +1213,55 @@ def test_multiwriter_gate_refuses_non_atomic_stores(spark, tmp_path):
         _batch(spark, 0, 10).write.format("snapshotfeed").mode("append").option(
             "multiWriter", "true"
         ).save("s3://bucket/tbl")
-    # the gate itself: HDFS-family schemes are rename-atomic and pass
-    for ok in (str(tmp_path / "x"), "file:///t/x", "hdfs://nn:9000/t", "viewfs://c/t"):
+    # the gate itself: only posix paths are atomic; pyarrow's HDFS move
+    # replaces an existing name, so HDFS-family schemes are refused too
+    for ok in (str(tmp_path / "x"), "file:///t/x"):
         _require_atomic_store(ok, "t")
-    for bad in ("s3://b/t", "gs://b/t", "abfss://c@a/t"):
+    for bad in ("hdfs://nn:9000/t", "viewfs://c/t", "s3://b/t", "gs://b/t", "abfss://c@a/t"):
         with pytest.raises(ValueError, match="conditional PUT"):
             _require_atomic_store(bad, "t")
+
+
+def test_cross_writer_checkpoints_agree(spark, tmp_path):
+    """storage.snapshot_append and the snapshotfeed writer share one
+    commit log: interleaved on one table up to v21 at the default
+    checkpoint interval, the storage writer crosses v10 and the feed
+    writer crosses v20. Both checkpoints must exist and carry exactly
+    the per-version history, and the storage and stream-reader heads
+    must agree."""
+    import json
+    import os
+
+    from f1_data_pipeline_spark.storage import snapshot_history, snapshot_version
+
+    feedsource.register(spark)
+    tdir = str(tmp_path / "tbl")
+    # feed writer on odd versions up to v9 and even versions from v12;
+    # storage on the rest — v10 is a storage commit, v20 a feed commit
+    for v in range(1, 22):
+        df = _batch(spark, 10 * v, 10 * v + 10).coalesce(1)
+        if (v % 2 == 1) == (v <= 10):
+            df.write.format("snapshotfeed").mode("append").save(tdir)
+        else:
+            snapshot_append(df, tdir)
+        assert snapshot_version(spark, tdir) == v
+
+    history = snapshot_history(spark, tdir, check_available=True)
+    assert all(rec.pop("available") for rec in history)
+    assert [rec["version"] for rec in history] == list(range(1, 22))
+    for n in (10, 20):
+        path = f"{tdir}/_manifests/{n}.ckpt.json"
+        assert os.path.exists(path)
+        with open(path) as fh:
+            ck = json.load(fh)
+        assert ck["version"] == n
+        assert ck["log"] == history[:n]
+    with open(f"{tdir}/_manifests/_last_checkpoint") as fh:
+        assert json.load(fh)["version"] == 20
+
+    schema = spark.read.format("snapshotfeed").load(tdir).schema
+    reader = feedsource.SnapshotFeedStreamReader(schema, {"path": tdir})
+    assert reader.latestOffset()["version"] == snapshot_version(spark, tdir) == 21
 
 
 def test_writer_orphan_names_recovery_api_and_retry_succeeds(spark, tmp_path):
@@ -1264,8 +1305,8 @@ def test_datasource_writer_batch(spark, tmp_path):
     OVERWRITE commit real snapshot versions — op-labelled, carried-by-
     reference appends with per-file stats, atomic manifest publish —
     interoperable with every storage.py reader."""
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_add_constraint,
         snapshot_history,
         snapshot_read,
@@ -1279,9 +1320,9 @@ def test_datasource_writer_batch(spark, tmp_path):
     assert snapshot_read(spark, tdir).count() == 100
 
     _batch(spark, 100, 120).write.format("snapshotfeed").mode("append").save(tdir)
-    m2 = _read_manifest(spark, tdir, 2)
+    m2 = read_manifest(tdir, 2)
     assert m2["op"] == "append"
-    v1_files = {e["path"] for e in _read_manifest(spark, tdir, 1)["files"]}
+    v1_files = {e["path"] for e in read_manifest(tdir, 1)["files"]}
     assert v1_files <= {e["path"] for e in m2["files"]}  # carried by reference
     staged = [e for e in m2["files"] if e["path"].startswith("v=2/")]
     assert staged and all("k" in e["stats"] and "v" in e["stats"] for e in staged)
@@ -1306,7 +1347,7 @@ def test_datasource_writer_batch(spark, tmp_path):
     # INSERT OVERWRITE = full replace, op-labelled "write"
     spark.sql("INSERT OVERWRITE snap_w SELECT CAST(1 AS LONG) AS k, 2.0 AS v")
     assert snapshot_read(spark, tdir).count() == 1
-    assert _read_manifest(spark, tdir, 4)["op"] == "write"
+    assert read_manifest(tdir, 4)["op"] == "write"
 
     # a table with CHECK constraints refuses the writer path loudly
     snapshot_add_constraint(spark, tdir, "k_pos", "k >= 0")
@@ -1399,7 +1440,7 @@ def test_max_bytes_per_batch_paces_by_size(spark, tmp_path):
     steady-state spans stop before the budget, always admit at least one
     version, and maintenance commits count zero."""
     from f1_data_pipeline_spark.ingest.feedsource import SnapshotFeedStreamReader
-    from f1_data_pipeline_spark.storage import _read_manifest
+    from f1_data_pipeline_spark.snaplog import read_manifest
 
     tdir = tmp_path / "tbl"
     for i in range(5):
@@ -1407,7 +1448,7 @@ def test_max_bytes_per_batch_paces_by_size(spark, tmp_path):
     snapshot_restamp(spark, str(tdir), {"note": "maintenance"})  # v6, 0 bytes
     snapshot_append(_batch(spark, 50, 60).coalesce(1), str(tdir))  # v7
 
-    m2 = _read_manifest(spark, str(tdir), 2)
+    m2 = read_manifest(str(tdir), 2)
     one_file = sum(
         e["bytes"] for e in m2["files"] if e["path"].startswith("v=2/")
     )
@@ -1457,8 +1498,8 @@ def test_cdf_rewrites_stream_as_change_rows(spark, tmp_path):
     commit record."""
     import os
 
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_apply_cdc,
         snapshot_expire_log,
         snapshot_upsert,
@@ -1477,7 +1518,7 @@ def test_cdf_rewrites_stream_as_change_rows(spark, tmp_path):
         _batch(spark, 100, 105)
     )
     snapshot_upsert(spark, tdir, ups, key="k", cluster_files=2)
-    m2 = _read_manifest(spark, tdir, 2)
+    m2 = read_manifest(tdir, 2)
     assert m2.get("cdf") is True and m2.get("changes")
     assert sum(e["rows"] for e in m2["changes"]) == 25  # 10 pre + 10 post + 5 ins
     # v3: mixed CDC batch — delete 2 keys, update 1
@@ -1487,7 +1528,7 @@ def test_cdf_rewrites_stream_as_change_rows(spark, tmp_path):
     snapshot_apply_cdc(spark, tdir, ch, key="k")
     # v4: net-zero rewrite (upsert with identical values) → empty feed
     snapshot_upsert(spark, tdir, _batch(spark, 60, 62), key="k")
-    m4 = _read_manifest(spark, tdir, 4)
+    m4 = read_manifest(tdir, 4)
     assert m4.get("changes") == [] or sum(e["rows"] for e in m4["changes"]) == 0
 
     def changes(**opts):
@@ -1541,7 +1582,7 @@ def test_cdf_rewrites_stream_as_change_rows(spark, tmp_path):
 
     # the flag survives maintenance and appends
     snapshot_append(_batch(spark, 200, 210), tdir)
-    assert _read_manifest(spark, tdir, 5).get("cdf") is True
+    assert read_manifest(tdir, 5).get("cdf") is True
 
     # refusal intact without the flag
     t2 = str(tmp_path / "plain")
@@ -1566,8 +1607,8 @@ def test_cdf_merge_and_schema_evolution_change_files(spark, tmp_path):
     """The tri-clause MERGE materializes change files on cdf tables too
     — including the by-source delete clause — and an evolving upsert's
     change rows carry the widened schema (old rows NULL-fill)."""
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_merge,
         snapshot_upsert,
         snapshot_write,
@@ -1598,7 +1639,7 @@ def test_cdf_merge_and_schema_evolution_change_files(spark, tmp_path):
     # schema evolution: the change file carries the widened column
     ev = _batch(spark, 12, 14).withColumn("w", F.lit("x"))
     snapshot_upsert(spark, tdir, ev, key="k", evolve_schema=True)
-    m3 = _read_manifest(spark, tdir, 3)
+    m3 = read_manifest(tdir, 3)
     assert m3.get("changes")
     f3 = (
         spark.read.format("snapshotfeed")
@@ -1619,8 +1660,8 @@ def test_cdf_delete_and_restore_change_files(spark, tmp_path):
     as inserts — DV deltas included), and a net-zero restore streams
     nothing. The materialized branch is authoritative: the feed never
     re-reads data files for these commits."""
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_append,
         snapshot_delete,
         snapshot_restore,
@@ -1643,7 +1684,7 @@ def test_cdf_delete_and_restore_change_files(spark, tmp_path):
     # v2: COW delete — 10 predicate-matched rows emit as deletes
     ver, n = snapshot_delete(spark, tdir, [("k", "<", 10)], mode="cow")
     assert (ver, n) == (2, 10)
-    assert _read_manifest(spark, tdir, 2).get("changes")
+    assert read_manifest(tdir, 2).get("changes")
     f2 = changes(startingVersion=2)
     rows = f2.collect()
     assert len(rows) == 10
@@ -1657,7 +1698,7 @@ def test_cdf_delete_and_restore_change_files(spark, tmp_path):
     # deletes; the restore's diff comes from the materialized files
     snapshot_append(_batch(spark, 100, 150), tdir)
     assert snapshot_restore(spark, tdir, 2) == 4
-    m4 = _read_manifest(spark, tdir, 4)
+    m4 = read_manifest(tdir, 4)
     assert m4.get("cdf") is True and m4.get("changes")
     f4 = changes(startingVersion=4)
     rows = f4.collect()
@@ -1713,8 +1754,8 @@ def test_cdf_replace_change_files(spark, tmp_path):
     inserts, identical rows cancel): a cdf table's changeFeed never
     refuses. A re-clustering replace of identical content nets to an
     empty feed, and the old side honors accumulated deletion vectors."""
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_delete,
         snapshot_write,
     )
@@ -1737,7 +1778,7 @@ def test_cdf_replace_change_files(spark, tmp_path):
 
     # v2: replace dropping 0..9 and adding 100..109; 10..99 identical
     snapshot_write(_batch(spark, 10, 110).repartition(3), tdir, stats_cols=["k"])
-    m2 = _read_manifest(spark, tdir, 2)
+    m2 = read_manifest(tdir, 2)
     assert m2.get("cdf") is True and m2.get("changes") is not None
     f2 = changes(2)
     by = {}
@@ -1762,7 +1803,7 @@ def test_cdf_replace_change_files(spark, tmp_path):
 
     # change_files=False on a replace disables the flag going forward
     snapshot_write(_batch(spark, 20, 110), tdir, change_files=False)
-    assert _read_manifest(spark, tdir, 6).get("cdf") is None
+    assert read_manifest(tdir, 6).get("cdf") is None
 
 
 def test_max_bytes_pacing_counts_change_files_on_cdf_tables(spark, tmp_path):
@@ -1770,8 +1811,8 @@ def test_max_bytes_pacing_counts_change_files_on_cdf_tables(spark, tmp_path):
     actually read: a materialized-CDF rewrite counts its (small) change
     files, not the (large) staged survivor files the commit rewrote."""
     from f1_data_pipeline_spark.ingest.feedsource import SnapshotFeedStreamReader
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_delete,
         snapshot_write,
     )
@@ -1785,8 +1826,8 @@ def test_max_bytes_pacing_counts_change_files_on_cdf_tables(spark, tmp_path):
     # change file holds only the 5 delete rows
     snapshot_delete(spark, str(tdir), [("k", "<", 5)], mode="cow")
     snapshot_append(_batch(spark, 4000, 4010).coalesce(1), str(tdir))  # v3
-    m2 = _read_manifest(spark, str(tdir), 2)
-    m3 = _read_manifest(spark, str(tdir), 3)
+    m2 = read_manifest(str(tdir), 2)
+    m3 = read_manifest(str(tdir), 3)
     change_bytes = sum(e["bytes"] for e in m2["changes"])
     staged_bytes = sum(
         e["bytes"] for e in m2["files"] if e["path"].startswith("v=2/")
@@ -1824,8 +1865,8 @@ def test_cdf_null_keys_and_type_changing_replace(spark, tmp_path):
     pre-image instead of fabricating a delete+insert pair; (2) a replace
     that retypes a column, and a restore across it, diff via try_cast
     under each side's own schema instead of crashing the parquet scan."""
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_restore,
         snapshot_upsert,
         snapshot_write,
@@ -1870,7 +1911,7 @@ def test_cdf_null_keys_and_type_changing_replace(spark, tmp_path):
     # v3: restore across the type change — old side ("99") casts to the
     # restored int schema; k=1 cancels
     snapshot_restore(spark, t2, 1)
-    assert _read_manifest(spark, t2, 3).get("changes") is not None
+    assert read_manifest(t2, 3).get("changes") is not None
     feed = (
         spark.read.format("snapshotfeed")
         .option("changeFeed", "true")

@@ -1356,9 +1356,9 @@ def test_snapshot_optimize_packs_only_small_files(spark, tmp_path):
     Bloom filters survive, and a tail-free table is a no-op."""
     from pyspark.sql import functions as F
 
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
         _manifest_blooms_for_test,
-        _read_manifest,
         snapshot_optimize,
         snapshot_read,
         snapshot_upsert,
@@ -1383,7 +1383,7 @@ def test_snapshot_optimize_packs_only_small_files(spark, tmp_path):
     before = snapshot_read(spark, tdir)
     n_before = len(before.inputFiles())
     rows_before = {(r["k"], r["v"]) for r in before.collect()}
-    m = _read_manifest(spark, tdir, 5)
+    m = read_manifest(tdir, 5)
     big = [e for e in m["files"] if e["bytes"] >= 16 * 1024]
     assert big, "fixture needs at least one adequately-sized file"
 
@@ -1394,7 +1394,7 @@ def test_snapshot_optimize_packs_only_small_files(spark, tmp_path):
     after = snapshot_read(spark, tdir)
     assert {(r["k"], r["v"]) for r in after.collect()} == rows_before
     assert len(after.inputFiles()) < n_before
-    m2 = _read_manifest(spark, tdir, v)
+    m2 = read_manifest(tdir, v)
     carried_entries = [e for e in m2["files"] if not e["path"].startswith(f"v={v}/")]
     by_path = {e["path"]: e for e in m["files"]}
     for e in carried_entries:
@@ -1552,19 +1552,19 @@ def test_snapshot_delete_dv_mode_rewrites_nothing(spark, tmp_path):
     file: the new manifest references the identical file list, readers
     subtract positions, time travel still sees the rows, and repeated /
     no-match deletes behave like their copy-on-write twins."""
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_delete,
         snapshot_read,
         snapshot_version,
     )
 
     tdir = _dv_table(spark, tmp_path)
-    m1 = _read_manifest(spark, tdir, 1)
+    m1 = read_manifest(tdir, 1)
 
     v, n_del = snapshot_delete(spark, tdir, [("g", "=", "3")], mode="dv")
     assert v == 2 and n_del == len([i for i in range(100) if i % 7 == 3])
-    m2 = _read_manifest(spark, tdir, 2)
+    m2 = read_manifest(tdir, 2)
     assert m2["files"] == m1["files"]  # zero data files rewritten
     assert m2["dv"]["deleted"] == n_del
     cur = {r["k"] for r in snapshot_read(spark, tdir).collect()}
@@ -1592,8 +1592,8 @@ def test_snapshot_dv_upsert_purges_touched_and_keeps_carried(spark, tmp_path):
     """An upsert over a DV'd table must not resurrect deleted rows in the
     files it rewrites, must purge those files' DV entries, and must carry
     the untouched files' entries."""
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_delete,
         snapshot_read,
         snapshot_upsert,
@@ -1608,7 +1608,7 @@ def test_snapshot_dv_upsert_purges_touched_and_keeps_carried(spark, tmp_path):
         [(k, "upd", 9.9) for k in (1, 2, 4)], "k long, g string, x double"
     )
     v = snapshot_upsert(spark, tdir, ups, key="k", cluster_files=1)
-    m = _read_manifest(spark, tdir, v)
+    m = read_manifest(tdir, v)
     cur = {r["k"]: r for r in snapshot_read(spark, tdir).collect()}
     assert set(cur) == ({i for i in range(100)} - gone) | {1, 2, 4}
     assert cur[1]["g"] == "upd" and cur[4]["x"] == 9.9
@@ -1656,8 +1656,8 @@ def test_snapshot_dv_optimize_and_compact_purge_debt(spark, tmp_path):
     """Physical maintenance materializes deletion vectors: optimize
     purges the packed files' entries (carrying the rest), and a full
     compact leaves the table with NO deletion vector at all."""
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_compact,
         snapshot_delete,
         snapshot_optimize,
@@ -1672,14 +1672,14 @@ def test_snapshot_dv_optimize_and_compact_purge_debt(spark, tmp_path):
     # every file is small: optimize packs them all -> debt fully purged
     v, rewritten, carried = snapshot_optimize(spark, tdir, target_file_bytes=1 << 20)
     assert rewritten > 0
-    m = _read_manifest(spark, tdir, v)
+    m = read_manifest(tdir, v)
     assert m.get("dv") is None
     assert {r["k"] for r in snapshot_read(spark, tdir).collect()} == live
 
     # dv again, then full compact: also purged
     snapshot_delete(spark, tdir, [("k", "=", 50)], mode="dv")
     v2, _ = snapshot_compact(spark, tdir, target_file_bytes=1 << 20)
-    m2 = _read_manifest(spark, tdir, v2)
+    m2 = read_manifest(tdir, v2)
     assert m2.get("dv") is None
     assert {r["k"] for r in snapshot_read(spark, tdir).collect()} == live - {50}
 
@@ -1715,8 +1715,8 @@ def test_snapshot_clone_shallow_zero_copy_and_independent(spark, tmp_path):
     vacuum that never touches source data."""
     import os
 
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_changes,
         snapshot_clone,
         snapshot_delete,
@@ -1744,7 +1744,7 @@ def test_snapshot_clone_shallow_zero_copy_and_independent(spark, tmp_path):
     assert v == 1
     # zero copy: no data directory in the clone at all
     assert not any(d.startswith("v=") for d in os.listdir(cl))
-    m = _read_manifest(spark, cl, 1)
+    m = read_manifest(cl, 1)
     assert all(e["path"].startswith(src) for e in m["files"])
     # the clone sees the source state INCLUDING its deletion vector
     got = {r["k"] for r in snapshot_read(spark, cl).collect()}
@@ -1762,7 +1762,7 @@ def test_snapshot_clone_shallow_zero_copy_and_independent(spark, tmp_path):
     ) - {42}
     # staged files are the clone's own (relative); untouched source files
     # stay carried by absolute reference
-    m2 = _read_manifest(spark, cl, v2)
+    m2 = read_manifest(cl, v2)
     assert any(e["path"].startswith("v=2/") for e in m2["files"])
     assert any(e["path"].startswith(src) for e in m2["files"])
     # CDF works across the clone's own history
@@ -1875,8 +1875,8 @@ def test_snapshot_optimize_zorder_clusters_packed_files(spark, tmp_path):
     on the interleaved key, so BOTH dimensions' per-file envelopes
     tighten and a 2-D point read prunes files — while carried big files
     and the data itself are untouched (content equality pinned)."""
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_optimize,
         snapshot_read,
         snapshot_write,
@@ -1896,7 +1896,7 @@ def test_snapshot_optimize_zorder_clusters_packed_files(spark, tmp_path):
     )
     assert rewritten == 16
     assert set(map(tuple, snapshot_read(spark, tdir).collect())) == before
-    m = _read_manifest(spark, tdir, v)
+    m = read_manifest(tdir, v)
     # clustered envelopes: a 2-D point lookup must prune most files
     out = snapshot_read(
         spark, tdir, where=[("xx", "=", 3.0), ("yy", "=", 21.0)]
@@ -1913,8 +1913,8 @@ def test_snapshot_null_count_stats_prune_is_null_reads(spark, tmp_path):
     with zero nulls, IS NOT NULL reads skip all-null files, the residual
     filter keeps results exact, and pre-r9 manifests (no nulls key)
     simply never prune (safe fallback)."""
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_read,
         snapshot_write,
     )
@@ -1932,7 +1932,7 @@ def test_snapshot_null_count_stats_prune_is_null_reads(spark, tmp_path):
         .alias("v"),
     ).repartitionByRange(3, "k")
     snapshot_write(df, tdir, stats_cols=["k", "v"])
-    m = _read_manifest(spark, tdir, 1)
+    m = read_manifest(tdir, 1)
     assert all("nulls" in e["stats"]["v"] for e in m["files"])
     n_files = len(m["files"])
     assert n_files == 3
@@ -2061,7 +2061,7 @@ def test_commit_nonconflict_link_failure_fails_loudly(spark, tmp_path, monkeypat
     retries aren't burned and maintainers don't swallow it forever."""
     import pytest
 
-    import f1_data_pipeline_spark.storage as S
+    from f1_data_pipeline_spark import snaplog
     from f1_data_pipeline_spark.storage import (
         SnapshotConflictError,
         snapshot_version,
@@ -2070,15 +2070,15 @@ def test_commit_nonconflict_link_failure_fails_loudly(spark, tmp_path, monkeypat
 
     tdir = str(tmp_path / "linkfail")
     df = spark.range(10).select(F.col("id").alias("k"))
-    real_link = S._publish_by_link
+    real_link = snaplog._link
 
     # scenario 1: the COMMIT RECORD's link fails (claim succeeds)
-    def broken_record_link(jvm, record, tmp):
-        if str(record).endswith(".json"):
+    def broken_record_link(src, dst):
+        if str(dst).endswith(".json"):
             raise OSError("Invalid cross-device link")
-        return real_link(jvm, record, tmp)
+        return real_link(src, dst)
 
-    monkeypatch.setattr(S, "_publish_by_link", broken_record_link)
+    monkeypatch.setattr(snaplog, "_link", broken_record_link)
     with pytest.raises(RuntimeError) as ei:
         snapshot_write(df, tdir, retries=3)
     assert not isinstance(ei.value, SnapshotConflictError)
@@ -2089,10 +2089,10 @@ def test_commit_nonconflict_link_failure_fails_loudly(spark, tmp_path, monkeypat
     # loud non-conflict error (a conflict mapping would burn the retries)
     tdir2 = str(tmp_path / "claimfail")
 
-    def broken_claim_link(jvm, record, tmp):
+    def broken_claim_link(src, dst):
         raise OSError("Invalid cross-device link")
 
-    monkeypatch.setattr(S, "_publish_by_link", broken_claim_link)
+    monkeypatch.setattr(snaplog, "_link", broken_claim_link)
     with pytest.raises(RuntimeError) as ei:
         snapshot_write(df, tdir2, retries=3)
     assert not isinstance(ei.value, SnapshotConflictError)
@@ -2114,9 +2114,9 @@ def test_snapshot_optimize_dv_fraction_trigger(spark, tmp_path):
     rewritten (survivors materialized, its DV entries purged) even
     though size-packing would never touch it; under-threshold files are
     carried untouched with their entries intact."""
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
         _dv_key,
-        _read_manifest,
         snapshot_delete,
         snapshot_optimize,
         snapshot_read,
@@ -2134,7 +2134,7 @@ def test_snapshot_optimize_dv_fraction_trigger(spark, tmp_path):
     snapshot_delete(spark, tdir, [("k", "<", 20)], mode="dv")
     snapshot_delete(spark, tdir, [("k", "=", 90)], mode="dv")
     v0 = 3
-    m0 = _read_manifest(spark, tdir, v0)
+    m0 = read_manifest(tdir, v0)
     by_key = {_dv_key(e["path"]): e for e in m0["files"]}
     heavy = [k for k, c in m0["dv"]["files"].items() if c / by_key[k]["rows"] >= 0.5]
     light = [k for k, c in m0["dv"]["files"].items() if c / by_key[k]["rows"] < 0.5]
@@ -2149,7 +2149,7 @@ def test_snapshot_optimize_dv_fraction_trigger(spark, tmp_path):
         spark, tdir, small_file_bytes=1, dv_fraction=0.5
     )
     assert v == v0 + 1 and rewritten == len(heavy) and carried == 3
-    m = _read_manifest(spark, tdir, v)
+    m = read_manifest(tdir, v)
     paths = {_dv_key(e["path"]) for e in m["files"]}
     assert not set(heavy) & paths  # heavy file replaced by its survivors
     assert set(light) <= paths  # light file carried by reference
@@ -2362,8 +2362,8 @@ def test_snapshot_merge_cost_model_and_guards(spark, tmp_path):
     columns raise; a no-op merge commits nothing."""
     import pytest
 
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_merge,
         snapshot_version,
     )
@@ -2371,7 +2371,7 @@ def test_snapshot_merge_cost_model_and_guards(spark, tmp_path):
     tdir = _merge_table(spark, tmp_path)  # 2 range files: k 1-4, 5-8
     low = spark.createDataFrame([(1, "x", -1.0)], "k long, tag string, val double")
     v, m = snapshot_merge(spark, tdir, low, key="k")
-    m2 = _read_manifest(spark, tdir, v)
+    m2 = read_manifest(tdir, v)
     carried = [e for e in m2["files"] if e["path"].startswith("v=1/")]
     assert len(carried) == 1  # high file untouched, carried by reference
 
@@ -2380,7 +2380,7 @@ def test_snapshot_merge_cost_model_and_guards(spark, tmp_path):
         spark, tdir, full, key="k", when_not_matched_by_source="delete",
         not_matched_by_source_condition="t.k > 100",
     )
-    m3 = _read_manifest(spark, tdir, v3)
+    m3 = read_manifest(tdir, v3)
     assert not [e for e in m3["files"] if not e["path"].startswith(f"v={v3}/")]
 
     with pytest.raises(ValueError, match="duplicate"):
@@ -2623,8 +2623,8 @@ def test_snapshot_merge_schema_evolution(spark, tmp_path):
     values, no carried file is rewritten; without the flag they raise."""
     import pytest
 
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_merge,
         snapshot_read,
     )
@@ -2638,7 +2638,7 @@ def test_snapshot_merge_schema_evolution(spark, tmp_path):
         snapshot_merge(spark, tdir, src, key="k")
     v, m = snapshot_merge(spark, tdir, src, key="k", evolve_schema=True)
     assert m["updated"] == 1 and m["inserted"] == 1
-    m2 = _read_manifest(spark, tdir, v)
+    m2 = read_manifest(tdir, v)
     assert [e for e in m2["files"] if e["path"].startswith("v=1/")]  # carried
     rows = {r["k"]: r for r in snapshot_read(spark, tdir).collect()}
     assert rows[1]["lang"] == "fr" and rows[9]["lang"] == "de"
@@ -2702,8 +2702,8 @@ def test_snapshot_merge_by_source_triple_condition_prunes(spark, tmp_path):
     """The by-source clause with a WHERE-TRIPLE condition prunes at the
     manifest level: files whose envelope proves no stale row are carried
     (not rewritten) while results stay exactly the full-pass answer."""
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_merge,
         snapshot_read,
         snapshot_write,
@@ -2722,7 +2722,7 @@ def test_snapshot_merge_by_source_triple_condition_prunes(spark, tmp_path):
         when_not_matched_by_source="delete",
         not_matched_by_source_condition=[("ts", "<", 10.0)],
     )
-    mf = _read_manifest(spark, tdir, v)
+    mf = read_manifest(tdir, v)
     carried = [e for e in mf["files"] if e["path"].startswith("v=1/")]
     # only the low file (ts 0-9, holding both the matches and the stale
     # rows) rewrites; the three high files are envelope-carried
@@ -2746,8 +2746,8 @@ def test_composite_key_upsert_cdc_and_merge(spark, tmp_path):
     equality."""
     import pytest
 
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_apply_cdc,
         snapshot_merge,
         snapshot_read,
@@ -2765,7 +2765,7 @@ def test_composite_key_upsert_cdc_and_merge(spark, tmp_path):
 
     ups = spark.createDataFrame([(1, 3, 99.0)], "driver long, lap long, t double")
     v = snapshot_upsert(spark, tdir, ups, key=["driver", "lap"], cluster_files=1)
-    m = _read_manifest(spark, tdir, v)
+    m = read_manifest(tdir, v)
     assert len([e for e in m["files"] if e["path"].startswith("v=1/")]) == 3
     rows = {(r["driver"], r["lap"]): r["t"] for r in snapshot_read(spark, tdir).collect()}
     assert rows[(1, 3)] == 99.0 and rows[(1, 4)] == 14.0 and len(rows) == 40
@@ -2818,8 +2818,8 @@ def test_snapshot_append_carries_files_untouched(spark, tmp_path):
     """Append-only commits: prior files ride by reference (zero rewrite),
     stats/blooms build for the new files only, the deletion vector
     carries verbatim, and every commit is op-labelled."""
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_append,
         snapshot_delete,
         snapshot_history,
@@ -2833,9 +2833,9 @@ def test_snapshot_append_carries_files_untouched(spark, tmp_path):
     # first append CREATES the table (one atomic v1 commit)
     assert snapshot_append(b(0, 100), tdir, stats_cols=["k"]) == 1
     assert snapshot_append(b(100, 150), tdir) == 2
-    m2 = _read_manifest(spark, tdir, 2)
+    m2 = read_manifest(tdir, 2)
     assert m2["op"] == "append"
-    v1_files = {e["path"] for e in _read_manifest(spark, tdir, 1)["files"]}
+    v1_files = {e["path"] for e in read_manifest(tdir, 1)["files"]}
     # every v1 file carried BY REFERENCE — the O(new rows) commit claim
     assert v1_files <= {e["path"] for e in m2["files"]}
     # stats inherited for the new files without re-passing stats_cols
@@ -2859,7 +2859,7 @@ def test_snapshot_append_carries_files_untouched(spark, tmp_path):
     v = snapshot_append(
         b(1000, 1200), tdir, cluster_by=["k"], cluster_files=4
     )
-    m = _read_manifest(spark, tdir, v)
+    m = read_manifest(tdir, v)
     own = [e for e in m["files"] if e["path"].startswith(f"v={v}/")]
     spans = sorted(
         (e["stats"]["k"]["min"], e["stats"]["k"]["max"]) for e in own
@@ -2930,6 +2930,7 @@ def test_snapshot_append_first_commit_race_not_lost(spark, tmp_path, monkeypatch
     SnapshotConflictError and the retry falls through to the APPEND path
     (carrying the concurrent writer's rows)."""
     import f1_data_pipeline_spark.storage as st
+    from f1_data_pipeline_spark import snaplog
 
     tdir = str(tmp_path / "tbl")
     concurrent = spark.createDataFrame([(1, "concurrent")], "k long, s string")
@@ -2958,7 +2959,7 @@ def test_snapshot_append_first_commit_race_not_lost(spark, tmp_path, monkeypatch
     v = st.snapshot_append(mine, tdir, retries=2)
     monkeypatch.setattr(st, "snapshot_version", real)
     assert v == 2
-    m2 = st._read_manifest(spark, tdir, 2)
+    m2 = snaplog.read_manifest(tdir, 2)
     assert m2["op"] == "append"
     assert {r["s"] for r in st.snapshot_read(spark, tdir).collect()} == {
         "concurrent",
@@ -2974,8 +2975,9 @@ def test_manifest_log_checkpoint(spark, tmp_path, monkeypatch):
     import os
 
     import f1_data_pipeline_spark.storage as st
+    from f1_data_pipeline_spark import snaplog
 
-    monkeypatch.setattr(st, "SNAPSHOT_CHECKPOINT_INTERVAL", 5)
+    monkeypatch.setattr(snaplog, "SNAPSHOT_CHECKPOINT_INTERVAL", 5)
     tdir = str(tmp_path / "tbl")
     b = lambda lo, hi: spark.range(lo, hi).select(  # noqa: E731
         F.col("id").alias("k"), (F.col("id") * 2.0).alias("v")
@@ -2991,24 +2993,24 @@ def test_manifest_log_checkpoint(spark, tmp_path, monkeypatch):
     # (disable BOTH fast paths: the full-log read history uses and the
     # pointer-only read version resolution uses)
     hist = st.snapshot_history(spark, tdir)
-    real_rc, real_cv = st._read_checkpoint, st._checkpoint_version
-    monkeypatch.setattr(st, "_read_checkpoint", lambda *a: None)
-    monkeypatch.setattr(st, "_checkpoint_version", lambda *a: None)
+    real_rc, real_cv = snaplog.read_checkpoint, snaplog.checkpoint_version
+    monkeypatch.setattr(snaplog, "read_checkpoint", lambda *a: None)
+    monkeypatch.setattr(snaplog, "checkpoint_version", lambda *a: None)
     hist_full = st.snapshot_history(spark, tdir)
     assert st.snapshot_version(spark, tdir) == 12  # listing fallback
-    monkeypatch.setattr(st, "_read_checkpoint", real_rc)
-    monkeypatch.setattr(st, "_checkpoint_version", real_cv)
+    monkeypatch.setattr(snaplog, "read_checkpoint", real_rc)
+    monkeypatch.setattr(snaplog, "checkpoint_version", real_cv)
     assert hist == hist_full and len(hist) == 12
 
     # resolution reads only the post-checkpoint TAIL (counted JSON reads)
     reads = []
-    real_rm = st._read_manifest
+    real_rm = snaplog.read_manifest
 
-    def counting(sp, td, v):
+    def counting(td, v):
         reads.append(v)
-        return real_rm(sp, td, v)
+        return real_rm(td, v)
 
-    monkeypatch.setattr(st, "_read_manifest", counting)
+    monkeypatch.setattr(snaplog, "read_manifest", counting)
     st.snapshot_history(spark, tdir)
     assert set(reads) == {11, 12}, f"checkpointed prefix was re-read: {reads}"
     # as-of inside the checkpointed prefix: ZERO manifest reads
@@ -3020,7 +3022,7 @@ def test_manifest_log_checkpoint(spark, tmp_path, monkeypatch):
     reads.clear()
     assert st.snapshot_version_asof(spark, tdir, hist[-1]["ts"] + 1) == 12
     assert set(reads) <= {11, 12}
-    monkeypatch.setattr(st, "_read_manifest", real_rm)
+    monkeypatch.setattr(snaplog, "read_manifest", real_rm)
 
     # torn pointer: every read falls back to the full scan, still exact
     with open(f"{tdir}/_manifests/_last_checkpoint", "w") as f:
@@ -3030,17 +3032,15 @@ def test_manifest_log_checkpoint(spark, tmp_path, monkeypatch):
 
     # explicit checkpoint repairs the pointer at the CURRENT version
     assert st.snapshot_checkpoint(spark, tdir) == 12
-    ck = st._read_checkpoint(spark, tdir)
+    ck = snaplog.read_checkpoint(tdir)
     assert ck is not None and ck["version"] == 12 and len(ck["log"]) == 12
     assert [r["version"] for r in ck["log"]] == list(range(1, 13))
     assert all(r["op"] == "append" for r in ck["log"])
 
     # the feedsource's latest-version probe rides the same pointer
-    from f1_data_pipeline_spark.ingest.feedsource import _latest_version
-
-    assert _latest_version(tdir) == 12
+    assert snaplog.latest_version(tdir) == 12
     st.snapshot_append(b(200, 205), tdir)
-    assert _latest_version(tdir) == 13  # forward probe past the pointer
+    assert snaplog.latest_version(tdir) == 13  # forward probe past the pointer
 
 
 def test_concurrent_appends_no_lost_updates(spark, tmp_path):
@@ -3087,11 +3087,11 @@ def test_concurrent_appends_no_lost_updates(spark, tmp_path):
 def test_corrupt_checkpoint_pointer_falls_back(spark, tmp_path):
     """A structurally-valid checkpoint whose version was never committed
     (pointer corruption) must not fabricate a phantom head — both the
-    JVM-side and the feedsource resolvers fall back to the listing."""
+    storage and the feedsource head resolution fall back to the listing."""
     import json as _json
 
     import f1_data_pipeline_spark.storage as st
-    from f1_data_pipeline_spark.ingest.feedsource import _latest_version
+    from f1_data_pipeline_spark.snaplog import latest_version
 
     tdir = str(tmp_path / "tbl")
     for i in range(3):
@@ -3103,7 +3103,7 @@ def test_corrupt_checkpoint_pointer_falls_back(spark, tmp_path):
     with open(f"{tdir}/_manifests/_last_checkpoint", "w") as f:
         f.write(_json.dumps({"version": 99, "path": "99.ckpt.json"}))
     assert st.snapshot_version(spark, tdir) == 3
-    assert _latest_version(tdir) == 3
+    assert latest_version(tdir) == 3
     # as-of/history must not trust the phantom log either
     hist = st.snapshot_history(spark, tdir)
     assert [h["version"] for h in hist] == [1, 2, 3]
@@ -3146,9 +3146,10 @@ def test_snapshot_expire_log(spark, tmp_path, monkeypatch):
     import os
 
     import f1_data_pipeline_spark.storage as st
+    from f1_data_pipeline_spark import snaplog
 
     # large interval: no auto-checkpoint — expiry must force its own
-    monkeypatch.setattr(st, "SNAPSHOT_CHECKPOINT_INTERVAL", 1000)
+    monkeypatch.setattr(snaplog, "SNAPSHOT_CHECKPOINT_INTERVAL", 1000)
     tdir = str(tmp_path / "tbl")
     b = lambda lo, hi: spark.range(lo, hi).select(  # noqa: E731
         F.col("id").alias("k"), (F.col("id") * 2.0).alias("v")
@@ -3183,9 +3184,9 @@ def test_snapshot_expire_log(spark, tmp_path, monkeypatch):
         st.snapshot_read(spark, tdir, version=5)
     # maintenance still composes: vacuum plans from the kept manifests
     st.snapshot_vacuum(spark, tdir, keep_last=2, dry_run=True)
-    from f1_data_pipeline_spark.ingest.feedsource import _latest_version
+    from f1_data_pipeline_spark.snaplog import latest_version
 
-    assert _latest_version(tdir) == 15
+    assert latest_version(tdir) == 15
     # idempotent: nothing left below the cut
     assert st.snapshot_expire_log(spark, tdir, keep_last=5) == []
 
@@ -3200,8 +3201,9 @@ def test_expire_log_clamps_below_live_clone_pins(spark, tmp_path, monkeypatch):
     import shutil
 
     import f1_data_pipeline_spark.storage as st
+    from f1_data_pipeline_spark import snaplog
 
-    monkeypatch.setattr(st, "SNAPSHOT_CHECKPOINT_INTERVAL", 1000)
+    monkeypatch.setattr(snaplog, "SNAPSHOT_CHECKPOINT_INTERVAL", 1000)
     tdir, cdir = str(tmp_path / "tbl"), str(tmp_path / "clone")
     b = lambda lo, hi: spark.range(lo, hi).select(  # noqa: E731
         F.col("id").alias("k"), (F.col("id") * 2.0).alias("v")
@@ -3266,8 +3268,9 @@ def test_history_check_available_serves_expired_versions(
     default path: versions expired by snapshot_expire_log are served from
     the compacted log with available=False instead of silently dropped."""
     import f1_data_pipeline_spark.storage as st
+    from f1_data_pipeline_spark import snaplog
 
-    monkeypatch.setattr(st, "SNAPSHOT_CHECKPOINT_INTERVAL", 1000)
+    monkeypatch.setattr(snaplog, "SNAPSHOT_CHECKPOINT_INTERVAL", 1000)
     tdir = str(tmp_path / "tbl")
     for i in range(15):
         st.snapshot_append(
@@ -3372,9 +3375,10 @@ def test_snapshot_stats_agg_metadata_only(spark, tmp_path):
     # the aggregate must still succeed because it opens ONLY DV'd files
     import os
 
-    from f1_data_pipeline_spark.storage import _dv_key, _read_manifest
+    from f1_data_pipeline_spark.snaplog import read_manifest
+    from f1_data_pipeline_spark.storage import _dv_key
 
-    m = _read_manifest(spark, tdir, 3)
+    m = read_manifest(tdir, 3)
     dirty_keys = set((m.get("dv") or {}).get("files", {}))
     clean = [e["path"] for e in m["files"] if _dv_key(e["path"]) not in dirty_keys]
     assert clean  # the band deletes must not have touched every file
@@ -3722,11 +3726,11 @@ def test_snapshot_count_opens_only_boundary_files(spark, tmp_path):
     boundary files (and DV-dirty ones) are opened."""
     import os
 
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
         _dv_key,
         _entry_all_match,
         _entry_prunable,
-        _read_manifest,
         snapshot_count,
         snapshot_delete,
         snapshot_write,
@@ -3739,7 +3743,7 @@ def test_snapshot_count_opens_only_boundary_files(spark, tmp_path):
     assert snapshot_count(spark, tdir) == 1000
     assert snapshot_count(spark, tdir, where) == 601
 
-    m = _read_manifest(spark, tdir, 1)
+    m = read_manifest(tdir, 1)
     interior = [
         e["path"]
         for e in m["files"]
@@ -3768,11 +3772,10 @@ def test_footer_stats_match_spark_job_exactly(spark, tmp_path):
     row groups; float/double and timestamp (INT96) stats must DECLINE
     (return None) so the Spark job keeps authority where footer parity
     is not provable."""
+    from f1_data_pipeline_spark import snaplog
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
         _footer_file_entries,
-        _read_manifest,
-        _snap_fs,
-        _snap_path,
         _staged_file_entries,
         snapshot_write,
     )
@@ -3797,12 +3800,11 @@ def test_footer_stats_match_spark_job_exactly(spark, tmp_path):
     cols = ["k", "s", "allnull", "d"]
     snapshot_write(df.repartition(4), tdir, stats_cols=cols)
 
-    fs, jvm = _snap_fs(spark, tdir)
-    names = {}
-    for st in fs.listStatus(_snap_path(jvm, tdir, "v=1")):
-        n = st.getPath().getName()
-        if n.endswith(".parquet"):
-            names[n] = int(st.getLen())
+    names = {
+        i.base_name: int(i.size)
+        for i in snaplog.listdir(f"{tdir}/v=1")
+        if i.base_name.endswith(".parquet")
+    }
 
     foot = _footer_file_entries(tdir, 1, names, cols)
     assert foot is not None, "footer path declined on trusted column types"
@@ -3822,7 +3824,7 @@ def test_footer_stats_match_spark_job_exactly(spark, tmp_path):
     assert _footer_file_entries(tdir, 1, names, cols + ["ts"]) is None
     tdir2 = str(tmp_path / "tbl2")
     snapshot_write(df.coalesce(1), tdir2, stats_cols=["k", "v", "ts"])
-    st = _read_manifest(spark, tdir2, 1)["files"][0]["stats"]
+    st = read_manifest(tdir2, 1)["files"][0]["stats"]
     assert st["v"] == {"min": 0.0, "max": 7498.5, "nulls": 0}
     assert st["ts"]["min"] == "2024-01-01 00:00:00"
 
@@ -3851,11 +3853,10 @@ def test_footer_stats_decline_truncated_min(spark, tmp_path):
     MAX does (parquet-mr truncates long binary bounds to a prefix — a
     valid envelope but not byte-identical to the Spark job), so manifest
     stats keep exact-parity authority via the fallback."""
+    from f1_data_pipeline_spark import snaplog
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
         _footer_file_entries,
-        _read_manifest,
-        _snap_fs,
-        _snap_path,
         snapshot_write,
     )
 
@@ -3865,15 +3866,14 @@ def test_footer_stats_decline_truncated_min(spark, tmp_path):
         [(1, long_min), (2, "b")], "k long, s string"
     )
     snapshot_write(df.coalesce(1), tdir, stats_cols=["k", "s"])
-    fs, jvm = _snap_fs(spark, tdir)
-    names = {}
-    for st in fs.listStatus(_snap_path(jvm, tdir, "v=1")):
-        n = st.getPath().getName()
-        if n.endswith(".parquet"):
-            names[n] = int(st.getLen())
+    names = {
+        i.base_name: int(i.size)
+        for i in snaplog.listdir(f"{tdir}/v=1")
+        if i.base_name.endswith(".parquet")
+    }
     assert _footer_file_entries(tdir, 1, names, ["k", "s"]) is None
     # the commit path fell back to the Spark job: the full min survives
-    st = _read_manifest(spark, tdir, 1)["files"][0]["stats"]["s"]
+    st = read_manifest(tdir, 1)["files"][0]["stats"]["s"]
     assert st["min"] == long_min and st["max"] == "b"
 
 
@@ -3887,9 +3887,9 @@ def test_cdf_restore_vs_append_race_leaves_no_torn_changes(spark, tmp_path):
     import threading
 
     from f1_data_pipeline_spark.ingest import feedsource
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
         SnapshotConflictError,
-        _read_manifest,
         snapshot_append,
         snapshot_restore,
         snapshot_upsert,
@@ -3957,7 +3957,7 @@ def test_cdf_restore_vs_append_race_leaves_no_torn_changes(spark, tmp_path):
     assert not errs, errs
     latest = snapshot_version(spark, tdir)
     for v in range(1, latest + 1):
-        m = _read_manifest(spark, tdir, v)
+        m = read_manifest(tdir, v)
         for entry in m.get("changes") or []:
             assert os.path.exists(f"{tdir}/{entry['path']}"), (v, entry)
     feedsource.register(spark)
@@ -3968,3 +3968,37 @@ def test_cdf_restore_vs_append_race_leaves_no_torn_changes(spark, tmp_path):
         .load(tdir)
     )
     feed.collect()  # no FileNotFound: every served change file exists
+
+
+def test_dataset_exists_probes_remote_uris_through_hadoop_fs(tmp_path):
+    """Artifacts are written by Spark's Hadoop writer, so a remote URI —
+    including s3a://, which pyarrow.fs cannot resolve — is probed through
+    the path's own Hadoop FileSystem; local paths stay a syscall."""
+    from types import SimpleNamespace
+
+    from f1_data_pipeline_spark.storage import dataset_exists
+
+    present = {"s3a://bucket/idx/_SUCCESS"}
+    probed = []
+
+    class _Path:
+        def __init__(self, uri):
+            self.uri = uri
+
+        def getFileSystem(self, conf):
+            return SimpleNamespace(exists=lambda p: probed.append(p.uri) or p.uri in present)
+
+    hadoop_fs = SimpleNamespace(Path=_Path)
+    fake = SimpleNamespace(
+        _jvm=SimpleNamespace(org=SimpleNamespace(apache=SimpleNamespace(
+            hadoop=SimpleNamespace(fs=hadoop_fs)))),
+        _jsc=SimpleNamespace(hadoopConfiguration=lambda: None),
+    )
+    assert dataset_exists(fake, "s3a://bucket/idx/_SUCCESS")
+    assert not dataset_exists(fake, "s3a://bucket/other/_SUCCESS")
+    assert probed == ["s3a://bucket/idx/_SUCCESS", "s3a://bucket/other/_SUCCESS"]
+    (tmp_path / "a").write_text("x")
+    for local in (str(tmp_path / "a"), f"file:{tmp_path}/a", f"file://{tmp_path}/a"):
+        assert dataset_exists(fake, local)
+    assert not dataset_exists(fake, str(tmp_path / "missing"))
+    assert len(probed) == 2

@@ -748,8 +748,8 @@ def test_stream_snapshot_upsert_maintains_versioned_table(spark, tmp_path):
 
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_read,
         snapshot_version,
     )
@@ -789,7 +789,7 @@ def test_stream_snapshot_upsert_maintains_versioned_table(spark, tmp_path):
     assert len(cur) == 105
     assert cur[5] == "a-5" and cur[98] == "b-98" and cur[104] == "b-104"
     carried = [
-        e for e in _read_manifest(spark, tdir, 2)["files"] if e["path"].startswith("v=1/")
+        e for e in read_manifest(tdir, 2)["files"] if e["path"].startswith("v=1/")
     ]
     assert carried  # untouched v=1 files referenced, not rewritten
     # old version still time-travels
@@ -1238,8 +1238,8 @@ def test_stream_snapshot_append_exactly_once(spark, tmp_path):
     import os
     import shutil
 
+    from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _read_manifest,
         snapshot_delete,
         snapshot_properties,
         snapshot_read,
@@ -1274,7 +1274,7 @@ def test_stream_snapshot_append_exactly_once(spark, tmp_path):
     run(ck1)
     assert snapshot_read(spark, tdir).count() == 3
     v = snapshot_version(spark, tdir)
-    assert _read_manifest(spark, tdir, v)["op"] == "append"
+    assert read_manifest(tdir, v)["op"] == "append"
     stamp = snapshot_properties(spark, tdir)["txn"]
     assert stamp == {"ingest": 1}  # batch 1 was the last applied
 
