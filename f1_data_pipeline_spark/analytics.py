@@ -152,18 +152,21 @@ def heavy_hitters(
 
     The guarantee is RUNTIME-CHECKED, not assumed (a flat distribution
     can put the true k-th below the threshold, silently dropping top-k
-    members): the plan carries two broadcast 1-row aggregates — N (total
-    non-null values) and the candidate coverage (Σ candidate counts,
-    candidate cardinality) — and an ``assert_true`` filter raises at
-    execution time unless either (a) the candidates cover every
-    occurrence (Σ == N, i.e. nothing was ever decremented away — then the
-    recount is trivially exact), or (b) there are ≥ k candidates and
-    every returned count exceeds N/(capacity+1) (then no absent value can
-    outrank any returned row). On failure the error says to raise
-    ``capacity``. The check is lazy — it rides the same job the caller
-    triggers. Honest cost accounting: N adds ONE column-pruned
-    ``count(col)`` scan on top of the summary and recount passes — cheap
-    relative to either Python pass, and the alternatives are worse
+    members): one 1-row aggregate over the recount carries the candidate
+    coverage (Σ candidate counts, candidate cardinality) and the top-k as
+    an array, crossed with a broadcast 1-row aggregate N (total non-null
+    values), and that one row raises at execution time unless either
+    (a) the candidates cover every occurrence (Σ == N, i.e. nothing was
+    ever decremented away — then the recount is trivially exact), or
+    (b) there are ≥ k candidates and every returned count exceeds
+    N/(capacity+1) (then no absent value can outrank any returned row).
+    The row exists even when the summaries kept no candidate at all, so
+    that case raises too instead of returning ``[]``. On failure the
+    error says to raise ``capacity``. The check is lazy — it rides the
+    same job the caller triggers. Honest cost accounting: N adds ONE
+    column-pruned ``count(col)`` scan on top of the summary and recount
+    passes — cheap relative to either Python pass, and the alternatives
+    are worse
     (deriving N from the summary pass would evaluate that mapInPandas
     subplan twice, since its two consumers share no exchange Spark could
     reuse)."""
@@ -176,31 +179,40 @@ def heavy_hitters(
         .groupBy(col)
         .agg(F.count("*").alias("cnt"))
     )
-    top = recount.orderBy(F.desc("cnt"), col).limit(k)
     total = df.agg(F.count(col).alias("__N"))
-    coverage = recount.agg(
-        F.sum("cnt").alias("__covered"), F.count("*").alias("__ncand")
+    # coverage and the top-k (as one array) ride a 1-row aggregate, so the
+    # check runs on a row that exists even when the summaries kept no
+    # candidate (a flat stream decrements them all away) — a check per
+    # result row would never run there and return [] silently
+    stats = recount.agg(
+        F.coalesce(F.sum("cnt"), F.lit(0)).alias("__covered"),
+        F.count("*").alias("__ncand"),
+        F.slice(
+            F.sort_array(F.collect_list(F.struct((-F.col("cnt")).alias("__neg"), col, "cnt"))),
+            1,
+            k,
+        ).alias("__top"),
     )
     exact = (F.col("__covered") == F.col("__N")) | (
         (F.col("__ncand") >= F.lit(k))
-        & (F.col("cnt") > F.col("__N") / F.lit(capacity + 1))
+        & (F.array_min("__top.cnt") > F.col("__N") / F.lit(capacity + 1))
+    )
+    # the check sits inside the generator's argument: the filter Spark
+    # infers from an explode (non-empty array) would otherwise drop the
+    # zero-candidate row before a separate check filter could see it
+    checked = F.when(exact, F.col("__top")).otherwise(
+        F.raise_error(
+            F.lit(
+                "heavy_hitters: Misra-Gries completeness guarantee does "
+                f"not hold for k={k}, capacity={capacity} (true k-th "
+                "frequency <= N/(capacity+1)); raise capacity"
+            )
+        )
     )
     return (
-        top.crossJoin(F.broadcast(total))
-        .crossJoin(F.broadcast(coverage))
-        .where(
-            F.assert_true(
-                exact,
-                F.concat(
-                    F.lit(
-                        "heavy_hitters: Misra-Gries completeness guarantee does "
-                        f"not hold for k={k}, capacity={capacity} (true k-th "
-                        "frequency <= N/(capacity+1)); raise capacity"
-                    )
-                ),
-            ).isNull()
-        )
-        .select(col, "cnt")
+        stats.crossJoin(F.broadcast(total))
+        .select(F.explode(checked).alias("__t"))
+        .select(f"__t.{col}", "__t.cnt")
         .orderBy(F.desc("cnt"), col)
     )
 

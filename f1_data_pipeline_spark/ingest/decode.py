@@ -201,12 +201,14 @@ def decode_car_telemetry(bronze: DataFrame) -> DataFrame:
     inflated = _topic(bronze, "CarData.z").select(
         "ordinal", "event_time", raw_inflate("payload").alias("json")
     )
-    j = inflated.where(F.col("json").isNotNull()).select(
+    # no IS NOT NULL filters on the inflated json or d.Entries: Catalyst
+    # copies such a filter's UDF below the projection, so the inflate UDF
+    # would cross to Python twice per row; explode(NULL) yields no rows
+    j = inflated.select(
         "ordinal", "event_time", F.from_json("json", sc.CAR_DATA_SCHEMA).alias("d")
     )
     return (
-        j.where(F.col("d.Entries").isNotNull())
-        .select("ordinal", "event_time", F.explode("d.Entries").alias("e"))
+        j.select("ordinal", "event_time", F.explode("d.Entries").alias("e"))
         .select(
             "ordinal",
             "event_time",
@@ -266,12 +268,12 @@ def decode_car_positions(bronze: DataFrame) -> DataFrame:
     inflated = base.where(~is_json).select(
         "ordinal", "event_time", raw_inflate("payload").alias("json")
     )
-    j = inflated.where(F.col("json").isNotNull()).select(
+    # unfiltered for the same one-crossing reason as decode_car_telemetry
+    j = inflated.select(
         "ordinal", "event_time", F.from_json("json", sc.POSITION_SCHEMA).alias("d")
     )
     compressed = (
-        j.where(F.col("d.Position").isNotNull())
-        .select("ordinal", "event_time", F.explode("d.Position").alias("f"))
+        j.select("ordinal", "event_time", F.explode("d.Position").alias("f"))
         .select(
             "ordinal",
             "event_time",

@@ -701,6 +701,56 @@ def x_decontam(t: Tables) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+# Size contract of the in-memory graph path (``connected_components`` counts
+# input pairs, ``text.domain_pagerank`` distinct edges): at or under it the
+# whole iteration runs in numpy on the driver from one Arrow pull; above it
+# the distributed round loop runs.
+LOCAL_GRAPH_MAX_EDGES = 1 << 20
+
+
+def _cc_no_convergence(max_iter: int) -> ValueError:
+    return ValueError(
+        f"connected_components did not converge in {max_iter} rounds "
+        f"(cluster diameter too large — raise max_iter)"
+    )
+
+
+def _components_in_memory(pairs_arrow, max_iter: int):
+    """The distributed round loop of ``connected_components`` in numpy:
+    ids are ranked in Spark's ordering (numeric, or UTF-8 bytes — equal to
+    code-point order), so a min over ranks is a min over ids. Each round is
+    the same min-label propagation over the symmetrized edges plus
+    self-loops, then the same pointer jump, so the round count — and the
+    ``max_iter`` failure — is the distributed loop's. Returns the Arrow
+    ``(n, rep)`` table, or None when ``max_iter`` rounds do not converge.
+    A pair with a NULL end is no edge; its other end is still a node."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    a, b = pairs_arrow.column("a"), pairs_arrow.column("b")
+    both = pc.and_(pc.is_valid(a), pc.is_valid(b))
+    ids = pc.unique(pa.chunked_array(a.chunks + b.chunks, type=a.type).drop_null())
+    ids = ids.take(pc.sort_indices(ids))
+    v = len(ids)
+    ai = pc.index_in(a.filter(both), value_set=ids).to_numpy()
+    bi = pc.index_in(b.filter(both), value_set=ids).to_numpy()
+    loops = np.arange(v)
+    src = np.concatenate([ai, bi, loops])
+    dst = np.concatenate([bi, ai, loops])
+    order = np.argsort(src, kind="stable")
+    src, dst = src[order], dst[order]
+    # every node has its self-loop, so each node owns one non-empty segment
+    starts = np.flatnonzero(np.diff(src, prepend=-1))
+    lab = loops
+    for _ in range(max_iter):
+        prop = np.minimum.reduceat(lab[dst], starts)
+        nxt = prop[prop]
+        if np.array_equal(nxt, lab):
+            return pa.table({"n": ids, "rep": ids.take(pa.array(nxt))})
+        lab = nxt
+    return None
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
@@ -716,34 +766,43 @@ def connected_components(
     CLUSTER) that a production pipeline cannot skip: pair-wise keep-the-
     smaller loses documents when A~B and B~C but A!~C.
 
-    Execution shape: labels/edges carry only (id, id) longs — document
-    bytes never enter. The symmetrized edge set (+ self-loops) is
-    MATERIALIZED once to ``scratch_dir`` parquet (a temp dir by default;
-    object storage at cluster scale), and so is every label round — the
-    standard checkpoint discipline of iterative graph algorithms: each
-    round's plan is a constant-depth join+agg over two parquet scans, so
-    lineage never grows no matter how many rounds run. Each round does a
-    min-label propagation (one O(E) keyed shuffle) followed by a POINTER
-    JUMP (rep := rep's rep, one O(V) self-join) — the jump squares the
-    distance labels travel per round, so convergence takes O(log diameter)
-    rounds instead of O(diameter). Plain propagation was measured failing
-    here: the sf0.1 embedding corpus at threshold 0.4 produces a sprawling
-    75-node component of diameter 17 (> the old 15-round cap); with
-    jumping it converges in 5. ``max_iter`` rounds now cover components of
-    diameter ~2^max_iter, which no real corpus exceeds. The returned frame
-    is a plain scan of the final checkpoint — persist-free, deterministic,
-    no cache residue."""
+    Size-selected execution: the input pairs are materialized once (the
+    checkpoint medium below) with an ``Observation`` row count riding that
+    job. At or under ``LOCAL_GRAPH_MAX_EDGES`` pairs the graph is pulled
+    with one ``toArrow()`` and the whole loop runs in numpy on the driver
+    (``_components_in_memory``: the same rounds, the same output, the same
+    ``max_iter`` error); the result is a local DataFrame. Driver memory is
+    bounded by the contract: 2^20 random long pairs (580k nodes) peaked at
+    300 MB driver RSS and took 3.4 s on a 4-core host. Small clustering
+    graphs — the usual case after exact verification — cost two Spark jobs
+    instead of a join+agg+checkpoint per round.
+
+    Above the contract the distributed loop runs. Labels/edges carry only
+    (id, id) columns — document bytes never enter. The symmetrized edge
+    set (+ self-loops) is MATERIALIZED once, and so is every label round —
+    the standard checkpoint discipline of iterative graph algorithms: each
+    round's plan is a constant-depth join+agg over two materialized
+    frames, so lineage never grows no matter how many rounds run. Each
+    round does a min-label propagation (one O(E) keyed shuffle) followed
+    by a POINTER JUMP (rep := rep's rep, one O(V) self-join) — the jump
+    lets a label travel along the chain of labels it points to, so
+    convergence usually takes far fewer rounds than the diameter. Plain
+    propagation was measured failing here: the sf0.1 embedding corpus at
+    threshold 0.4 produces a sprawling 75-node component of diameter 17
+    (> the old 15-round cap); with jumping it converges in 5. The speed-up
+    depends on the id order along a path and is not logarithmic in
+    general: a 24-node chain took 8 to 19 rounds over ten random id
+    orderings, long and string. The returned frame is a plain scan of the
+    final checkpoint — persist-free, deterministic, no cache residue."""
     import os
 
+    from pyspark.sql import Observation
+
+    spark = pairs.sparkSession
     e = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    undirected = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    nodes = undirected.select(F.col("a").alias("n")).distinct()
-    # self-loops fold "keep own label" into the SAME join as "min neighbor
-    # label", so each propagation round references the label frame exactly
-    # once — a two-reference formulation (join + least) doubles the logical
-    # plan per round (2^k tree → OOM in plan handling); this one grows it
-    # linearly in k
-    edges_plan = undirected.union(nodes.select(F.col("n").alias("a"), F.col("n").alias("b")))
+    # one id type for both ends: the type the symmetrizing union widens to
+    id_type = e.union(e.select("b", "a")).schema["a"].dataType
+    e = e.select(F.col("a").cast(id_type).alias("a"), F.col("b").cast(id_type).alias("b"))
     # Checkpoint medium (r14): an explicit arg or F1DP_CC_SCRATCH_DIR
     # selects durable scratch parquet — on a real cluster that is shared
     # storage (HDFS/S3/GCS URI) every executor can read and iteration
@@ -756,9 +815,7 @@ def connected_components(
     # queries).
     scratch_dir = scratch_dir or os.environ.get("F1DP_CC_SCRATCH_DIR") or None
     use_local = scratch_dir is None
-    if use_local:
-        edges = edges_plan.localCheckpoint()
-    else:
+    if not use_local:
         # string-concat, not os.path.join: scratch_dir may be a URI
         # (s3a://bucket/prefix) and the separator is always "/" for Hadoop
         # FS. Per-invocation uuid subdir: two CC runs (or a run racing
@@ -768,9 +825,41 @@ def connected_components(
         import uuid
 
         scratch_dir = scratch_dir.rstrip("/") + f"/cc_{uuid.uuid4().hex}"
-        epath = scratch_dir + "/edges.parquet"
-        edges_plan.write.mode("overwrite").parquet(epath)
-        edges = pairs.sparkSession.read.parquet(epath)
+
+    def materialize(frame: DataFrame, rel: str) -> DataFrame:
+        if use_local:
+            return frame.localCheckpoint()
+        path = scratch_dir + "/" + rel
+        frame.write.mode("overwrite").parquet(path)
+        return spark.read.parquet(path)
+
+    # the graph's size is counted during the pairs' own materialization —
+    # counting the symmetrized edge set instead would pay its union and
+    # distinct shuffles on the small path too
+    size = Observation("cc_pairs")
+    pairs_cp = materialize(e.observe(size, F.count(F.lit(1)).alias("n")), "pairs.parquet")
+    if size.get["n"] <= LOCAL_GRAPH_MAX_EDGES:
+        comp = _components_in_memory(pairs_cp.toArrow(), max_iter)
+        if comp is None:
+            raise _cc_no_convergence(max_iter)
+        return spark.createDataFrame(
+            comp, T.StructType([T.StructField("n", id_type), T.StructField("rep", id_type)])
+        )
+
+    # self-loops fold "keep own label" into the SAME join as "min neighbor
+    # label", so each propagation round references the label frame exactly
+    # once — a two-reference formulation (join + least) doubles the logical
+    # plan per round (2^k tree → OOM in plan handling); this one grows it
+    # linearly in k. One distinct over both directions plus both ends'
+    # self-loops: an input self-pair cannot duplicate a node's self-loop
+    # (and with it the node's output row)
+    edges = materialize(
+        pairs_cp.union(pairs_cp.select("b", "a"))
+        .union(pairs_cp.select("a", "a"))
+        .union(pairs_cp.select("b", "b"))
+        .distinct(),
+        "edges.parquet",
+    )
     nodes = edges.where(F.col("a") == F.col("b")).select(F.col("a").alias("n"))  # self-loops
 
     def propagate(labels: DataFrame) -> DataFrame:
@@ -791,9 +880,6 @@ def connected_components(
             labels["n"], F.col("__jrep").alias("rep")
         )
 
-    from pyspark.sql import Observation
-
-    spark = pairs.sparkSession
     cur = nodes.select("n", F.col("n").alias("rep"))
     for k in range(max_iter):
         # fuse the convergence check into the checkpoint write: join the
@@ -809,23 +895,14 @@ def connected_components(
             obs,
             F.sum((F.col("rep") != F.col("__old")).cast("long")).alias("changed"),
         ).select("n", "rep")
-        if use_local:
-            # eager localCheckpoint runs the round's one job (the
-            # observation fires during it) and truncates lineage — no
-            # per-round parquet commit + read-back on the unconfigured
-            # single-node path
-            cur = observed.localCheckpoint()
-        else:
-            lpath = scratch_dir + f"/labels_{k + 1}.parquet"
-            observed.write.mode("overwrite").parquet(lpath)
-            cur = spark.read.parquet(lpath)
+        # eager localCheckpoint runs the round's one job (the observation
+        # fires during it) and truncates lineage — no per-round parquet
+        # commit + read-back on the unconfigured single-node path
+        cur = materialize(observed, f"labels_{k + 1}.parquet")
         changed = obs.get["changed"] or 0
         if changed == 0:
             return cur
-    raise ValueError(
-        f"connected_components did not converge in {max_iter} rounds "
-        f"(cluster diameter too large — raise max_iter)"
-    )
+    raise _cc_no_convergence(max_iter)
 
 
 def dedup_by_clusters(

@@ -2038,6 +2038,32 @@ def x_bpe_encode(t: Tables) -> DataFrame:
 # --- Domain PageRank --------------------------------------------------------
 
 
+def _pagerank_in_memory(domains, edges, damping: float, iters: int):
+    """``domain_pagerank``'s distributed loop in numpy, operation for
+    operation: ``1/N`` init, ``(1-d)/N`` teleport, per edge ``rank/deg``
+    (deg = the source's out-degree), summed per destination, then
+    ``tele + d·in`` — a domain without in-edges keeps the teleport-only
+    rank and no dangling mass is redistributed. ``domains`` is every
+    domain, ``edges`` the Arrow ``(src, dst)`` edge set; returns the
+    Arrow ``(domain, rank)`` table."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    domains = domains.combine_chunks()
+    n = len(domains)
+    if n == 0:
+        return pa.table({"domain": domains, "rank": pa.array([], pa.float64())})
+    src = pc.index_in(edges.column("src"), value_set=domains).to_numpy()
+    dst = pc.index_in(edges.column("dst"), value_set=domains).to_numpy()
+    src_deg = np.bincount(src, minlength=n).astype(np.float64)[src]
+    tele = (1.0 - damping) / float(n)
+    rank = np.full(n, 1.0 / float(n))
+    for _ in range(iters):
+        rank = tele + damping * np.bincount(dst, weights=rank[src] / src_deg, minlength=n)
+    return pa.table({"domain": domains, "rank": rank})
+
+
 def domain_pagerank(
     df: DataFrame,
     damping: float = 0.85,
@@ -2077,22 +2103,42 @@ def domain_pagerank(
     forcing the broadcasts with explicit hints was ~10% SLOWER — 20
     serialized driver round-trips — and was removed).
 
-    Checkpoint discipline (``connected_components``, dedup.py:497-524):
-    the graph frames (edges/degrees — and nodes as the degree rows, every
-    node has one because of self-endorsement-free co-occurrence symmetry)
-    are MATERIALIZED to scratch parquet once, so no round re-derives the
-    corpus-wide URL explode; the rank frame is re-materialized every
-    ``checkpoint_every`` rounds, so plan depth is bounded by a constant in
-    ``iters`` — a convergence-grade run (50-100 iterations) analyzes the
-    same plan shape as a 10-round one. Scratch resolution: explicit arg >
+    Size-selected execution (``dedup.LOCAL_GRAPH_MAX_EDGES``, the contract
+    ``connected_components`` uses too): the distinct ``(src, dst)`` edge
+    set is materialized with an ``Observation`` row count riding that job.
+    At or under the contract — and with at most as many domains, pulled
+    through ``limit(contract + 1)`` so the pull itself stays bounded — the
+    edges and domains come to the driver with ``toArrow()`` and the power
+    iteration runs in numpy (``_pagerank_in_memory``) with the same IEEE
+    operations: ``rank/deg`` per edge, summed per ``dst``, then
+    ``tele + d·in``. Only the summation order differs, so ranks agree with
+    the distributed loop to ~1e-16. The result is a local DataFrame, and
+    driver memory is bounded by 2^20 edges plus 2^20 domains. A
+    domain-scale graph then costs a handful of Spark jobs instead of a
+    join+agg per round.
+
+    Above the contract the distributed loop below runs. Checkpoint
+    discipline (``connected_components``): the graph frames
+    (edges/degrees — and nodes as the degree rows, every node has one
+    because of self-endorsement-free co-occurrence symmetry) are
+    MATERIALIZED once, so no round re-derives the corpus-wide URL explode;
+    the rank frame is re-materialized every ``checkpoint_every`` rounds,
+    so plan depth is bounded by a constant in ``iters`` — a
+    convergence-grade run (50-100 iterations) analyzes the same plan
+    shape as a 10-round one. Scratch resolution: explicit arg >
     ``F1DP_CC_SCRATCH_DIR`` env > eager localCheckpoint (r14: with
     NEITHER configured the old driver-local temp parquet provided zero
     durability over localCheckpoint — both die with the node — while
-    paying a write job + commit + read-back per materialization;
-    clusters point the env/arg at shared storage and keep the durable
-    parquet path)."""
+    paying a write job + commit + read-back per materialization).
+    Clusters point the env/arg at shared storage: then every
+    materialization — the (doc, domain) pairs and the edge set included —
+    is durable scratch parquet."""
     import os
     import uuid
+
+    from pyspark.sql import Observation
+
+    from f1_data_pipeline_spark.operators import dedup
 
     u = extract_urls(df, text_col, id_col).select(id_col, "domain").distinct()
     scratch_dir = scratch_dir or os.environ.get("F1DP_CC_SCRATCH_DIR") or None
@@ -2111,21 +2157,31 @@ def domain_pagerank(
         frame.write.mode("overwrite").parquet(path)
         return spark.read.parquet(path)
 
-    # the corpus is scanned ONCE: the (doc, domain) pairs are eagerly
-    # localCheckpointed (domain-scale — 1-2 orders below doc count) so
-    # the edge self-join, the degree aggregate and the node/N derivation
-    # all read the materialized pairs instead of re-running the URL
-    # explode (the r13 form ran it 3x across the two scratch writes)
-    ucp = u.localCheckpoint()
+    # the corpus is scanned ONCE: the (doc, domain) pairs are materialized
+    # (domain-scale — 1-2 orders below doc count) so the edge self-join,
+    # the degree aggregate and the node/N derivation all read the
+    # materialized pairs instead of re-running the URL explode (the r13
+    # form ran it 3x across the two scratch writes)
+    ucp = _materialize(u, "doc_domains.parquet")
     ub2 = ucp.select(F.col(id_col).alias("__id2"), F.col("domain").alias("dst"))
-    ecp = (
+    size = Observation("pagerank_edges")
+    ecp = _materialize(
         ucp.join(
             ub2, (F.col(id_col) == F.col("__id2")) & (F.col("domain") != F.col("dst"))
         )
         .select(F.col("domain").alias("src"), "dst")
         .distinct()
-        .localCheckpoint()
+        .observe(size, F.count(F.lit(1)).alias("n")),
+        "edge_set.parquet",
     )
+    bound = dedup.LOCAL_GRAPH_MAX_EDGES
+    if size.get["n"] <= bound:
+        doms = ucp.select("domain").distinct().limit(bound + 1).toArrow()
+        if doms.num_rows <= bound:
+            return spark.createDataFrame(
+                _pagerank_in_memory(doms.column("domain"), ecp.toArrow(), damping, iters),
+                "domain string, rank double",
+            )
 
     # edges materialize WITH their out-degree: deg is a loop invariant,
     # joining it once at write time removes one scan+aggregate+join from

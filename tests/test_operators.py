@@ -498,6 +498,85 @@ def test_dedup_by_clusters_keeps_canonical_and_unpaired(spark):
     assert kept == [1, 7, 9]  # cluster reps 1 and 7, unpaired 9
 
 
+def _chain_and_islands(seed: int, as_string: bool):
+    """Pairs whose components need pointer jumping: a shuffled-id chain of
+    24 nodes (plain min-label propagation needs 23 rounds; with jumping
+    seed 5 converges in 8 rounds with long ids, 10 with string ids) next
+    to random small components, a self-pair and a duplicate pair. String
+    ids mix ASCII with characters past the BMP, whose code-point order
+    (= Spark's UTF-8 byte order) differs from UTF-16 order."""
+    rng = random.Random(seed)
+    ids = rng.sample(range(1, 10**6), 60)
+    chain = ids[:24]
+    pairs = list(zip(chain, chain[1:]))
+    rest = ids[24:]
+    pairs += [tuple(rng.sample(rest, 2)) for _ in range(20)]
+    pairs += [(rest[0], rest[0]), pairs[0]]
+    pairs = [(b, a) if rng.random() < 0.5 else (a, b) for a, b in pairs]
+    if as_string:
+        marks = ["", "é", "～", "\U0001f600", "Z"]
+        pairs = [tuple(f"{marks[x % 5]}{x}" for x in p) for p in pairs]
+    # oracle: every node's component minimum, by union-find
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return pairs, {x: find(x) for x in parent}
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_connected_components_in_memory_equals_distributed(spark, monkeypatch, id_type):
+    """Both sides of the size contract: the in-memory numpy loop and the
+    distributed round loop (contract forced to 0) return the same rows and
+    schema, equal to a union-find oracle, for long and string ids."""
+    from f1_data_pipeline_spark.operators import dedup
+
+    raw, want = _chain_and_islands(5, id_type == "string")
+    pairs = spark.createDataFrame(raw, f"id_a {id_type}, id_b {id_type}")
+    calls = []
+    real = dedup._components_in_memory
+    monkeypatch.setattr(
+        dedup, "_components_in_memory", lambda *a: calls.append(1) or real(*a)
+    )
+    local = dedup.connected_components(pairs)
+    local_rows = sorted(tuple(r) for r in local.collect())
+    assert calls == [1]
+    monkeypatch.setattr(dedup, "LOCAL_GRAPH_MAX_EDGES", 0)
+    dist = dedup.connected_components(pairs)
+    dist_rows = sorted(tuple(r) for r in dist.collect())
+    assert calls == [1]  # the forced run took the distributed loop
+    assert local.schema == dist.schema
+    assert local_rows == dist_rows
+    assert dict(local_rows) == want
+
+
+def test_connected_components_max_iter_same_on_both_paths(spark, monkeypatch):
+    """The in-memory loop runs the distributed loop's rounds: on both paths
+    the chain converges in exactly the same number of rounds, and one
+    round fewer raises the same ValueError."""
+    import pyarrow as pa
+
+    from f1_data_pipeline_spark.operators import dedup
+
+    raw, want = _chain_and_islands(5, False)
+    pairs = spark.createDataFrame(raw, "id_a long, id_b long")
+    arrow = pa.table({"a": [a for a, _ in raw], "b": [b for _, b in raw]})
+    rounds = next(r for r in range(1, 16) if dedup._components_in_memory(arrow, r))
+    assert rounds == 8
+    for bound in (dedup.LOCAL_GRAPH_MAX_EDGES, 0):
+        monkeypatch.setattr(dedup, "LOCAL_GRAPH_MAX_EDGES", bound)
+        with pytest.raises(ValueError, match=f"did not converge in {rounds - 1} rounds"):
+            dedup.connected_components(pairs, max_iter=rounds - 1)
+        got = dedup.connected_components(pairs, max_iter=rounds).collect()
+        assert dict(tuple(r) for r in got) == want and len(got) == len(want)
+
+
 def test_gap_fill_emits_gaps_and_carries_forward(spark):
     """Handcrafted series: hour buckets 10:00 (v=2.0, avg of 1+3), 13:00
     (v=7.0) → grid must contain 11:00/12:00 gap rows with v_obs NULL and
@@ -556,11 +635,15 @@ def test_connected_components_scratch_dir_passthrough(spark, tmp_path, monkeypat
     """100 TB-path guard (round-5 judge ask #6): the components checkpoint
     must honor an explicit scratch_dir — including URI-style paths, since a
     cluster deployment points it at object storage, not driver-local temp —
-    and the F1DP_CC_SCRATCH_DIR env var as the no-code-change override."""
+    and the F1DP_CC_SCRATCH_DIR env var as the no-code-change override.
+    Pinned to the distributed loop (size contract 0): it is the only path
+    that checkpoints edges and label rounds."""
     import os
 
+    from f1_data_pipeline_spark.operators import dedup
     from f1_data_pipeline_spark.operators.dedup import connected_components
 
+    monkeypatch.setattr(dedup, "LOCAL_GRAPH_MAX_EDGES", 0)
     pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "id_a long, id_b long")
 
     def edges_under(root: str) -> bool:
@@ -1921,15 +2004,93 @@ def test_domain_pagerank_matches_numpy_power_iteration(spark):
         assert abs(got[d_] - r[i]) < 1e-9, (d_, got[d_], r[i])
 
 
-def test_domain_pagerank_checkpoint_bounds_plan_depth(spark, tmp_path):
+def _numpy_pagerank(doc_domains: list[set], domains: list[str], iters: int, d: float = 0.85):
+    """Dense power iteration with the pinned conventions: domains sharing a
+    document endorse each other, rank/deg per edge, teleport (1-d)/N, no
+    dangling-mass redistribution."""
+    import numpy as np
+
+    ix = {x: i for i, x in enumerate(domains)}
+    n = len(domains)
+    A = np.zeros((n, n))
+    for doms in doc_domains:
+        for s in doms:
+            for t in doms:
+                if s != t:
+                    A[ix[s], ix[t]] = 1.0
+    deg = A.sum(axis=1)
+    r = np.full(n, 1.0 / n)
+    for _ in range(iters):
+        out = np.divide(r, deg, out=np.zeros(n), where=deg > 0)
+        r = (1 - d) / n + d * (A.T @ out)
+    return dict(zip(domains, r))
+
+
+def test_domain_pagerank_in_memory_equals_distributed(spark, monkeypatch):
+    """Both sides of the size contract: the numpy loop and the distributed
+    loop (contract forced to 0) agree within 1e-12 and both match the
+    dense numpy reference on a random co-mention graph with isolated
+    domains. A graph within the edge bound but with more domains than the
+    bound also takes the distributed loop."""
+    from f1_data_pipeline_spark.operators import dedup, text
+
+    rng = random.Random(17)
+    pool = [f"d{i}.com" for i in range(10)]
+    docs = [set(rng.sample(pool, rng.randint(1, 4))) for _ in range(30)]
+    docs += [{"solo1.org"}, {"solo2.org"}]
+    rows = [
+        (i, " ".join(f"see https://{x}/p{i}" for x in sorted(doms)))
+        for i, doms in enumerate(docs)
+    ]
+    df = spark.createDataFrame(rows, "doc_id int, text string")
+    want = _numpy_pagerank(docs, sorted(set().union(*docs)), iters=10)
+
+    calls = []
+    real = text._pagerank_in_memory
+    monkeypatch.setattr(
+        text, "_pagerank_in_memory", lambda *a: calls.append(1) or real(*a)
+    )
+    local = text.domain_pagerank(df, iters=10)
+    local_ranks = dict(tuple(r) for r in local.collect())
+    assert calls == [1]
+    monkeypatch.setattr(dedup, "LOCAL_GRAPH_MAX_EDGES", 0)
+    dist = text.domain_pagerank(df, iters=10)
+    dist_ranks = dict(tuple(r) for r in dist.collect())
+    assert calls == [1]
+    assert local.schema == dist.schema
+    assert local_ranks.keys() == dist_ranks.keys() == want.keys()
+    for k in want:
+        assert abs(local_ranks[k] - dist_ranks[k]) < 1e-12, k
+        assert abs(local_ranks[k] - want[k]) < 1e-12, k
+        assert abs(dist_ranks[k] - want[k]) < 1e-12, k
+
+    # 2 edges (a<->b) within a bound of 2, but 4 domains: distributed
+    small = spark.createDataFrame(
+        [(1, "https://a.com/x https://b.com/y"), (2, "https://c.com/z"), (3, "https://e.com/w")],
+        "doc_id int, text string",
+    )
+    monkeypatch.setattr(dedup, "LOCAL_GRAPH_MAX_EDGES", 2)
+    got = dict(tuple(r) for r in text.domain_pagerank(small, iters=10).collect())
+    assert calls == [1]
+    want = _numpy_pagerank([{"a.com", "b.com"}, {"c.com"}, {"e.com"}],
+                           ["a.com", "b.com", "c.com", "e.com"], iters=10)
+    assert got.keys() == want.keys()
+    assert all(abs(got[k] - want[k]) < 1e-12 for k in want)
+
+
+def test_domain_pagerank_checkpoint_bounds_plan_depth(spark, tmp_path, monkeypatch):
     """A convergence-grade run (50 iterations) must analyze the same plan
     shape as a short one: rank checkpoints every k rounds reset lineage,
     so the final frame's analyzed plan cannot grow with iters (the r5
     verdict's weak item — un-checkpointed 10-round lineage already made
     plan analysis the dominant cost; at 50-100 rounds it explodes).
     Checkpointing must not change values: 10 rounds with checkpoints every
-    3 equals 10 rounds with none."""
+    3 equals 10 rounds with none. Pinned to the distributed loop (size
+    contract 0): the in-memory path has no rank checkpoints."""
+    from f1_data_pipeline_spark.operators import dedup
     from f1_data_pipeline_spark.operators.text import domain_pagerank
+
+    monkeypatch.setattr(dedup, "LOCAL_GRAPH_MAX_EDGES", 0)
 
     rows = [
         (1, "see https://a.com/x and https://b.com/y"),

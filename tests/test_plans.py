@@ -87,6 +87,82 @@ def test_decode_udf_runs_after_topic_filter(spark):
     assert filter_pos > udf_pos
 
 
+def test_decode_inflates_each_compressed_row_once(spark, tmp_path):
+    """The inflate UDF must cross to Python once per compressed row: a
+    NOT NULL filter over the UDF's output (or over a field parsed from
+    it) makes Catalyst copy the UDF into the pushed-down filter, a second
+    ArrowEvalPython over the cached bronze. Rows must be exactly the ones
+    a Python decode of the wire finds — including payloads that do not
+    inflate and inflated JSON without Entries / Position, which yield no
+    rows (explode of NULL)."""
+    import ast
+    import base64
+    import json
+    import zlib
+    from collections import Counter
+
+    from f1_data_pipeline_spark.ingest import decode, read_bronze
+    from f1_data_pipeline_spark.ingest.fixture import generate
+
+    def deflate(obj) -> str:
+        comp = zlib.compressobj(wbits=-zlib.MAX_WBITS)
+        return base64.b64encode(comp.compress(json.dumps(obj).encode()) + comp.flush()).decode()
+
+    path = tmp_path / "wire.txt"
+    generate(str(path), n_lines=200, seed=11)
+    ts = "2025-05-17T15:00:00.000Z"
+    with open(path, "a") as f:
+        for topic, payload in [
+            ("CarData.z", "not base64 !!"),
+            ("CarData.z", deflate({"NoEntries": 1})),
+            ("Position.z", "not base64 !!"),
+            ("Position.z", deflate({"NoPosition": 1})),
+        ]:
+            f.write(repr([topic, payload, ts]) + "\n")
+
+    wire = [ast.literal_eval(x) for x in path.read_text().splitlines() if x.startswith("['")]
+
+    def inflated(topic):
+        for t, payload, _ in wire:
+            if t == topic:
+                try:
+                    raw = zlib.decompress(base64.b64decode(payload), -zlib.MAX_WBITS)
+                except Exception:
+                    continue
+                yield json.loads(raw)
+
+    tel_want = Counter(
+        (drv, int(car["Channels"]["0"]), int(car["Channels"]["2"]), car["Channels"]["4"])
+        for d in inflated("CarData.z")
+        for e in d.get("Entries") or []
+        for drv, car in e["Cars"].items()
+    )
+    pos_want = Counter(
+        (drv, e["Status"], e["X"], e["Y"], e["Z"])
+        for d in inflated("Position.z")
+        for fr in d.get("Position") or []
+        for drv, e in fr["Entries"].items()
+    )
+    assert sum(tel_want.values()) > 0 and sum(pos_want.values()) > 0
+
+    bronze = read_bronze(spark, str(path)).cache()
+    try:
+        for fn, cols, want in [
+            (decode.decode_car_telemetry, ["driver_number", "rpm", "speed", "throttle"], tel_want),
+            (decode.decode_car_positions,
+             ["driver_number", "status", "x_coord", "y_coord", "z_coord"], pos_want),
+        ]:
+            df = fn(bronze)
+            phys = df._jdf.queryExecution().executedPlan().toString()
+            # the cached bronze's own plan (its parse UDF) prints below it
+            above, _, _ = phys.partition("InMemoryRelation")
+            assert "InMemoryTableScan" in above, phys
+            assert above.count("ArrowEvalPython") == 1, phys
+            assert Counter(tuple(r) for r in df.select(*cols).collect()) == want
+    finally:
+        bronze.unpersist()
+
+
 def test_stratified_sample_prunes_before_exchange(spark):
     """x_stratified's rank<=n filter must compile to WindowGroupLimit so at
     most n rows per group survive BEFORE the shuffle."""
