@@ -92,6 +92,7 @@ from pyspark.sql.datasource import (
 )
 
 from f1_data_pipeline_spark import snaplog
+from f1_data_pipeline_spark.session import workers_can_import
 from f1_data_pipeline_spark.snaplog import SnapshotConflictError
 
 # commit ops that never change table CONTENT — the stream skips them
@@ -1852,24 +1853,6 @@ _PKG_ZIP = "f1_data_pipeline_spark_pkg.zip"
 _SHIP_LOCK = __import__("threading").Lock()
 
 
-def _workers_can_import() -> bool:
-    """True when Spark's python workers can import the package WITHOUT a
-    shipped zip: workers inherit the driver process's cwd (local mode)
-    and $PYTHONPATH — if the package root is reachable through either,
-    ``addPyFile`` is pure risk (see ``_ship_package``) for zero gain."""
-    import os
-
-    import f1_data_pipeline_spark as pkg
-
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(pkg.__file__)))
-    candidates = [os.getcwd()] + (
-        os.environ.get("PYTHONPATH") or ""
-    ).split(os.pathsep)
-    return any(
-        c and os.path.abspath(c) == pkg_root for c in candidates
-    )
-
-
 def _ship_package(sc) -> None:
     """addPyFile a DETERMINISTIC zip of the package (sources only, fixed
     zip timestamps): byte-identical across builds, so a repeated add —
@@ -1897,7 +1880,7 @@ def _ship_package(sc) -> None:
             ):
                 sc._f1dp_pkg_shipped = True
                 return
-            if _workers_can_import():
+            if workers_can_import():
                 sc._f1dp_pkg_shipped = True
                 return
             import os

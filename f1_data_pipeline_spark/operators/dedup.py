@@ -116,9 +116,14 @@ def _slice_geometry(t, n: int):
     grams per kept row, exclusive gram-count prefix over kept rows, the
     (global) row index and 0-based in-row gram index per gram, and the
     per-gram byte slices. Rows of fewer than n words (Spark's
-    ``size(w) >= n`` filter) contribute nothing."""
+    ``size(w) >= n`` filter) contribute nothing. ``t`` may be ``string``
+    or ``large_string`` (int64 offsets: what ``mapInArrow`` hands over
+    under ``spark.sql.execution.arrow.useLargeVarTypes``)."""
+    import pyarrow as pa
+
     bufs = t.buffers()
-    off = np.frombuffer(bufs[1], dtype=np.int32)[
+    wide = pa.types.is_large_string(t.type)
+    off = np.frombuffer(bufs[1], dtype=np.int64 if wide else np.int32)[
         t.offset : t.offset + len(t) + 1
     ].astype(np.int64)
     data = (

@@ -13,6 +13,9 @@ Config rationale (SURVEY §7.1 step 1):
 - ``shuffle.partitions`` defaults to the local core count; on a real cluster
   AQE coalesces from a deliberately-high initial number, so we set the
   *initial* number high and let AQE shrink it.
+- Python workers fork from ``pydaemon`` when they can import the package:
+  it skips PySpark's per-task re-read of unchanged zip archives (SCALE.md
+  "Python worker per-task constant").
 """
 
 from __future__ import annotations
@@ -24,6 +27,20 @@ from pyspark.sql import SparkSession
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+def workers_can_import() -> bool:
+    """True when Spark's python workers can import the package WITHOUT a
+    shipped zip: workers inherit the driver process's cwd (local mode)
+    and $PYTHONPATH. Only then can workers fork from ``pydaemon``, and
+    only otherwise does ``feedsource._ship_package`` ship the package."""
+    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    candidates = [os.getcwd()] + (
+        os.environ.get("PYTHONPATH") or ""
+    ).split(os.pathsep)
+    return any(
+        c and os.path.abspath(c) == pkg_root for c in candidates
+    )
 
 
 def ensure_session_confs(spark: SparkSession) -> SparkSession:
@@ -88,6 +105,11 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
+    if workers_can_import():
+        # static: only a session this call creates gets it
+        builder = builder.config(
+            "spark.python.daemon.module", "f1_data_pipeline_spark.pydaemon"
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -16,6 +16,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from f1_data_pipeline_spark import snaplog
 from f1_data_pipeline_spark.snaplog import SnapshotConflictError
@@ -92,6 +93,15 @@ def dataset_exists(spark: SparkSession, path: str) -> bool:
     return bool(p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p))
 
 
+def _empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """An empty DataFrame of ``schema``. Built from an Arrow
+    table rather than a Python list, it plans as a ``LocalTableScan``, so
+    the actions that read it start no Python worker."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
+
+
 def write_json_artifact(spark: SparkSession, path: str, obj) -> None:
     """Persist a small (KB-scale) model artifact — codebooks, centroids,
     fitted stats — as a ONE-ROW parquet dataset at ``path``.
@@ -105,7 +115,9 @@ def write_json_artifact(spark: SparkSession, path: str, obj) -> None:
     convention) — the artifact can live INSIDE the index it describes."""
     import json
 
-    spark.createDataFrame([(json.dumps(obj),)], "json string").coalesce(
+    import pyarrow as pa
+
+    spark.createDataFrame(pa.table({"json": [json.dumps(obj)]})).coalesce(
         1
     ).write.mode("overwrite").parquet(path)
 
@@ -377,6 +389,8 @@ def _probe_merge_batch(
     (KB-scale) envelope table, folded to a single row — so update
     batches of any size make one pass and never round-trip rows through
     the driver."""
+    import pyarrow as pa
+
     knames = [f"__k{i}" for i in range(len(keys))]
     keyed = (
         probe_df.select(*[F.col(k).alias(n) for k, n in zip(keys, knames)])
@@ -400,7 +414,11 @@ def _probe_merge_batch(
         env_cols = ["__path"] + [
             n for i in range(len(keys)) for n in (f"__min{i}", f"__max{i}")
         ]
-        env = spark.createDataFrame(env_rows, env_cols)
+        # from Arrow, not a list: a LocalTableScan, so no Python worker
+        # runs; pyarrow infers the column types list inference would
+        env = spark.createDataFrame(
+            pa.table({c: list(v) for c, v in zip(env_cols, zip(*env_rows))})
+        )
         cond = F.lit(True)
         for i in range(len(keys)):
             cond = cond & (
@@ -1110,7 +1128,7 @@ def snapshot_write(
                             ]
                         )
                     else:
-                        old_live = spark.createDataFrame([], df.schema)
+                        old_live = _empty_frame(spark, df.schema)
                     new_rows = spark.read.schema(df.schema).parquet(vdir)
                     payload["changes"] = _materialize_changes(
                         spark, table_dir, version,
@@ -1696,13 +1714,18 @@ def _dv_deleted(manifest: dict) -> int | None:
     return dv.get("deleted") if dv else None
 
 
+_DV_SCHEMA = T.StructType(
+    [T.StructField("path", T.StringType()), T.StructField("pos", T.LongType())]
+)
+
+
 def _dv_read(spark: SparkSession, table_dir: str, manifest: dict) -> DataFrame | None:
     """The (path, pos) deleted-positions dataset of a committed version,
     or None when the version carries no deletion vector."""
     dv = manifest.get("dv")
     if not dv:
         return None
-    return spark.read.schema("path string, pos long").parquet(
+    return spark.read.schema(_DV_SCHEMA).parquet(
         _entry_uri(table_dir.rstrip("/"), dv["dir"])
     )
 
@@ -1813,7 +1836,7 @@ def snapshot_read(
     if where:
         entries = [e for e in entries if not _entry_prunable(e, where)]
     if not entries:
-        empty = spark.createDataFrame([], _manifest_schema(manifest))
+        empty = _empty_frame(spark, _manifest_schema(manifest))
         return empty.where(_where_expr(where)) if where else empty
     base = table_dir.rstrip("/")
     try:
@@ -2316,7 +2339,7 @@ def snapshot_merge(
         tgt = tgt.select(cols)
     else:
         # no file can hold a source key: every source row is unmatched
-        tgt = spark.createDataFrame([], src.schema)
+        tgt = _empty_frame(spark, src.schema)
     # side-presence MARKERS, not key nullability: a target row whose key
     # column is NULL (legal in the table — only the SOURCE is validated
     # non-null) never equi-matches, and classifying it by t.key IS NULL
@@ -2673,7 +2696,7 @@ def _state_diff_sides(
     def _read(paths: set[str], src=None) -> DataFrame:
         src = src if src is not None else schema
         if not paths:
-            return spark.createDataFrame([], schema)
+            return _empty_frame(spark, schema)
         # explicit schema: pre-evolution files fill missing columns with
         # NULL, and no footer-merging schema inference pass is paid
         return spark.read.schema(src).parquet(
@@ -2687,7 +2710,7 @@ def _state_diff_sides(
 
     def _read_live(paths: set[str], dv, deleted, src) -> DataFrame:
         if not paths:
-            return spark.createDataFrame([], schema)
+            return _empty_frame(spark, schema)
         names = {f.name for f in src.fields}
         return _apply_dv(_read(paths, src), dv, deleted).select(
             [
@@ -2711,7 +2734,7 @@ def _state_diff_sides(
         # endpoints are live-at-from rows (they surface as deletes); a
         # restore can resurrect positions the other way. Only files named
         # in the delta are ever opened — the manifest-diff bound holds.
-        empty_dv = spark.createDataFrame([], "path string, pos long")
+        empty_dv = _empty_frame(spark, _DV_SCHEMA)
         f_dv = dv_from if dv_from is not None else empty_dv
         t_dv = dv_to if dv_to is not None else empty_dv
         shared = from_paths & to_paths
@@ -2728,7 +2751,7 @@ def _state_diff_sides(
             keys = [r["path"] for r in delta.select("path").distinct().collect()]
             paths = [shared_by_key[k] for k in keys]
             if not paths:
-                return spark.createDataFrame([], schema)
+                return _empty_frame(spark, schema)
             rows = (
                 _read(set(paths))
                 .withColumn(

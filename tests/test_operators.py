@@ -3229,3 +3229,41 @@ def test_jaccard_kernel_matches_join_verifier(spark):
             for r in exact_jaccard_on_pairs_fast(df, pairs, n).collect()
         )
         assert ref == fast, f"n={n}: kernel verifier diverged"
+
+
+def test_slice_geometry_large_string_equals_string():
+    """``large_string`` (int64 offsets, what ``mapInArrow`` hands the
+    kernels under ``spark.sql.execution.arrow.useLargeVarTypes``) must
+    give the same n-gram geometry as ``string`` — including a sliced
+    array, whose offsets start past the buffer's head."""
+    import numpy as np
+    import pyarrow as pa
+
+    from f1_data_pipeline_spark.operators.dedup import _slice_geometry
+
+    texts = ["a b c d", "one two", "x  y z", "", "héllo wörld foo bar",
+             "single", "日本 語 テキスト ok"]
+    for n in (1, 2, 3):
+        for lo in (0, 2):
+            narrow = _slice_geometry(pa.array(texts, pa.string()).slice(lo), n)
+            wide = _slice_geometry(pa.array(texts, pa.large_string()).slice(lo), n)
+            assert narrow[2] is not None, "fixture must yield grams"
+            for a, b in zip(narrow, wide):
+                assert np.array_equal(a, b), (n, lo)
+
+
+def test_dedup_minhash_same_rows_under_large_var_types(spark):
+    """x_dedup_minhash returns the same rows whether or not the session
+    hands its kernels ``large_string`` columns."""
+    from f1_data_pipeline_spark.queries import all_queries
+    from tests.conftest import SF_DIR
+
+    build = all_queries()["x_dedup_minhash"].builder
+    key = "spark.sql.execution.arrow.useLargeVarTypes"
+    base = build(spark, SF_DIR).collect()
+    spark.conf.set(key, "true")
+    try:
+        wide = build(spark, SF_DIR).collect()
+    finally:
+        spark.conf.unset(key)
+    assert base and wide == base

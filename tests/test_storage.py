@@ -4002,3 +4002,47 @@ def test_dataset_exists_probes_remote_uris_through_hadoop_fs(tmp_path):
         assert dataset_exists(fake, local)
     assert not dataset_exists(fake, str(tmp_path / "missing"))
     assert len(probed) == 2
+
+
+def test_commit_side_frames_start_no_python_worker(spark, tmp_path, monkeypatch):
+    """Frames the commit paths build from driver-side values plan as a
+    ``LocalTableScan``, never a Python-RDD scan (``Scan ExistingRDD``),
+    so reading them starts no Python worker: the upsert probe's envelope
+    table, the empty old side of an append's change feed, and the empty
+    DV side when only one endpoint carries a deletion vector."""
+    from f1_data_pipeline_spark.storage import (
+        snapshot_append,
+        snapshot_changes,
+        snapshot_delete,
+        snapshot_upsert,
+    )
+
+    tdir = _dv_table(spark, tmp_path, n=40, files=2)
+    def rows(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"),
+            F.lit("u").alias("g"),
+            (F.col("id") * 2.0).alias("x"),
+        )
+
+    built = []
+    stock = type(spark).createDataFrame
+
+    def spy(self, *args, **kwargs):
+        df = stock(self, *args, **kwargs)
+        built.append(df)
+        return df
+
+    monkeypatch.setattr(type(spark), "createDataFrame", spy)
+    v_up = snapshot_upsert(spark, tdir, rows(30, 45), "k", stats_cols=["k"])
+    assert built, "the upsert probe builds its envelope table"
+    v_dv, _ = snapshot_delete(spark, tdir, [("k", ">=", 40)], mode="dv")
+    v_app = snapshot_append(rows(100, 103), tdir)
+    feeds = [
+        snapshot_changes(spark, tdir, "k", v_up, v_dv),
+        snapshot_changes(spark, tdir, "k", v_dv, v_app),
+    ]
+    for df in built + feeds:
+        assert "ExistingRDD" not in _plan(df), _plan(df)
+    assert {r["k"] for r in feeds[0].collect()} == set(range(40, 45))
+    assert {r["k"] for r in feeds[1].collect()} == {100, 101, 102}
