@@ -1329,7 +1329,10 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
 # documented single-writer caveat). Tables carrying CHECK constraints or
 # Bloom specs refuse this path loudly — constraints need SQL evaluation
 # and Bloom filters a Spark build, both of which storage.snapshot_append
-# provides — rather than silently committing unvalidated/unindexed files.
+# provides — rather than silently committing unvalidated/unindexed files;
+# so does an overwrite of a change-data-feed table, whose netted replace
+# diff needs storage.snapshot_write. The record itself comes from
+# snaplog.next_record, so an append carries every table-level field.
 # --------------------------------------------------------------------------
 
 _STAGING = "_staging"
@@ -1341,13 +1344,12 @@ _STAGING = "_staging"
 
 
 def _arrow_stats(tbl) -> dict:
-    """Per-column ``{min, max, nulls}`` for one staged Arrow table —
-    JSON-safe (via storage's ``_json_safe`` rules) and only for columns
-    whose Arrow ordering matches Spark's; unsafe columns are omitted."""
+    """Per-column ``{min, max, nulls}`` for one staged Arrow table — in
+    manifest form (``snaplog.canon_stat``: Spark hands the writer
+    tz-aware timestamps) and only for columns whose Arrow ordering
+    matches Spark's; unsafe columns are omitted."""
     import pyarrow as pa
     import pyarrow.compute as pc
-
-    from f1_data_pipeline_spark.storage import _json_safe
 
     out = {}
     for name in tbl.column_names:
@@ -1374,22 +1376,9 @@ def _arrow_stats(tbl) -> dict:
         ).as_py():
             continue  # NaN breaks min/max parity with Spark: omit, stay safe
         mm = pc.min_max(col)
-
-        def _canon(v):
-            # Spark hands the writer tz-aware arrow timestamps (UTC
-            # instants); JVM-side stats are NAIVE ISO strings. Mixed
-            # forms would compare lexicographically wrong at equality
-            # boundaries ('…+00:00' > '…'), so canonicalize to the same
-            # UTC-naive form before the shared _json_safe encoding.
-            import datetime
-
-            if isinstance(v, datetime.datetime) and v.tzinfo is not None:
-                v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-            return _json_safe(v)
-
         out[name] = {
-            "min": _canon(mm["min"].as_py()),
-            "max": _canon(mm["max"].as_py()),
+            "min": snaplog.canon_stat(mm["min"].as_py()),
+            "max": snaplog.canon_stat(mm["max"].as_py()),
             "nulls": nulls,
         }
     return out
@@ -1518,6 +1507,14 @@ def _commit_staged(
                     "— write through storage.snapshot_append / "
                     "snapshot_write instead"
                 )
+            if overwrite and cur.get("cdf"):
+                raise ValueError(
+                    "snapshotfeed writer: the table records a change data "
+                    "feed, and a replace must materialize its netted diff "
+                    "of old vs new rows, which needs a SparkSession this "
+                    "writer does not have — replace the table through "
+                    "storage.snapshot_write instead"
+                )
             if not overwrite and cur.get("bloom_spec"):
                 raise ValueError(
                     "snapshotfeed writer: the table carries a Bloom-filter "
@@ -1569,16 +1566,10 @@ def _commit_staged(
             )
         with f.open_output_stream(f"{vdir}/_SUCCESS") as out:
             out.write(b"")
-        # stats subset: appends inherit the columns the table tracks
-        # (uniform skipping power, the snapshot_append rule); a full
-        # replace starts fresh with every safely-computable column
-        if not overwrite and cur is not None:
-            with_stats = next(
-                (e for e in cur["files"] if e.get("stats")), None
-            )
-            tracked = sorted(with_stats["stats"]) if with_stats else None
-        else:
-            tracked = None  # None = keep all computed columns
+        # an append derives from the head record; a full replace starts
+        # fresh, with stats on every safely-computable column
+        parent = None if overwrite else cur
+        tracked = snaplog.tracked_stats(parent["files"]) if parent else None
         entries = []
         for m in sorted(files, key=lambda m: m.name):
             e = {"path": f"v={version}/{m.name}", "rows": m.rows, "bytes": m.nbytes}
@@ -1590,33 +1581,18 @@ def _commit_staged(
             if stats:
                 e["stats"] = stats
             entries.append(e)
-        payload: dict = {
-            "version": version,
-            "dir": f"v={version}",
-            "files": (
-                entries if overwrite or cur is None else cur["files"] + entries
+        record = snaplog.next_record(
+            parent, version, "write" if overwrite else "append",
+            entries if parent is None else parent["files"] + entries,
+            properties=(
+                {"txn": {txn_app: int(txn_batch)}}
+                if txn_app is not None and txn_batch is not None
+                else None
             ),
-            "schema": (
-                schema_json
-                if overwrite or cur is None or not cur.get("schema")
-                else cur["schema"]
-            ),
-            "op": "write" if overwrite else "append",
-        }
-        if not overwrite and cur is not None and cur.get("dv"):
-            payload["dv"] = cur["dv"]
-        prev_txn = (
-            {}
-            if overwrite or cur is None
-            else ((cur.get("properties") or {}).get("txn") or {})
+            staged_schema=schema_json,
         )
-        merged_txn = dict(prev_txn)
-        if txn_app is not None and txn_batch is not None:
-            merged_txn[txn_app] = int(txn_batch)
-        if merged_txn:
-            payload["properties"] = {"txn": merged_txn}
         try:
-            snaplog.commit(table_dir, version, payload)
+            snaplog.commit(table_dir, version, record)
         except SnapshotConflictError:
             # lost the publish race (e.g. a metadata-only commit took N):
             # move our files back to staging and re-derive against the head

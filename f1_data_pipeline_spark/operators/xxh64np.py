@@ -32,7 +32,32 @@ therefore every downstream ``min``/comparison — is signed.
 
 from __future__ import annotations
 
+import sys
+
 import numpy as np
+
+
+class ByteOrderError(RuntimeError):
+    """The host is big-endian, which the raw-Arrow-buffer kernels do not
+    support."""
+
+
+def require_little_endian() -> None:
+    """Refuse a big-endian host, typed. Arrow buffers are little-endian
+    by spec, and this module's word reads and ``dedup._slice_geometry``'s
+    offset views reinterpret them with NATIVE-order numpy dtypes, so on a
+    big-endian host they would hash garbage and return wrong answers
+    silently. Checked at import (``dedup`` imports this module)."""
+    if sys.byteorder != "little":
+        raise ByteOrderError(
+            f"xxh64np: host byte order is {sys.byteorder}-endian; the "
+            f"Arrow-buffer kernels (xxh64np, dedup n-gram slicing) read "
+            f"little-endian buffers with native dtypes and need a "
+            f"little-endian host"
+        )
+
+
+require_little_endian()
 
 _P1 = np.uint64(0x9E3779B185EBCA87)
 _P2 = np.uint64(0xC2B2AE3D27D4EB4F)

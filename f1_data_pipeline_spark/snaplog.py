@@ -35,10 +35,15 @@ scheme (``hdfs``,    pyarrow.fs has no create-no-overwrite, and its
 
 Hadoop connector schemes pyarrow.fs cannot resolve (``s3a://`` …) fail
 typed at first touch, naming the pyarrow equivalent.
+
+The commit record's format is here too: every writer derives its next
+record from its parent's through ``next_record``, the one statement of
+what a commit inherits.
 """
 
 from __future__ import annotations
 
+import datetime
 import json
 import math
 import os
@@ -231,6 +236,129 @@ def commit(table_dir: str, version: int, payload: dict) -> None:
             f"re-derive against the new current version and retry"
         )
     maybe_checkpoint(table_dir, version, payload)
+
+
+# ---------------------------------------------------------------------------
+# The commit record
+# ---------------------------------------------------------------------------
+
+# table-level fields: a commit inherits each from its parent record unless
+# the writer passes a replacement
+INHERITED = ("schema", "constraints", "bloom_spec", "cdf", "dv")
+
+
+def json_safe(v):
+    """Stats values must survive a JSON round-trip AND order the same way
+    afterwards: numbers/strings/bools pass through; date/timestamp become
+    ISO-8601 strings (whose lexicographic order IS chronological order, so
+    string comparison against an ISO literal prunes correctly); anything
+    else falls back to ``str`` on the same reasoning as Python's repr."""
+    if v is None or isinstance(v, (bool, int, float, str)):
+        return v
+    if isinstance(v, (datetime.datetime, datetime.date)):
+        return v.isoformat(sep=" ") if isinstance(v, datetime.datetime) else v.isoformat()
+    return str(v)
+
+
+def canon_stat(v):
+    """A per-file min/max in manifest form. Arrow and parquet footers hand
+    back tz-aware timestamps (UTC instants) where the Spark stats job
+    yields NAIVE ones; mixed forms would compare wrong at equality bounds
+    ('…+00:00' > '…'), so aware values become UTC-naive before
+    ``json_safe``."""
+    if isinstance(v, datetime.datetime) and v.tzinfo is not None:
+        v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+    return json_safe(v)
+
+
+def tracked_stats(files: list[dict]) -> list[str] | None:
+    """The stats columns a table already tracks (those of its first file
+    entry with stats; None when no entry has any). A commit not told
+    otherwise tracks the same ones, so skipping power stays uniform."""
+    e = next((e for e in files if e.get("stats")), None)
+    return sorted(e["stats"]) if e else None
+
+
+def merge_txn(parent: dict, properties: dict | None) -> dict | None:
+    """SetTransaction-style stamp retention (the Delta ``txn`` action):
+    the ``txn`` sub-map of commit properties — streaming writers'
+    ``{app_id: last_applied_batch}`` idempotence stamps — must survive
+    every data-changing commit or a crash-replayed micro-batch would
+    re-apply after an unrelated writer touched the table. The parent's
+    ``txn`` map merges under any stamps ``properties`` carries (new wins
+    per app_id)."""
+    prev = (parent.get("properties") or {}).get("txn") or {}
+    out = dict(properties or {})
+    merged = {**prev, **(out.get("txn") or {})}
+    if merged:
+        out["txn"] = merged
+    return out or None
+
+
+def props_payload(props: dict) -> dict:
+    """JSON-safe commit properties; one level of dict nesting (the
+    ``txn`` stamp map) keeps its structure instead of stringifying."""
+    return {
+        k: (
+            {kk: json_safe(vv) for kk, vv in v.items()}
+            if isinstance(v, dict)
+            else json_safe(v)
+        )
+        for k, v in props.items()
+    }
+
+
+def _field_names(schema_json: str) -> set[str]:
+    return {f["name"] for f in json.loads(schema_json)["fields"]}
+
+
+def next_record(
+    parent: dict | None,
+    version: int,
+    op: str,
+    files: list[dict],
+    *,
+    properties: dict | None = None,
+    props: str = "merge",
+    staged_schema: str | None = None,
+    **fields,
+) -> dict:
+    """The commit record of ``version`` derived from ``parent``, the
+    record the write was read from (None: a full replace, which states
+    every field itself). The one rule for what a commit inherits:
+
+    * ``INHERITED`` fields (schema, constraints, Bloom spec, change-data-
+      feed flag, deletion vector) come from the parent unless ``fields``
+      passes a replacement; a None or empty replacement drops the field.
+      ``staged_schema`` (the staged rows' schema) replaces the parent's
+      schema when it adds columns (schema evolution) or the parent
+      records none.
+    * ``properties`` by ``props`` mode: ``"merge"`` — data-changing
+      commits — stamps ``properties`` with the parent's ``txn`` map
+      merged under them (``merge_txn``); ``"carry"`` — content-preserving
+      maintenance — keeps the parent's properties wholesale; ``"reset"``
+      keeps ``properties`` alone.
+    * every other field (``changes``, ``restored_from``, ``cloned_from``
+      …) passes through unless None."""
+    parent = parent or {}
+    if "schema" not in fields and staged_schema is not None:
+        prior = parent.get("schema")
+        if not prior or _field_names(staged_schema) - _field_names(prior):
+            fields["schema"] = staged_schema
+    rec = {"version": version, "dir": f"v={version}", "files": files, "op": op}
+    for k in INHERITED:
+        v = fields.pop(k) if k in fields else parent.get(k)
+        if v:
+            rec[k] = v
+    if props == "carry":
+        p = parent.get("properties")
+    else:
+        p = merge_txn(parent, properties) if props == "merge" else properties
+        p = props_payload(p) if p else None
+    if p:
+        rec["properties"] = p
+    rec.update({k: v for k, v in fields.items() if v is not None})
+    return rec
 
 
 # ---------------------------------------------------------------------------

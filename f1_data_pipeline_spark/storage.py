@@ -256,46 +256,6 @@ class ConstraintViolationError(ValueError):
     orphan stage is removed before raising."""
 
 
-def _constraint_observation(staged_df: DataFrame, constraints: dict):
-    """Attach one violation counter per stored constraint to the staging
-    plan (a single ``Observation`` — counted DURING the write itself, no
-    extra table pass). NULL rule results count as violations, matching
-    ``check_expectations``. Returns ``(df, observation, names)``."""
-    from pyspark.sql import Observation
-
-    names = sorted(constraints)
-    obs = Observation()
-    aggs = [
-        F.sum(
-            (~F.coalesce(F.expr(constraints[n]), F.lit(False))).cast("long")
-        ).alias(f"c{i}")
-        for i, n in enumerate(names)
-    ]
-    return staged_df.observe(obs, *aggs), obs, names
-
-
-def _enforce_constraints(
-    spark: SparkSession, table_dir: str, vdir: str, obs, names: list[str], what: str
-) -> None:
-    """Read the staging write's violation counters; on any violation,
-    remove the (never-committed) stage and raise typed with per-rule
-    counts. Called between staging and the commit record, so a bad batch
-    can never become a committed version."""
-    got = obs.get
-    bad = {
-        n: int(got[f"c{i}"] or 0)
-        for i, n in enumerate(names)
-        if int(got[f"c{i}"] or 0)
-    }
-    if bad:
-        snaplog.remove(vdir)
-        raise ConstraintViolationError(
-            f"{what}: table CHECK constraint violations {bad} under "
-            f"{table_dir} — nothing was committed; fix the batch or "
-            f"snapshot_drop_constraint first"
-        )
-
-
 def snapshot_version(spark: SparkSession, table_dir: str) -> int:
     """Current committed version (0 = no commit yet), resolved from the
     manifest-log checkpoint plus O(tail) existence probes
@@ -443,28 +403,6 @@ def _probe_merge_batch(
     return set(row["__touched"])
 
 
-def _check_staged_against(
-    spark: SparkSession, table_dir: str, vdir: str, version: int,
-    derived_from: int, what: str,
-) -> None:
-    """Read-modify-write staleness gate, applied AFTER staging: a commit
-    derived from version N must stage as N+1. If a concurrent writer
-    committed in the window between the caller's manifest read and its
-    staging claim, the staged version is higher and the carried file
-    list is STALE — committing it would silently erase the concurrent
-    commit's files (a lost update the create-no-overwrite commit record
-    cannot catch, because the versions differ). The orphan stage is
-    removed and a retryable conflict raised instead. Blind full-replace
-    writes (``snapshot_write``) don't need this — they carry nothing."""
-    if version != derived_from + 1:
-        snaplog.remove(vdir)
-        raise SnapshotConflictError(
-            f"{what}: staged v={version} but the write was derived from "
-            f"v={derived_from} — a concurrent writer committed in between "
-            f"and the carried file list is stale; re-read and re-derive"
-        )
-
-
 def _stage_version(df: DataFrame, table_dir: str) -> tuple[int, str]:
     """CLAIM and write the next version's staging dir (steps 1–2 of the
     commit protocol); returns ``(version, staging_dir)``. See
@@ -490,51 +428,87 @@ def _stage_version(df: DataFrame, table_dir: str) -> tuple[int, str]:
     return version, vdir
 
 
-def _merge_txn(manifest: dict, properties: dict | None) -> dict | None:
-    """SetTransaction-style stamp retention (the Delta ``txn`` action):
-    the ``txn`` sub-map of commit properties — streaming writers'
-    ``{app_id: last_applied_batch}`` idempotence stamps — must survive
-    every data-changing commit or a crash-replayed micro-batch would
-    re-apply after an unrelated writer touched the table. Every keyed
-    write path merges the PREVIOUS manifest's ``txn`` map under any
-    stamps the new write carries (new wins per app_id). Content-
-    preserving maintenance already carries ``properties`` wholesale;
-    ``snapshot_write`` (full replace) deliberately resets — replacing a
-    table's content invalidates what the stamps attest."""
-    prev = (manifest.get("properties") or {}).get("txn") or {}
-    out = dict(properties or {})
-    merged = {**prev, **(out.get("txn") or {})}
-    if merged:
-        out["txn"] = merged
-    return out or None
+def _stage(
+    df: DataFrame,
+    table_dir: str,
+    what: str,
+    derived_from: int | None,
+    constraints: dict | None = None,
+    cluster_by: list[str] | None = None,
+    cluster_files: int | None = None,
+    observed: bool = False,
+) -> tuple[int, str]:
+    """Stage ``df`` as the next version — the one staging sequence of
+    every writer that stages rows: CLAIM and write ``v=N``
+    (``_stage_version``), then two gates, each of which removes the
+    never-committed stage before raising. Returns ``(version,
+    staging_dir)``.
 
+    1. Staleness, for read-modify-write writers: a commit derived from
+       version ``derived_from`` must stage as ``derived_from + 1``. If a
+       concurrent writer committed in the window between the caller's
+       manifest read and its staging claim, the carried file list is
+       STALE — committing it would silently erase the concurrent
+       commit's files (a lost update the create-no-overwrite commit
+       record cannot catch, because the versions differ): a retryable
+       conflict is raised instead. None for blind writes, which carry
+       nothing.
+    2. The table's persistent CHECK ``constraints``: one violation
+       counter per rule rides the staging write (a single
+       ``Observation`` — no extra table pass; NULL rule results count as
+       violations, matching ``check_expectations``), and any violation
+       raises typed with per-rule counts, so a bad batch can never
+       become a committed version.
 
-def _props_payload(props: dict) -> dict:
-    """JSON-safe commit properties; one level of dict nesting (the
-    ``txn`` stamp map) keeps its structure instead of stringifying."""
-    return {
-        k: (
-            {kk: _json_safe(vv) for kk, vv in v.items()}
-            if isinstance(v, dict)
-            else _json_safe(v)
+    ``cluster_by`` range-clusters the staged rows (into ``cluster_files``
+    files when given). repartitionByRange samples its input (a second
+    evaluation), so a frame carrying Observation counters — the
+    constraints', or the caller's own when ``observed`` — is persisted
+    first to keep them single-fire."""
+    from pyspark.sql import Observation
+
+    names = sorted(constraints or {})
+    obs = None
+    if names:
+        obs = Observation()
+        df = df.observe(obs, *[
+            F.sum(
+                (~F.coalesce(F.expr(constraints[n]), F.lit(False))).cast("long")
+            ).alias(f"c{i}")
+            for i, n in enumerate(names)
+        ])
+    cached = None
+    if cluster_by:
+        if obs is not None or observed:
+            cached = df = df.persist()
+        df = (
+            df.repartitionByRange(cluster_files, *cluster_by)
+            if cluster_files
+            else df.repartitionByRange(*cluster_by)
         )
-        for k, v in props.items()
-    }
-
-
-def _json_safe(v):
-    """Stats values must survive a JSON round-trip AND order the same way
-    afterwards: numbers/strings/bools pass through; date/timestamp become
-    ISO-8601 strings (whose lexicographic order IS chronological order, so
-    string comparison against an ISO literal prunes correctly); anything
-    else falls back to ``str`` on the same reasoning as Python's repr."""
-    import datetime
-
-    if v is None or isinstance(v, (bool, int, float, str)):
-        return v
-    if isinstance(v, (datetime.datetime, datetime.date)):
-        return v.isoformat(sep=" ") if isinstance(v, datetime.datetime) else v.isoformat()
-    return str(v)
+    try:
+        version, vdir = _stage_version(df, table_dir)
+    finally:
+        if cached is not None:
+            cached.unpersist()
+    if derived_from is not None and version != derived_from + 1:
+        snaplog.remove(vdir)
+        raise SnapshotConflictError(
+            f"{what}: staged v={version} but the write was derived from "
+            f"v={derived_from} — a concurrent writer committed in between "
+            f"and the carried file list is stale; re-read and re-derive"
+        )
+    got = obs.get if obs is not None else {}
+    bad = {n: int(got[f"c{i}"] or 0) for i, n in enumerate(names)}
+    bad = {n: c for n, c in bad.items() if c}
+    if bad:
+        snaplog.remove(vdir)
+        raise ConstraintViolationError(
+            f"{what}: table CHECK constraint violations {bad} under "
+            f"{table_dir} — nothing was committed; fix the batch or "
+            f"snapshot_drop_constraint first"
+        )
+    return version, vdir
 
 
 # Parquet physical types whose FOOTER statistics decode to the same
@@ -564,7 +538,6 @@ def _footer_file_entries(
     unreadable footers …) — the caller then runs the Spark job, so
     correctness never depends on footer quality."""
     import concurrent.futures as cf
-    import datetime
 
     try:
         import pyarrow.parquet as pq
@@ -574,11 +547,6 @@ def _footer_file_entries(
         return None
     vroot = f"{root.rstrip('/')}/v={version}"
     cols = list(stats_cols or [])
-
-    def _canon_stat(v):
-        if isinstance(v, datetime.datetime) and v.tzinfo is not None:
-            v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-        return _json_safe(v)
 
     def one(name: str) -> dict | None:
         with f.open_input_file(f"{vroot}/{name}") as src:
@@ -624,8 +592,8 @@ def _footer_file_entries(
                 mn = gmn if mn is None or gmn < mn else mn
                 mx = gmx if mx is None or gmx > mx else mx
             stats[c] = {
-                "min": _canon_stat(mn),
-                "max": _canon_stat(mx),
+                "min": snaplog.canon_stat(mn),
+                "max": snaplog.canon_stat(mx),
                 "nulls": nulls,
             }
         e["stats"] = stats
@@ -692,8 +660,8 @@ def _staged_file_entries(
         if stats_cols and r is not None:
             e["stats"] = {
                 c: {
-                    "min": _json_safe(r[f"__min_{c}"]),
-                    "max": _json_safe(r[f"__max_{c}"]),
+                    "min": snaplog.json_safe(r[f"__min_{c}"]),
+                    "max": snaplog.json_safe(r[f"__max_{c}"]),
                     "nulls": int(r[f"__nulls_{c}"]),
                 }
                 for c in stats_cols
@@ -815,27 +783,28 @@ def _bloom_file_entries(
     return out
 
 
-def _apply_blooms(
+def _staged_entries(
     spark: SparkSession,
     table_dir: str,
     version: int,
-    entries: list[dict],
-    spec: dict | None,
-) -> None:
-    """Attach per-file Bloom entries for the just-staged files according
-    to the table's bloom spec (no-op without one). Carried entries keep
-    the blooms they were committed with."""
-    if not spec or not spec.get("cols"):
-        return
-    if not any(e["path"].startswith(f"v={version}/") for e in entries):
-        return  # nothing staged (e.g. a pure-delete merge): no dir to scan
-    bl = _bloom_file_entries(
-        spark, table_dir, version, spec["cols"], spec["m"], spec["h"]
-    )
-    for e in entries:
-        name = e["path"].rsplit("/", 1)[-1]
-        if e["path"].startswith(f"v={version}/") and name in bl:
-            e["bloom"] = bl[name]
+    stats_cols: list[str] | None,
+    bloom_spec: dict | None,
+) -> list[dict]:
+    """Manifest entries for the files just staged under ``v=N``
+    (``_staged_file_entries``) with per-file Bloom entries attached by
+    the table's bloom spec (none without one). Carried entries keep the
+    blooms they were committed with."""
+    entries = _staged_file_entries(spark, table_dir, version, stats_cols)
+    if entries and bloom_spec and bloom_spec.get("cols"):
+        bl = _bloom_file_entries(
+            spark, table_dir, version,
+            bloom_spec["cols"], bloom_spec["m"], bloom_spec["h"],
+        )
+        for e in entries:
+            name = e["path"].rsplit("/", 1)[-1]
+            if name in bl:
+                e["bloom"] = bl[name]
+    return entries
 
 
 def _manifest_schema(manifest: dict):
@@ -1058,90 +1027,72 @@ def snapshot_write(
                 else bool(prior_manifest.get("cdf"))
             )
             effective = {**(prior or {}), **(constraints or {})} or None
-            staged_df, c_obs, c_names = (
-                _constraint_observation(df, effective)
-                if effective
-                else (df, None, [])
+            # the CAS pin doubles as the staleness gate
+            version, vdir = _stage(
+                df, table_dir, "snapshot_write", expected_version, effective
             )
-            version, vdir = _stage_version(staged_df, table_dir)
-            if expected_version is not None and version != expected_version + 1:
-                raise SnapshotConflictError(
-                    f"snapshot_write: staged v={version} but the CAS expects "
-                    f"v={expected_version + 1} under {table_dir}"
-                )
-            if c_obs is not None:
-                _enforce_constraints(
-                    spark, table_dir, vdir, c_obs, c_names, "snapshot_write"
-                )
-            entries = _staged_file_entries(spark, table_dir, version, stats_cols)
-            _apply_blooms(spark, table_dir, version, entries, bloom_spec)
-            payload = {
-                "version": version,
-                "dir": f"v={version}",
-                "files": entries,
-                "schema": df.schema.json(),
-                "op": _op,
-            }
-            if effective:
-                payload["constraints"] = effective
-            if bloom_spec:
-                payload["bloom_spec"] = bloom_spec
-            if cdf:
-                payload["cdf"] = True
-                if (
-                    _op == "write"
-                    and cur >= 1
-                    and prior_manifest.get("files") is not None
-                ):
-                    # a full REPLACE on a cdf table materializes the
-                    # NETTED multiset diff of old state vs staged state
-                    # (old rows leaving emit as deletes, new rows as
-                    # inserts; identical rows cancel via exceptAll, so a
-                    # replace that merely re-clusters identical content
-                    # nets to an empty feed). Columns follow the NEW
-                    # schema: old rows are read under THEIR OWN manifest
-                    # schema and projected onto it — added columns
-                    # NULL-fill, dropped columns leave the comparison,
-                    # and a retyped column try_casts (a replace may
-                    # change any type; scanning old files with the new
-                    # schema would crash the diff). O(old+new) — the
-                    # honest cost of a replace, paid once at write time.
-                    old_paths = [
-                        _entry_uri(table_dir.rstrip("/"), x["path"])
-                        for x in prior_manifest["files"]
-                    ]
-                    prior_schema = _manifest_schema(prior_manifest)
-                    if old_paths and prior_schema is not None:
-                        prior_names = {f.name for f in prior_schema.fields}
-                        old_live = _apply_dv(
-                            spark.read.schema(prior_schema).parquet(*old_paths),
-                            _dv_read(spark, table_dir, prior_manifest),
-                            _dv_deleted(prior_manifest),
-                        ).select(
-                            [
-                                (
-                                    F.col(f.name).try_cast(f.dataType)
-                                    if f.name in prior_names
-                                    else F.lit(None).cast(f.dataType)
-                                ).alias(f.name)
-                                for f in df.schema.fields
-                            ]
-                        )
-                    else:
-                        old_live = _empty_frame(spark, df.schema)
-                    new_rows = spark.read.schema(df.schema).parquet(vdir)
-                    payload["changes"] = _materialize_changes(
-                        spark, table_dir, version,
-                        old_live.exceptAll(new_rows)
-                        .withColumn("_change_type", F.lit("delete"))
-                        .unionByName(
-                            new_rows.exceptAll(old_live)
-                            .withColumn("_change_type", F.lit("insert"))
-                        ),
+            entries = _staged_entries(spark, table_dir, version, stats_cols, bloom_spec)
+            changes = None
+            if (
+                cdf
+                and _op == "write"
+                and cur >= 1
+                and prior_manifest.get("files") is not None
+            ):
+                # a full REPLACE on a cdf table materializes the
+                # NETTED multiset diff of old state vs staged state
+                # (old rows leaving emit as deletes, new rows as
+                # inserts; identical rows cancel via exceptAll, so a
+                # replace that merely re-clusters identical content
+                # nets to an empty feed). Columns follow the NEW
+                # schema: old rows are read under THEIR OWN manifest
+                # schema and projected onto it — added columns
+                # NULL-fill, dropped columns leave the comparison,
+                # and a retyped column try_casts (a replace may
+                # change any type; scanning old files with the new
+                # schema would crash the diff). O(old+new) — the
+                # honest cost of a replace, paid once at write time.
+                old_paths = [
+                    _entry_uri(table_dir.rstrip("/"), x["path"])
+                    for x in prior_manifest["files"]
+                ]
+                prior_schema = _manifest_schema(prior_manifest)
+                if old_paths and prior_schema is not None:
+                    prior_names = {f.name for f in prior_schema.fields}
+                    old_live = _apply_dv(
+                        spark.read.schema(prior_schema).parquet(*old_paths),
+                        _dv_read(spark, table_dir, prior_manifest),
+                        _dv_deleted(prior_manifest),
+                    ).select(
+                        [
+                            (
+                                F.col(f.name).try_cast(f.dataType)
+                                if f.name in prior_names
+                                else F.lit(None).cast(f.dataType)
+                            ).alias(f.name)
+                            for f in df.schema.fields
+                        ]
                     )
-            if properties:
-                payload["properties"] = _props_payload(properties)
-            snaplog.commit(table_dir, version, payload)
+                else:
+                    old_live = _empty_frame(spark, df.schema)
+                new_rows = spark.read.schema(df.schema).parquet(vdir)
+                changes = _materialize_changes(
+                    spark, table_dir, version,
+                    old_live.exceptAll(new_rows)
+                    .withColumn("_change_type", F.lit("delete"))
+                    .unionByName(
+                        new_rows.exceptAll(old_live)
+                        .withColumn("_change_type", F.lit("insert"))
+                    ),
+                )
+            # a full replace derives nothing from its parent record: the
+            # persistent constraints and the feed flag are stated here,
+            # and the Bloom spec, deletion vector and txn stamps reset
+            snaplog.commit(table_dir, version, snaplog.next_record(
+                None, version, _op, entries, properties=properties,
+                schema=df.schema.json(), constraints=effective,
+                bloom_spec=bloom_spec, cdf=cdf, changes=changes,
+            ))
             return version
         except SnapshotConflictError:
             # our stage (if we got that far) was never committed — remove
@@ -1299,87 +1250,36 @@ def snapshot_append(
                             f.name, F.lit(None).cast(f.dataType)
                         )
             appended = appended.select(table_cols + extra)
-            constraints = manifest.get("constraints")
-            staged_df, c_obs, c_names = (
-                _constraint_observation(appended, constraints)
-                if constraints
-                else (appended, None, [])
+            # unconditional staleness gate (CAS subsumed): the carried
+            # file list came from `cur`'s manifest — a concurrent commit
+            # in between would be erased by committing it
+            version, vdir = _stage(
+                appended, table_dir, "snapshot_append", cur,
+                manifest.get("constraints"), cluster_by, cluster_files,
             )
-            cached = None
-            if cluster_by:
-                if constraints:
-                    # repartitionByRange samples its input (a second
-                    # evaluation); the persist keeps the violation
-                    # counters single-fire
-                    cached = staged_df.persist()
-                    staged_df = cached
-                staged_df = (
-                    staged_df.repartitionByRange(cluster_files, *cluster_by)
-                    if cluster_files
-                    else staged_df.repartitionByRange(*cluster_by)
-                )
-            try:
-                version, vdir = _stage_version(staged_df, table_dir)
-            finally:
-                if cached is not None:
-                    cached.unpersist()
-            # unconditional (CAS subsumed): the carried file list came
-            # from `cur`'s manifest — a concurrent commit in between
-            # would be erased by committing it
-            _check_staged_against(
-                spark, table_dir, vdir, version, cur, "snapshot_append"
+            new_entries = _staged_entries(
+                spark, table_dir, version,
+                stats_cols if stats_cols is not None else snaplog.tracked_stats(entries),
+                manifest.get("bloom_spec"),
             )
-            if c_obs is not None:
-                _enforce_constraints(
-                    spark, table_dir, vdir, c_obs, c_names, "snapshot_append"
-                )
-            scols = stats_cols
-            if scols is None:
-                with_stats = next((e for e in entries if e.get("stats")), None)
-                scols = sorted(with_stats["stats"]) if with_stats else None
-            new_entries = _staged_file_entries(spark, table_dir, version, scols)
-            bloom_spec = manifest.get("bloom_spec")
-            _apply_blooms(spark, table_dir, version, new_entries, bloom_spec)
-            if extra:
-                # evolved columns are NULLABLE by definition — every
-                # pre-evolution row reads NULL for them, whatever the
-                # batch's own nullability was (F.lit() is non-null)
-                from pyspark.sql.types import StructField, StructType
-
-                merged = StructType(
-                    [
-                        StructField(f.name, f.dataType, True, f.metadata)
-                        if f.name in extra
-                        else f
-                        for f in appended.schema.fields
-                    ]
-                )
-            payload = {
-                "version": version,
-                "dir": f"v={version}",
-                # chronological: carried files first, this batch's last
-                "files": entries + new_entries,
-                "schema": (
-                    merged.json()
-                    if extra
-                    else manifest.get("schema") or appended.schema.json()
-                ),
-                "op": "append",
-            }
-            if constraints:
-                payload["constraints"] = constraints
-            if manifest.get("dv"):
-                # untouched files keep their deletion-vector entries; the
-                # new files have none by construction
-                payload["dv"] = manifest["dv"]
-            if bloom_spec:
-                payload["bloom_spec"] = bloom_spec
-            if manifest.get("cdf"):
-                payload["cdf"] = True
-            props = _merge_txn(manifest, properties)
-            if props:
-                payload["properties"] = _props_payload(props)
-            snaplog.commit(table_dir, version, payload)
+            # evolved columns are NULLABLE by definition — every
+            # pre-evolution row reads NULL for them, whatever the
+            # batch's own nullability was (F.lit() is non-null)
+            widened = T.StructType(
+                [
+                    T.StructField(f.name, f.dataType, True, f.metadata)
+                    if f.name in extra
+                    else f
+                    for f in appended.schema.fields
+                ]
+            )
+            # chronological: carried files first, this batch's last; the
+            # carried files keep their deletion-vector entries, the new
+            # ones have none by construction
+            snaplog.commit(table_dir, version, snaplog.next_record(
+                manifest, version, "append", entries + new_entries,
+                properties=properties, staged_schema=widened.json(),
+            ))
             return version
         except SnapshotConflictError:
             if vdir is not None:
@@ -1438,8 +1338,8 @@ def _entry_all_match(entry: dict, where: list[tuple]) -> bool:
                 and isinstance(val, (list, tuple))
                 and any(
                     v is not None
-                    and _stats_comparable(mn, _json_safe(v))
-                    and mn == mx == _json_safe(v)
+                    and _stats_comparable(mn, snaplog.json_safe(v))
+                    and mn == mx == snaplog.json_safe(v)
                     for v in val
                 )
             ):
@@ -1589,7 +1489,7 @@ def _entry_prunable(entry: dict, where: list[tuple]) -> bool:
                     bl, v
                 ) and not _bloom_might_contain(bl, v):
                     return True
-                sv = _json_safe(v)
+                sv = snaplog.json_safe(v)
                 return (
                     mn_i is not None
                     and mx_i is not None
@@ -1604,10 +1504,10 @@ def _entry_prunable(entry: dict, where: list[tuple]) -> bool:
         s = stats.get(col)
         if s is None or op not in _WHERE_OPS:
             continue
-        # stats were stored through _json_safe (timestamps/dates as
+        # stats were stored through snaplog.json_safe (timestamps/dates as
         # ISO-8601 strings whose lexicographic order IS chronological);
         # a datetime/date literal must compare in the same canonical form
-        val = _json_safe(raw)
+        val = snaplog.json_safe(raw)
         mn, mx = s.get("min"), s.get("max")
         nulls = s.get("nulls")  # absent on pre-r9 manifests: never prunes
         if op == "is_null":
@@ -1791,6 +1691,23 @@ def _write_dv(
     rel = f"v={version}/_dv"
     dvdf.coalesce(1).write.mode("append").parquet(f"{table_dir.rstrip('/')}/{rel}")
     return {"dir": rel, "files": counts, "deleted": int(sum(counts.values()))}
+
+
+def _carried_dv(
+    spark: SparkSession, table_dir: str, version: int,
+    old_dv: DataFrame | None, carried: list[dict],
+) -> dict | None:
+    """The deletion-vector block of a rewrite commit: rewritten files
+    dropped their deleted rows physically, so only the CARRIED files'
+    entries survive (matched on the two-segment key — entry paths may be
+    absolute on a shallow clone). None when nothing survives."""
+    if old_dv is None:
+        return None
+    keys = sorted({_dv_key(e["path"]) for e in carried})
+    return _write_dv(
+        spark, table_dir, version,
+        old_dv.where(F.col("path").isin(keys)) if keys else None,
+    )
 
 
 def snapshot_read(
@@ -2018,8 +1935,7 @@ def _merge_into_snapshot(
             f"snapshot_write(df, table_dir, stats_cols={keys!r} + ...)"
         )
     if stats_cols is None:
-        with_stats = next((e for e in entries if e.get("stats")), None)
-        stats_cols = sorted(with_stats["stats"]) if with_stats else list(keys)
+        stats_cols = snaplog.tracked_stats(entries) or list(keys)
 
     all_keys = upserts.select(*keys).unionByName(delete_keys.select(*keys))
     touched = _probe_merge_batch(spark, entries, keys, all_keys, what)
@@ -2098,82 +2014,36 @@ def _merge_into_snapshot(
         return current  # pure delete of absent keys: nothing to commit
     else:
         staged_df = upserts
-    constraints = manifest.get("constraints")
-    c_obs, c_names = None, []
-    if constraints:
-        staged_df, c_obs, c_names = _constraint_observation(staged_df, constraints)
-    cached = None
-    if cluster_files:
-        if constraints:
-            # repartitionByRange samples its input (a second evaluation);
-            # the persist keeps the violation counters single-fire
-            cached = staged_df.persist()
-            staged_df = cached
-        staged_df = staged_df.repartitionByRange(cluster_files, *keys)
-    try:
-        version, vdir = _stage_version(staged_df, table_dir)
-    finally:
-        if cached is not None:
-            cached.unpersist()
-    _check_staged_against(spark, table_dir, vdir, version, current, what)
-    if c_obs is not None:
-        _enforce_constraints(spark, table_dir, vdir, c_obs, c_names, what)
-    new_entries = _staged_file_entries(spark, table_dir, version, stats_cols) + carried
-    bloom_spec = manifest.get("bloom_spec")
-    _apply_blooms(spark, table_dir, version, new_entries, bloom_spec)
-    payload = {
-        "version": version,
-        "dir": f"v={version}",
-        "files": new_entries,
-        "op": {"snapshot_upsert": "upsert", "snapshot_apply_cdc": "cdc"}.get(
-            what, what
-        ),
-    }
-    # touched files were rewritten with their deletion vectors applied,
-    # so their DV entries are purged; carried files' entries ride along
-    # (matched on the DV two-segment key — entry paths may be absolute)
-    if old_dv is not None:
-        carried_keys = sorted({_dv_key(e["path"]) for e in carried})
-        dv_block = _write_dv(
+    version, vdir = _stage(
+        staged_df, table_dir, what, current, manifest.get("constraints"),
+        keys if cluster_files else None, cluster_files,
+    )
+    staged = _staged_entries(
+        spark, table_dir, version, stats_cols, manifest.get("bloom_spec")
+    )
+    dv = _carried_dv(spark, table_dir, version, old_dv, carried)
+    changes = None
+    if manifest.get("cdf") and touched:
+        # materialize this rewrite's CDC rows so changeFeed consumers
+        # replay it instead of refusing: old = the touched files' live
+        # rows (already DV-applied above), new = the staged files just
+        # written — the diff never scans carried files. Explicit schema:
+        # a rewrite that deletes every touched row stages ZERO data
+        # files, and schema inference over an empty dir would fail
+        changes = _write_change_files(
             spark, table_dir, version,
-            old_dv.where(F.col("path").isin(carried_keys)) if carried_keys else None,
+            existing.select(cols),
+            spark.read.schema(staged_df.schema).parquet(vdir).select(cols),
+            keys, cols,
         )
-        if dv_block:
-            payload["dv"] = dv_block
-    payload.update({
-        # an evolved batch commits the MERGED schema (readers
-        # null-fill carried files); otherwise the committed schema
-        # is carried forward unchanged
-        "schema": (
-            staged_df.schema.json()
-            if extra
-            else manifest.get("schema") or staged_df.schema.json()
-        ),
-    })
-    if constraints:
-        payload["constraints"] = constraints
-    props = _merge_txn(manifest, properties)
-    if props:
-        payload["properties"] = _props_payload(props)
-    if bloom_spec:
-        payload["bloom_spec"] = bloom_spec
-    if manifest.get("cdf"):
-        payload["cdf"] = True
-        if touched:
-            # materialize this rewrite's CDC rows so changeFeed consumers
-            # replay it instead of refusing: old = the touched files'
-            # live rows (already DV-applied above), new = the staged
-            # files just written — the diff never scans carried files
-            # explicit schema: a rewrite that deletes every touched
-            # row stages ZERO data files, and schema inference over an
-            # empty dir would fail
-            payload["changes"] = _write_change_files(
-                spark, table_dir, version,
-                existing.select(cols),
-                spark.read.schema(staged_df.schema).parquet(vdir).select(cols),
-                keys, cols,
-            )
-    snaplog.commit(table_dir, version, payload)
+    # an evolved batch commits the MERGED schema (readers null-fill
+    # carried files); otherwise the committed schema carries forward
+    snaplog.commit(table_dir, version, snaplog.next_record(
+        manifest, version,
+        {"snapshot_upsert": "upsert", "snapshot_apply_cdc": "cdc"}.get(what, what),
+        staged + carried, properties=properties,
+        staged_schema=staged_df.schema.json(), dv=dv, changes=changes,
+    ))
     return version
 
 
@@ -2282,8 +2152,7 @@ def snapshot_merge(
             f"snapshot_write(df, table_dir, stats_cols={keys!r} + ...)"
         )
     if stats_cols is None:
-        with_stats = next((e for e in entries if e.get("stats")), None)
-        stats_cols = sorted(with_stats["stats"]) if with_stats else list(keys)
+        stats_cols = snaplog.tracked_stats(entries) or list(keys)
     tschema = _manifest_schema(manifest)
     cols = [f.name for f in tschema.fields]
     extra = [c for c in source.columns if c not in cols]
@@ -2427,79 +2296,44 @@ def snapshot_merge(
         )
         .select(cols)
     )
-    constraints = manifest.get("constraints")
-    c_obs, c_names = None, []
-    if constraints:
-        staged_df, c_obs, c_names = _constraint_observation(staged_df, constraints)
-    cached = None
-    if cluster_files:
-        # repartitionByRange SAMPLES its input (a second full evaluation)
-        # — without this persist the CollectMetrics nodes would fire twice
-        # and every observed count would double
-        cached = staged_df.persist()
-        staged_df = cached.repartitionByRange(cluster_files, *keys)
-    try:
-        version, vdir = _stage_version(staged_df, table_dir)
-    finally:
-        if cached is not None:
-            cached.unpersist()
-    _check_staged_against(
-        spark, table_dir, vdir, version, current, "snapshot_merge"
+    # repartitionByRange SAMPLES its input (a second full evaluation) —
+    # without the persist `observed` asks for, the CollectMetrics nodes
+    # would fire twice and every observed count would double
+    version, vdir = _stage(
+        staged_df, table_dir, "snapshot_merge", current,
+        manifest.get("constraints"), keys if cluster_files else None,
+        cluster_files, observed=True,
     )
-    if c_obs is not None:
-        _enforce_constraints(spark, table_dir, vdir, c_obs, c_names, "snapshot_merge")
     metrics = {k: int(v or 0) for k, v in obs.get.items()}
     if not (metrics["updated"] or metrics["deleted"] or metrics["inserted"]):
         # pure no-op merge: don't commit a version that only re-copies
         snaplog.remove(vdir)
         return current, metrics
-    staged = _staged_file_entries(spark, table_dir, version, stats_cols)
-    bloom_spec = manifest.get("bloom_spec")
-    new_entries = staged + carried
-    _apply_blooms(spark, table_dir, version, new_entries, bloom_spec)
-    payload = {
-        "version": version,
-        "dir": f"v={version}",
-        "files": new_entries,
-        "op": "merge",
-        # an evolved merge commits the WIDENED schema (carried files
-        # null-fill the new columns through the read contract)
-        "schema": (
-            staged_df.schema.json()
-            if extra
-            else manifest.get("schema") or staged_df.schema.json()
-        ),
-    }
-    old_dv = _dv_read(spark, table_dir, manifest)
-    if old_dv is not None:
-        carried_keys = sorted({_dv_key(e["path"]) for e in carried})
-        dv_block = _write_dv(
+    staged = _staged_entries(
+        spark, table_dir, version, stats_cols, manifest.get("bloom_spec")
+    )
+    dv = _carried_dv(
+        spark, table_dir, version, _dv_read(spark, table_dir, manifest), carried
+    )
+    changes = None
+    if manifest.get("cdf") and touched:
+        # same CDF materialization as the upsert core: tgt holds the
+        # touched files' pre-merge live rows, the staged dir the
+        # post-merge state of that region
+        changes = _write_change_files(
             spark, table_dir, version,
-            old_dv.where(F.col("path").isin(carried_keys)) if carried_keys else None,
+            tgt.select(cols),
+            spark.read.schema(staged_df.schema).parquet(vdir).select(cols),
+            keys, cols,
         )
-        if dv_block:
-            payload["dv"] = dv_block
-    if constraints:
-        payload["constraints"] = constraints
-    props = _merge_txn(manifest, properties)
-    if props:
-        payload["properties"] = _props_payload(props)
-    if bloom_spec:
-        payload["bloom_spec"] = bloom_spec
-    if manifest.get("cdf"):
-        payload["cdf"] = True
-        if touched:
-            # same CDF materialization as the upsert core: tgt holds the
-            # touched files' pre-merge live rows, the staged dir the
-            # post-merge state of that region
-            payload["changes"] = _write_change_files(
-                spark, table_dir, version,
-                tgt.select(cols),
-                spark.read.schema(staged_df.schema).parquet(vdir).select(cols),
-                keys, cols,
-            )
+    # an evolved merge commits the WIDENED schema (carried files
+    # null-fill the new columns through the read contract)
+    record = snaplog.next_record(
+        manifest, version, "merge", staged + carried, properties=properties,
+        staged_schema=staged_df.schema.json(), dv=dv, changes=changes,
+    )
     try:
-        snaplog.commit(table_dir, version, payload)
+        snaplog.commit(table_dir, version, record)
     except SnapshotConflictError:
         snaplog.remove(vdir)  # never committed
         raise
@@ -2984,7 +2818,7 @@ def snapshot_stats_agg(
     clean = [e for e in entries if not _dirty(e) and e.get("rows", 0) > 0]
 
     # driver-side fold over the clean files' recorded stats; values are
-    # JSON-safe (_json_safe) where ISO timestamp strings order
+    # JSON-safe (snaplog.json_safe) where ISO timestamp strings order
     # chronologically, so min/max comparison is plain Python
     mins: dict[str, object] = {c: None for c in cols}
     maxs: dict[str, object] = {c: None for c in cols}
@@ -3018,8 +2852,8 @@ def snapshot_stats_agg(
         for c in cols:
             nulls[c] += int(row[f"__nulls_{c}"] or 0)
             for v_, acc, better in (
-                (_json_safe(row[f"__min_{c}"]), mins, min),
-                (_json_safe(row[f"__max_{c}"]), maxs, max),
+                (snaplog.json_safe(row[f"__min_{c}"]), mins, min),
+                (snaplog.json_safe(row[f"__max_{c}"]), maxs, max),
             ):
                 if v_ is None:
                     continue
@@ -3147,8 +2981,7 @@ def snapshot_delete(
             f"table once with snapshot_write (any stats_cols) under {table_dir}"
         )
     if stats_cols is None:
-        with_stats = next((e for e in entries if e.get("stats")), None)
-        stats_cols = sorted(with_stats["stats"]) if with_stats else None
+        stats_cols = snaplog.tracked_stats(entries)
 
     if mode not in ("cow", "dv"):
         raise ValueError(f"snapshot_delete: unknown mode {mode!r}")
@@ -3189,23 +3022,12 @@ def snapshot_delete(
         if deleted_now == 0:
             snaplog.remove(vdir)  # no match: nothing to commit
             return current, 0
-        payload = {
-            "version": version,
-            "dir": f"v={version}",
-            "files": entries,  # every data file carried by reference
-            "schema": manifest.get("schema"),
-            "dv": dv_block,
-            "op": "delete",
-        }
-        for carry in ("bloom_spec", "constraints", "cdf"):
-            if manifest.get(carry):
-                payload[carry] = manifest[carry]
-        txn = _merge_txn(manifest, None)
-        if txn:
-            # streaming writers' idempotence stamps survive a delete
-            payload["properties"] = _props_payload(txn)
+        # every data file carried by reference
+        record = snaplog.next_record(
+            manifest, version, "delete", entries, dv=dv_block
+        )
         try:
-            snaplog.commit(table_dir, version, payload)
+            snaplog.commit(table_dir, version, record)
         except SnapshotConflictError:
             snaplog.remove(vdir)  # never committed
             raise
@@ -3222,40 +3044,18 @@ def snapshot_delete(
         _dv_deleted(manifest),
     )
     survivors = live.where(keep)
-    version, vdir_cow = _stage_version(survivors, table_dir)
-    _check_staged_against(
-        spark, table_dir, vdir_cow, version, current, "snapshot_delete"
+    version, _ = _stage(survivors, table_dir, "snapshot_delete", current)
+    staged = _staged_entries(
+        spark, table_dir, version, stats_cols, manifest.get("bloom_spec")
     )
-    staged = _staged_file_entries(spark, table_dir, version, stats_cols)
     dv_counts = (manifest.get("dv") or {}).get("files", {})
     live_candidates = sum(
         e.get("rows", 0) - dv_counts.get(_dv_key(e["path"]), 0) for e in candidates
     )
     deleted = live_candidates - sum(e["rows"] for e in staged)
-    bloom_spec = manifest.get("bloom_spec")
-    _apply_blooms(spark, table_dir, version, staged, bloom_spec)
-    payload = {
-        "version": version,
-        "dir": f"v={version}",
-        "files": staged + carried,
-        "schema": manifest.get("schema") or survivors.schema.json(),
-        "op": "delete",
-    }
-    # rewritten candidates physically drop their deleted rows; only the
-    # carried files' deletion-vector entries survive (two-segment key:
-    # entry paths may be absolute on a shallow clone)
-    if old_dv is not None:
-        carried_keys = sorted({_dv_key(e["path"]) for e in carried})
-        dv_block = _write_dv(
-            spark, table_dir, version,
-            old_dv.where(F.col("path").isin(carried_keys)) if carried_keys else None,
-        )
-        if dv_block:
-            payload["dv"] = dv_block
-    if bloom_spec:
-        payload["bloom_spec"] = bloom_spec
+    dv = _carried_dv(spark, table_dir, version, old_dv, carried)
+    changes = None
     if manifest.get("cdf"):
-        payload["cdf"] = True
         # a predicate delete's CDC is exactly the predicate-matched live
         # rows (no keyed diff needed): materialize them as `delete`
         # change rows so the changeFeed replays the rewrite. Cost: ONE
@@ -3263,19 +3063,17 @@ def snapshot_delete(
         # rather than persisted — mass deletes are the COW use case, and
         # caching gigabytes of candidates to save a parquet re-scan is
         # the wrong trade); still O(candidates), never O(table)
-        payload["changes"] = _materialize_changes(
+        changes = _materialize_changes(
             spark, table_dir, version,
             live.where(F.coalesce(_where_expr(where), F.lit(False)))
             .withColumn("_change_type", F.lit("delete")),
         )
-    if manifest.get("constraints"):
-        # deletes cannot create violating rows: carry, don't re-check
-        payload["constraints"] = manifest["constraints"]
-    txn = _merge_txn(manifest, None)
-    if txn:
-        # streaming writers' idempotence stamps survive a delete
-        payload["properties"] = _props_payload(txn)
-    snaplog.commit(table_dir, version, payload)
+    # deletes cannot create violating rows: the constraints carry
+    # unchecked
+    snaplog.commit(table_dir, version, snaplog.next_record(
+        manifest, version, "delete", staged + carried,
+        staged_schema=survivors.schema.json(), dv=dv, changes=changes,
+    ))
     return version, deleted
 
 
@@ -3325,12 +3123,11 @@ def snapshot_clone(
         raise ValueError("snapshot_clone needs a file-list manifest")
     if not shallow:
         df = snapshot_read(spark, source_dir)
-        with_stats = next((e for e in entries if e.get("stats")), None)
         spec = manifest.get("bloom_spec") or {}
         return snapshot_write(
             df,
             clone_dir,
-            stats_cols=sorted(with_stats["stats"]) if with_stats else None,
+            stats_cols=snaplog.tracked_stats(entries),
             bloom_cols=spec.get("cols"),
             bloom_bits=spec.get("m", 16384),
             bloom_hashes=spec.get("h", 5),
@@ -3340,21 +3137,14 @@ def snapshot_clone(
     # _entry_uri keeps a clone-of-a-clone from double-prefixing entries
     # the source itself holds by absolute reference
     abs_entries = [{**e, "path": _entry_uri(src_base, e["path"])} for e in entries]
-    payload = {
-        "version": 1,
-        "dir": "v=1",
-        "files": abs_entries,
-        "schema": manifest.get("schema"),
-        "cloned_from": {"table": src_base, "version": current},
-        "op": "clone",
-    }
-    for carry in ("bloom_spec", "constraints", "cdf"):
-        if manifest.get(carry):
-            payload[carry] = manifest[carry]
-    if manifest.get("dv"):
-        dv = manifest["dv"]
-        payload["dv"] = {**dv, "dir": _entry_uri(src_base, dv["dir"])}
-    snaplog.commit(clone_dir, 1, payload)
+    dv = manifest.get("dv")
+    # a new table: no properties; the deletion vector is re-pointed at the
+    # source's dataset
+    snaplog.commit(clone_dir, 1, snaplog.next_record(
+        manifest, 1, "clone", abs_entries, props="reset",
+        dv={**dv, "dir": _entry_uri(src_base, dv["dir"])} if dv else None,
+        cloned_from={"table": src_base, "version": current},
+    ))
     # register with the source so ITS vacuum can protect the pinned
     # version (idempotent create; registration loss only reopens the
     # documented keep_last caveat, never corrupts either table)
@@ -3396,23 +3186,14 @@ def snapshot_restamp(
     manifest = snaplog.read_manifest(table_dir, current)
     if manifest.get("files") is None:
         raise ValueError("snapshot_restamp needs a file-list manifest")
-    payload = {
-        "version": current + 1,
-        "dir": f"v={current + 1}",
-        "files": manifest["files"],
-        "schema": manifest.get("schema"),
-        # the NEW properties replace the old wholesale (that is what a
-        # restamp is) — except streaming writers' txn idempotence
-        # stamps, which must survive every commit or a crash-replayed
-        # micro-batch would re-append after an interleaved restamp
-        "properties": _props_payload(_merge_txn(manifest, properties) or {}),
-        "restamped_from": current,
-        "op": "restamp",
-    }
-    for carry in ("bloom_spec", "dv", "constraints", "cdf"):
-        if manifest.get(carry):
-            payload[carry] = manifest[carry]
-    snaplog.commit(table_dir, current + 1, payload)
+    # the NEW properties replace the old wholesale (that is what a
+    # restamp is) — except streaming writers' txn idempotence stamps,
+    # which must survive every commit or a crash-replayed micro-batch
+    # would re-append after an interleaved restamp
+    snaplog.commit(table_dir, current + 1, snaplog.next_record(
+        manifest, current + 1, "restamp", manifest["files"],
+        properties=properties, restamped_from=current,
+    ))
     return current + 1
 
 
@@ -3535,19 +3316,11 @@ def snapshot_add_constraint(
             f"different expression ({existing[name]!r}) — drop it first"
         )
     check_expectations(snapshot_read(spark, table_dir), {name: expr})
-    payload = {
-        "version": current + 1,
-        "dir": f"v={current + 1}",
-        "files": manifest["files"],
-        "schema": manifest.get("schema"),
-        "constraints": {**existing, name: expr},
-        "constraint_added": name,
-        "op": "add-constraint",
-    }
-    for carry in ("bloom_spec", "dv", "properties", "cdf"):
-        if manifest.get(carry):
-            payload[carry] = manifest[carry]
-    snaplog.commit(table_dir, current + 1, payload)
+    snaplog.commit(table_dir, current + 1, snaplog.next_record(
+        manifest, current + 1, "add-constraint", manifest["files"],
+        props="carry", constraints={**existing, name: expr},
+        constraint_added=name,
+    ))
     return current + 1
 
 
@@ -3567,20 +3340,10 @@ def snapshot_drop_constraint(
             f"snapshot_drop_constraint: no constraint {name!r} on {table_dir}"
         )
     del existing[name]
-    payload = {
-        "version": current + 1,
-        "dir": f"v={current + 1}",
-        "files": manifest["files"],
-        "schema": manifest.get("schema"),
-        "constraint_dropped": name,
-        "op": "drop-constraint",
-    }
-    if existing:
-        payload["constraints"] = existing
-    for carry in ("bloom_spec", "dv", "properties", "cdf"):
-        if manifest.get(carry):
-            payload[carry] = manifest[carry]
-    snaplog.commit(table_dir, current + 1, payload)
+    snaplog.commit(table_dir, current + 1, snaplog.next_record(
+        manifest, current + 1, "drop-constraint", manifest["files"],
+        props="carry", constraints=existing, constraint_dropped=name,
+    ))
     return current + 1
 
 
@@ -3620,65 +3383,51 @@ def snapshot_restore(spark: SparkSession, table_dir: str, to_version: int) -> in
     current = snapshot_version(spark, table_dir)
     m_cur = snaplog.read_manifest(table_dir, current)
     version = current + 1
-    payload = {
-        "version": version,
-        "dir": f"v={version}",
-        "files": files,
-        "schema": manifest.get("schema"),
-        "restored_from": to_version,
-        "op": "restore",
-    }
-    if manifest.get("dv"):
-        # the restored state's deletion vector IS part of that state; the
-        # pointer is version-relative and the dataset is vacuum-protected
-        payload["dv"] = manifest["dv"]
-    if manifest.get("bloom_spec"):
-        payload["bloom_spec"] = manifest["bloom_spec"]
-    claimed = None
-    if manifest.get("cdf") or m_cur.get("cdf"):
-        # once enabled, a restore never silently drops the feed contract
-        # (either endpoint's flag keeps it on)
-        payload["cdf"] = True
-        if (
-            m_cur.get("files") is not None
-            and m_cur.get("schema")
-            and manifest.get("schema")
-        ):
-            # hold the v=N claim while writing _changes/v=N: a
-            # concurrent writer deriving the same next version must not
-            # interleave its own change files into our directory (the
-            # merge family holds this claim implicitly via its staging)
-            claimed = snaplog.claim_version(table_dir, version)
-            # a restore only re-references immutable files, so the
-            # file-wise multiset diff is exact net CDC once identical
-            # rows cancel: restoring across a COW rewrite puts a
-            # survivor's row content in BOTH sides (old = the rewritten
-            # file, new = the original), and the exceptAll pair nets
-            # those out so only true churn emits (delete for rows
-            # leaving, insert for rows returning; DV deltas on shared
-            # files included). Both sides are bounded by files unique
-            # to one side — O(span churn), never O(table).
-            old_side, new_side, cdc_cols = _state_diff_sides(
-                spark, table_dir, m_cur, manifest, "snapshot_restore"
-            )
-            payload["changes"] = _materialize_changes(
-                spark, table_dir, version,
-                old_side.exceptAll(new_side)
-                .withColumn("_change_type", F.lit("delete"))
-                .unionByName(
-                    new_side.exceptAll(old_side)
-                    .withColumn("_change_type", F.lit("insert"))
-                ),
-            )
-    if manifest.get("constraints"):
-        # the restored version's rows passed ITS constraint set; that set
-        # (not a later one) travels with the restored state
-        payload["constraints"] = manifest["constraints"]
-    if manifest.get("properties"):
-        # the restored content IS the target version's: its stamp applies
-        payload["properties"] = manifest["properties"]
+    # once enabled, a restore never silently drops the feed contract
+    # (either endpoint's flag keeps it on)
+    cdf = manifest.get("cdf") or m_cur.get("cdf")
+    claimed = changes = None
+    if (
+        cdf
+        and m_cur.get("files") is not None
+        and m_cur.get("schema")
+        and manifest.get("schema")
+    ):
+        # hold the v=N claim while writing _changes/v=N: a
+        # concurrent writer deriving the same next version must not
+        # interleave its own change files into our directory (the
+        # merge family holds this claim implicitly via its staging)
+        claimed = snaplog.claim_version(table_dir, version)
+        # a restore only re-references immutable files, so the
+        # file-wise multiset diff is exact net CDC once identical
+        # rows cancel: restoring across a COW rewrite puts a
+        # survivor's row content in BOTH sides (old = the rewritten
+        # file, new = the original), and the exceptAll pair nets
+        # those out so only true churn emits (delete for rows
+        # leaving, insert for rows returning; DV deltas on shared
+        # files included). Both sides are bounded by files unique
+        # to one side — O(span churn), never O(table).
+        old_side, new_side, cdc_cols = _state_diff_sides(
+            spark, table_dir, m_cur, manifest, "snapshot_restore"
+        )
+        changes = _materialize_changes(
+            spark, table_dir, version,
+            old_side.exceptAll(new_side)
+            .withColumn("_change_type", F.lit("delete"))
+            .unionByName(
+                new_side.exceptAll(old_side)
+                .withColumn("_change_type", F.lit("insert"))
+            ),
+        )
+    # the restored state is the TARGET version's, so its record is the
+    # parent: its deletion vector (version-relative, vacuum-protected),
+    # the constraint set its rows passed and its stamp all travel with it
+    record = snaplog.next_record(
+        manifest, version, "restore", files, props="carry", cdf=cdf,
+        restored_from=to_version, changes=changes,
+    )
     try:
-        snaplog.commit(table_dir, version, payload)
+        snaplog.commit(table_dir, version, record)
     except SnapshotConflictError:
         if claimed is not None:
             # our claim and change files were never published — remove
@@ -3979,8 +3728,7 @@ def snapshot_compact(
     else:
         total = sum(e.get("bytes", 0) for e in entries)
         if stats_cols is None:
-            with_stats = next((e for e in entries if e.get("stats")), None)
-            stats_cols = sorted(with_stats["stats"]) if with_stats else None
+            stats_cols = snaplog.tracked_stats(entries)
     n = max(1, math.ceil(total / target_file_bytes))
     df = snapshot_read(spark, table_dir).repartition(n)
     spec = manifest.get("bloom_spec") or {}
@@ -4068,8 +3816,7 @@ def snapshot_optimize(
     if len(small) < 2 and not any(_dv_heavy(e) for e in small):
         return v, 0, len(entries)
     if stats_cols is None:
-        with_stats = next((e for e in entries if e.get("stats")), None)
-        stats_cols = sorted(with_stats["stats"]) if with_stats else None
+        stats_cols = snaplog.tracked_stats(entries)
     base = table_dir.rstrip("/")
     total_small = sum(e.get("bytes", 0) for e in small)
     n = max(1, math.ceil(total_small / target_file_bytes))
@@ -4119,41 +3866,16 @@ def snapshot_optimize(
             packed = packed.coalesce(n)
     else:
         packed = packed.coalesce(n)
-    version, vdir_opt = _stage_version(packed, table_dir)
-    _check_staged_against(
-        spark, table_dir, vdir_opt, version, v, "snapshot_optimize"
+    version, _ = _stage(packed, table_dir, "snapshot_optimize", v)
+    staged = _staged_entries(
+        spark, table_dir, version, stats_cols, manifest.get("bloom_spec")
     )
-    staged = _staged_file_entries(spark, table_dir, version, stats_cols)
-    bloom_spec = manifest.get("bloom_spec")
-    _apply_blooms(spark, table_dir, version, staged, bloom_spec)
-    payload = {
-        "version": version,
-        "dir": f"v={version}",
-        "files": staged + carried,
-        "schema": manifest.get("schema") or packed.schema.json(),
-        "optimized_from": v,
-        "op": "optimize",
-    }
-    # packed files drop their deletion-vector debt physically; only the
-    # carried (already well-sized) files' entries survive (two-segment
-    # key: entry paths may be absolute on a shallow clone)
-    if old_dv is not None:
-        carried_keys = sorted({_dv_key(e["path"]) for e in carried})
-        dv_block = _write_dv(
-            spark, table_dir, version,
-            old_dv.where(F.col("path").isin(carried_keys)) if carried_keys else None,
-        )
-        if dv_block:
-            payload["dv"] = dv_block
-    if bloom_spec:
-        payload["bloom_spec"] = bloom_spec
-    if manifest.get("cdf"):
-        payload["cdf"] = True
-    if manifest.get("constraints"):
-        # packing moves rows, never changes them: carry, don't re-check
-        payload["constraints"] = manifest["constraints"]
-    if manifest.get("properties"):
-        # content-preserving: carry the exactly-once consumer stamp
-        payload["properties"] = manifest["properties"]
-    snaplog.commit(table_dir, version, payload)
+    # packing moves rows, never changes them: the constraints carry
+    # unchecked and the exactly-once consumer stamp carries wholesale
+    snaplog.commit(table_dir, version, snaplog.next_record(
+        manifest, version, "optimize", staged + carried, props="carry",
+        staged_schema=packed.schema.json(),
+        dv=_carried_dv(spark, table_dir, version, old_dv, carried),
+        optimized_from=v,
+    ))
     return version, len(small), len(carried)

@@ -881,7 +881,7 @@ def stream_snapshot_append(
     ATOMICALLY with the data (Delta's txnAppId/txnVersion idiom) and
     skips any batch whose id is already at-or-below the stamp. Every
     data-changing write path carries the ``txn`` map forward
-    (``storage._merge_txn``), so interleaved deletes/upserts/merges by
+    (``snaplog.next_record``), so interleaved deletes/upserts/merges by
     other writers cannot erase the stamp; ``snapshot_write`` full
     replace deliberately resets it. Each append commits under a CAS
     (``expected_version``) so a concurrent writer makes the batch fail

@@ -1920,3 +1920,40 @@ def test_cdf_null_keys_and_type_changing_replace(spark, tmp_path):
     )
     got = sorted((r["k"], r["v"], r["_change_type"], ) for r in feed.collect())
     assert got == [(2, 20, "insert"), (2, 99, "delete")], got
+
+
+def test_datasource_writer_keeps_change_data_feed(spark, tmp_path):
+    """A ``snapshotfeed`` append on a change-data-feed table keeps the
+    flag, so a later rewrite still materializes its change rows and the
+    changeFeed replays it; an overwrite, whose netted replace diff the
+    SparkSession-less writer cannot compute, is refused and leaves the
+    head where it was."""
+    from f1_data_pipeline_spark.snaplog import read_manifest
+    from f1_data_pipeline_spark.storage import snapshot_version
+
+    feedsource.register(spark)
+    tdir = str(tmp_path / "tbl")
+    snapshot_write(
+        _batch(spark, 0, 10).coalesce(1), tdir, stats_cols=["k"], change_files=True
+    )                                                                          # v1
+    snapshot_append(_batch(spark, 10, 20).coalesce(1), tdir)                   # v2
+    _batch(spark, 20, 30).write.format("snapshotfeed").mode("append").save(tdir)  # v3
+    assert read_manifest(tdir, 3).get("cdf") is True
+    snapshot_upsert(
+        spark, tdir,
+        _batch(spark, 5, 6).select("k", (F.col("v") + 1).alias("v")), key="k",
+    )                                                                          # v4
+    rows = (
+        spark.read.format("snapshotfeed")
+        .option("changeFeed", "true")
+        .option("startingVersion", "4")
+        .load(tdir)
+        .collect()
+    )
+    assert {(r["k"], r["v"], r["_change_type"], r["_commit_version"]) for r in rows} == {
+        (5, 10.0, "update_preimage", 4),
+        (5, 11.0, "update_postimage", 4),
+    }
+    with pytest.raises(Exception, match="storage.snapshot_write"):
+        _batch(spark, 0, 3).write.format("snapshotfeed").mode("overwrite").save(tdir)
+    assert snapshot_version(spark, tdir) == 4

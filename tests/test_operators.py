@@ -3072,6 +3072,21 @@ def test_winnow_agg_and_join_branches_agree_on_duplicated_input_rows(spark):
 # --- r14: scan-local MinHash kernel (xxh64np) parity gates ------------------
 
 
+def test_xxh64np_refuses_big_endian_hosts(monkeypatch):
+    """The raw-Arrow-buffer kernels read little-endian buffers with
+    native dtypes: a big-endian host must fail typed, never hash
+    garbage silently."""
+    import sys
+
+    from f1_data_pipeline_spark.operators import xxh64np
+
+    monkeypatch.setattr(sys, "byteorder", "big")
+    with pytest.raises(xxh64np.ByteOrderError, match="big-endian"):
+        xxh64np.require_little_endian()
+    monkeypatch.setattr(sys, "byteorder", "little")
+    xxh64np.require_little_endian()
+
+
 def test_xxh64np_matches_spark_xxhash64_strings(spark):
     """The numpy XXH64 must be bit-identical to Spark's xxhash64 for
     StringType columns under the salted form xxhash64(lit(j), s) — over

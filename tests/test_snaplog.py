@@ -273,3 +273,53 @@ def test_missing_manifest_names_retention_or_absence(tmp_path, monkeypatch):
         snaplog.read_manifest(tdir, 1)
     with pytest.raises(FileNotFoundError, match="never committed"):
         snaplog.read_manifest(tdir, 9)
+
+
+def test_every_commit_publishes_a_next_record_result():
+    """Structural guard: every ``snaplog.commit`` in the package publishes
+    a ``snaplog.next_record`` result, and no module but ``snaplog`` spells
+    a commit record as a dict literal — so what a commit inherits from
+    its parent stays stated once."""
+    import ast
+    import pathlib
+
+    def is_snaplog_call(node, name):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == name
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "snaplog"
+        )
+
+    pkg = pathlib.Path(snaplog.__file__).parent
+    commits = set()
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pathlib.Path(snaplog.__file__):
+            continue
+        tree = ast.parse(path.read_text())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Dict):
+                keys = {k.value for k in node.keys if isinstance(k, ast.Constant)}
+                assert not ("op" in keys and keys & {"version", "files"}), (
+                    f"{path.name}:{node.lineno} builds a commit record by hand"
+                )
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            built = {
+                t.id
+                for node in ast.walk(fn)
+                if isinstance(node, ast.Assign)
+                and is_snaplog_call(node.value, "next_record")
+                for t in node.targets
+                if isinstance(t, ast.Name)
+            }
+            for node in ast.walk(fn):
+                if is_snaplog_call(node, "commit"):
+                    rec = node.args[2]
+                    assert is_snaplog_call(rec, "next_record") or (
+                        isinstance(rec, ast.Name) and rec.id in built
+                    ), f"{path.name}:{node.lineno} commits a record not built by next_record"
+                    commits.add((path.name, node.lineno))
+    assert len(commits) >= 13

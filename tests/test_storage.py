@@ -4046,3 +4046,204 @@ def test_commit_side_frames_start_no_python_worker(spark, tmp_path, monkeypatch)
         assert "ExistingRDD" not in _plan(df), _plan(df)
     assert {r["k"] for r in feeds[0].collect()} == set(range(40, 45))
     assert {r["k"] for r in feeds[1].collect()} == {100, 101, 102}
+
+
+# ---------------------------------------------------------------------------
+# Commit-record inheritance: the table-level fields each commit kind
+# carries from its parent record
+# ---------------------------------------------------------------------------
+
+_PARENT = "parent"  # expected value: identical to the parent record's field
+
+
+def _kv_rows(spark, keys):
+    return spark.createDataFrame([(k, float(k)) for k in keys], "k long, v double")
+
+
+@pytest.fixture(scope="module")
+def inheritance_bases(spark, tmp_path_factory):
+    """Two small tables whose head record carries every table-level field
+    at once: schema, a CHECK constraint (``full`` only), a Bloom spec
+    (``full`` only), the change-data-feed flag, a deletion vector on the
+    100s file and properties holding both a plain entry and a ``txn``
+    stamp. ``feed`` omits the constraint and the Bloom spec, which the
+    ``snapshotfeed`` writer refuses by design."""
+    from f1_data_pipeline_spark.storage import (
+        snapshot_add_constraint,
+        snapshot_append,
+        snapshot_delete,
+        snapshot_restamp,
+        snapshot_write,
+    )
+
+    root = tmp_path_factory.mktemp("inheritance")
+    bases = {}
+    for name, full in (("full", True), ("feed", False)):
+        tdir = str(root / name)
+        snapshot_write(
+            _kv_rows(spark, range(10)).coalesce(1), tdir, stats_cols=["k"],
+            bloom_cols=["k"] if full else None, change_files=True,
+        )
+        snapshot_append(_kv_rows(spark, range(100, 110)).coalesce(1), tdir)
+        if full:
+            snapshot_add_constraint(spark, tdir, "v_pos", "v >= 0")
+        snapshot_delete(spark, tdir, [("k", "=", 105)], mode="dv")
+        snapshot_restamp(spark, tdir, {"src": "matrix", "txn": {"app": 1}})
+        bases[name] = tdir
+    return bases
+
+
+def _op_feed_write(mode):
+    def run(spark, tdir, tmp):
+        from f1_data_pipeline_spark.ingest import feedsource
+
+        feedsource.register(spark)
+        _kv_rows(spark, range(200, 203)).write.format("snapshotfeed").mode(
+            mode
+        ).save(tdir)
+        return tdir
+
+    return run
+
+
+def _op_clone(spark, tdir, tmp):
+    from f1_data_pipeline_spark.storage import snapshot_clone
+
+    snapshot_clone(spark, tdir, str(tmp / "clone"))
+    return str(tmp / "clone")
+
+
+def _op(fn_name, *args, **kwargs):
+    """Run ``storage.<fn_name>`` on the table; callable args build frames."""
+
+    def run(spark, tdir, tmp):
+        import f1_data_pipeline_spark.storage as S
+
+        a = [x(spark) if callable(x) else x for x in args]
+        if fn_name in ("snapshot_write", "snapshot_append"):
+            getattr(S, fn_name)(a[0], tdir, *a[1:], **kwargs)
+        else:
+            getattr(S, fn_name)(spark, tdir, *a, **kwargs)
+        return tdir
+
+    return run
+
+
+_TXN_ONLY = {"txn": {"app": 1}}
+# case -> (base, op, expected op label, expected table-level fields).
+# Data-changing commits keep only the parent's txn stamps; content-
+# preserving ones carry the parent's properties wholesale; a full
+# replace, a clone and a restore start from their own deliberate source.
+_INHERITANCE_CASES = {
+    "write": (
+        "full", _op("snapshot_write", lambda s: _kv_rows(s, range(5)), stats_cols=["k"]),
+        "write",
+        dict(constraints=_PARENT, bloom_spec=None, cdf=True, dv=False, properties=None),
+    ),
+    "compact": (
+        "full", _op("snapshot_compact"), "compact",
+        dict(constraints=_PARENT, bloom_spec=_PARENT, cdf=True, dv=False, properties=_PARENT),
+    ),
+    "append": (
+        "full", _op("snapshot_append", lambda s: _kv_rows(s, range(200, 203))), "append",
+        dict(constraints=_PARENT, bloom_spec=_PARENT, cdf=True, dv=True, properties=_TXN_ONLY),
+    ),
+    "upsert": (
+        "full", _op("snapshot_upsert", lambda s: _kv_rows(s, [3]), "k"),
+        "upsert",
+        dict(constraints=_PARENT, bloom_spec=_PARENT, cdf=True, dv=True, properties=_TXN_ONLY),
+    ),
+    "apply_cdc": (
+        "full", _op(
+            "snapshot_apply_cdc",
+            lambda s: s.createDataFrame([(4, 0.0, "D")], "k long, v double, op string"),
+            "k",
+        ),
+        "cdc",
+        dict(constraints=_PARENT, bloom_spec=_PARENT, cdf=True, dv=True, properties=_TXN_ONLY),
+    ),
+    "merge": (
+        "full", _op("snapshot_merge", lambda s: _kv_rows(s, [2, 300]), "k"),
+        "merge",
+        dict(constraints=_PARENT, bloom_spec=_PARENT, cdf=True, dv=True, properties=_TXN_ONLY),
+    ),
+    "delete_cow": (
+        "full", _op("snapshot_delete", [("k", "=", 1)], mode="cow"), "delete",
+        dict(constraints=_PARENT, bloom_spec=_PARENT, cdf=True, dv=True, properties=_TXN_ONLY),
+    ),
+    "delete_dv": (
+        "full", _op("snapshot_delete", [("k", "=", 1)], mode="dv"), "delete",
+        dict(constraints=_PARENT, bloom_spec=_PARENT, cdf=True, dv=True, properties=_TXN_ONLY),
+    ),
+    "clone": (
+        "full", _op_clone, "clone",
+        dict(constraints=_PARENT, bloom_spec=_PARENT, cdf=True, dv=True, properties=None),
+    ),
+    "restamp": (
+        "full", _op("snapshot_restamp", {"note": 2}), "restamp",
+        dict(constraints=_PARENT, bloom_spec=_PARENT, cdf=True, dv=True,
+             properties={"note": 2, "txn": {"app": 1}}),
+    ),
+    "add_constraint": (
+        "full", _op("snapshot_add_constraint", "k_nn", "k IS NOT NULL"), "add-constraint",
+        dict(constraints={"v_pos": "v >= 0", "k_nn": "k IS NOT NULL"}, bloom_spec=_PARENT,
+             cdf=True, dv=True, properties=_PARENT),
+    ),
+    "drop_constraint": (
+        "full", _op("snapshot_drop_constraint", "v_pos"), "drop-constraint",
+        dict(constraints=None, bloom_spec=_PARENT, cdf=True, dv=True, properties=_PARENT),
+    ),
+    "restore": (
+        # v1 predates the constraint, the deletion vector and the stamp
+        "full", _op("snapshot_restore", 1), "restore",
+        dict(constraints=None, bloom_spec=_PARENT, cdf=True, dv=False, properties=None),
+    ),
+    "optimize": (
+        "full", _op("snapshot_optimize"), "optimize",
+        dict(constraints=_PARENT, bloom_spec=_PARENT, cdf=True, dv=False, properties=_PARENT),
+    ),
+    "feed_append": (
+        "feed", _op_feed_write("append"), "append",
+        dict(constraints=None, bloom_spec=None, cdf=True, dv=True, properties=_TXN_ONLY),
+    ),
+    # the SparkSession-less writer cannot materialize a replace's netted
+    # diff, so an overwrite of a change-data-feed table is refused
+    "feed_overwrite": ("feed", _op_feed_write("overwrite"), None, None),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_INHERITANCE_CASES))
+def test_commit_record_inheritance_matrix(spark, inheritance_bases, tmp_path, case):
+    """Every commit kind derives the table-level fields of its record
+    from the parent record by one rule (schema, constraints, Bloom spec,
+    change-data-feed flag, deletion vector, properties)."""
+    import shutil
+
+    from f1_data_pipeline_spark.snaplog import read_manifest
+    from f1_data_pipeline_spark.storage import snapshot_version
+
+    base, op, label, want = _INHERITANCE_CASES[case]
+    tdir = str(tmp_path / "tbl")
+    shutil.copytree(inheritance_bases[base], tdir)
+    head = snapshot_version(spark, tdir)
+    parent = read_manifest(tdir, head)
+    if want is None:
+        with pytest.raises(Exception, match="snapshot_write"):
+            op(spark, tdir, tmp_path)
+        assert snapshot_version(spark, tdir) == head
+        return
+    out = op(spark, tdir, tmp_path)
+    rec = read_manifest(out, snapshot_version(spark, out))
+    assert rec["op"] == label
+    assert rec.get("schema") == parent["schema"]
+    got = {
+        "constraints": rec.get("constraints"),
+        "bloom_spec": rec.get("bloom_spec"),
+        "cdf": rec.get("cdf"),
+        "dv": bool(rec.get("dv")),
+        "properties": rec.get("properties") or None,
+    }
+    expect = {
+        k: (parent.get(k) if v == _PARENT else v) for k, v in want.items()
+    }
+    assert got == expect
