@@ -48,11 +48,9 @@ def _ship_package(spark: SparkSession) -> None:
 def _configure(spark: SparkSession) -> SparkSession:
     """Apply session settings the engine depends on regardless of who built
     the SparkSession (driver or our own factory)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass  # static conf in some deployments; catalog handles both shapes
+    from f1_data_pipeline_spark.session import ensure_session_confs
+
+    ensure_session_confs(spark)
     _ship_package(spark)
     return spark
 

@@ -20,17 +20,23 @@ def strip_quotes(col: Column | str) -> Column:
     return F.regexp_replace(col, '^"|"$', "")
 
 
-def parse_event_time(col: Column | str) -> Column:
+def parse_event_time(col: Column | str, fallback: Column | str) -> Column:
     """ISO-8601 (with trailing ``Z``) → timestamp; processing-time fallback.
 
     Reference: transformer.py:422-432 (C5) — ``datetime.fromisoformat`` with
     ``Z``→``+00:00`` substitution and ``datetime.now()`` on failure (T5).
     ``try_to_timestamp`` handles ISO forms incl. fractional seconds; the
     coalesce reproduces the fallback without failing the task.
+
+    ``fallback`` is the wall-clock parse time the bronze parse emits per
+    Arrow batch (``parsed_at``), not ``current_timestamp()``: Catalyst
+    folds that into a new literal per query, so every load and micro-batch
+    would compile its classes anew (SCALE.md "Generated-code per-query
+    constant").
     """
     c = F.col(col) if isinstance(col, str) else col
     cleaned = F.regexp_replace(c.cast("string"), "Z$", "+00:00")
-    return F.coalesce(F.try_to_timestamp(cleaned), F.current_timestamp())
+    return F.coalesce(F.try_to_timestamp(cleaned), fallback)
 
 
 def parse_iso_strict(col: Column | str) -> Column:
@@ -38,7 +44,7 @@ def parse_iso_strict(col: Column | str) -> Column:
 
     Deterministic variant of ``parse_event_time`` for payload-embedded
     event times (CarData ``Utc``, Position ``Timestamp``) where a
-    current_timestamp fallback would poison dedup/idempotence.
+    wall-clock fallback would poison dedup/idempotence.
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.try_to_timestamp(F.regexp_replace(c.cast("string"), "Z$", "+00:00"))

@@ -20,15 +20,32 @@ import zlib
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
 WIRE_STRUCT = StructType(
     [
         StructField("topic", StringType(), True),
         StructField("payload", StringType(), True),  # JSON text (or b64 for .z topics)
         StructField("ts", StringType(), True),
+        StructField("parsed_at", TimestampType(), True),
     ]
 )
+
+
+def parse_line(line: str):
+    """Wire-line semantics shared with the ``f1wire`` source: returns
+    (topic, payload_json, ts) or (None, None, None) for malformed lines
+    (T10 log-and-skip)."""
+    try:
+        v = ast.literal_eval(line)
+        if not (isinstance(v, (list, tuple)) and len(v) == 3):
+            return None, None, None
+        topic, payload, ts = v
+        if isinstance(payload, str):
+            return topic, payload, ts
+        return topic, json.dumps(payload), ts
+    except (ValueError, SyntaxError, MemoryError, RecursionError):
+        return None, None, None
 
 
 @pandas_udf(WIRE_STRUCT)
@@ -39,24 +56,18 @@ def parse_wire_line(lines: pd.Series) -> pd.DataFrame:
     (reference format: monitor_weather.py:181-197). Dict payloads are
     re-serialized to JSON so everything downstream is `from_json`;
     compressed topics carry their base64 payload through unchanged.
-    Malformed lines yield all-NULL structs (T10: log-and-skip semantics —
-    the pipeline counts them instead of dying).
+    Malformed lines yield NULL topic/payload/ts (T10: log-and-skip
+    semantics — the pipeline counts them instead of dying).
+
+    ``parsed_at`` is the wall clock when this Arrow batch was parsed, the
+    event-time fallback for an unparseable ``ts`` (T5): the reference's
+    per-record ``datetime.now()``, to batch resolution, without a
+    ``current_timestamp()`` literal in the plan.
     """
-
-    def parse(line: str):
-        try:
-            v = ast.literal_eval(line)
-            if not (isinstance(v, (list, tuple)) and len(v) == 3):
-                return None, None, None
-            topic, payload, ts = v
-            if isinstance(payload, str):
-                return topic, payload, ts
-            return topic, json.dumps(payload), ts
-        except (ValueError, SyntaxError, MemoryError, RecursionError):
-            return None, None, None
-
-    parsed = [parse(x) if isinstance(x, str) else (None, None, None) for x in lines]
-    return pd.DataFrame(parsed, columns=["topic", "payload", "ts"])
+    parsed = [parse_line(x) if isinstance(x, str) else (None, None, None) for x in lines]
+    out = pd.DataFrame(parsed, columns=["topic", "payload", "ts"])
+    out["parsed_at"] = pd.Timestamp.now(tz="UTC")
+    return out
 
 
 @pandas_udf(StringType())

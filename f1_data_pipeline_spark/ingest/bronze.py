@@ -1,4 +1,6 @@
-"""Bronze layer: wire text file → (ordinal, topic, payload, ts) DataFrame.
+"""Bronze layer: wire text file → (ordinal, topic, payload, ts, parsed_at)
+DataFrame; ``parsed_at`` is the wall-clock parse time of the line's batch,
+the event-time fallback (T5, ``scalars.parse_event_time``).
 
 Sources S2/S3 (SURVEY §2.1). Batch reads the whole file; streaming uses the
 file source whose checkpointed offsets strictly strengthen the reference's
@@ -49,6 +51,7 @@ def _parse(
         F.col("r.topic").alias("topic"),
         F.col("r.payload").alias("payload"),
         F.col("r.ts").alias("ts"),
+        F.col("r.parsed_at").alias("parsed_at"),
         F.when(F.col("r.topic").isNull(), F.col("value")).alias("corrupt_line"),
     )
 

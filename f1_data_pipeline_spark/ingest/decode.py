@@ -37,7 +37,7 @@ from f1_data_pipeline_spark.operators.merge import last_non_null_merge
 def _topic(bronze: DataFrame, topic: str) -> DataFrame:
     # P2: pre-decode guard — cheap builtin filter ahead of any UDF
     return bronze.where(F.col("topic") == topic).withColumn(
-        "event_time", parse_event_time("ts")
+        "event_time", parse_event_time("ts", "parsed_at")
     )
 
 

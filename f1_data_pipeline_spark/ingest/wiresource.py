@@ -22,33 +22,20 @@ Why this beats the text-file + UDF path it complements (`ingest/bronze.py`):
   by the API); parsing happens during the scan instead of as a separate
   UDF stage over an already-materialized text DataFrame.
 
-The parse semantics are identical to ``functions/udfs.parse_wire_line``
+The parse is ``functions/udfs.parse_line``, the one ``parse_wire_line`` runs
 (Python-literal line → (topic, payload-as-JSON, ts); malformed → corrupt
-row) — asserted row-for-row in tests/test_ingest.py.
+row) — asserted row-for-row in tests/test_ingest.py — and each row carries
+the same ``parsed_at`` event-time fallback column as bronze.
 """
 
 from __future__ import annotations
 
-import ast
-import json
 import os
+from datetime import datetime, timezone
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-
-def parse_line(line: str):
-    """Shared wire-line semantics: returns (topic, payload_json, ts) or
-    (None, None, None) for malformed lines (T10 log-and-skip)."""
-    try:
-        v = ast.literal_eval(line)
-        if not (isinstance(v, (list, tuple)) and len(v) == 3):
-            return None, None, None
-        topic, payload, ts = v
-        if isinstance(payload, str):
-            return topic, payload, ts
-        return topic, json.dumps(payload), ts
-    except (ValueError, SyntaxError, MemoryError, RecursionError):
-        return None, None, None
+from f1_data_pipeline_spark.functions.udfs import parse_line
 
 
 class _Range(InputPartition):
@@ -79,6 +66,9 @@ class F1WireReader(DataSourceReader):
         # Hadoop-text split contract: a partition owns every line that
         # STARTS in [start, end); it skips a partial first line (owned by
         # the previous split) and reads past `end` to finish its last line.
+        # One parse time per split: the event-time fallback (T5), as
+        # bronze's per-batch ``parsed_at``.
+        parsed_at = datetime.now(timezone.utc)
         with open(part.path, "rb") as f:
             pos = part.start
             if pos > 0:
@@ -104,6 +94,7 @@ class F1WireReader(DataSourceReader):
                     topic,
                     payload,
                     ts,
+                    parsed_at,
                     text if topic is None else None,
                 )
 
@@ -116,7 +107,7 @@ class F1WireDataSource(DataSource):
     def schema(self) -> str:
         return (
             "ordinal bigint, topic string, payload string, ts string, "
-            "corrupt_line string"
+            "parsed_at timestamp, corrupt_line string"
         )
 
     def reader(self, schema) -> F1WireReader:

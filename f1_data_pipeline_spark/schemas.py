@@ -240,5 +240,6 @@ BRONZE = _s(
     _f("topic", S),
     _f("payload", S),
     _f("ts", S),
+    _f("parsed_at", T),
     _f("corrupt_line", S),
 )

@@ -16,13 +16,29 @@ Config rationale (SURVEY §7.1 step 1):
 - Python workers fork from ``pydaemon`` when they can import the package:
   it skips PySpark's per-task re-read of unchanged zip archives (SCALE.md
   "Python worker per-task constant").
+- The generated-class cache holds the engine's working set
+  (``CODEGEN_CACHE_ENTRIES``), and whole-stage class names leave out the
+  stage id AQE assigns in stage-completion order, so a recurring plan is
+  compiled once per session, not on every run (SCALE.md "Generated-code
+  per-query constant").
 """
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
+
+# Generated-class cache entries: the whole registry compiles ~2,000
+# distinct classes at sf0.001, so this holds it with ~2x headroom. Spark's
+# default of 100 is below one corpus_queries pass (~150 classes), and its
+# LRU evicted every class before it recurred.
+CODEGEN_CACHE_ENTRIES = 4096
+CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+_warned_apps: set[str] = set()
 
 
 def default_parallelism() -> int:
@@ -46,12 +62,32 @@ def workers_can_import() -> bool:
 def ensure_session_confs(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable confs the engine's semantics depend on,
     for sessions built by someone else (the driver, a notebook): UTC
-    timestamps and nanos-parquet reading. Safe to call repeatedly."""
+    timestamps, nanos-parquet reading and stage-id-free generated class
+    names (SCALE.md "Generated-code per-query constant"). Safe to call
+    repeatedly.
+
+    The generated-class cache size is static, so it cannot be fixed here:
+    a session built with fewer entries than ``CODEGEN_CACHE_ENTRIES`` gets
+    one WARNING per application."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass  # static in some deployments; catalog handles both shapes
+    spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
+    entries = int(spark.conf.get(CODEGEN_CACHE_CONF))
+    if (
+        entries < CODEGEN_CACHE_ENTRIES
+        and spark.sparkContext.applicationId not in _warned_apps
+    ):
+        _warned_apps.add(spark.sparkContext.applicationId)
+        log.warning(
+            "%s=%d is below the engine's %d: the cache evicts recurring "
+            "queries' generated classes, so they recompile on every run. "
+            "It is a static conf; set it when the session is built "
+            "(SCALE.md \"Generated-code per-query constant\").",
+            CODEGEN_CACHE_CONF, entries, CODEGEN_CACHE_ENTRIES,
+        )
     return spark
 
 
@@ -104,6 +140,10 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # static: a recurring plan's classes must outlive one pass
+        .config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
+        # the same stage compiled under another AQE stage id is a cache hit
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     if workers_can_import():
         # static: only a session this call creates gets it

@@ -141,6 +141,14 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def compilations(spark):
+    """Classes the driver has compiled so far (Janino compilations counted
+    by Spark's CodegenMetrics; a generated-class cache hit adds none)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return lambda: metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+@pytest.fixture(scope="session")
 def ducks():
     con = duckdb.connect()
     for t in (

@@ -3,10 +3,13 @@ counters (found == inserted), merge semantics, schema contracts."""
 
 from __future__ import annotations
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
 from f1_data_pipeline_spark import schemas as sc
+from f1_data_pipeline_spark.functions import parse_event_time
 from f1_data_pipeline_spark.ingest import read_bronze, build_silver
 from f1_data_pipeline_spark.ingest.fixture import generate, DRIVER_NUMBERS
 
@@ -120,6 +123,58 @@ def test_corrupt_lines_do_not_fail_task(spark, tmp_path):
     assert bronze.where("corrupt_line is not null").count() == 2  # blank dropped
     w = build_silver(bronze)["weather"].collect()
     assert len(w) == 1 and w[0]["air_temp"] == 21.5 and w[0]["rainfall"] is True
+
+
+def test_unparseable_ts_falls_back_to_parse_time(spark, tmp_path):
+    """T5: a ts that does not parse takes the wall clock of its batch's
+    parse (bronze ``parsed_at``), inside the load's window; a parseable ts
+    is kept as it is."""
+    lines = [
+        repr(["WeatherData", {"AirTemp": "20.0"}, "not-a-time"]),
+        repr(["WeatherData", {"AirTemp": "21.0"}, "2025-05-17T14:00:00.250Z"]),
+    ]
+    p = tmp_path / "ts.txt"
+    p.write_text("\n".join(lines) + "\n")
+    bronze = read_bronze(spark, str(p))
+    t0 = time.time_ns() // 1000
+    rows = bronze.select(
+        "ts",
+        F.unix_micros(parse_event_time("ts", "parsed_at")).alias("event_us"),
+        F.unix_micros("parsed_at").alias("parsed_us"),
+    ).collect()
+    weather = {
+        r["air_temp"]: r["t"]
+        for r in build_silver(bronze)["weather"]
+        .select("air_temp", F.unix_micros("timestamp").alias("t"))
+        .collect()
+    }
+    t1 = time.time_ns() // 1000 + 1
+    given = 1747490400_250000  # 2025-05-17T14:00:00.250Z
+    by_ts = {r["ts"]: r for r in rows}
+    assert all(t0 <= r["parsed_us"] <= t1 for r in rows)
+    assert by_ts["not-a-time"]["event_us"] == by_ts["not-a-time"]["parsed_us"]
+    assert by_ts["2025-05-17T14:00:00.250Z"]["event_us"] == given
+    assert t0 <= weather[20.0] <= t1
+    assert weather[21.0] == given
+
+
+def test_repeated_session_load_compiles_nothing(spark, tmp_path, compilations):
+    """Loading the same session file again reuses every generated class:
+    the decode plans carry no per-load literal (the T5 fallback is a
+    column, not a folded ``current_timestamp()``)."""
+    path = str(tmp_path / "wire.txt")
+    generate(path, n_lines=200, seed=11)
+
+    def load():
+        bronze = read_bronze(spark, path, partitions=4).persist()
+        for df in build_silver(bronze).values():
+            df.write.format("noop").mode("overwrite").save()
+        bronze.unpersist()
+
+    load()
+    before = compilations()
+    load()
+    assert compilations() - before == 0
 
 
 def test_silver_schema_contracts(pipeline):
