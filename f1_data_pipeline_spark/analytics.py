@@ -217,199 +217,6 @@ def heavy_hitters(
     )
 
 
-def partial_aggregate(df: DataFrame, keys: list[str], value_col: str) -> DataFrame:
-    """The persistable partial-aggregate state for incremental rollup
-    maintenance: per key → (n, sum, min, max). Every measure here is
-    ALGEBRAIC — mergeable by pairwise combination — which is exactly what
-    makes the increment pattern sound; averages are derived at read time
-    (``finalize_aggregate``), never stored."""
-    return df.groupBy(*keys).agg(
-        F.count(value_col).alias("n"),
-        F.sum(value_col).alias("s"),
-        F.min(value_col).alias("mn"),
-        F.max(value_col).alias("mx"),
-    )
-
-
-def merge_partial_aggregates(state: DataFrame, delta: DataFrame, keys: list[str]) -> DataFrame:
-    """Fold a new increment's partials into the persisted state: union +
-    one keyed re-aggregate (sum of n/s, min of mn, max of mx). The
-    100 TB daily-rollup loop: each day aggregates ONLY its own data, and
-    quarter-to-date state updates by merging day-sized partials — history
-    is never re-scanned (same contract as ``sketch_rollup`` for distinct
-    counts). The merge shuffles |state keys| + |delta keys| rows, not
-    facts."""
-    both = state.unionByName(delta)
-    return both.groupBy(*keys).agg(
-        F.sum("n").alias("n"),
-        F.sum("s").alias("s"),
-        F.min("mn").alias("mn"),
-        F.max("mx").alias("mx"),
-    )
-
-
-def finalize_aggregate(state: DataFrame, keys: list[str]) -> DataFrame:
-    """Read-time view over the partial state: derived avg joins the
-    algebraic measures; no information lives only here."""
-    return state.select(
-        *keys,
-        F.col("n"),
-        F.col("s").alias("total"),
-        (F.col("s") / F.col("n")).alias("avg"),
-        F.col("mn").alias("min"),
-        F.col("mx").alias("max"),
-    )
-
-
-def sync_rollup_from_changes(
-    spark: SparkSession,
-    source_dir: str,
-    source_key: str,
-    rollup_dir: str,
-    group_keys: list[str],
-    value_col: str,
-) -> tuple[int, int]:
-    """Exactly-once incremental view maintenance: keep a ``group_keys →
-    (n, s)`` gold rollup snapshot table in sync with a source snapshot
-    table by applying its CHANGE FEED, never re-scanning history.
-
-    Deletes subtract and updates adjust exactly because count and sum
-    are abelian-group (invertible) measures — insert/update_postimage
-    rows contribute +1/+value, delete/update_preimage rows −1/−value,
-    and groups whose count reaches zero leave the rollup. min/max are
-    deliberately NOT maintained here: they are not invertible under
-    deletes (losing the current min forces a rescan) — the append-only
-    ``merge_partial_aggregates`` family covers them.
-
-    Exactly-once without an offset store: each rollup commit stamps the
-    source version it reflects into its OWN commit record
-    (``snapshot_write(properties=...)``), atomically with the data. A
-    crash between reading the feed and committing redoes the span (the
-    rollup still names the old version); a crash after committing is
-    already durable (the rollup names the new version and the next sync
-    starts there). There is no window where the applied data and the
-    recorded position can disagree — the flaw every external-offset
-    design (including ``snapshot_changes_since`` + idempotent sink)
-    works around rather than removes.
-
-    Concurrent maintainers are safe too: the commit is a compare-and-swap
-    on the rollup version read at entry (``expected_version``), so two
-    syncs that both read stamp N cannot both apply the same span — the
-    loser's commit raises ``SnapshotConflictError`` without touching the
-    table, and re-invoking it re-reads the moved stamp and applies only
-    what remains (test-pinned in test_storage.py).
-
-    Cost per sync: the feed reads only endpoint-diff files (O(touched
-    files)), the signed delta is one keyed aggregate over change rows,
-    and the merge joins it against the group-count-sized rollup. The
-    rollup rewrite is a full write of a GOLD-sized table — KBs-MBs —
-    which is the honest simple shape (clustered upserts would save
-    nothing at that size). Returns (rollup_version, source_version)."""
-    from f1_data_pipeline_spark.storage import (
-        snapshot_changes,
-        snapshot_properties,
-        snapshot_read,
-        snapshot_version,
-        snapshot_write,
-    )
-
-    src_ver = snapshot_version(spark, source_dir)
-    if src_ver < 1:
-        raise FileNotFoundError(f"no committed snapshot in {source_dir}")
-    try:
-        rollup_ver = snapshot_version(spark, rollup_dir)
-    except FileNotFoundError:
-        rollup_ver = 0
-    if rollup_ver < 1:
-        # initial materialization: one aggregate over the current source.
-        # n > 0 matches the steady-state contract (a group exists while it
-        # has ≥1 NON-NULL measure) — without it, an all-NULL-value group
-        # would appear here with n=0 yet be evicted by the first
-        # incremental merge, diverging from a from-scratch rebuild.
-        init = (
-            snapshot_read(spark, source_dir)
-            .groupBy(*group_keys)
-            .agg(
-                F.count(value_col).alias("n"),
-                F.sum(value_col).cast("double").alias("s"),
-            )
-            .where(F.col("n") > 0)
-        )
-        v = snapshot_write(
-            init,
-            rollup_dir,
-            properties={"source_version": src_ver},
-            expected_version=rollup_ver,
-        )
-        return v, src_ver
-    last = snapshot_properties(spark, rollup_dir).get("source_version")
-    if last is None:
-        raise ValueError(
-            f"rollup at {rollup_dir} carries no source_version property — "
-            f"not maintained by sync_rollup_from_changes; rebuild it"
-        )
-    last = int(last)
-    if last == src_ver:
-        return rollup_ver, src_ver  # caught up: no empty commit
-    feed = snapshot_changes(spark, source_dir, source_key, last, src_ver)
-    sign = F.when(
-        F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
-    ).otherwise(F.lit(-1))
-    delta = (
-        feed.withColumn("__sgn", sign)
-        .groupBy(*group_keys)
-        .agg(
-            F.sum(
-                F.when(F.col(value_col).isNotNull(), F.col("__sgn")).otherwise(0)
-            ).alias("dn"),
-            F.sum(F.col("__sgn") * F.coalesce(F.col(value_col), F.lit(0.0))).alias(
-                "ds"
-            ),
-        )
-    )
-    cur = snapshot_read(spark, rollup_dir)
-    # NULL group keys are legitimate groupBy groups, so the merge join
-    # must be null-safe — a plain equi-join would never match them and
-    # every sync would append another NULL-key row instead of adjusting
-    d = delta.select(
-        *[F.col(k).alias(f"__d_{k}") for k in group_keys], "dn", "ds"
-    )
-    cond = None
-    for k in group_keys:
-        c = F.col(k).eqNullSafe(F.col(f"__d_{k}"))
-        cond = c if cond is None else (cond & c)
-    merged = (
-        cur.join(d, cond, "full_outer")
-        .select(
-            *[
-                F.coalesce(F.col(k), F.col(f"__d_{k}")).alias(k)
-                for k in group_keys
-            ],
-            (F.coalesce(F.col("n"), F.lit(0)) + F.coalesce(F.col("dn"), F.lit(0)))
-            .cast("long")
-            .alias("n"),
-            (
-                F.coalesce(F.col("s"), F.lit(0.0))
-                + F.coalesce(F.col("ds"), F.lit(0.0))
-            ).alias("s"),
-        )
-        .where(F.col("n") > 0)
-    )
-    # CAS on the rollup version read above: if a concurrent maintainer
-    # committed after we read source_version=last, OUR delta was derived
-    # from a span the table no longer reflects — committing it would
-    # double-apply that span. The conflict loser raises (typed) and the
-    # caller simply re-invokes, which re-reads the moved stamp and
-    # resyncs only the remaining span.
-    v = snapshot_write(
-        merged,
-        rollup_dir,
-        properties={"source_version": src_ver},
-        expected_version=rollup_ver,
-    )
-    return v, src_ver
-
-
 def sync_replica_from_changes(
     spark: SparkSession,
     source_dir: str,
@@ -422,7 +229,7 @@ def sync_replica_from_changes(
     changes since the last synced source version — never re-copying the
     table. The cross-region / environment-promotion shape.
 
-    Same exactly-once lever as ``sync_rollup_from_changes``: each replica
+    Exactly-once without an offset store: each replica
     commit stamps the source version it reflects into its OWN commit
     record, atomically with the data, and commits with a CAS on the
     replica version read at entry — a crash redoes the span (the keyed

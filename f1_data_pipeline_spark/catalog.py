@@ -28,12 +28,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-# Dimensions that stay broadcast-sized at any scale factor (region/nation are
-# fixed-cardinality in TPC-H-style data; supplier grows but stays tiny
-# relative to fact tables — AQE will still pick broadcast when under
-# autoBroadcastJoinThreshold, we only *hint* the fixed-cardinality ones).
-BROADCAST_DIMS = frozenset({"region", "nation"})
-
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 

@@ -34,7 +34,7 @@ a streaming source:
   write time. A downstream keyed apply (``snapshot_apply_cdc`` with
   ``op_col='_change_type'``, folding by ``_commit_version``) turns the
   feed into an exactly-once maintained replica.
-  Content-preserving maintenance (OPTIMIZE / compact / restamp /
+  Content-preserving maintenance (OPTIMIZE / restamp /
   constraint DDL, identified by the commit's ``op`` label) is always
   skipped silently: the rows did not change, so the stream must not
   re-emit them.
@@ -49,9 +49,9 @@ a streaming source:
   second batch of a continuous run onward (exactly-once always holds;
   only the first batch's sizing is coarse).
 
-Why a first-class source instead of the batch consumer
-(``snapshot_changes_since`` + ``snapshot_ack``): the batch consumer is
-at-least-once with a caller-managed two-phase ack; this source rides the
+Why a first-class source instead of a batch consumer (``snapshot_changes``
+over a caller-kept offset): such a consumer is at-least-once with a
+caller-managed two-phase ack; this source rides the
 engine's own offset log and watermark/trigger machinery, so a downstream
 ``stream_snapshot_upsert`` or windowed aggregate gets checkpointed
 exactly-once semantics with zero consumer bookkeeping — the reference's

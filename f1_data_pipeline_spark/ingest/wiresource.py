@@ -34,8 +34,10 @@ import os
 from datetime import datetime, timezone
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.types import StructType
 
 from f1_data_pipeline_spark.functions.udfs import parse_line
+from f1_data_pipeline_spark.schemas import BRONZE
 
 
 class _Range(InputPartition):
@@ -104,11 +106,8 @@ class F1WireDataSource(DataSource):
     def name(cls) -> str:
         return "f1wire"
 
-    def schema(self) -> str:
-        return (
-            "ordinal bigint, topic string, payload string, ts string, "
-            "parsed_at timestamp, corrupt_line string"
-        )
+    def schema(self) -> StructType:
+        return BRONZE
 
     def reader(self, schema) -> F1WireReader:
         return F1WireReader(self.options)

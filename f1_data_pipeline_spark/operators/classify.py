@@ -42,23 +42,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from f1_data_pipeline_spark.catalog import Tables
-from f1_data_pipeline_spark.operators.text import _HEX_ALPHABET, tokens
+from f1_data_pipeline_spark.operators.text import tokens
 from f1_data_pipeline_spark.queries import query
-
-
-def _bucket_expr(hex_digits: int) -> str:
-    """SQL expr mapping ``term`` → bucket in [0, 16^hex_digits): leading
-    hex digits of md5(term) — engine-portable (same trick as
-    ``text.dsir_weights`` / ``text.split_assign``)."""
-    return (
-        "("
-        + " + ".join(
-            f"(instr('{_HEX_ALPHABET}', substring(md5(term), {i + 1}, 1)) - 1)"
-            f" * {16 ** (hex_digits - 1 - i)}"
-            for i in range(hex_digits)
-        )
-        + ")"
-    )
 
 
 def hashed_features(

@@ -85,19 +85,6 @@ def word_shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFram
     )
 
 
-def minhash_signatures(shingles: DataFrame, num_hashes: int = 32) -> DataFrame:
-    """(doc_id, sig_0..sig_{k-1}): min over xxhash64(salt_j, shingle).
-
-    One groupBy with k min-aggregates — a single shuffle keyed by doc_id with
-    full map-side partial aggregation, independent of document size.
-    """
-    aggs = [
-        F.min(F.xxhash64(F.lit(j), F.col("shingle"))).alias(f"sig_{j}")
-        for j in range(num_hashes)
-    ]
-    return shingles.groupBy("doc_id").agg(*aggs)
-
-
 # shingles per sub-chunk inside the minhash kernel: the hash state is
 # (32 seeds x chunk) uint64 and every numpy pass reads+writes it, so the
 # chunk must keep that matrix cache-resident — measured on sf1 text:
@@ -260,8 +247,9 @@ def minhash_signatures_fast(
     shingle_n: int = 3,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Scan-local MinHash: bit-identical to
-    ``minhash_signatures(word_shingles(df, text_col, shingle_n), num_hashes)``
+    """Scan-local MinHash: bit-identical to the aggregate form (per doc,
+    ``min(xxhash64(j, shingle))`` over ``word_shingles(df, text_col,
+    shingle_n)``; its reference copy lives in tests/reference_forms.py)
     computed in ONE ``mapInArrow`` pass — no shingle-string
     materialization, no corpus-sized explode, no 32-aggregate exchange
     (guide §2.4 remove shuffles outright + §4.2 vectorized native code).
@@ -351,45 +339,6 @@ def lsh_bands(sigs: DataFrame, bands: int = 8, rows_per_band: int = 4) -> DataFr
     return sigs.select(
         "doc_id", F.explode(F.array(*cols)).alias("bb")
     ).select("doc_id", "bb.band", "bb.band_hash")
-
-
-def minhash_candidate_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Near-dup candidate pairs (d1 < d2) via MinHash banding.
-
-    Self-equi-join on (band, band_hash) — at scale this is the whole point:
-    candidates emerge from hash-bucket collisions, never from an O(n²)
-    comparison. Estimated Jaccard = matching signature fraction.
-    """
-    rows = num_hashes // bands
-    sigs = minhash_signatures_fast(df, text_col, num_hashes, shingle_n).cache()
-    bb = lsh_bands(sigs, bands, rows)
-    pairs = (
-        bb.alias("a")
-        .join(
-            bb.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .distinct()
-    )
-    sig_cols_a = [F.col(f"a.sig_{j}") for j in range(num_hashes)]
-    sig_cols_b = [F.col(f"b.sig_{j}") for j in range(num_hashes)]
-    matches = sum(
-        F.when(a == b, 1).otherwise(0) for a, b in zip(sig_cols_a, sig_cols_b)
-    )
-    return (
-        pairs.join(sigs.alias("a"), pairs.d1 == F.col("a.doc_id"))
-        .join(sigs.alias("b"), pairs.d2 == F.col("b.doc_id"))
-        .select("d1", "d2", (matches / F.lit(num_hashes)).alias("est_jaccard"))
-    )
 
 
 def simhash(df: DataFrame, text_col: str = "text", bits: int = 64) -> DataFrame:
@@ -524,7 +473,7 @@ def winnow_candidate_pairs(
     fully DETERMINISTIC (no hash seeds), hence directly oracle-checkable.
 
     Shape at 100 TB: fingerprints are computed scan-local
-    (``text.winnow_fingerprint_array``); candidates come from fingerprint
+    (``text.winnow_fingerprint_array_fast``); candidates come from fingerprint
     collisions — the same geometry as an LSH band join, never a
     cartesian. ``max_df`` drops stop-fingerprints (shared boilerplate
     appearing in more than ``max_df`` docs), the standard guard against
@@ -1661,91 +1610,14 @@ def x_ssjoin(t: Tables) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def exact_jaccard_on_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    broadcast_doc_filter: bool = True,
-) -> DataFrame:
-    """Exact n-gram Jaccard for a GIVEN pair list — the verifier stage of
-    the production near-dup pipeline, where ``pairs`` is the (tiny) LSH
-    candidate set rather than the quadratic cross product the standalone
-    ``x_dedup_ngram`` verifier enumerates.
-
-    SIZE CONTRACT of ``broadcast_doc_filter`` (default True): the corpus
-    prefilter broadcasts the distinct doc-id set of ``pairs``, which is
-    correct and fastest when the pair list is candidate-scale (LSH/winnow
-    output — the callers in this module). A caller handing in an
-    arbitrarily large external pair list must pass False, which leaves
-    the semi-join strategy to the planner/AQE instead of forcing a
-    broadcast past driver memory.
-
-    Cost is |pairs| x avg-shingles: the corpus is first pruned to the
-    documents the pair list names (a broadcast semi-join on the — by
-    construction small — candidate id set, so docs with no candidate
-    never shingle at all; the shingle subtree has three consumers, each
-    of which would re-explode the full corpus otherwise), then candidates
-    join the pruned shingle table twice on (doc_id, shingle) equi-keys;
-    intersections aggregate with map-side partials. Nothing quadratic,
-    nothing driver-side.
-
-    EVERY handed-in pair gets a verdict: zero-intersection pairs AND
-    pairs involving a document with fewer than ``shingle_n`` words (no
-    shingles at all) come back with jaccard 0.0 rather than vanishing —
-    all three per-doc joins are left joins with counts coalesced to 0.
-    The 0.0-for-empty convention is deliberate: a verifier must not merge
-    documents it cannot compare (two sub-shingle-length docs may be
-    entirely unrelated); callers wanting empty==empty semantics can test
-    length upstream."""
-    p = pairs.select("d1", "d2")
-    pair_docs = (
-        p.select(F.col("d1").alias("doc_id"))
-        .unionAll(p.select(F.col("d2").alias("doc_id")))
-        .distinct()
-    )
-    if broadcast_doc_filter:
-        pair_docs = F.broadcast(pair_docs)
-    df = df.join(pair_docs, "doc_id", "left_semi")
-    sh = word_shingles(df, text_col, shingle_n)
-    cnt = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    inter = (
-        p.join(sh.alias("a"), p.d1 == F.col("a.doc_id"))
-        .join(
-            sh.alias("b"),
-            (p.d2 == F.col("b.doc_id"))
-            & (F.col("a.shingle") == F.col("b.shingle")),
-        )
-        .groupBy("d1", "d2")
-        .agg(F.count("*").alias("i"))
-    )
-    ca, cb = cnt.alias("ca"), cnt.alias("cb")
-    denom = F.col("na") + F.col("nb") - F.col("i")
-    return (
-        p.join(inter, ["d1", "d2"], "left")
-        .withColumn("i", F.coalesce("i", F.lit(0)))
-        .join(ca, F.col("d1") == F.col("ca.doc_id"), "left")
-        .join(cb, F.col("d2") == F.col("cb.doc_id"), "left")
-        .withColumn("na", F.coalesce(F.col("ca.n"), F.lit(0)))
-        .withColumn("nb", F.coalesce(F.col("cb.n"), F.lit(0)))
-        .select(
-            "d1",
-            "d2",
-            F.when(denom > 0, F.col("i").cast("double") / denom)
-            .otherwise(F.lit(0.0))
-            .alias("jaccard"),
-        )
-    )
-
-
 def exact_jaccard_on_pairs_fast(
     df: DataFrame,
     pairs: DataFrame,
     shingle_n: int = 3,
     text_col: str = "text",
 ) -> DataFrame:
-    """``exact_jaccard_on_pairs`` computed pair-locally: attach the two
-    documents' TEXTS to each candidate pair (two pairs-scale joins), then
+    """Exact n-gram Jaccard for a GIVEN pair list, computed pair-locally:
+    attach the two documents' TEXTS to each candidate pair (two pairs-scale joins), then
     one ``mapInArrow`` kernel builds both shingle sets from byte slices
     and intersects them exactly — replacing the (pair x shingle)
     join-explosion (|pairs| x avg-shingles rows through two shuffles and
@@ -1753,7 +1625,8 @@ def exact_jaccard_on_pairs_fast(
     byte-slice identity as the MinHash/gram kernels; sets of raw byte
     slices, so equality is EXACT (no hash involved anywhere).
 
-    Semantics identical to ``exact_jaccard_on_pairs`` (pinned by
+    Semantics identical to the join-form verifier in
+    tests/reference_forms.py (pinned by
     ``test_jaccard_kernel_matches_join_verifier``): every handed-in pair
     gets a verdict; a pair doc that is missing from the corpus or has
     fewer than ``shingle_n`` words contributes an empty set and the
@@ -1761,8 +1634,8 @@ def exact_jaccard_on_pairs_fast(
     candidate-scale (LSH/winnow output — its distinct doc-id set is
     broadcast as the corpus prefilter and the pair frame re-shuffles
     with one text column attached); arbitrarily large external pair
-    lists belong on ``exact_jaccard_on_pairs(...,
-    broadcast_doc_filter=False)``."""
+    lists are outside this contract (the prefilter has no shuffle
+    semi-join fallback)."""
     p = pairs.select("d1", "d2")
     pair_docs = (
         p.select(F.col("d1").alias("doc_id"))
@@ -1873,7 +1746,7 @@ def fuzzy_dedup(
       1. MinHash + LSH banding emits candidate pairs from hash-bucket
          collisions (never an all-pairs stage),
       2. the EXACT n-gram Jaccard verifier runs on candidates only
-         (``exact_jaccard_on_pairs``), keeping pairs >= ``threshold`` —
+         (``exact_jaccard_on_pairs_fast``), keeping pairs >= ``threshold`` —
          LSH false positives die here,
       3. verified pairs cluster via min-label connected components and
          every cluster keeps its smallest doc_id (``dedup_by_clusters``).

@@ -126,67 +126,6 @@ def shard_assign(
     return keyed.withColumn("shard", shard).drop("__w", "__b")
 
 
-def export_shards(
-    df: DataFrame,
-    path: str,
-    n_shards: int,
-    token_col: str | None = None,
-    id_col: str = "doc_id",
-    salt: str = "shard-v1",
-) -> None:
-    """Materialize the shuffled, token-balanced export: one
-    ``shard=K/`` directory per shard, rows inside each file sorted by
-    the shuffle key — a trainer streams every shard in its final read
-    order with no shuffle at read time. Deterministic: same inputs +
-    salt → byte-identical layout decisions."""
-    assigned = shard_assign(df, n_shards, token_col, id_col, salt)
-    (
-        assigned.repartition(n_shards, "shard")
-        .sortWithinPartitions("shard", "__h", id_col)
-        .drop("__h")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
-    )
-
-
-def export_jsonl(
-    df: DataFrame,
-    path: str,
-    n_shards: int,
-    token_col: str | None = None,
-    id_col: str = "doc_id",
-    salt: str = "shard-v1",
-    compression: str | None = "gzip",
-) -> None:
-    """The trainer-facing twin of ``export_shards``: same deterministic
-    token-balanced assignment and in-shard shuffle order, materialized
-    as line-delimited JSON (one ``shard=K/`` directory per shard,
-    gzip-compressed by default — the common web-corpus drop format).
-    Spark's JSON writer streams executor-side; nothing collects. Column
-    types must be JSON-representable (binary columns should be
-    base64-encoded or dropped by the caller first)."""
-    from pyspark.sql.types import BinaryType
-
-    bin_cols = [f.name for f in df.schema.fields if isinstance(f.dataType, BinaryType)]
-    if bin_cols:
-        raise ValueError(
-            f"export_jsonl: binary columns {bin_cols} are not JSON-"
-            f"representable — base64() or drop them first"
-        )
-    assigned = shard_assign(df, n_shards, token_col, id_col, salt)
-    writer = (
-        assigned.repartition(n_shards, "shard")
-        .sortWithinPartitions("shard", "__h", id_col)
-        .drop("__h")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-    )
-    if compression:
-        writer = writer.option("compression", compression)
-    writer.json(path)
-
-
 def epoch_upsample(
     df: DataFrame,
     factors: DataFrame,

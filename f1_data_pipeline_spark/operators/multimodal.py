@@ -202,36 +202,6 @@ def extract_features(media: DataFrame) -> DataFrame:
     )
 
 
-def resize(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Nearest-neighbor resize of the fake raster — byte-level transform
-    with a payload-out signature (the thumbnailing pass)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                w, h, m = _parse_fake(bytes(payload))
-                yi = (np.arange(out_h) * h // out_h).astype(int)
-                xi = (np.arange(out_w) * w // out_w).astype(int)
-                small = m[np.ix_(yi, xi)]
-                kind_code = {"image": 0, "audio": 1, "video": 2}[kind]
-                rows.append(
-                    (
-                        int(mid),
-                        _MAGIC
-                        + struct.pack("<BHH", kind_code, out_w, out_h)
-                        + small.astype(np.uint8).tobytes(),
-                        out_w,
-                        out_h,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload", "width", "height"])
-
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        kernel, "media_id long, payload binary, width int, height int"
-    )
-
-
 def frame_sample(media: DataFrame, every: int = 4) -> DataFrame:
     """Row-expanding kernel (video → frames): every item yields
     height/``every`` 'frames' — the explode-shaped UDTF pattern."""

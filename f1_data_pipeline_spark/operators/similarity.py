@@ -303,28 +303,6 @@ def cosine_near_dup_pairs_blocked(
     )
 
 
-def cosine_near_dup_pairs_exact(
-    vectors: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs — exhaustive cartesian form.
-
-    TEST ORACLE ONLY (O(n²) BroadcastNestedLoopJoin): used to measure the
-    recall of the LSH-bucketed default below. Production callers use
-    ``cosine_near_dup_pairs``.
-    """
-    a = vectors.select(F.col(id_col).alias("id_a"), as_double_vec(vec_col).alias("va"))
-    b = vectors.select(F.col(id_col).alias("id_b"), as_double_vec(vec_col).alias("vb"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.round(cosine(F.col("va"), F.col("vb")), 4).alias("sim"))
-        .where(F.col("sim") >= threshold)
-        .orderBy("id_a", "id_b")
-    )
-
-
 def _default_planes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     import random
 
@@ -683,40 +661,6 @@ def ivf_topk_batch(
         .select("qid", id_col, "sim")
         .orderBy("qid", F.col("sim").desc(), id_col)
     )
-
-
-def ivf_topk_batch_indexed(
-    spark,
-    index_path: str,
-    queries_df: DataFrame,
-    centroids,
-    nprobe: int = 4,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_rows: int = 4096,
-) -> DataFrame:
-    """Batch ANN against a persisted cell-partitioned index with STATIC
-    partition pruning: the union of all queries' probed cells is collected
-    (bounded by the codebook size — ≤ k_cells ints, the same legitimately
-    small driver-side class as the codebook itself) and pushed as a
-    ``cell IN (...)`` literal, so the scan reads exactly the probed cell
-    directories and skips the rest as zero I/O. Raises if pruning
-    regresses, like ``x_sim_ivf_indexed``. The per-query cell routing
-    inside ``ivf_topk_batch`` then narrows each query to ITS cells."""
-    q_cells = _assign_query_cells(queries_df, centroids, nprobe, id_col, vec_col)
-    probed = sorted(
-        r["cell"] for r in q_cells.select("cell").distinct().collect()
-    )
-    assigned = spark.read.parquet(index_path).where(F.col("cell").isin(probed))
-    out = ivf_topk_batch(
-        assigned, queries_df, centroids, nprobe, k, id_col, vec_col, block_rows
-    )
-    _assert_cell_pruned(
-        out._jdf.queryExecution().executedPlan().toString(),
-        "batch IVF indexed search",
-    )
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1278,24 +1222,6 @@ def x_sim_quantized(t: Tables) -> DataFrame:
     return quantized_topk(
         e.where(F.col("vec_id") != 0), e.where(F.col("vec_id") == 0), k=10
     )
-
-
-def ivf_index_append(
-    new_vectors: DataFrame,
-    centroids,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental IVF index maintenance: assign ONLY the new vectors
-    against the frozen codebook and append them into their cell
-    directories — the build-once/append-many lifecycle of a serving ANN
-    index (a codebook retrain is a separate, rare, full rebuild; FAISS'
-    add() has the same contract). Appends are per-cell parquet files, so
-    concurrent searches keep pruning correctly and never see partial
-    rows. Cost is O(|new|): the existing index is untouched."""
-    assigned = ivf_assign(new_vectors, centroids, id_col, vec_col)
-    assigned.write.partitionBy("cell").mode("append").parquet(path)
 
 
 # ---------------------------------------------------------------------------
@@ -1936,30 +1862,6 @@ def _ivfpq_encode(
         code_kernel,
         f"`{id_col}` {_id_type(vectors, id_col)}, cell int, codes array<int>",
     )
-
-
-def ivfpq_index_append(
-    spark,
-    new_vectors: DataFrame,
-    index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental IVF-PQ index maintenance (the ``ivf_index_append``
-    contract, FAISS add()): read the frozen codebooks from the index's
-    own metadata artifact, encode ONLY the new vectors (cell + residual
-    codes in one scan-local kernel), and append them into their cell
-    directories. Cost is O(|new|); existing rows and searches are
-    untouched — per-cell parquet appends keep partition pruning correct
-    and never expose partial rows. A codebook retrain remains a separate,
-    rare, full rebuild."""
-    from f1_data_pipeline_spark.storage import read_json_artifact
-
-    meta = read_json_artifact(spark, _ivfpq_meta_path(index_path))
-    coded = _ivfpq_encode(
-        new_vectors, meta["centroids"], meta["codebooks"], id_col, vec_col
-    )
-    coded.write.partitionBy("cell").mode("append").parquet(index_path)
 
 
 def ivfpq_topk(

@@ -85,29 +85,6 @@ def hll_rollup(sketches: DataFrame, keys: list[str]) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def kll_quantiles(
-    df: DataFrame,
-    keys: list[str],
-    value_col: str,
-    probs: list[float],
-    k: int = 200,
-) -> DataFrame:
-    """Per-key KLL quantile sketch + quantile estimates for a BIGINT
-    ``value_col``. Returns ``keys + [sketch, quantiles (array<long>)]``
-    with one entry per requested probability.
-
-    KLL guarantees rank error ≤ ~1.7%/k·... (for k=200, ε≈0.4% of rank)
-    with a fixed-size summary, and sketches merge associatively — the
-    same persist-partials / rollup-later algebra as ``hll_distinct``.
-    tests pin the rank-error envelope against the exact sorted order.
-    """
-    pvec = F.array(*[F.lit(float(p)) for p in probs])
-    sk = df.groupBy(*keys).agg(
-        F.kll_sketch_agg_bigint(F.col(value_col).cast("long"), F.lit(k)).alias("sketch")
-    )
-    return sk.withColumn("quantiles", F.kll_sketch_get_quantile_bigint("sketch", pvec))
-
-
 def kll_rollup(
     sketches: DataFrame, keys: list[str], probs: list[float]
 ) -> DataFrame:
@@ -395,7 +372,7 @@ def cms_build(
       a pure function of the multiset, reproducible by any engine
       (the ``x_cms_freq`` oracle re-derives every counter in DuckDB).
     - **Exactly mergeable**: counters are plain integers, so
-      ``cms_rollup`` of per-subgroup sketches equals the direct build
+      summing per-subgroup counters equals the direct build
       EXACTLY (element-wise sums commute) — no sparse/dense promotion
       caveats, the strongest incremental-rollup algebra in the family.
 
@@ -435,18 +412,6 @@ def cms_build(
     )
 
 
-def cms_rollup(cms: DataFrame, keys: list[str]) -> DataFrame:
-    """Merge finer-grained CMS counter tables up to ``keys`` (possibly
-    ``[]`` for a grand total) — element-wise integer sums, so the result
-    is EXACTLY the sketch a from-scratch build over the union would
-    produce (test-pinned). Input is ≤ depth×width rows per subgroup;
-    this is KB-scale by construction."""
-    grouped = (
-        cms.groupBy(*keys, "row", "bucket") if keys else cms.groupBy("row", "bucket")
-    )
-    return grouped.agg(F.sum("cnt").alias("cnt"))
-
-
 def cms_estimate(
     cms: DataFrame,
     queries: DataFrame,
@@ -465,7 +430,8 @@ def cms_estimate(
     columns join too, so a keyed sketch probes only its own key's
     counters — mixing keys would silently break CMS's one-sided-error
     guarantee). The sketch columns are validated up front: pass the same
-    ``keys``, or ``cms_rollup(cms, [])`` down to a global sketch first.
+    ``keys``, or sum ``cnt`` by ``(row, bucket)`` down to a global sketch
+    first.
 
     Output cardinality equals input cardinality: duplicate query rows
     each keep their own output row (an internal per-input-row ordinal
@@ -482,7 +448,7 @@ def cms_estimate(
         raise ValueError(
             f"cms_estimate: sketch has columns {sorted(cms.columns)} but "
             f"keys={keys} expects exactly {sorted(expected)} — pass the "
-            "keys= the sketch was built with, or cms_rollup(cms, []) it "
+            "keys= the sketch was built with, or sum cnt by (row, bucket) "
             "down to a global [row, bucket, cnt] sketch first"
         )
     rows = F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("row")

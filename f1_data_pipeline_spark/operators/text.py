@@ -96,37 +96,10 @@ def _winnow_gram_sql(pos: str, k: int) -> str:
     )
 
 
-def winnow_fingerprint_array(text: str = "text", k: int = 8, w: int = 4) -> Column:
-    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, MOSS):
-    rolling k-gram hashes, minimum per w-window, distinct-sorted
-    ``array<bigint>``.
-
-    Guarantees: any shared substring of length ≥ k + w - 1 yields at least
-    one shared fingerprint (the winnowing theorem), so near-dup candidate
-    generation can band on fingerprint membership
-    (``dedup.winnow_candidate_pairs``). Entirely Catalyst higher-order
-    functions over the scan — zero shuffle, zero Python; fingerprint sets
-    are tiny relative to text so the 100 TB cost is the scan itself.
-    ``text`` is a column NAME (the expression is built as SQL). Documents
-    shorter than ``k`` fingerprint to the empty array."""
-    grams = (
-        f"transform(sequence(1, greatest(length({text})-{k}+1, 0)), "
-        f"__i -> {_winnow_gram_sql('__i', k)})"
-    ).format(col=text)
-    # bind the gram array ONCE (transform-over-singleton is the SQL lambda
-    # `let`): referencing the array expression twice would compute it twice
-    return F.expr(
-        f"CASE WHEN length({text}) < {k} THEN CAST(array() AS ARRAY<BIGINT>) ELSE "
-        f"transform(array({grams}), __g -> "
-        f"array_sort(array_distinct("
-        f"transform(sequence(1, greatest(size(__g)-{w}+1, 1)), "
-        f"__p -> array_min(slice(__g, __p, {w}))))))[0] END"
-    )
-
-
 @functools.lru_cache(maxsize=None)
 def winnow_fingerprint_array_fast(k: int = 8, w: int = 4):
-    """Vectorized twin of ``winnow_fingerprint_array``: an Arrow-batched
+    """Vectorized twin of the Catalyst ``winnow_fingerprint_array`` (now
+    in tests/reference_forms.py): an Arrow-batched
     pandas UDF computing the identical fingerprints with numpy sliding
     windows (one GEMV per document instead of ~len·k interpreted
     expression evaluations — measured ~40× on the sf0.1 corpus; the
@@ -1797,60 +1770,6 @@ def x_bpe_train(t: Tables) -> DataFrame:
     ).orderBy("rank")
 
 
-def bpe_encode(
-    df: DataFrame,
-    merges: list,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Encode documents with a learned BPE merge table (the serving twin
-    of ``bpe_train``): per document, the exact token count and sequence
-    under the merges, applied in rank order within each word.
-
-    The merge table rides to executors as a broadcast list (vocab-class,
-    tiny); encoding is a scan-local Arrow kernel — 100 TB encodes at scan
-    speed with zero shuffle. Per-word results are memoized per batch (the
-    Zipf skew of natural text makes the word cache hit constantly).
-    Tokenization is exactly ``split(trim(text), ' ')`` (space-only strip/
-    split) and null-text documents emit no row — pinned identical to
-    ``bpe_encode_fast``'s declarative path by tests."""
-    import pandas as pd
-
-    ordered = [(m[1], m[2]) for m in sorted(merges, key=lambda m: m[0])]
-    bc = df.sparkSession.sparkContext.broadcast(ordered)
-
-    def kernel(batches):
-        table = bc.value
-        cache = {}
-        for pdf in batches:
-            ids, counts, toks = [], [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    # tokens(NULL) is NULL → the fast path's explode emits
-                    # no row; the reference must agree, not encode "None"
-                    continue
-                out = []
-                # strip/split on SPACE only, mirroring Catalyst
-                # split(trim(text), ' ') exactly — Python's bare strip()
-                # also removes \n/\t, which Spark's trim does not
-                for w in str(text).strip(" ").split(" "):
-                    out.extend(_bpe_encode_word(w, table, cache))
-                ids.append(did)
-                counts.append(len(out))
-                toks.append(out)
-            if ids:  # a batch of only null-text docs yields nothing
-                yield pd.DataFrame(
-                    {id_col: ids, "n_bpe_tokens": counts, "bpe_tokens": toks}
-                )
-
-    # derive the id column's DDL type from the plan — a hardcoded `long`
-    # breaks string/int ids (the EWMA / similarity._id_type lesson)
-    id_type = {f.name: f.dataType.simpleString() for f in df.schema.fields}[id_col]
-    return df.select(id_col, text_col).mapInPandas(
-        kernel, f"`{id_col}` {id_type}, n_bpe_tokens int, bpe_tokens array<string>"
-    )
-
-
 def _encode_words(words: "DataFrame", merges: list, with_pieces: bool) -> "DataFrame":
     """Run the merge loop over a ``word``-columned frame as a scan-local
     Arrow kernel, appending ``n_pieces`` (and optionally ``pieces``) while
@@ -1883,9 +1802,9 @@ def bpe_encode_fast(
     with_tokens: bool = False,
     hot_k: int | None = None,
 ) -> DataFrame:
-    """Vocabulary-memoized BPE encode — the scale twin of ``bpe_encode``
-    (same outputs, pinned equal by tests, the ``ewma``/``ewma_partitioned``
-    pairing): encode each distinct word once, join ``word -> n_pieces``
+    """Vocabulary-memoized BPE encode — the scale twin of the per-occurrence
+    ``bpe_encode`` in tests/reference_forms.py (same outputs, pinned
+    equal by tests): encode each distinct word once, join ``word -> n_pieces``
     onto a scan-local token explode, and re-aggregate per document. The
     Python merge loop runs n_vocab times total instead of once per token
     occurrence; everything else is JVM-side (explode, joins, sum).
@@ -2024,7 +1943,8 @@ def x_bpe_encode(t: Tables) -> DataFrame:
     """Corpus token counts under the corpus's own 8-merge BPE: per doc,
     whitespace vs BPE token counts (the compression the tokenizer buys),
     via ``bpe_train`` + the vocabulary-memoized ``bpe_encode_fast``
-    (parity with the per-occurrence ``bpe_encode`` pinned in tests)."""
+    (parity with the per-occurrence reference in tests/reference_forms.py
+    pinned in tests)."""
     merges = bpe_train(t.documents, n_merges=8)
     enc = bpe_encode_fast(t.documents, merges)
     return (

@@ -276,50 +276,6 @@ def x_rolling_scaled(t: Tables) -> DataFrame:
     )
 
 
-def ewma(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    val_col: str,
-    alpha: float,
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """Per-key exponentially-weighted moving average — the recurrence
-    s_i = α·x_i + (1-α)·s_{i-1} that NO built-in window frame can
-    express (every Spark frame aggregates raw values; EWMA needs the
-    previous *output*). This is the canonical (b)-tier custom operator
-    from the design rules: a keyed ``applyInPandas`` where each key's
-    history is processed sequentially but keys are processed in
-    parallel — the batch twin of ``applyInPandasWithState``.
-
-    State per task is one key-group at a time (Spark streams co-grouped
-    rows); within the group the numpy recurrence is vectorized via
-    pandas ``ewm(adjust=False)``. Ordering inside a key is pinned by
-    (ts, tiebreak) so the fold is deterministic under any partitioning.
-    At 100 TB the shuffle is the unavoidable one — each key's rows must
-    meet — and nothing else.
-    """
-    import pandas as pd
-
-    order = [ts_col] + ([tiebreak] if tiebreak else [])
-    out_schema = _ewma_out_schema(df, key_col, ts_col, val_col)
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order)
-        s = pdf[val_col].ewm(alpha=alpha, adjust=False).mean()
-        return pd.DataFrame(
-            {
-                key_col: pdf[key_col].to_numpy(),
-                ts_col: pdf[ts_col].to_numpy(),
-                val_col: pdf[val_col].to_numpy(),
-                "ewma": s.to_numpy(),
-            }
-        )
-
-    cols = [key_col, ts_col, val_col] + ([tiebreak] if tiebreak else [])
-    return df.select(*cols).groupBy(key_col).applyInPandas(fold, out_schema)
-
-
 def _ewma_out_schema(df: DataFrame, key_col: str, ts_col: str, val_col: str) -> str:
     """Output schema for the EWMA kernels, derived from the INPUT types
     (r5 advisor finding: a hardcoded ``long/timestamp/double`` triple
@@ -340,7 +296,8 @@ def x_ewma(t: Tables) -> DataFrame:
     partition-fold fast path (``ewma_partitioned`` — one mapInPandas
     kernel per partition instead of one task per key, exact carry across
     Arrow batch splits); row-identical to the keyed ``ewma`` reference
-    and to a pure-Python replay, both asserted in tests/test_windows.py."""
+    (tests/reference_forms.py) and to a pure-Python replay, both asserted
+    in tests/test_windows.py."""
     out = ewma_partitioned(
         t.events, "user_id", "ts", "value", alpha=0.3, tiebreak="event_id"
     )
@@ -357,12 +314,15 @@ def ewma_partitioned(
     alpha: float,
     tiebreak: str | None = None,
 ) -> DataFrame:
-    """``ewma`` with the per-group task overhead removed: instead of one
-    applyInPandas invocation per key (slow when keys are many and small),
-    repartition by key + sortWithinPartitions(key, ts) and run ONE
+    """Per-key exponentially-weighted moving average s_i = α·x_i +
+    (1-α)·s_{i-1}, a recurrence no window frame expresses (every frame
+    aggregates raw values; EWMA needs the previous output). Instead of
+    one applyInPandas invocation per key (slow when keys are many and
+    small), repartition by key + sortWithinPartitions(key, ts) and run ONE
     ``mapInPandas`` kernel per partition, folding every key group inside
-    it with pandas' grouped cython ``ewm``. Row-identical to ``ewma``
-    (parity test-pinned); same single unavoidable shuffle.
+    it with pandas' grouped cython ``ewm``. Row-identical to the keyed
+    ``ewma`` reference in tests/reference_forms.py (parity test-pinned);
+    same single unavoidable shuffle.
 
     Arrow slices a partition into multiple batches, so a key's history
     can span a batch boundary mid-recurrence. The kernel carries the last

@@ -18,10 +18,9 @@ Semantics matched (and pinned by tests/test_operators.py parity tests
 against ``F.xxhash64`` itself):
 
 - ``hash_int(i, seed)``      == xxhash64 of one IntegerType column
-- ``hash_long_vec(a, seed)`` == xxhash64 fold step for LongType columns
-- ``hash_slices(...)``       == xxhash64 of a StringType column (UTF-8
-  bytes), vectorized over N (start, end) slices of one buffer for one
-  seed — Spark hashes a string as raw bytes via hashUnsafeBytes, which
+- ``hash_slices_multi(...)`` == xxhash64 of a StringType column (UTF-8
+  bytes), vectorized over N (start, end) slices of one buffer under S
+  seeds — Spark hashes a string as raw bytes via hashUnsafeBytes, which
   on x86 is little-endian word reads (this implementation assumes a
   little-endian host, as Spark's Platform.getLong does).
 
@@ -65,7 +64,6 @@ _P3 = np.uint64(0x165667B19E3779F9)
 _P4 = np.uint64(0x85EBCA77C2B2AE63)
 _P5 = np.uint64(0x27D4EB2F165667C5)
 _U64 = np.uint64
-_SPARK_SEED = _U64(42)
 
 
 def _rotl(x: np.ndarray, r: int) -> np.ndarray:
@@ -92,23 +90,12 @@ def hash_int(i: int, seed: int = 42) -> int:
         return int(_fmix(h))
 
 
-def hash_long_vec(vals: np.ndarray, seeds: np.ndarray | int) -> np.ndarray:
-    """Spark XXH64.hashLong, vectorized: one fold step of
-    ``xxhash64(long_col, ...)``. ``vals`` uint64 (bit pattern of the
-    longs); ``seeds`` scalar or array (the running hash)."""
-    seeds = np.asarray(seeds, dtype=np.uint64)
-    h = seeds + _P5 + _U64(8)
-    h = h ^ (_rotl(vals * _P2, 31) * _P1)
-    h = _rotl(h, 27) * _P1 + _P4
-    return _fmix(h)
-
-
 def pack_slices(
     data: np.ndarray, starts: np.ndarray, lens: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
     """Gather N variable-length byte slices of ``data`` (uint8) into a
     zero-padded (N, W) little-endian uint64 word matrix ready for
-    ``hash_slices``. Returns (words, lens-as-uint64). Zero padding is
+    ``hash_slices_multi``. Returns (words, lens-as-uint64). Zero padding is
     safe: the hash only ever reads whole words/bytes inside each length.
     """
     n = len(starts)
@@ -122,13 +109,6 @@ def pack_slices(
         padded[:, :maxlen][mask] = data[pos[mask]]
     words = padded.view("<u8")
     return words, lens.astype(np.uint64)
-
-
-def hash_slices(words: np.ndarray, lens: np.ndarray, seed: int) -> np.ndarray:
-    """Spark XXH64.hashUnsafeBytes over N byte slices (packed by
-    ``pack_slices``) for ONE seed. Returns uint64 hashes (callers
-    ``.view(np.int64)`` for Spark-comparable signed values)."""
-    return hash_slices_multi(words, lens, np.asarray([seed], dtype=np.uint64))[0]
 
 
 def hash_slices_multi(

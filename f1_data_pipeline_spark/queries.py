@@ -13,6 +13,10 @@ driver-side collection anywhere (the only ``collect`` is the driver's own).
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+import uuid
 from dataclasses import dataclass
 from typing import Callable
 
@@ -44,6 +48,33 @@ def query(name: str, oracle: str | None):
         return fn
 
     return deco
+
+
+# Live scratch dir per (builder tag, sf_dir) of the queries that build
+# tables on disk. A builder's result is lazy, so its dir must outlive the
+# call; it goes when the same builder runs again (the previous result was
+# consumed before this call could start) or when the interpreter exits.
+_SCRATCH_DIRS: dict[tuple[str, str], str] = {}
+
+
+def _scratch_dir(tag: str, sf_dir: str) -> str:
+    """A fresh ``f1dp_<tag>_*`` path under the temp dir (not created);
+    removes the dir this builder got on its previous call for ``sf_dir``."""
+    path = f"{tempfile.gettempdir()}/f1dp_{tag}_{uuid.uuid4().hex}"
+    prev = _SCRATCH_DIRS.pop((tag, sf_dir), None)
+    if prev:
+        shutil.rmtree(prev, ignore_errors=True)
+    _SCRATCH_DIRS[(tag, sf_dir)] = path
+    return path
+
+
+def _remove_scratch_dirs() -> None:
+    for path in _SCRATCH_DIRS.values():
+        shutil.rmtree(path, ignore_errors=True)
+    _SCRATCH_DIRS.clear()
+
+
+atexit.register(_remove_scratch_dirs)
 
 
 # ---------------------------------------------------------------------------
@@ -1080,9 +1111,6 @@ def x_stream_heavy_hitters(t: Tables) -> DataFrame:
     returning it. Scale shape: the only driver-side data is the candidate
     summary (≤ buckets × capacity rows); the recount is one semi-joined
     aggregate."""
-    import shutil
-    import tempfile
-
     from f1_data_pipeline_spark.analytics import heavy_hitters
     from f1_data_pipeline_spark.streaming import stream_heavy_hitter_candidates
 
@@ -1104,34 +1132,31 @@ def x_stream_heavy_hitters(t: Tables) -> DataFrame:
         (F.col("user_id") < 150) & F.col("event_type").isNotNull()
     ).select(F.col("event_type").cast("string").alias("event_type"))
 
-    work = tempfile.mkdtemp(prefix="f1dp_stream_mg_")
-    try:
-        src, ck = f"{work}/src", f"{work}/ck"
-        typed.withColumnRenamed("event_type", "v").write.mode("overwrite").text(src)
-        stream_vals = (
-            spark.readStream.format("text").load(src).withColumnRenamed("value", "v")
-        )
-        out = stream_heavy_hitter_candidates(
-            stream_vals, "v", capacity=capacity, buckets=buckets
-        )
-        latest: dict = {}
+    work = _scratch_dir("stream_mg", t.sf_dir)
+    src, ck = f"{work}/src", f"{work}/ck"
+    typed.withColumnRenamed("event_type", "v").write.mode("overwrite").text(src)
+    stream_vals = (
+        spark.readStream.format("text").load(src).withColumnRenamed("value", "v")
+    )
+    out = stream_heavy_hitter_candidates(
+        stream_vals, "v", capacity=capacity, buckets=buckets
+    )
+    latest: dict = {}
 
-        def sink(df: DataFrame, epoch_id: int) -> None:
-            for r in df.collect():
-                latest[(r["bucket"], r["value"])] = r["lower_bound"]
+    def sink(df: DataFrame, epoch_id: int) -> None:
+        for r in df.collect():
+            latest[(r["bucket"], r["value"])] = r["lower_bound"]
 
-        q = (
-            out.writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("x_stream_heavy_hitters: stream replay timed out")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    q = (
+        out.writeStream.outputMode("update")
+        .foreachBatch(sink)
+        .option("checkpointLocation", ck)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(600):
+        q.stop()
+        raise RuntimeError("x_stream_heavy_hitters: stream replay timed out")
 
     cands = sorted({v for (_b, v) in latest})
     streamed = (
@@ -1432,11 +1457,6 @@ def x_arrayagg(t: Tables) -> DataFrame:
     )
 
 
-# scratch snapshot-table dir of x_snapshot_cdc's previous invocation per
-# sf_dir — deleted on the next call (see builder comment)
-_SNAP_CDC_DIRS: dict[str, str] = {}
-
-
 @query(
     "x_snapshot_cdc",
     """SELECT event_id, user_id,
@@ -1460,9 +1480,6 @@ def x_snapshot_cdc(t: Tables) -> DataFrame:
 
     Scale: the upsert costs O(touched files + batch), the read costs
     O(files whose envelope intersects the range) — never O(table)."""
-    import shutil
-    import tempfile
-    import uuid
 
     from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
@@ -1475,14 +1492,7 @@ def x_snapshot_cdc(t: Tables) -> DataFrame:
     base = t.events.select(
         "event_id", "user_id", "event_type", F.round("value", 4).alias("val")
     )
-    tdir = tempfile.gettempdir() + f"/f1dp_snap_cdc_{uuid.uuid4().hex}"
-    # each call builds a fresh table; reclaim the PREVIOUS call's scratch
-    # for this sf (its result was consumed before this call could start),
-    # so repeated bench/driver invocations don't accumulate /tmp tables
-    prev = _SNAP_CDC_DIRS.pop(t.sf_dir, None)
-    if prev:
-        shutil.rmtree(prev, ignore_errors=True)
-    _SNAP_CDC_DIRS[t.sf_dir] = tdir
+    tdir = _scratch_dir("snap_cdc", t.sf_dir)
     snapshot_write(
         base.repartitionByRange(8, "event_id"), tdir, stats_cols=["event_id"]
     )
@@ -1505,10 +1515,6 @@ def x_snapshot_cdc(t: Tables) -> DataFrame:
             "snapshot CDC read scanned every file — manifest skipping regressed"
         )
     return out.select("event_id", "user_id", "event_type", "val").orderBy("event_id")
-
-
-# scratch table dir of x_snapshot_changes's previous invocation per sf_dir
-_SNAP_CDF_DIRS: dict[str, str] = {}
 
 
 @query(
@@ -1546,9 +1552,6 @@ def x_snapshot_changes(t: Tables) -> DataFrame:
     builder self-asserts what the result can't show: the feed must read
     only the endpoint manifests' DIFF files, never the carried ones
     (O(touched files), not O(table))."""
-    import shutil
-    import tempfile
-    import uuid
 
     from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
@@ -1562,11 +1565,7 @@ def x_snapshot_changes(t: Tables) -> DataFrame:
     base = t.events.select(
         "event_id", "user_id", "event_type", F.round("value", 4).alias("val")
     ).where(F.col("event_id").between(0, 299))
-    tdir = tempfile.gettempdir() + f"/f1dp_snap_cdf_{uuid.uuid4().hex}"
-    prev = _SNAP_CDF_DIRS.pop(t.sf_dir, None)
-    if prev:
-        shutil.rmtree(prev, ignore_errors=True)
-    _SNAP_CDF_DIRS[t.sf_dir] = tdir
+    tdir = _scratch_dir("snap_cdf", t.sf_dir)
     snapshot_write(
         base.repartitionByRange(8, "event_id"), tdir, stats_cols=["event_id"]
     )
@@ -1603,10 +1602,6 @@ def x_snapshot_changes(t: Tables) -> DataFrame:
             "diffing regressed to an O(table) scan"
         )
     return feed.orderBy("event_id", "_change_type")
-
-
-# scratch table dir of x_table_changes's previous invocation per sf_dir
-_TABLE_CHANGES_DIRS: dict[str, str] = {}
 
 
 @query(
@@ -1646,9 +1641,6 @@ def x_table_changes(t: Tables) -> DataFrame:
     (reference parity: loader.py:207-279 re-syncs derived state by
     re-upserting whole batches through ON CONFLICT; this is the
     incremental read that makes a consumer pay only for what changed)."""
-    import shutil
-    import tempfile
-    import uuid
 
     from f1_data_pipeline_spark.ingest import feedsource
     from f1_data_pipeline_spark.snaplog import read_manifest
@@ -1662,11 +1654,7 @@ def x_table_changes(t: Tables) -> DataFrame:
     base = t.events.select(
         "event_id", "user_id", "event_type", F.round("value", 4).alias("val")
     ).where(F.col("event_id").between(0, 299))
-    tdir = tempfile.gettempdir() + f"/f1dp_table_changes_{uuid.uuid4().hex}"
-    prev = _TABLE_CHANGES_DIRS.pop(t.sf_dir, None)
-    if prev:
-        shutil.rmtree(prev, ignore_errors=True)
-    _TABLE_CHANGES_DIRS[t.sf_dir] = tdir
+    tdir = _scratch_dir("table_changes", t.sf_dir)
     slice_ = lambda lo, hi: base.where(  # noqa: E731
         F.col("event_id").between(lo, hi)
     ).coalesce(1)
@@ -1692,10 +1680,6 @@ def x_table_changes(t: Tables) -> DataFrame:
         .load(tdir)
     )
     return feed.orderBy("_commit_version", "_change_type", "event_id")
-
-
-# scratch table dir of x_cdf_timestamps's previous invocation per sf_dir
-_CDF_TS_DIRS: dict[str, str] = {}
 
 
 @query(
@@ -1734,9 +1718,6 @@ def x_cdf_timestamps(t: Tables) -> DataFrame:
     cost model with bound resolution in front (reference parity:
     loader.py:207-279's re-upsert loop has no "changes since an
     instant" form at all; this is the Delta timestamp-CDF shape)."""
-    import shutil
-    import tempfile
-    import uuid
 
     from f1_data_pipeline_spark.ingest import feedsource
     from f1_data_pipeline_spark.snaplog import read_manifest
@@ -1749,11 +1730,7 @@ def x_cdf_timestamps(t: Tables) -> DataFrame:
     base = t.events.select(
         "event_id", "user_id", "event_type", F.round("value", 4).alias("val")
     ).where(F.col("event_id").between(0, 299))
-    tdir = tempfile.gettempdir() + f"/f1dp_cdf_ts_{uuid.uuid4().hex}"
-    prev = _CDF_TS_DIRS.pop(t.sf_dir, None)
-    if prev:
-        shutil.rmtree(prev, ignore_errors=True)
-    _CDF_TS_DIRS[t.sf_dir] = tdir
+    tdir = _scratch_dir("cdf_ts", t.sf_dir)
     slice_ = lambda lo, hi: base.where(  # noqa: E731
         F.col("event_id").between(lo, hi)
     ).coalesce(1)
@@ -1793,10 +1770,6 @@ def x_cdf_timestamps(t: Tables) -> DataFrame:
             "version-bound feed — the >=/> boundary contract regressed"
         )
     return feed.orderBy("_commit_version", "_change_type", "event_id")
-
-
-# scratch table dir of x_cdf_rewrite's previous invocation per sf_dir
-_CDF_REWRITE_DIRS: dict[str, str] = {}
 
 
 @query(
@@ -1847,9 +1820,6 @@ def x_cdf_rewrite(t: Tables) -> DataFrame:
     consumer instead of one keyed full-outer join per consumer per
     rewrite — Delta's exact write-amplification trade (reference parity:
     loader.py:202-251 re-upserts whole batches; consumers re-derive)."""
-    import shutil
-    import tempfile
-    import uuid
 
     from f1_data_pipeline_spark.ingest import feedsource
     from f1_data_pipeline_spark.snaplog import read_manifest
@@ -1864,11 +1834,7 @@ def x_cdf_rewrite(t: Tables) -> DataFrame:
     base = t.events.select(
         "event_id", "user_id", "event_type", F.round("value", 4).alias("val")
     ).where(F.col("event_id").between(0, 249))
-    tdir = tempfile.gettempdir() + f"/f1dp_cdf_rw_{uuid.uuid4().hex}"
-    prev = _CDF_REWRITE_DIRS.pop(t.sf_dir, None)
-    if prev:
-        shutil.rmtree(prev, ignore_errors=True)
-    _CDF_REWRITE_DIRS[t.sf_dir] = tdir
+    tdir = _scratch_dir("cdf_rw", t.sf_dir)
     snapshot_write(
         base.where(F.col("event_id") < 200).repartitionByRange(4, "event_id"),
         tdir,
@@ -1906,10 +1872,6 @@ def x_cdf_rewrite(t: Tables) -> DataFrame:
     return feed.orderBy("_commit_version", "_change_type", "event_id")
 
 
-# scratch table dir of x_snapshot_bloom's previous invocation per sf_dir
-_SNAP_BLOOM_DIRS: dict[str, str] = {}
-
-
 @query(
     "x_snapshot_bloom",
     """SELECT event_id, user_id, event_type
@@ -1929,9 +1891,6 @@ def x_snapshot_bloom(t: Tables) -> DataFrame:
     where envelopes couldn't) while the residual filter keeps the
     result exact regardless."""
     import hashlib
-    import shutil
-    import tempfile
-    import uuid
 
     from f1_data_pipeline_spark.storage import snapshot_read, snapshot_write
 
@@ -1947,11 +1906,7 @@ def x_snapshot_bloom(t: Tables) -> DataFrame:
         "event_type",
         F.md5(F.col("event_id").cast("string")).alias("h"),
     )
-    tdir = tempfile.gettempdir() + f"/f1dp_snap_bloom_{uuid.uuid4().hex}"
-    prev = _SNAP_BLOOM_DIRS.pop(t.sf_dir, None)
-    if prev:
-        shutil.rmtree(prev, ignore_errors=True)
-    _SNAP_BLOOM_DIRS[t.sf_dir] = tdir
+    tdir = _scratch_dir("snap_bloom", t.sf_dir)
     # hash repartition = the adversarial layout for min/max skipping
     snapshot_write(
         base.repartition(8, "h"), tdir, stats_cols=["h"], bloom_cols=["h"]
@@ -1965,10 +1920,6 @@ def x_snapshot_bloom(t: Tables) -> DataFrame:
             "pruning regressed (envelopes cannot prune a hashed key)"
         )
     return out.select("event_id", "user_id", "event_type").orderBy("event_id")
-
-
-# scratch table dir of x_snapshot_dv's previous invocation per sf_dir
-_SNAP_DV_DIRS: dict[str, str] = {}
 
 
 @query(
@@ -1998,9 +1949,6 @@ def x_snapshot_dv(t: Tables) -> DataFrame:
     matching (file, row-index) positions; readers subtract them with one
     broadcast anti-join. Physical maintenance purges the debt
     (test-pinned in test_storage.py)."""
-    import shutil
-    import tempfile
-    import uuid
 
     from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
@@ -2013,11 +1961,7 @@ def x_snapshot_dv(t: Tables) -> DataFrame:
     base = t.events.where(F.col("event_id") <= 399).select(
         "event_id", "user_id", F.round("value", 4).alias("val")
     )
-    tdir = tempfile.gettempdir() + f"/f1dp_snap_dv_{uuid.uuid4().hex}"
-    prev = _SNAP_DV_DIRS.pop(t.sf_dir, None)
-    if prev:
-        shutil.rmtree(prev, ignore_errors=True)
-    _SNAP_DV_DIRS[t.sf_dir] = tdir
+    tdir = _scratch_dir("snap_dv", t.sf_dir)
     snapshot_write(
         base.repartitionByRange(8, "event_id"), tdir, stats_cols=["event_id"]
     )
@@ -2037,10 +1981,6 @@ def x_snapshot_dv(t: Tables) -> DataFrame:
             f"{m['dv']['deleted']}, deletes reported {n1 + n2}"
         )
     return snapshot_read(spark, tdir).orderBy("event_id")
-
-
-# scratch table dir of x_merge_into's previous invocation per sf_dir
-_MERGE_DIRS: dict[str, str] = {}
 
 
 @query(
@@ -2071,9 +2011,6 @@ def x_merge_into(t: Tables) -> DataFrame:
     builder self-asserts the observed merge metrics against the
     manifest-free arithmetic the result can't show (updates + inserts +
     carried = final row count)."""
-    import shutil
-    import tempfile
-    import uuid
 
     from f1_data_pipeline_spark.storage import (
         snapshot_merge,
@@ -2088,11 +2025,7 @@ def x_merge_into(t: Tables) -> DataFrame:
     src = t.events.where(F.col("event_id").between(200, 499)).select(
         F.col("event_id"), "user_id", (F.round("value", 4) * 2).alias("val")
     )
-    tdir = tempfile.gettempdir() + f"/f1dp_merge_{uuid.uuid4().hex}"
-    prev = _MERGE_DIRS.pop(t.sf_dir, None)
-    if prev:
-        shutil.rmtree(prev, ignore_errors=True)
-    _MERGE_DIRS[t.sf_dir] = tdir
+    tdir = _scratch_dir("merge", t.sf_dir)
     snapshot_write(
         tgt.repartitionByRange(2, "event_id"), tdir, stats_cols=["event_id"]
     )
@@ -2111,10 +2044,6 @@ def x_merge_into(t: Tables) -> DataFrame:
             f"merge metrics drifted: {m} does not account for {n} final rows"
         )
     return out.orderBy("event_id")
-
-
-# scratch table dir of x_merge_composite's previous invocation per sf_dir
-_MERGE_COMP_DIRS: dict[str, str] = {}
 
 
 @query(
@@ -2178,9 +2107,6 @@ def x_merge_composite(t: Tables) -> DataFrame:
       cannot match, at every domain size;
     - by-source deletes: 'view'-type groups are always t-only (s
       excludes the type), and users >= 8 exist at every sf."""
-    import shutil
-    import tempfile
-    import uuid
 
     from f1_data_pipeline_spark.storage import (
         snapshot_merge,
@@ -2203,11 +2129,7 @@ def x_merge_composite(t: Tables) -> DataFrame:
             )
         )
 
-    tdir = tempfile.gettempdir() + f"/f1dp_merge_comp_{uuid.uuid4().hex}"
-    prev = _MERGE_COMP_DIRS.pop(t.sf_dir, None)
-    if prev:
-        shutil.rmtree(prev, ignore_errors=True)
-    _MERGE_COMP_DIRS[t.sf_dir] = tdir
+    tdir = _scratch_dir("merge_comp", t.sf_dir)
     target = agg_slice(0, 599, F.col("user_id") % 7 != 3)
     source = agg_slice(300, 899, F.col("event_type") != "view")
     snapshot_write(
@@ -2242,10 +2164,6 @@ def x_merge_composite(t: Tables) -> DataFrame:
     return out.orderBy("user_id", "event_type")
 
 
-# scratch dirs of x_snapshot_replica's previous invocation per sf_dir
-_SNAP_REPL_DIRS: dict[str, tuple[str, str]] = {}
-
-
 @query(
     "x_snapshot_replica",
     """SELECT event_id, user_id,
@@ -2276,9 +2194,6 @@ def x_snapshot_replica(t: Tables) -> DataFrame:
     2 files (r9 verdict ask #5; the multi-file geometry of the same
     machinery is covered by x_snapshot_dv and test_storage/
     test_analytics)."""
-    import shutil
-    import tempfile
-    import uuid
 
     from f1_data_pipeline_spark.analytics import sync_replica_from_changes
     from f1_data_pipeline_spark.storage import (
@@ -2294,13 +2209,8 @@ def x_snapshot_replica(t: Tables) -> DataFrame:
     base = t.events.where(F.col("event_id") <= 299).select(
         "event_id", "user_id", F.round("value", 4).alias("val")
     )
-    stem = tempfile.gettempdir() + f"/f1dp_snap_repl_{uuid.uuid4().hex}"
-    src, rep = stem + "_src", stem + "_rep"
-    prev = _SNAP_REPL_DIRS.pop(t.sf_dir, None)
-    if prev:
-        for d in prev:
-            shutil.rmtree(d, ignore_errors=True)
-    _SNAP_REPL_DIRS[t.sf_dir] = (src, rep)
+    stem = _scratch_dir("snap_repl", t.sf_dir)
+    src, rep = stem + "/src", stem + "/rep"
     snapshot_write(
         base.repartitionByRange(2, "event_id"), src, stats_cols=["event_id"]
     )
@@ -2667,10 +2577,6 @@ def q_j9(t: Tables) -> DataFrame:
     )
 
 
-# scratch table dir of x_meta_agg's previous invocation per sf_dir
-_META_AGG_DIRS: dict[str, str] = {}
-
-
 @query(
     "x_meta_agg",
     """WITH live AS (
@@ -2702,9 +2608,6 @@ def x_meta_agg(t: Tables) -> DataFrame:
     debt exists the returned plan must read ZERO data files (pure
     metadata — ``inputFiles() == []``). At 100 TB that is the difference
     between a KB-scale manifest fold and a full table scan."""
-    import shutil
-    import tempfile
-    import uuid
 
     from f1_data_pipeline_spark.storage import (
         snapshot_delete,
@@ -2716,11 +2619,7 @@ def x_meta_agg(t: Tables) -> DataFrame:
     base = t.events.where(F.col("event_id") <= 3999).select(
         "event_id", "user_id", F.round("value", 4).alias("val")
     )
-    tdir = tempfile.gettempdir() + f"/f1dp_meta_agg_{uuid.uuid4().hex}"
-    prev = _META_AGG_DIRS.pop(t.sf_dir, None)
-    if prev:
-        shutil.rmtree(prev, ignore_errors=True)
-    _META_AGG_DIRS[t.sf_dir] = tdir
+    tdir = _scratch_dir("meta_agg", t.sf_dir)
     snapshot_write(
         base.repartitionByRange(6, "event_id"),
         tdir,
@@ -2737,10 +2636,6 @@ def x_meta_agg(t: Tables) -> DataFrame:
     )
     snapshot_delete(spark, tdir, [("user_id", "=", 3)], mode="dv")
     return snapshot_stats_agg(spark, tdir, ["event_id", "user_id", "val"])
-
-
-# scratch table dir of x_snapshot_append's previous invocation per sf_dir
-_SNAP_APPEND_DIRS: dict[str, str] = {}
 
 
 @query(
@@ -2771,9 +2666,6 @@ def x_snapshot_append(t: Tables) -> DataFrame:
     O(new rows) commit-cost claim — nothing is rewritten, the ingest
     shape for a 100 TB event log) and be op-labelled ``append`` (what
     the ``snapshotfeed`` streaming source tails natively)."""
-    import shutil
-    import tempfile
-    import uuid
 
     from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
@@ -2789,11 +2681,7 @@ def x_snapshot_append(t: Tables) -> DataFrame:
             "event_id", "user_id", F.round("value", 4).alias("val")
         )
 
-    tdir = tempfile.gettempdir() + f"/f1dp_snap_append_{uuid.uuid4().hex}"
-    prev = _SNAP_APPEND_DIRS.pop(t.sf_dir, None)
-    if prev:
-        shutil.rmtree(prev, ignore_errors=True)
-    _SNAP_APPEND_DIRS[t.sf_dir] = tdir
+    tdir = _scratch_dir("snap_append", t.sf_dir)
     snapshot_write(
         sl(0, 299).repartitionByRange(4, "event_id"), tdir,
         stats_cols=["event_id"],
@@ -2815,10 +2703,6 @@ def x_snapshot_append(t: Tables) -> DataFrame:
                 f"commit regressed to a table rewrite"
             )
     return snapshot_read(spark, tdir).orderBy("event_id")
-
-
-# scratch table dir of x_meta_count's previous invocation per sf_dir
-_META_COUNT_DIRS: dict[str, str] = {}
 
 
 @query(
@@ -2844,9 +2728,6 @@ def x_meta_count(t: Tables) -> DataFrame:
     count opens only the window's boundary files — the interior
     contributes pure manifest arithmetic (physically pinned in
     test_storage.py by deleting interior files and counting anyway)."""
-    import shutil
-    import tempfile
-    import uuid
 
     from f1_data_pipeline_spark.storage import (
         snapshot_count,
@@ -2856,11 +2737,7 @@ def x_meta_count(t: Tables) -> DataFrame:
 
     spark = t.spark
     base = t.events.where(F.col("event_id") <= 3999).select("event_id", "user_id")
-    tdir = tempfile.gettempdir() + f"/f1dp_meta_count_{uuid.uuid4().hex}"
-    prev = _META_COUNT_DIRS.pop(t.sf_dir, None)
-    if prev:
-        shutil.rmtree(prev, ignore_errors=True)
-    _META_COUNT_DIRS[t.sf_dir] = tdir
+    tdir = _scratch_dir("meta_count", t.sf_dir)
     snapshot_write(
         base.repartitionByRange(8, "event_id"), tdir, stats_cols=["event_id"]
     )
@@ -2879,10 +2756,6 @@ def x_meta_count(t: Tables) -> DataFrame:
             snapshot_count(spark, tdir, [("user_id", "is_not_null", None)])
         ).cast("long").alias("n_user"),
     )
-
-
-# scratch table dir of x_asof_checkpoint's previous invocation per sf_dir
-_ASOF_CKPT_DIRS: dict[str, str] = {}
 
 
 @query(
@@ -2906,9 +2779,6 @@ def x_asof_checkpoint(t: Tables) -> DataFrame:
     timestamp to exactly 6, history through the checkpointed prefix
     agrees record-for-record with a forced full-manifest scan, and a
     torn pointer still resolves (fallback correctness)."""
-    import shutil
-    import tempfile
-    import uuid
 
     from f1_data_pipeline_spark import snaplog
     from f1_data_pipeline_spark import storage as st
@@ -2920,11 +2790,7 @@ def x_asof_checkpoint(t: Tables) -> DataFrame:
             (F.col("event_id") >= lo) & (F.col("event_id") < hi)
         ).select("event_id", "user_id", F.round("value", 4).alias("val"))
 
-    tdir = tempfile.gettempdir() + f"/f1dp_asof_ckpt_{uuid.uuid4().hex}"
-    prev = _ASOF_CKPT_DIRS.pop(t.sf_dir, None)
-    if prev:
-        shutil.rmtree(prev, ignore_errors=True)
-    _ASOF_CKPT_DIRS[t.sf_dir] = tdir
+    tdir = _scratch_dir("asof_ckpt", t.sf_dir)
     for i in range(12):
         st.snapshot_append(sl(i * 80, (i + 1) * 80), tdir, stats_cols=["event_id"])
     ck = snaplog.read_checkpoint(tdir)
@@ -2956,10 +2822,6 @@ def x_asof_checkpoint(t: Tables) -> DataFrame:
     return st.snapshot_read(spark, tdir, version=6).orderBy("event_id")
 
 
-# scratch table dir of x_sql_writer's previous invocation per sf_dir
-_SQL_WRITER_DIRS: dict[str, str] = {}
-
-
 @query(
     "x_sql_writer",
     """SELECT * FROM (
@@ -2986,8 +2848,6 @@ def x_sql_writer(t: Tables) -> DataFrame:
     prior files BY REFERENCE (O(new rows) per commit), and stages
     per-file min/max stats — so SQL-written files prune exactly like
     API-written ones."""
-    import shutil
-    import tempfile
     import uuid
 
     from f1_data_pipeline_spark.ingest import feedsource
@@ -3001,11 +2861,7 @@ def x_sql_writer(t: Tables) -> DataFrame:
             (F.col("event_id") >= lo) & (F.col("event_id") < hi)
         ).select("event_id", "user_id", F.round("value", 4).alias("val"))
 
-    tdir = tempfile.gettempdir() + f"/f1dp_sql_writer_{uuid.uuid4().hex}"
-    prev = _SQL_WRITER_DIRS.pop(t.sf_dir, None)
-    if prev:
-        shutil.rmtree(prev, ignore_errors=True)
-    _SQL_WRITER_DIRS[t.sf_dir] = tdir
+    tdir = _scratch_dir("sql_writer", t.sf_dir)
     sl(0, 200).write.format("snapshotfeed").mode("append").save(tdir)
     sl(200, 300).write.format("snapshotfeed").mode("append").save(tdir)
     view = f"x_sqlw_{uuid.uuid4().hex[:8]}"
@@ -3030,10 +2886,6 @@ def x_sql_writer(t: Tables) -> DataFrame:
     return spark.sql(f"SELECT * FROM {view} ORDER BY event_id")
 
 
-# scratch table dir of x_expire_log's previous invocation per sf_dir
-_EXPIRE_LOG_DIRS: dict[str, str] = {}
-
-
 @query(
     "x_expire_log",
     """SELECT event_id, user_id, ROUND(value, 4) AS val
@@ -3053,9 +2905,6 @@ def x_expire_log(t: Tables) -> DataFrame:
     history (including the expired versions' summaries) still serves
     from the forced checkpoint, kept-version time travel works, expired
     time travel raises, and a second expiry is a no-op."""
-    import shutil
-    import tempfile
-    import uuid
 
     from f1_data_pipeline_spark import snaplog
     from f1_data_pipeline_spark import storage as st
@@ -3067,11 +2916,7 @@ def x_expire_log(t: Tables) -> DataFrame:
             (F.col("event_id") >= lo) & (F.col("event_id") < hi)
         ).select("event_id", "user_id", F.round("value", 4).alias("val"))
 
-    tdir = tempfile.gettempdir() + f"/f1dp_expire_log_{uuid.uuid4().hex}"
-    prev = _EXPIRE_LOG_DIRS.pop(t.sf_dir, None)
-    if prev:
-        shutil.rmtree(prev, ignore_errors=True)
-    _EXPIRE_LOG_DIRS[t.sf_dir] = tdir
+    tdir = _scratch_dir("expire_log", t.sf_dir)
     for i in range(12):
         st.snapshot_append(sl(i * 80, (i + 1) * 80), tdir, stats_cols=["event_id"])
     hist_before = st.snapshot_history(spark, tdir)

@@ -167,9 +167,10 @@ def upsert_parquet(
 
     Crash-safe: the merged table is staged to ``path__swap_tmp`` (reading
     the existing table stays safe — never overwrite-while-reading), verified
-    via ``_SUCCESS``, then installed with the same rename-aside swap as
-    ``compact`` — a crash leaves either the old or the new table, and a swap
-    interrupted mid-rename self-heals on the next call (``recover_swap``).
+    via ``_SUCCESS``, then installed with ``storage.staged_swap``'s
+    rename-aside swap — a crash leaves either the old or the new table,
+    and a swap interrupted mid-rename self-heals on the next call
+    (``recover_swap``).
     Single-writer per path, as with every non-transaction-log table format.
     """
     from f1_data_pipeline_spark.storage import SWAP_TMP_SUFFIX, recover_swap, staged_swap

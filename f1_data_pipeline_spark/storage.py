@@ -1,11 +1,12 @@
-"""Physical-layout helpers for the 100 TB path: bucketing (co-located,
-shuffle-free joins/aggregations) and salting (hot-key skew).
+"""Storage for the 100 TB path: physical-layout helpers (salting for
+hot-key skew, partitioned writes, the staged swap of rewrite-in-place
+sinks) and the snapshot tables (versioned parquet + an immutable commit
+log, below).
 
-The reference has no layout story (single Postgres). At cluster scale the
-two questions that dominate join cost are "is the shuffle necessary?"
-(bucketing removes it for stable keys) and "does one key overwhelm one
-task?" (salting + AQE skew-join split). Both are provided as plain
-DataFrame helpers so pipelines opt in per table/join.
+The reference has no layout story (single Postgres). At cluster scale one
+question that dominates join cost is "does one key overwhelm one task?"
+(salting + AQE skew-join split), provided as a plain DataFrame helper so
+pipelines opt in per join.
 """
 
 from __future__ import annotations
@@ -20,38 +21,6 @@ from pyspark.sql import types as T
 
 from f1_data_pipeline_spark import snaplog
 from f1_data_pipeline_spark.snaplog import SnapshotConflictError
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    num_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Persist as a bucketed (+ sorted) managed table.
-
-    Two tables bucketed the same way join with NO exchange and NO sort —
-    at 100 TB this turns the nightly fact⋈fact join from the dominant
-    shuffle into a zip of pre-sorted buckets (asserted in
-    tests/test_storage.py by inspecting the physical plan).
-    """
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    # a previously-failed write can leave an orphaned managed location that
-    # blocks re-creation — clear it (local-fs path; object stores use the
-    # catalog's purge)
-    wh = spark.conf.get("spark.sql.warehouse.dir", "")
-    if wh.startswith("file:"):
-        wh = wh[len("file:") :]
-    loc = os.path.join(wh, table.lower())
-    if wh and os.path.isdir(loc):
-        shutil.rmtree(loc, ignore_errors=True)
-
-    w = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.format("parquet").saveAsTable(table)
 
 
 def salted_join(
@@ -148,11 +117,11 @@ def write_partitioned(
     df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
-# Staged-swap suffixes shared by every rewrite-in-place sink (compact,
-# upsert_parquet). A dataset at ``base`` is only ever replaced by: write the
-# replacement to ``base__swap_tmp``, verify ``_SUCCESS``, rename the original
-# aside to ``base__swap_old``, rename tmp into place, drop old. Both renames
-# are same-directory, hence atomic on POSIX.
+# Staged-swap suffixes of the rewrite-in-place sink
+# (``sinks.upsert_parquet``). A dataset at ``base`` is only ever replaced
+# by: write the replacement to ``base__swap_tmp``, verify ``_SUCCESS``,
+# rename the original aside to ``base__swap_old``, rename tmp into place,
+# drop old. Both renames are same-directory, hence atomic on POSIX.
 SWAP_TMP_SUFFIX = "__swap_tmp"
 SWAP_OLD_SUFFIX = "__swap_old"
 
@@ -202,34 +171,6 @@ def staged_swap(base: str, tmp: str) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
-def compact(
-    spark,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Small-files compaction: rewrite a parquet dataset into
-    ceil(total_bytes / target) files.
-
-    Streaming sinks (and the reference's per-batch appends) accrete many
-    tiny files; at 100 TB that inflates scan task counts and NameNode/
-    listing pressure. Returns the new file count. For partitioned layouts
-    run per-partition (compact the day that closed, not the table).
-    Crash-safe via ``staged_swap``; single-writer (see staged_swap)."""
-    import glob
-    import math
-
-    base = path.rstrip("/")
-    recover_swap(base)  # heal a swap interrupted by a previous crash
-    files = [f for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)]
-    total = sum(os.path.getsize(f) for f in files)
-    n = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    tmp = base + SWAP_TMP_SUFFIX
-    df.repartition(n).write.mode("overwrite").parquet(tmp)
-    staged_swap(base, tmp)
-    return n
-
-
 # ---------------------------------------------------------------------------
 # Snapshot tables: versioned parquet + immutable commit log (time travel)
 # ---------------------------------------------------------------------------
@@ -261,19 +202,6 @@ def snapshot_version(spark: SparkSession, table_dir: str) -> int:
     manifest-log checkpoint plus O(tail) existence probes
     (``snaplog.latest_version``)."""
     return snaplog.latest_version(table_dir)
-
-
-def snapshot_checkpoint(spark: SparkSession, table_dir: str) -> int:
-    """Force a manifest-log checkpoint at the CURRENT version and return
-    it (the automatic cadence is every ``snaplog.SNAPSHOT_CHECKPOINT_INTERVAL``
-    commits; this is the explicit lever — e.g. before handing a table to
-    a high-frequency streaming tail). Incremental: only the manifests
-    since the previous checkpoint are read."""
-    version = snapshot_version(spark, table_dir)
-    if version < 1:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    snaplog.write_checkpoint(table_dir, version, None)
-    return version
 
 
 def snapshot_version_asof(spark: SparkSession, table_dir: str, ts: float) -> int:
@@ -912,7 +840,7 @@ def snapshot_write(
     records "this rollup reflects source version N" inside its own
     commit can always resume from the right span after a crash — no
     separate offset store whose update can tear away from the data write
-    (``analytics.sync_rollup_from_changes`` is the worked example).
+    (``analytics.sync_replica_from_changes`` is the worked example).
 
     ``bloom_cols`` additionally stores a per-file Bloom filter for each
     listed column (string/integer keys) — the point-lookup skipping
@@ -923,7 +851,7 @@ def snapshot_write(
     extra file read (rate ≈ (1−e^(−h·n/m))^h; the 16 Kbit / 5-hash
     default holds <1% to ~2k distinct keys per file). The spec persists
     in the commit record, and every maintenance path (upsert, CDC apply,
-    delete, compact) rebuilds filters for the files it stages, so
+    delete, optimize) rebuilds filters for the files it stages, so
     skipping power survives table maintenance exactly like stats_cols.
 
     Protocol: (1) CLAIM the staging dir ``v=N`` by atomically creating
@@ -1586,7 +1514,7 @@ def _where_expr(where: list[tuple], qualify: str | None = None):
 # for scattered right-to-erasure deletes on a 100 TB table, where
 # copy-on-write would rewrite a 128 MB file per tombstoned row. Readers
 # subtract positions with one broadcast anti-join; every physical rewrite
-# (compact, optimize, upsert-touched files) PURGES its files' entries, so
+# (optimize, upsert-touched files) PURGES its files' entries, so
 # DVs never accumulate past maintenance. Mass deletes should stay
 # copy-on-write (mode="cow"): a DV grows with the deleted-row count.
 _DV_RELPATH_RE = r"(v=\d+/[^/]+)$"
@@ -2610,92 +2538,6 @@ def _state_diff_sides(
     return old_df, new_df, cols
 
 
-def snapshot_changes_since(
-    spark: SparkSession,
-    table_dir: str,
-    key: str,
-    offset_dir: str,
-) -> tuple[DataFrame, int]:
-    """Incremental change-feed consumer: the changes committed since this
-    consumer's last acknowledged version — the table-to-table sync shape
-    (Delta CDF + a consumer group offset).
-
-    Returns ``(feed, version)``. The FIRST call (no offset yet) delivers
-    the whole current table as ``insert`` rows — the initial load.
-    Afterwards each call returns ``snapshot_changes(last_acked,
-    current)``; when nothing new is committed the feed is empty (same
-    schema). The offset only advances when the caller invokes
-    ``snapshot_ack(spark, offset_dir, version)`` AFTER materializing the
-    feed downstream — two-phase on purpose: a crash between read and ack
-    re-delivers the same span (at-least-once), and an idempotent keyed
-    sink (the repo's upsert family) makes that effectively-once — the
-    same contract the streaming sinks document.
-
-    The offset is a one-row parquet artifact via ``write_json_artifact``,
-    so consumer state lives on the same URI-capable filesystem as the
-    table — no driver-local files."""
-    current = snapshot_version(spark, table_dir)
-    if current < 1:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    if not dataset_exists(spark, offset_dir):
-        last = None  # first run: no offset yet
-    else:
-        import json
-
-        try:
-            payload = read_json_artifact(spark, offset_dir)
-        except json.JSONDecodeError:
-            # present-but-unparseable payload: corruption, not a torn ack
-            raise
-        except ValueError:
-            # torn ack (dataset exists but holds NO row): overwrite-based
-            # offsets lose the previous value mid-ack, so the only safe
-            # recovery is the initial load — the idempotent downstream
-            # apply the contract requires makes the re-load converge
-            # rather than duplicate.
-            payload = None
-        if payload is None:
-            last = None
-        else:
-            # a payload that EXISTS must parse — a readable artifact with
-            # a missing/garbage acked_version is corruption, and silently
-            # re-delivering the full table (then acking over it) would
-            # paper over it; int()/KeyError surface to the caller
-            last = int(payload["acked_version"])
-    if last is None:
-        feed = snapshot_read(spark, table_dir, version=current).withColumn(
-            "_change_type", F.lit("insert")
-        )
-        return feed, current
-    if last > current:
-        raise ValueError(
-            f"consumer offset {last} is ahead of the table's current "
-            f"version {current} in {table_dir} — was the table restored or "
-            f"recreated? reset the offset dir to re-sync"
-        )
-    if last == current:
-        feed = (
-            snapshot_read(spark, table_dir, version=current)
-            .limit(0)
-            .withColumn("_change_type", F.lit("insert"))
-        )
-        return feed, current
-    return snapshot_changes(spark, table_dir, key, last, current), current
-
-
-def snapshot_ack(spark: SparkSession, offset_dir: str, version: int) -> None:
-    """Acknowledge a consumed change span: persist ``version`` as this
-    consumer's offset (overwrite — the artifact writer commits via
-    ``_SUCCESS``, so a torn ack is unreadable and re-delivers)."""
-    write_json_artifact(spark, offset_dir, {"acked_version": int(version)})
-
-
-def _manifest_blooms_for_test(spark: SparkSession, table_dir: str, version: int) -> dict:
-    """Test hook: {path: bloom-entry} for a committed version."""
-    m = snaplog.read_manifest(table_dir, version)
-    return {e["path"]: e["bloom"] for e in m.get("files", []) if e.get("bloom")}
-
-
 def snapshot_history(
     spark: SparkSession, table_dir: str, check_available: bool = False
 ) -> list[dict]:
@@ -2951,7 +2793,7 @@ def snapshot_delete(
     version's ``_dv`` dataset; readers subtract them with one broadcast
     anti-join. O(matching rows) write cost makes it the lever for
     SCATTERED deletes (GDPR erasure of single rows across thousands of
-    128 MB files); physical maintenance (optimize/compact, or an upsert
+    128 MB files); physical maintenance (optimize, or an upsert
     touching the file) purges entries as it rewrites, so the debt never
     outlives maintenance. For mass deletes stay with ``cow`` — the DV
     grows with the deleted-row count.
@@ -3297,7 +3139,7 @@ def snapshot_add_constraint(
     the staging write itself (an ``Observation``, no extra pass) and
     aborting the commit typed (``ConstraintViolationError``) before the
     record is published. Maintenance that moves rows without changing
-    them (delete, optimize, compact, restore, clones, restamp) carries
+    them (delete, optimize, restore, clones, restamp) carries
     the constraint set; enforcement on staged rows is therefore
     inductive over the whole history. NULL rule results count as
     violations, as in ``check_expectations``."""
@@ -3695,64 +3537,6 @@ def snapshot_vacuum(
     return sorted(removed)
 
 
-def snapshot_compact(
-    spark: SparkSession,
-    table_dir: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    stats_cols: list[str] | None = None,
-) -> tuple[int, int]:
-    """Lakehouse-native small-files compaction: rewrite the CURRENT
-    snapshot into ceil(total_bytes/target) files committed as a NEW
-    version — the versioned twin of ``compact``. No rename window at
-    all: readers of version N are untouched while N+1 stages, the commit
-    is the same atomic record create as any write, and the bloated
-    version remains time-travelable until ``snapshot_vacuum`` reclaims
-    it. Reads through the manifest (after copy-on-write upserts the
-    current version's data spans several ``v=`` dirs) and sizes from the
-    manifest's per-file byte counts — URI-capable end-to-end. By default
-    re-derives ``stats_cols`` from the current manifest so compaction
-    never silently drops the table's skipping power.
-    Returns (new_version, file_count)."""
-    import math
-
-    v = snapshot_version(spark, table_dir)
-    if v < 1:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    manifest = snaplog.read_manifest(table_dir, v)
-    entries = manifest.get("files")
-    if entries is None:
-        vdir = f"{table_dir.rstrip('/')}/v={v}"
-        total = sum(
-            i.size for i in snaplog.listdir(vdir, recursive=True) if i.is_file
-        )
-    else:
-        total = sum(e.get("bytes", 0) for e in entries)
-        if stats_cols is None:
-            stats_cols = snaplog.tracked_stats(entries)
-    n = max(1, math.ceil(total / target_file_bytes))
-    df = snapshot_read(spark, table_dir).repartition(n)
-    spec = manifest.get("bloom_spec") or {}
-    return (
-        snapshot_write(
-            df,
-            table_dir,
-            stats_cols=stats_cols,
-            bloom_cols=spec.get("cols"),
-            bloom_bits=spec.get("m", 16384),
-            bloom_hashes=spec.get("h", 5),
-            # content-preserving maintenance: the table still reflects
-            # whatever its properties claimed (exactly-once consumers
-            # must survive an operator compacting their rollup)
-            properties=manifest.get("properties"),
-            # the rewritten content was READ from version v — a commit
-            # that isn't v+1 would erase a concurrent writer's changes
-            expected_version=v,
-            _op="compact",
-        ),
-        n,
-    )
-
-
 def snapshot_optimize(
     spark: SparkSession,
     table_dir: str,
@@ -3767,7 +3551,7 @@ def snapshot_optimize(
     every adequately-sized file by reference — maintenance cost is
     O(small files), never O(table). After years of trickle upserts a
     100 TB table holds a long tail of KB-scale commit files; rewriting
-    the whole table to fix them (what ``snapshot_compact`` does) costs
+    the whole table to fix them costs
     a full pass, while this touches only the tail. Files at or above
     ``small_file_bytes`` (default target/2) never move — their bytes,
     stats, and Bloom entries ride into the new manifest verbatim.

@@ -418,191 +418,6 @@ class RateObserver:
         spark.streams.addListener(_L())
 
 
-def stream_document_curation(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint: str,
-    out_path: str,
-    schema=None,
-    trigger: dict | None = None,
-):
-    """Incremental corpus curation: tail a directory of document parquet
-    drops and run the batch curation gates — the Gopher quality predicate
-    then PII redaction — on each micro-batch, persisting only kept,
-    redacted documents. Every gate is a scan-local Catalyst expression, so
-    the stream has NO state store and NO shuffle: each micro-batch is an
-    embarrassingly parallel map, which is why the same operators serve
-    both a 100 TB backfill and a continuous crawl feed unchanged. (The
-    cross-batch stateful piece — global dedup — stays a separate
-    watermark-bounded job; quality gating needs no state.)"""
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from f1_data_pipeline_spark.operators.text import gopher_keep, with_pii
-
-    schema = schema or StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("lang", StringType()),
-            StructField("source", StringType()),
-            StructField("n_chars", LongType()),
-        ]
-    )
-    docs = spark.readStream.schema(schema).parquet(source_dir)
-    gated = with_pii(docs.where(gopher_keep("text")))
-    return (
-        gated.select("doc_id", F.col("redacted").alias("text"), "source")
-        .writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
-
-
-def stream_incremental_dedup(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint: str,
-    out_path: str,
-    store_path: str,
-    schema=None,
-    trigger: dict | None = None,
-):
-    """Continuous-ingest exact dedup against a PERSISTENT fingerprint
-    store: tail a directory of document drops; per micro-batch, anti-join
-    the batch against the md5 store (`operators.dedup.incremental_dedup`),
-    append survivors to the silver table AND their fingerprints to the
-    store. The store, not stream state, carries cross-batch memory — so
-    dedup state is unbounded-corpus-sized without ever living in the
-    state store, survives checkpoint resets, and is shared by concurrent
-    backfills. foreachBatch makes the two writes per batch; re-delivered
-    batches are idempotent because re-seen fingerprints anti-join away.
-
-    100 TB shape: the store is a fingerprint-only table (16-byte md5s) —
-    bucketed on fp at scale so the per-batch anti-join co-locates; batch
-    text never shuffles."""
-    import os
-
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from f1_data_pipeline_spark.operators.dedup import incremental_dedup
-
-    schema = schema or StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("lang", StringType()),
-            StructField("source", StringType()),
-            StructField("n_chars", LongType()),
-        ]
-    )
-
-    def sink(batch_df, batch_id):
-        b = batch_df.sparkSession
-        if os.path.exists(store_path):
-            seen = b.read.parquet(store_path)
-        else:
-            seen = b.createDataFrame([], "fp string")
-        kept = incremental_dedup(batch_df, seen)
-        kept.persist()
-        try:
-            kept.write.mode("append").parquet(out_path)
-            kept.select(F.md5("text").alias("fp")).distinct().write.mode(
-                "append"
-            ).parquet(store_path)
-        finally:
-            kept.unpersist()
-
-    docs = spark.readStream.schema(schema).parquet(source_dir)
-    return (
-        docs.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
-
-
-def stream_telemetry_position_join(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint: str,
-    tolerance: str = "5 seconds",
-    watermark: str = "30 seconds",
-    sink: Callable[[DataFrame, int], None] | None = None,
-    trigger: dict | None = None,
-    query_name: str = "tel_pos_join",
-):
-    """Stream-stream interval join (the one join topology T1–T11 lacked):
-    live telemetry enriched with the car's most recent track position —
-    each telemetry sample inner-joins position samples for the SAME driver
-    within ``(ts - tolerance, ts]``.
-
-    Both sides are watermarked and the join condition bounds event time in
-    BOTH directions, so Spark can expire join state on each side — without
-    that, a stream-stream join buffers forever (the documented
-    requirement for state cleanup in the Structured Streaming guide). At
-    100 TB/day the state held is only ``tolerance + watermark`` worth of
-    rows per driver, co-partitioned by the equi-key.
-
-    The two decode legs read the SAME bronze directory through separate
-    source instances (each keeps its own offsets in the shared
-    checkpoint), so this composes with the fan-out topology unchanged.
-    """
-    tel = (
-        decode.decode_car_telemetry(read_bronze_stream(spark, source_dir))
-        .select(
-            F.col("driver_number").alias("t_driver"),
-            F.col("timestamp").alias("t_ts"),
-            "speed",
-            "rpm",
-        )
-        .withWatermark("t_ts", watermark)
-    )
-    pos = (
-        decode.decode_car_positions(read_bronze_stream(spark, source_dir))
-        .select(
-            F.col("driver_number").alias("p_driver"),
-            F.col("timestamp").alias("p_ts"),
-            "x_coord",
-            "y_coord",
-        )
-        .withWatermark("p_ts", watermark)
-    )
-    joined = tel.join(
-        pos,
-        (F.col("t_driver") == F.col("p_driver"))
-        & (F.col("p_ts") > F.col("t_ts") - F.expr(f"INTERVAL {tolerance}"))
-        & (F.col("p_ts") <= F.col("t_ts")),
-    ).select(
-        F.col("t_driver").alias("driver_number"),
-        F.col("t_ts").alias("timestamp"),
-        "speed",
-        "rpm",
-        F.col("p_ts").alias("position_ts"),
-        "x_coord",
-        "y_coord",
-    )
-    writer = joined.writeStream.outputMode("append").option(
-        "checkpointLocation", checkpoint
-    )
-    if sink is not None:
-        writer = writer.foreachBatch(sink)
-    else:
-        writer = writer.format("memory").queryName(query_name)
-    return writer.trigger(**(trigger or {"availableNow": True})).start()
-
-
 def stream_heavy_hitter_candidates(
     values: DataFrame,
     col: str,
@@ -665,35 +480,6 @@ def stream_heavy_hitter_candidates(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def stream_hll_distinct(
-    values: DataFrame,
-    keys: list[str],
-    value_col: str,
-    lg_k: int = 14,
-) -> DataFrame:
-    """Streaming distinct-count with BOUNDED state: HLL sketch
-    aggregation over an unbounded stream (the streaming face of
-    ``operators/sketches.hll_distinct``).
-
-    Exact streaming distinct requires one state entry per distinct value
-    ever seen (``dropDuplicates`` — the unbounded-seen-set shape the
-    reference's caches have, T6's hazard). Here the per-key state IS the
-    HLL register buffer: 2^lg_k bytes, fixed, regardless of how many
-    billions of distinct values flow through. The cross-micro-batch fold
-    in the state store carries the sketch's full error guarantee; note
-    it is NOT bit-identical to a batch build over the same history —
-    DataSketches HLL promotes sparse→dense at fold-dependent points, so
-    merge order shifts estimates within the envelope (tolerance pinned
-    in tests). Output carries both the estimate and the sketch itself,
-    so downstream consumers can keep merging (day→month rollups) without
-    re-reading the stream.
-    """
-    agg = values.groupBy(*keys).agg(
-        F.hll_sketch_agg(value_col, F.lit(lg_k)).alias("sketch")
-    )
-    return agg.withColumn("approx_distinct", F.hll_sketch_estimate("sketch"))
 
 
 def stream_snapshot_upsert(
@@ -1045,45 +831,5 @@ def stream_snapshot_cdc_apply(
         stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint)
         .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
-
-
-def stream_table_maintainer(
-    spark: SparkSession,
-    step,
-    checkpoint: str,
-    interval_seconds: float = 10.0,
-):
-    """Run a derived-table maintenance ``step`` on a STREAMING cadence —
-    the deployment shape for the exactly-once CDF consumers
-    (``analytics.sync_rollup_from_changes`` /
-    ``sync_replica_from_changes``): a 1-row/s rate source is the
-    metronome, and each micro-batch fires the step once.
-
-    All exactly-once state lives in the DERIVED TABLE's own commit stamp
-    (that is the whole point of those consumers), so the streaming
-    checkpoint here carries only the metronome offset — losing it
-    re-fires a step, which re-reads the stamp and applies nothing twice.
-    A ``SnapshotConflictError`` from the step is the designed
-    concurrent-maintainer outcome: it is swallowed and the next tick
-    re-reads the moved stamp; any other exception fails the query
-    loudly. Returns the ``StreamingQuery`` (caller owns ``stop()``)."""
-    from f1_data_pipeline_spark.storage import SnapshotConflictError
-
-    beat = (
-        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-    )
-
-    def tick(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            step()
-        except SnapshotConflictError:
-            pass  # lost a CAS to a concurrent maintainer: next tick resyncs
-
-    return (
-        beat.writeStream.foreachBatch(tick)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{interval_seconds} seconds")
         .start()
     )

@@ -20,14 +20,11 @@ SLOW_TESTS: dict[str, set[str]] = {
         "test_jdbc_upsert_distributed_idempotent",
         "test_lap_stream_into_snapshot_table_k5_parity",
         "test_socket_source_live_feed",
-        "test_stream_document_curation_matches_batch",
-        "test_stream_incremental_dedup_store_carries_cross_batch",
         "test_stream_snapshot_upsert_applies_tombstones",
         "test_stream_snapshot_upsert_bloom_bootstrap_survives_maintenance",
         "test_stream_snapshot_upsert_maintains_versioned_table",
         "test_stream_snapshot_upsert_mid_stream_schema_evolution",
         "test_stream_static_enrichment",
-        "test_stream_stream_interval_join_matches_batch",
         "test_stream_to_table_to_downstream_sync_via_change_feed",
     },
     "test_operators.py": {
@@ -39,12 +36,10 @@ SLOW_TESTS: dict[str, set[str]] = {
         "test_edit_distance_join_matches_exhaustive",
         "test_edit_distance_join_short_strings_complete",
         "test_fuzzy_dedup_degenerate_bucket_stays_linear_and_dedups",
-        "test_ivf_batch_indexed_prunes_and_matches",
         "test_ivf_batch_matches_single_query_path",
         "test_ivf_batch_recall_vs_per_query_exact",
         "test_ivf_indexed_search_prunes_partitions",
         "test_ivfpq_full_probe_equals_exact",
-        "test_ivfpq_index_append_is_searchable_and_pruned",
         "test_ivfpq_index_roundtrips_file_uri",
         "test_ivfpq_recall_vs_exact",
         "test_ivfpq_topk_batch_matches_single_query",
@@ -89,12 +84,8 @@ SLOW_TESTS: dict[str, set[str]] = {
         "test_heavy_hitters_exact_on_zipfian",
         "test_heavy_hitters_raises_when_guarantee_fails",
         "test_heavy_hitters_survives_singleton_flood",
-        "test_incremental_aggregate_merge_equals_full_recompute",
         "test_rate_observer_collects_progress",
-        "test_stream_table_maintainer_drives_replica",
         "test_sync_replica_from_changes_exactly_once",
-        "test_sync_rollup_concurrent_maintainers_cannot_double_apply",
-        "test_sync_rollup_from_changes_exactly_once",
         "test_table_counts_and_freshness",
     },
     "test_postgres.py": {
@@ -108,8 +99,6 @@ SLOW_TESTS: dict[str, set[str]] = {
         "test_concurrent_appends_no_lost_updates",
         "test_footer_stats_decline_truncated_min",
         "test_snapshot_apply_cdc_mixed_batch_one_commit",
-        "test_snapshot_changes_since_consumer_offsets",
-        "test_snapshot_changes_since_offset_corruption_vs_torn_ack",
         "test_snapshot_clone_shallow_zero_copy_and_independent",
         "test_snapshot_constraints_lifecycle_and_enforcement",
         "test_snapshot_dv_change_feed_emits_deletes",

@@ -145,48 +145,6 @@ def test_sketch_rollup_accuracy_and_mergeability(spark, tmp_path):
     assert merged == whole
 
 
-def test_incremental_aggregate_merge_equals_full_recompute(spark, tmp_path):
-    """Materialized-rollup maintenance: state built from increments (with
-    a parquet persistence hop, as in production) must equal the
-    from-scratch aggregate over all data — including derived avg."""
-    from pyspark.sql import functions as F
-
-    from f1_data_pipeline_spark.analytics import (
-        finalize_aggregate, merge_partial_aggregates, partial_aggregate,
-    )
-    from f1_data_pipeline_spark.catalog import load_tables
-
-    ev = load_tables(spark, SF_DIR).events
-    days = [ev.where(F.col("event_id") % 3 == i) for i in range(3)]
-
-    state = partial_aggregate(days[0], ["event_type"], "value")
-    for i, d in enumerate(days[1:]):
-        p = str(tmp_path / f"state_{i}")
-        state.write.mode("overwrite").parquet(p)
-        state = merge_partial_aggregates(
-            spark.read.parquet(p), partial_aggregate(d, ["event_type"], "value"),
-            ["event_type"],
-        )
-
-    got = {
-        r.event_type: (r.n, round(r.total, 6), round(r.avg, 6), r.min, r.max)
-        for r in finalize_aggregate(state, ["event_type"]).collect()
-    }
-    want = {
-        r.event_type: (r.n, round(r.total, 6), round(r.avg, 6), r.min, r.max)
-        for r in finalize_aggregate(
-            partial_aggregate(ev, ["event_type"], "value"), ["event_type"]
-        ).collect()
-    }
-    assert got.keys() == want.keys()
-    for k in want:
-        # float sums may differ in the last ulp across grouping orders
-        assert got[k][0] == want[k][0]
-        assert abs(got[k][1] - want[k][1]) < 1e-6
-        assert abs(got[k][2] - want[k][2]) < 1e-9
-        assert got[k][3:] == want[k][3:]
-
-
 # --- heavy hitters (Misra-Gries candidates + exact recount) ----------------
 
 
@@ -271,178 +229,6 @@ def test_misra_gries_guarantee_at_threshold(spark):
     assert "HH" in cands
 
 
-def test_sync_rollup_from_changes_exactly_once(spark, tmp_path):
-    """CDF-driven incremental view maintenance: the rollup equals a
-    from-scratch recompute after inserts, updates, AND deletes; a
-    caught-up sync commits nothing (re-running after a 'crash' between
-    feed and commit is the same call — same result, exactly once);
-    groups whose last member is deleted leave the rollup."""
-    from pyspark.sql import functions as F
-
-    from f1_data_pipeline_spark.analytics import sync_rollup_from_changes
-    from f1_data_pipeline_spark.storage import (
-        snapshot_delete,
-        snapshot_properties,
-        snapshot_read,
-        snapshot_upsert,
-        snapshot_write,
-    )
-
-    src = str(tmp_path / "src")
-    roll = str(tmp_path / "rollup")
-
-    def mk(lo, hi, grp, val_mult=1.0):
-        return (
-            spark.range(lo, hi)
-            .select(
-                F.col("id").alias("k"),
-                (F.col("id") % grp).cast("string").alias("g"),
-                (F.col("id") * val_mult).cast("double").alias("x"),
-            )
-        )
-
-    def recompute():
-        return {
-            (r["g"], r["n"], round(r["s"], 6))
-            for r in snapshot_read(spark, src)
-            .groupBy("g")
-            .agg(F.count("x").alias("n"), F.sum("x").alias("s"))
-            .collect()
-        }
-
-    def rollup_rows():
-        return {
-            (r["g"], r["n"], round(r["s"], 6))
-            for r in snapshot_read(spark, roll).collect()
-        }
-
-    snapshot_write(mk(0, 200, 5), src, stats_cols=["k"])
-    v, sv = sync_rollup_from_changes(spark, src, "k", roll, ["g"], "x")
-    assert (v, sv) == (1, 1)
-    assert rollup_rows() == recompute()
-
-    # updates (values change) + inserts into a NEW group value
-    ups = mk(150, 260, 5, val_mult=10.0).withColumn(
-        "g", F.when(F.col("k") >= 200, F.lit("newgrp")).otherwise(F.col("g"))
-    )
-    snapshot_upsert(spark, src, ups, key="k")
-    # delete an entire group's rows: g='0' has k % 5 == 0
-    snapshot_delete(spark, src, where=[("k", "=", 145)])
-    v2, sv2 = sync_rollup_from_changes(spark, src, "k", roll, ["g"], "x")
-    assert sv2 == 3 and v2 == 2
-    assert rollup_rows() == recompute()
-    assert snapshot_properties(spark, roll) == {"source_version": 3}
-
-    # caught up: version-preserving no-op (exactly-once on retry)
-    v3, _ = sync_rollup_from_changes(spark, src, "k", roll, ["g"], "x")
-    assert v3 == v2 and rollup_rows() == recompute()
-
-    # delete the whole new group: its rollup row must vanish
-    snapshot_delete(spark, src, where=[("k", ">=", 200)])
-    sync_rollup_from_changes(spark, src, "k", roll, ["g"], "x")
-    assert rollup_rows() == recompute()
-    assert not [r for r in rollup_rows() if r[0] == "newgrp"]
-
-    # NULL group keys are real groups: the null-safe merge must adjust
-    # the existing NULL-key row, not append a second one per sync
-    nulls = (
-        spark.range(9000, 9003)
-        .select(
-            F.col("id").alias("k"),
-            F.lit(None).cast("string").alias("g"),
-            F.col("id").cast("double").alias("x"),
-        )
-    )
-    snapshot_upsert(spark, src, nulls, key="k")
-    sync_rollup_from_changes(spark, src, "k", roll, ["g"], "x")
-    assert rollup_rows() == recompute()
-    snapshot_upsert(
-        spark, src,
-        nulls.where("k = 9000").withColumn("x", F.lit(777.0)), key="k",
-    )
-    sync_rollup_from_changes(spark, src, "k", roll, ["g"], "x")
-    assert rollup_rows() == recompute()
-    assert len([r for r in rollup_rows() if r[0] is None]) == 1
-
-    # an operator compacting the rollup must not break the consumer:
-    # content-preserving maintenance carries the exactly-once stamp
-    from f1_data_pipeline_spark.storage import snapshot_optimize
-
-    snapshot_optimize(spark, roll, target_file_bytes=1 << 20)
-    assert snapshot_properties(spark, roll).get("source_version") is not None
-    snapshot_upsert(spark, src, mk(0, 1, 5, val_mult=3.0), key="k")
-    sync_rollup_from_changes(spark, src, "k", roll, ["g"], "x")
-    assert rollup_rows() == recompute()
-
-
-def test_sync_rollup_concurrent_maintainers_cannot_double_apply(spark, tmp_path, monkeypatch):
-    """r8 advice: two maintainers that both read source stamp N must not
-    both apply the same change span. The commit is a CAS on the rollup
-    version read at entry, so the interleaved loser raises the typed
-    conflict WITHOUT committing, and a plain re-invoke converges to the
-    from-scratch answer — never a double-applied delta."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    import f1_data_pipeline_spark.analytics as A
-    import f1_data_pipeline_spark.storage as S
-
-    src = str(tmp_path / "src")
-    roll = str(tmp_path / "rollup")
-
-    def mk(lo, hi, mult=1.0):
-        return spark.range(lo, hi).select(
-            F.col("id").alias("k"),
-            (F.col("id") % 3).cast("string").alias("g"),
-            (F.col("id") * mult).cast("double").alias("x"),
-        )
-
-    def recompute():
-        return {
-            (r["g"], r["n"], round(r["s"], 6))
-            for r in S.snapshot_read(spark, src)
-            .groupBy("g")
-            .agg(F.count("x").alias("n"), F.sum("x").alias("s"))
-            .collect()
-        }
-
-    def rollup_rows():
-        return {
-            (r["g"], r["n"], round(r["s"], 6))
-            for r in S.snapshot_read(spark, roll).collect()
-        }
-
-    S.snapshot_write(mk(0, 60), src, stats_cols=["k"])
-    A.sync_rollup_from_changes(spark, src, "k", roll, ["g"], "x")
-    S.snapshot_upsert(spark, src, mk(30, 90, mult=5.0), key="k")
-
-    # interleave: maintainer B completes a full sync INSIDE maintainer
-    # A's read-feed step, after A has already read the rollup stamp
-    real_changes = S.snapshot_changes
-    fired = {"done": False}
-
-    def racy_changes(sp, table_dir, key, lo, hi):
-        if not fired["done"]:
-            fired["done"] = True
-            A.sync_rollup_from_changes(sp, src, "k", roll, ["g"], "x")
-        return real_changes(sp, table_dir, key, lo, hi)
-
-    monkeypatch.setattr(S, "snapshot_changes", racy_changes)
-    with pytest.raises(S.SnapshotConflictError):
-        A.sync_rollup_from_changes(spark, src, "k", roll, ["g"], "x")
-    monkeypatch.setattr(S, "snapshot_changes", real_changes)
-
-    # B's sync applied the span exactly once; A's loss committed nothing
-    assert rollup_rows() == recompute()
-    stamp = int(S.snapshot_properties(spark, roll)["source_version"])
-    assert stamp == S.snapshot_version(spark, src)
-    # A's retry is a caught-up no-op — still exactly once
-    v_before = S.snapshot_version(spark, roll)
-    A.sync_rollup_from_changes(spark, src, "k", roll, ["g"], "x")
-    assert S.snapshot_version(spark, roll) == v_before
-    assert rollup_rows() == recompute()
-
-
 def test_sync_replica_from_changes_exactly_once(spark, tmp_path):
     """CDF-driven table replication: the replica is row-identical to the
     source after inserts, updates, copy-on-write deletes AND
@@ -497,60 +283,3 @@ def test_sync_replica_from_changes_exactly_once(spark, tmp_path):
     # and the next sync is a clean no-op (the stamp really moved)
     v5, _ = sync_replica_from_changes(spark, src, "k", rep)
     assert v5 == v4
-
-
-def test_stream_table_maintainer_drives_replica(spark, tmp_path):
-    """The metronome deployment shape: a rate-source streaming query
-    fires the exactly-once replica sync on a cadence; new source commits
-    land in the replica without any manual re-invoke."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    import f1_data_pipeline_spark.storage as S
-    import f1_data_pipeline_spark.streaming as strm
-    from f1_data_pipeline_spark.analytics import sync_replica_from_changes
-
-    src = str(tmp_path / "src")
-    rep = str(tmp_path / "replica")
-    S.snapshot_write(
-        spark.range(50)
-        .select(F.col("id").alias("k"), (F.col("id") * 2.0).alias("x"))
-        .repartitionByRange(2, "k"),
-        src,
-        stats_cols=["k"],
-    )
-
-    q = strm.stream_table_maintainer(
-        spark,
-        lambda: sync_replica_from_changes(spark, src, "k", rep),
-        checkpoint=str(tmp_path / "ck"),
-        interval_seconds=1.0,
-    )
-    try:
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            try:
-                if S.snapshot_read(spark, rep).count() == 50:
-                    break
-            except FileNotFoundError:
-                pass
-            time.sleep(1)
-        assert S.snapshot_read(spark, rep).count() == 50
-        # a new source commit flows through on the next ticks
-        S.snapshot_upsert(
-            spark,
-            src,
-            spark.range(50, 60).select(
-                F.col("id").alias("k"), (F.col("id") * 2.0).alias("x")
-            ),
-            key="k",
-        )
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if S.snapshot_read(spark, rep).count() == 60:
-                break
-            time.sleep(1)
-        assert S.snapshot_read(spark, rep).count() == 60
-    finally:
-        q.stop()

@@ -105,9 +105,9 @@ def test_features_bitwise_match_catalyst_reference(spark):
     transform) BIT-FOR-BIT: same md5 leading-digit buckets, same
     long/long→double L1 division, same null-text drop semantics. The
     reference implementation lives here so the contract outlives the
-    production code path."""
-    from f1_data_pipeline_spark.operators.classify import _bucket_expr
+    production code path (``bucket_expr`` in tests/reference_forms.py)."""
     from f1_data_pipeline_spark.operators.text import tokens
+    from tests.reference_forms import bucket_expr
 
     docs = _planted(spark).unionByName(
         spark.createDataFrame(
@@ -123,7 +123,7 @@ def test_features_bitwise_match_catalyst_reference(spark):
     label = (F.col("y") == 1).cast("int").alias("label")
     toks = docs.select(
         "doc_id", label, F.explode(tokens("text")).alias("term")
-    ).withColumn("bucket", F.expr(_bucket_expr(2)).cast("int"))
+    ).withColumn("bucket", F.expr(bucket_expr(2)).cast("int"))
     tf = toks.groupBy("doc_id", "label", "bucket").agg(F.count("*").alias("tf"))
     per_doc = tf.groupBy("doc_id", "label").agg(
         F.map_from_entries(F.collect_list(F.struct("bucket", "tf"))).alias("__m"),

@@ -177,11 +177,24 @@ def test_repeated_session_load_compiles_nothing(spark, tmp_path, compilations):
     assert compilations() - before == 0
 
 
-def test_silver_schema_contracts(pipeline):
+def test_silver_schema_contracts(spark, pipeline, tmp_path):
     """§5.2 item 5 (verify_tables.py analog): silver frames match declared
-    StructTypes on names and types."""
-    _, _, silver = pipeline
+    StructTypes on names and types, and so does bronze from both of its
+    readers (``read_bronze`` and the ``f1wire`` source)."""
+    from f1_data_pipeline_spark.ingest.wiresource import register
+
+    _, bronze, silver = pipeline
+    wire = str(tmp_path / "wire.txt")
+    generate(wire, n_lines=20, seed=7)
+    register(spark)
+    frames = {
+        **silver,
+        "bronze": bronze,
+        "bronze_f1wire": spark.read.format("f1wire").load(wire),
+    }
     declared = {
+        "bronze": sc.BRONZE,
+        "bronze_f1wire": sc.BRONZE,
         "sessions": sc.SESSIONS,
         "drivers": sc.DRIVERS,
         "lap_data": sc.LAP_DATA,
@@ -192,7 +205,7 @@ def test_silver_schema_contracts(pipeline):
         "weather": sc.WEATHER,
     }
     for name, expected in declared.items():
-        got = silver[name].schema
+        got = frames[name].schema
         assert [f.name for f in got.fields] == [f.name for f in expected.fields], name
         assert [f.dataType for f in got.fields] == [f.dataType for f in expected.fields], name
 

@@ -10,7 +10,6 @@ from f1_data_pipeline_spark.operators.multimodal import (
     extract_features,
     frame_sample,
     make_media_table,
-    resize,
     _parse_fake,
 )
 
@@ -35,13 +34,6 @@ def test_extract_features(media):
     assert len(feats) == 60
     for r in feats:
         assert 0 <= r["mean_val"] <= 255 and r["std_val"] > 0
-
-
-def test_resize_dims_and_payload(media):
-    out = resize(media, 8, 8).collect()
-    for r in out:
-        w, h, m = _parse_fake(bytes(r["payload"]))
-        assert (w, h) == (8, 8) and m.shape == (8, 8)
 
 
 def test_frame_sample_expands_video_rows(media):

@@ -13,7 +13,8 @@ from pyspark.sql import functions as F
 
 from f1_data_pipeline_spark.operators.dedup import (
     exact_dedup,
-    minhash_candidate_pairs,
+    lsh_bands,
+    minhash_signatures_fast,
     simhash,
 )
 from f1_data_pipeline_spark.operators.joins import as_of_join, range_join, sessionize
@@ -91,8 +92,30 @@ def test_exact_dedup(spark, planted_docs):
 
 
 def test_minhash_finds_planted_near_dups(spark, planted_docs):
-    pairs = minhash_candidate_pairs(planted_docs)
-    got = {(r["d1"], r["d2"]): r["est_jaccard"] for r in pairs.collect()}
+    """Planted-pair recall of the production MinHash path: the
+    ``x_dedup_minhash`` signatures banded as ``fuzzy_dedup`` bands them
+    (8 bands x 4 rows) collide on the planted near-duplicates, and the
+    signature agreement estimates their Jaccard."""
+    sigs = minhash_signatures_fast(planted_docs)
+    bb = lsh_bands(sigs, 8, 4)
+    pairs = (
+        bb.alias("a")
+        .join(
+            bb.alias("b"),
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.band_hash") == F.col("b.band_hash"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
+        .distinct()
+    )
+    sig = {r["doc_id"]: [r[f"sig_{j}"] for j in range(32)] for r in sigs.collect()}
+    got = {
+        (r["d1"], r["d2"]): sum(
+            x == y for x, y in zip(sig[r["d1"]], sig[r["d2"]])
+        ) / 32
+        for r in pairs.collect()
+    }
     assert (0, 100) in got and (0, 101) in got, got
     assert got[(0, 100)] > 0.5 and got[(0, 101)] > 0.5
     # exact duplicate collides in every band with estimated jaccard 1.0
@@ -182,10 +205,8 @@ def test_allpairs_topk_no_driver_collect(spark):
 def test_near_dup_lsh_recall_vs_exhaustive(spark):
     """LSH-bucketed near-dup (the public default) must recover ≥90% of the
     pairs the exhaustive cartesian oracle finds on planted near-duplicates."""
-    from f1_data_pipeline_spark.operators.similarity import (
-        cosine_near_dup_pairs,
-        cosine_near_dup_pairs_exact,
-    )
+    from f1_data_pipeline_spark.operators.similarity import cosine_near_dup_pairs
+    from tests.reference_forms import cosine_near_dup_pairs_exact
 
     rng = random.Random(11)
     base = [[rng.gauss(0, 1) for _ in range(32)] for _ in range(60)]
@@ -254,8 +275,8 @@ def test_blocked_near_dup_equals_exhaustive_across_blocks(spark):
     form's pairs — same ids, same rounded sims."""
     from f1_data_pipeline_spark.operators.similarity import (
         cosine_near_dup_pairs_blocked,
-        cosine_near_dup_pairs_exact,
     )
+    from tests.reference_forms import cosine_near_dup_pairs_exact
 
     rng = random.Random(7)
     base = [[rng.gauss(0, 1) for _ in range(16)] for _ in range(40)]
@@ -311,7 +332,7 @@ def test_winnowing_theorem_shared_substring_shares_fingerprint(spark):
     length >= k + w - 1 share at least one fingerprint. 60 constructed
     pairs with an 11-char (k=8, w=4) common run planted at random offsets
     inside otherwise-unrelated text."""
-    from f1_data_pipeline_spark.operators.text import winnow_fingerprint_array
+    from tests.reference_forms import winnow_fingerprint_array
 
     rng = random.Random(0)
     alpha = "abcdefghijklmnopqrstuvwxyz "
@@ -380,10 +401,8 @@ def test_winnow_fast_udf_matches_catalyst_form(spark):
     """The vectorized pandas-UDF winnow must be BIT-IDENTICAL to the
     Catalyst higher-order form (the oracle twin) — including short docs,
     empty strings, and docs shorter than the window."""
-    from f1_data_pipeline_spark.operators.text import (
-        winnow_fingerprint_array,
-        winnow_fingerprint_array_fast,
-    )
+    from f1_data_pipeline_spark.operators.text import winnow_fingerprint_array_fast
+    from tests.reference_forms import winnow_fingerprint_array
 
     rng = random.Random(3)
     texts = ["", "short", "exactly8", "just above k len"] + [
@@ -778,36 +797,6 @@ def test_decontaminate_planted_overlap(spark):
     assert out[2]["n_ngrams"] == 6 and out[2]["n_contaminated"] == 2
     assert out[2]["contamination"] == 0.3333 and out[2]["flagged"]
     assert out[3]["n_contaminated"] == 0 and not out[3]["flagged"]
-
-
-def test_ivf_batch_indexed_prunes_and_matches(spark, tmp_path):
-    """Batch search against the persisted cell-partitioned index must (a)
-    push the probed-cell union down as PartitionFilters (asserted inside the
-    operator — a pruning regression raises) and (b) return exactly what the
-    in-memory batch path returns."""
-    from f1_data_pipeline_spark.operators.similarity import (
-        ivf_assign,
-        ivf_centroids,
-        ivf_topk_batch,
-        ivf_topk_batch_indexed,
-        ivf_write_index,
-    )
-
-    rng = random.Random(31)
-    rows = [(i, [rng.gauss(0, 1) for _ in range(24)]) for i in range(300)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    queries = df.where(F.col("vec_id") < 3)
-    base = df.where(F.col("vec_id") >= 3)
-    C = ivf_centroids(base, k=6, seed=17)
-
-    idx = str(tmp_path / "ivf_batch_index")
-    ivf_write_index(base, C, idx)
-    indexed = ivf_topk_batch_indexed(spark, idx, queries, C, nprobe=2, k=7)
-    got = [(r["qid"], r["vec_id"], r["sim"]) for r in indexed.collect()]
-
-    inline = ivf_topk_batch(ivf_assign(base, C), queries, C, nprobe=2, k=7)
-    want = [(r["qid"], r["vec_id"], r["sim"]) for r in inline.collect()]
-    assert got == want
 
 
 def test_repetition_stats_hand_computed(spark):
@@ -1683,7 +1672,6 @@ def test_ivfpq_index_roundtrips_file_uri(spark, tmp_path):
         sim_mod.ivfpq_write_index,
         sim_mod.ivfpq_topk,
         sim_mod.ivfpq_topk_batch,
-        sim_mod.ivfpq_index_append,
         sim_mod._ensure_ivfpq_index,
     ):
         assert "open(" not in inspect.getsource(fn), fn.__name__
@@ -1813,7 +1801,7 @@ def test_bpe_train_matches_reference_implementation(spark):
 
 
 def test_bpe_encode_applies_merges_in_rank_order(spark):
-    from f1_data_pipeline_spark.operators.text import bpe_encode
+    from tests.reference_forms import bpe_encode
 
     # merges: e+s -> es, es+t -> est, l+o -> lo
     merges = [(0, "e", "s", "es", 9), (1, "es", "t", "est", 9), (2, "l", "o", "lo", 7)]
@@ -1829,11 +1817,8 @@ def test_bpe_encode_fast_matches_per_occurrence_encode(spark):
     sequences — on a corpus with repeated words, multi-word docs, and a
     word that is a prefix of another (the ewma/ewma_partitioned pairing
     discipline: slow exact twin pins the fast path)."""
-    from f1_data_pipeline_spark.operators.text import (
-        bpe_encode,
-        bpe_encode_fast,
-        bpe_train,
-    )
+    from f1_data_pipeline_spark.operators.text import bpe_encode_fast, bpe_train
+    from tests.reference_forms import bpe_encode
 
     docs = [
         (1, "low lower low lowest"),
@@ -1902,11 +1887,8 @@ def test_bpe_encode_fast_degrades_gracefully_past_hot_k(spark):
     carries the miss traffic and results are still exactly the reference
     encode's — the graceful-degradation contract for corpora whose
     distinct-word count exceeds any broadcastable bound."""
-    from f1_data_pipeline_spark.operators.text import (
-        bpe_encode,
-        bpe_encode_fast,
-        bpe_train,
-    )
+    from f1_data_pipeline_spark.operators.text import bpe_encode_fast, bpe_train
+    from tests.reference_forms import bpe_encode
 
     docs = [
         (1, "low lower low lowest"),
@@ -1931,7 +1913,8 @@ def test_bpe_encode_fast_degrades_gracefully_past_hot_k(spark):
 def test_bpe_encode_preserves_id_column_type(spark):
     """String doc ids must survive both encode paths (the EWMA output-
     schema lesson: a hardcoded `long` id breaks or silently coerces)."""
-    from f1_data_pipeline_spark.operators.text import bpe_encode, bpe_encode_fast
+    from f1_data_pipeline_spark.operators.text import bpe_encode_fast
+    from tests.reference_forms import bpe_encode
 
     df = spark.createDataFrame([("d-1", "low low")], "doc_id string, text string")
     merges = [(0, "l", "o", "lo", 2)]
@@ -2142,71 +2125,6 @@ def test_domain_pagerank_checkpoint_bounds_plan_depth(spark, tmp_path, monkeypat
     got = {r["domain"]: r["rank"] for r in r50.collect()}
     for i, d_ in enumerate(["a.com", "b.com", "c.com", "d.com"]):
         assert abs(got[d_] - rr[i]) < 1e-9, (d_, got[d_], rr[i])
-
-
-def test_ivf_index_append_is_searchable_and_pruned(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from f1_data_pipeline_spark.operators.similarity import (
-        ivf_centroids,
-        ivf_index_append,
-        ivf_topk_indexed,
-        ivf_write_index,
-    )
-    from tests.conftest import SF_DIR
-
-    e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    base = e.where(F.col("vec_id") < 80)
-    newer = e.where((F.col("vec_id") >= 80) & (F.col("vec_id") < 90))
-    C = ivf_centroids(base, k=4, seed=42)
-    path = str(tmp_path / "ivf_idx")
-    ivf_write_index(base, C, path)
-    before = spark.read.parquet(path).count()
-
-    ivf_index_append(newer, C, path)
-    after = spark.read.parquet(path)
-    assert after.count() == before + 10
-
-    # an appended vector must be findable as its own exact neighbor
-    probe = e.where(F.col("vec_id") == 85)
-    got = ivf_topk_indexed(spark, path, probe, C, nprobe=4, k=3).collect()
-    assert got and got[0]["vec_id"] == 85 and got[0]["sim"] >= 0.999
-
-
-def test_ivfpq_index_append_is_searchable_and_pruned(spark, tmp_path):
-    """ivf_index_append's contract carried to IVF-PQ: append-only encode
-    of new vectors against the FROZEN codebooks read from the index's own
-    metadata artifact — appended rows are immediately searchable, the
-    existing rows are untouched, and partition pruning survives."""
-    from pyspark.sql import functions as F
-
-    from f1_data_pipeline_spark.operators.similarity import (
-        ivfpq_index_append,
-        ivfpq_topk,
-        ivfpq_write_index,
-    )
-    from tests.conftest import SF_DIR
-
-    e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    base = e.where(F.col("vec_id") < 80)
-    newer = e.where((F.col("vec_id") >= 80) & (F.col("vec_id") < 90))
-    path = str(tmp_path / "ivfpq_idx")
-    ivfpq_write_index(base, path, k_cells=4, m=4, k_codes=16)
-    before = spark.read.parquet(path).count()
-
-    ivfpq_index_append(spark, newer, path)
-    after = spark.read.parquet(path)
-    assert after.count() == before + 10
-
-    # an appended vector must be findable as its own exact neighbor
-    probe = e.where(F.col("vec_id") == 85)
-    corpus = e.where(F.col("vec_id") < 90)
-    got = ivfpq_topk(spark, path, probe, corpus, k=3, nprobe=4).collect()
-    assert got and got[0]["vec_id"] == 85 and got[0]["sim"] >= 0.999
-    plan = ivfpq_topk(
-        spark, path, probe, corpus, k=3, nprobe=2
-    )._jdf.queryExecution().executedPlan().toString()
-    assert re.search(r"PartitionFilters: \[[^\]]*cell", plan), plan[:2000]
 
 
 def test_bigram_lm_backoff_hand_computed(spark):
@@ -2572,7 +2490,7 @@ def test_exact_jaccard_on_pairs_matches_exhaustive(spark, planted_docs):
     """The candidate-restricted verifier must agree with the exhaustive
     shingle self-join on any pair it is handed — including zero-overlap
     pairs, which it must return as 0.0 rather than drop."""
-    from f1_data_pipeline_spark.operators.dedup import exact_jaccard_on_pairs
+    from tests.reference_forms import exact_jaccard_on_pairs
 
     pairs = spark.createDataFrame(
         [(0, 100), (1, 102), (2, 3)], "d1 long, d2 long"
@@ -2591,7 +2509,7 @@ def test_exact_jaccard_on_pairs_verdicts_sub_shingle_docs(spark):
     """Pairs involving a document shorter than shingle_n words must get a
     0.0 verdict, not silently vanish (r5 advisor finding: word_shingles
     drops such docs, and inner count-joins then erased the whole pair)."""
-    from f1_data_pipeline_spark.operators.dedup import exact_jaccard_on_pairs
+    from tests.reference_forms import exact_jaccard_on_pairs
 
     docs = spark.createDataFrame(
         [
@@ -2858,31 +2776,6 @@ def test_shard_assign_balances_and_is_deterministic(spark):
         shard_assign(bad, 4, token_col="n_tok")
 
 
-def test_export_shards_layout_and_read_order(spark, tmp_path):
-    """The export materializes shard=K/ dirs with rows sorted by the
-    shuffle key inside each shard — the trainer's final read order."""
-    import os
-
-    from f1_data_pipeline_spark.operators.export import export_shards, _shuffle_key
-
-    docs = spark.range(300).select(
-        F.col("id").alias("doc_id"),
-        (F.col("id") % 11 + 1).cast("long").alias("n_tok"),
-    )
-    path = str(tmp_path / "shards")
-    export_shards(docs, path, 4, token_col="n_tok")
-    dirs = sorted(d for d in os.listdir(path) if d.startswith("shard="))
-    assert dirs == [f"shard={i}" for i in range(4)]
-    back = spark.read.parquet(path)
-    assert back.count() == 300
-    # within one shard's files, rows are stored in shuffle-key order
-    one = spark.read.parquet(path + "/shard=0")
-    got = [r["doc_id"] for r in one.collect()]
-    h = {r["doc_id"]: r["h"] for r in docs.select(
-        "doc_id", _shuffle_key("doc_id", "shard-v1").alias("h")).collect()}
-    assert got == sorted(got, key=lambda d: (h[d], d))
-
-
 def test_epoch_upsample_exact_fractional_repeats(spark):
     """floor(f) copies always, +1 decided by the exact-integer md5 test:
     replayed independently in python; factors < 1 downsample through
@@ -2954,47 +2847,6 @@ def test_epoch_upsample_missing_factor_raises(spark):
     out = epoch_upsample(docs, factors0, salt="t-v1")
     assert out.where(F.col("source") == "orphan").count() == 0
     assert out.where(F.col("source") == "b").count() == 10
-
-def test_export_jsonl_round_trip_and_balance(spark, tmp_path):
-    """JSONL export: same deterministic balanced assignment as the
-    parquet form, readable back as line-JSON with identical content;
-    binary columns are rejected loudly."""
-    import glob
-    import gzip
-    import json
-
-    import pytest
-
-    from f1_data_pipeline_spark.operators.export import export_jsonl, shard_assign
-
-    docs = spark.range(200).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("text-"), F.col("id")).alias("text"),
-        (F.col("id") % 97 + 10).alias("n_chars"),
-    )
-    path = str(tmp_path / "jsonl")
-    export_jsonl(docs, path, 4, token_col="n_chars")
-
-    back = spark.read.json(path + "/shard=*")
-    assert back.count() == 200
-    got = {r["doc_id"]: r["text"] for r in back.collect()}
-    assert got == {i: f"text-{i}" for i in range(200)}
-    # assignment identical to the parquet form's
-    expect = {
-        r["doc_id"]: r["shard"]
-        for r in shard_assign(docs, 4, token_col="n_chars").collect()
-    }
-    for d in sorted(glob.glob(path + "/shard=*")):
-        shard = int(d.rsplit("=", 1)[1])
-        for f in glob.glob(d + "/*.json.gz"):
-            with gzip.open(f, "rt") as fh:
-                for line in fh:
-                    assert expect[json.loads(line)["doc_id"]] == shard
-
-    with pytest.raises(ValueError, match="binary"):
-        export_jsonl(
-            docs.withColumn("blob", F.col("text").cast("binary")), path, 2,
-        )
 
 
 # --- r14 guards: packed-locator bound, hot-bucket cap, winnow branch parity --
@@ -3114,7 +2966,8 @@ def test_xxh64np_matches_spark_xxhash64_strings(spark):
         lens = np.asarray([len(t.encode("utf-8")) for t in texts], dtype=np.int64)
         starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
         words, l64 = xxh64np.pack_slices(data, starts, lens)
-        got = xxh64np.hash_slices(words, l64, seed).view(np.int64).tolist()
+        seeds = np.asarray([seed], dtype=np.uint64)
+        got = xxh64np.hash_slices_multi(words, l64, seeds)[0].view(np.int64).tolist()
         assert got == expected, f"salt {j}: numpy XXH64 diverged from Spark"
 
 
@@ -3125,10 +2978,10 @@ def test_minhash_fast_matches_aggregate_form(spark):
     consecutive spaces, leading/trailing spaces, empty strings, multibyte
     UTF-8, >32-byte words (stripe phase), single-word docs."""
     from f1_data_pipeline_spark.operators.dedup import (
-        minhash_signatures,
         minhash_signatures_fast,
         word_shingles,
     )
+    from tests.reference_forms import minhash_signatures
 
     rng = random.Random(7)
     vocab = ["alpha", "beta", "δελτα", "ε", "z" * 41, "日本語テキスト", "x"]
@@ -3216,10 +3069,8 @@ def test_jaccard_kernel_matches_join_verifier(spark):
     join-based exact_jaccard_on_pairs for every handed-in pair —
     including pairs whose docs are missing from the corpus, shorter than
     shingle_n, duplicated in the pair list, or UTF-8 heavy."""
-    from f1_data_pipeline_spark.operators.dedup import (
-        exact_jaccard_on_pairs,
-        exact_jaccard_on_pairs_fast,
-    )
+    from f1_data_pipeline_spark.operators.dedup import exact_jaccard_on_pairs_fast
+    from tests.reference_forms import exact_jaccard_on_pairs
 
     rng = random.Random(23)
     vocab = ["alpha", "beta", "δελτα", "ε", "common", "words", "here"]

@@ -1,5 +1,6 @@
-"""Physical-layout tests: bucketed joins must be exchange-free; salted
-joins must equal plain joins row-for-row."""
+"""Storage tests: salted joins must equal plain joins row-for-row, the
+staged swap is crash-safe, and the snapshot tables keep their commit
+protocol."""
 
 from __future__ import annotations
 
@@ -10,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from f1_data_pipeline_spark.catalog import load_tables
-from f1_data_pipeline_spark.storage import salted_join, write_bucketed
+from f1_data_pipeline_spark.storage import salted_join
 from tests.conftest import SF_DIR
 
 
@@ -19,41 +20,6 @@ def _plan(df) -> str:
     with redirect_stdout(buf):
         df.explain()
     return buf.getvalue()
-
-
-def test_bucketed_join_is_shuffle_free(spark):
-    t = load_tables(spark, SF_DIR)
-    write_bucketed(t.orders, "orders_b", ["o_custkey"], 8, sort_cols=["o_custkey"])
-    write_bucketed(
-        t.customer.withColumnRenamed("c_custkey", "o_custkey"),
-        "customer_b",
-        ["o_custkey"],
-        8,
-        sort_cols=["o_custkey"],
-    )
-    ob, cb = spark.table("orders_b"), spark.table("customer_b")
-    joined = ob.join(cb, "o_custkey").groupBy("c_nationkey").count()
-    # at test scale the dim fits the broadcast threshold, which would hide
-    # the bucketing; disable to expose the co-located sort-merge join that a
-    # fact⋈fact join would get at 100 TB
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan, plan
-        # co-bucketed: the join key needs NO hash exchange on either side
-        assert "Exchange hashpartitioning(o_custkey" not in plan, plan
-        assert "SelectedBucketsCount" in plan
-        # sanity: same result as the unbucketed join
-        want = (
-            t.orders.join(t.customer, t.orders.o_custkey == t.customer.c_custkey)
-            .groupBy("c_nationkey")
-            .count()
-        )
-        got = {r["c_nationkey"]: r["count"] for r in joined.collect()}
-        assert got == {r["c_nationkey"]: r["count"] for r in want.collect()}
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_salted_join_equals_plain_join(spark):
@@ -91,32 +57,15 @@ def test_partitioned_write_prunes_scan(spark, tmp_path):
     assert len(dirs) == t.events.select("event_type").distinct().count()
 
 
-def test_compact_small_files(spark, tmp_path):
-    """Compaction collapses a many-file dataset to the target count without
-    changing its rows."""
-    from f1_data_pipeline_spark.storage import compact
-
-    t = load_tables(spark, SF_DIR)
-    path = str(tmp_path / "frag")
-    t.orders.repartition(24).write.parquet(path)
-    import glob
-
-    before = len(glob.glob(f"{path}/*.parquet"))
-    assert before >= 24
-    rows_before = spark.read.parquet(path).count()
-    n = compact(spark, path, target_file_bytes=1 << 30)  # everything fits one file
-    after = len(glob.glob(f"{path}/*.parquet"))
-    assert n == 1 and after == 1
-    assert spark.read.parquet(path).count() == rows_before
-
-
 def test_compact_swap_is_crash_safe(spark, tmp_path, monkeypatch):
-    """The two-rename swap never deletes the original before the replacement
-    is installed: a failure installing the staged copy rolls the original
-    back; success leaves no __swap_old/__swap_tmp residue."""
+    """The two-rename swap under ``sinks.upsert_parquet`` never deletes the
+    original before the replacement is installed: a failure installing the
+    staged copy rolls the original back; success leaves no
+    __swap_old/__swap_tmp residue."""
     import os
 
-    from f1_data_pipeline_spark.storage import SWAP_OLD_SUFFIX, SWAP_TMP_SUFFIX, compact
+    from f1_data_pipeline_spark.sinks import upsert_parquet
+    from f1_data_pipeline_spark.storage import SWAP_OLD_SUFFIX, SWAP_TMP_SUFFIX
 
     t = load_tables(spark, SF_DIR)
     path = str(tmp_path / "ds")
@@ -135,14 +84,13 @@ def test_compact_swap_is_crash_safe(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(os, "rename", failing_rename)
     import pytest as _pytest
     with _pytest.raises(OSError, match="simulated crash"):
-        compact(spark, path, target_file_bytes=1 << 30)
+        upsert_parquet(spark, t.nation, path, keys=["n_nationkey"])
     monkeypatch.undo()
 
     # original dataset survived the failed swap, fully readable
     assert spark.read.parquet(path).count() == rows
 
-    n = compact(spark, path, target_file_bytes=1 << 30)
-    assert n == 1
+    upsert_parquet(spark, t.nation, path, keys=["n_nationkey"])
     assert spark.read.parquet(path).count() == rows
     assert not os.path.exists(path + SWAP_OLD_SUFFIX)
     assert not os.path.exists(path + SWAP_TMP_SUFFIX)
@@ -150,11 +98,12 @@ def test_compact_swap_is_crash_safe(spark, tmp_path, monkeypatch):
 
 def test_swap_orphan_recovers_on_next_call(spark, tmp_path):
     """A crash BETWEEN the two renames (base moved aside, stage not yet
-    installed) leaves no dataset at path — the next compact() call must
-    restore the original and proceed, not fail on a missing path."""
+    installed) leaves no dataset at path — the next upsert_parquet() call
+    must restore the original and proceed, not fail on a missing path."""
     import os
 
-    from f1_data_pipeline_spark.storage import SWAP_OLD_SUFFIX, compact, recover_swap
+    from f1_data_pipeline_spark.sinks import upsert_parquet
+    from f1_data_pipeline_spark.storage import SWAP_OLD_SUFFIX, recover_swap
 
     t = load_tables(spark, SF_DIR)
     path = str(tmp_path / "ds")
@@ -165,8 +114,8 @@ def test_swap_orphan_recovers_on_next_call(spark, tmp_path):
     os.rename(path, path + SWAP_OLD_SUFFIX)
     assert not os.path.exists(path)
 
-    n = compact(spark, path, target_file_bytes=1 << 30)  # self-heals first
-    assert n == 1
+    # self-heals first: the merge sees the original rows, not an empty table
+    upsert_parquet(spark, t.nation.limit(0), path, keys=["n_nationkey"])
     assert spark.read.parquet(path).count() == rows
     assert not os.path.exists(path + SWAP_OLD_SUFFIX)
 
@@ -408,28 +357,6 @@ def test_snapshot_roundtrip_through_file_uri(spark, tmp_path):
     assert snapshot_read(spark, tdir).count() == 9
 
 
-def test_snapshot_compact_commits_new_version(spark, tmp_path):
-    """Compaction lands as a committed version: same rows, fewer files,
-    old version still time-travelable (no swap window)."""
-    import glob
-
-    from f1_data_pipeline_spark.storage import (
-        snapshot_compact,
-        snapshot_read,
-        snapshot_write,
-    )
-
-    tdir = str(tmp_path / "tbl")
-    t = spark.range(5000).withColumnRenamed("id", "k").repartition(16)
-    snapshot_write(t, tdir)
-    assert len(glob.glob(f"{tdir}/v=1/*.parquet")) >= 16
-    v, n = snapshot_compact(spark, tdir, target_file_bytes=1 << 30)
-    assert (v, n) == (2, 1)
-    assert len(glob.glob(f"{tdir}/v=2/*.parquet")) == 1
-    assert snapshot_read(spark, tdir).count() == 5000
-    assert snapshot_read(spark, tdir, version=1).count() == 5000
-
-
 # --- manifest file lists: data skipping + copy-on-write upsert --------------
 
 
@@ -602,13 +529,14 @@ def test_snapshot_vacuum_respects_carried_references(spark, tmp_path):
 
 
 def test_snapshot_compact_after_upsert_preserves_data_and_stats(spark, tmp_path):
-    """Compaction reads THROUGH the manifest (post-upsert data spans
-    several v= dirs) and re-derives the manifest's stats columns so the
-    table keeps its skipping power."""
+    """Compaction (``snapshot_optimize`` packing every file) reads
+    THROUGH the manifest (post-upsert data spans several v= dirs) and
+    re-derives the manifest's stats columns so the table keeps its
+    skipping power."""
     import glob
 
     from f1_data_pipeline_spark.storage import (
-        snapshot_compact,
+        snapshot_optimize,
         snapshot_read,
         snapshot_upsert,
         snapshot_write,
@@ -617,8 +545,8 @@ def test_snapshot_compact_after_upsert_preserves_data_and_stats(spark, tmp_path)
     tdir = str(tmp_path / "tbl")
     snapshot_write(_keyed(spark, 0, 1000).repartitionByRange(8, "k"), tdir, stats_cols=["k"])
     snapshot_upsert(spark, tdir, _keyed(spark, 100, 110, "u"), key="k")
-    v, n = snapshot_compact(spark, tdir, target_file_bytes=1 << 30)
-    assert (v, n) == (3, 1)
+    v, _rewritten, carried = snapshot_optimize(spark, tdir, target_file_bytes=1 << 30)
+    assert (v, carried) == (3, 0)
     assert len(glob.glob(f"{tdir}/v=3/*.parquet")) == 1
     cur = snapshot_read(spark, tdir)
     assert cur.count() == 1000
@@ -1159,55 +1087,6 @@ def test_snapshot_upsert_expectations_gate_the_merge(spark, tmp_path):
         snapshot_apply_cdc(spark, tdir, badcdc, key="k", expectations=rules)
 
 
-def test_snapshot_changes_since_consumer_offsets(spark, tmp_path):
-    """The incremental consumer: initial load as inserts, per-span
-    re-delivery until acked, empty feed when caught up, and an
-    ahead-of-table offset raises instead of silently re-syncing."""
-    import pytest
-
-    from f1_data_pipeline_spark.storage import (
-        snapshot_ack,
-        snapshot_changes_since,
-        snapshot_delete,
-        snapshot_upsert,
-        snapshot_write,
-    )
-
-    tdir = str(tmp_path / "tbl")
-    odir = str(tmp_path / "offsets")
-    snapshot_write(_keyed(spark, 0, 100), tdir, stats_cols=["k"])
-
-    feed, v = snapshot_changes_since(spark, tdir, "k", odir)
-    assert v == 1 and feed.count() == 100
-    assert {r["_change_type"] for r in feed.collect()} == {"insert"}
-    # NOT acked: the same span re-delivers (at-least-once)
-    feed2, v2 = snapshot_changes_since(spark, tdir, "k", odir)
-    assert v2 == 1 and feed2.count() == 100
-    snapshot_ack(spark, odir, v2)
-
-    # caught up: empty feed, schema intact
-    feed3, v3 = snapshot_changes_since(spark, tdir, "k", odir)
-    assert v3 == 1 and feed3.count() == 0
-    assert feed3.columns == ["k", "v", "_change_type"]
-
-    snapshot_upsert(spark, tdir, _keyed(spark, 5, 7, tag="upd"), key="k")
-    snapshot_delete(spark, tdir, where=[("k", "=", 50)])
-    feed4, v4 = snapshot_changes_since(spark, tdir, "k", odir)
-    assert v4 == 3
-    got = {(r["k"], r["_change_type"]) for r in feed4.collect()}
-    assert got == {
-        (5, "update_preimage"), (5, "update_postimage"),
-        (6, "update_preimage"), (6, "update_postimage"),
-        (50, "delete"),
-    }
-    snapshot_ack(spark, odir, v4)
-
-    # a stale/foreign offset ahead of the table raises
-    snapshot_ack(spark, odir, 99)
-    with pytest.raises(ValueError, match="ahead of the table"):
-        snapshot_changes_since(spark, tdir, "k", odir)
-
-
 def test_snapshot_bloom_point_lookup_skips_files(spark, tmp_path):
     """Per-file Bloom filters prune point lookups on a HASH-DISTRIBUTED
     key — where min/max envelopes span everything and prune nothing.
@@ -1216,13 +1095,13 @@ def test_snapshot_bloom_point_lookup_skips_files(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from f1_data_pipeline_spark.storage import (
-        _manifest_blooms_for_test,
-        snapshot_compact,
         snapshot_delete,
+        snapshot_optimize,
         snapshot_read,
         snapshot_upsert,
         snapshot_write,
     )
+    from tests.reference_forms import manifest_blooms
 
     # hash-distributed string key: every file's [min,max] covers ~the
     # whole domain, so stats alone cannot skip a point lookup
@@ -1269,10 +1148,13 @@ def test_snapshot_bloom_point_lookup_skips_files(spark, tmp_path):
     snapshot_delete(spark, tdir, where=[("h", "=", probe)])
     assert snapshot_read(spark, tdir, where=[("h", "=", probe)]).count() == 0
 
-    v, _n = snapshot_compact(spark, tdir, target_file_bytes=8 * 1024)
+    v, rewritten, _carried = snapshot_optimize(
+        spark, tdir, target_file_bytes=8 * 1024, small_file_bytes=1 << 30
+    )
+    assert rewritten > 0
     got3 = snapshot_read(spark, tdir, where=[("h", "=", p2)])
     assert [r["v"] for r in got3.collect()] == ["new"]
-    blooms = _manifest_blooms_for_test(spark, tdir, v)
+    blooms = manifest_blooms(tdir, v)
     assert blooms, "compacted version lost its bloom entries"
 
 
@@ -1358,12 +1240,12 @@ def test_snapshot_optimize_packs_only_small_files(spark, tmp_path):
 
     from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _manifest_blooms_for_test,
         snapshot_optimize,
         snapshot_read,
         snapshot_upsert,
         snapshot_write,
     )
+    from tests.reference_forms import manifest_blooms
 
     tdir = str(tmp_path / "tbl")
     # one adequately-sized file + a long tail of tiny upsert commits
@@ -1408,7 +1290,7 @@ def test_snapshot_optimize_packs_only_small_files(spark, tmp_path):
     probe = hashlib.md5(b"3").hexdigest()
     got = snapshot_read(spark, tdir, where=[("h", "=", probe)])
     assert [r["k"] for r in got.collect()] == [3]
-    assert _manifest_blooms_for_test(spark, tdir, v)
+    assert manifest_blooms(tdir, v)
 
     # second run: tail is gone, optimize is a version-preserving no-op
     v2, rw2, _ = snapshot_optimize(
@@ -1487,42 +1369,6 @@ def test_bloom_table_survives_pure_delete_cdc_batch(spark, tmp_path):
     v = snapshot_apply_cdc(spark, tdir, dels, key="k")
     assert v == 2
     assert snapshot_read(spark, tdir).count() == 75
-
-
-def test_snapshot_changes_since_offset_corruption_vs_torn_ack(spark, tmp_path):
-    """r8 advice: a PRESENT-but-unparseable acked_version is corruption
-    and must raise — only a genuinely torn ack (dataset exists, zero
-    rows) recovers with the initial load."""
-    import pytest
-
-    from f1_data_pipeline_spark.storage import (
-        snapshot_ack,
-        snapshot_changes_since,
-        snapshot_write,
-        write_json_artifact,
-    )
-
-    tdir = str(tmp_path / "tbl")
-    odir = str(tmp_path / "offsets")
-    snapshot_write(spark.range(5).withColumnRenamed("id", "k"), tdir)
-    feed, v = snapshot_changes_since(spark, tdir, "k", odir)
-    assert feed.count() == 5 and v == 1
-    snapshot_ack(spark, odir, v)
-
-    # corrupt-but-readable offset: surface it, never re-deliver the table
-    write_json_artifact(spark, odir, {"acked_version": "garbage"})
-    with pytest.raises(ValueError):
-        snapshot_changes_since(spark, tdir, "k", odir)
-    # missing key is corruption too
-    write_json_artifact(spark, odir, {"wrong_key": 1})
-    with pytest.raises(KeyError):
-        snapshot_changes_since(spark, tdir, "k", odir)
-
-    # torn ack: dataset present, zero rows -> initial-load recovery
-    spark.createDataFrame([], "json string").write.mode("overwrite").parquet(odir)
-    feed2, v2 = snapshot_changes_since(spark, tdir, "k", odir)
-    assert v2 == 1 and feed2.count() == 5
-    assert {r["_change_type"] for r in feed2.collect()} == {"insert"}
 
 
 # ---------------------------------------------------------------------------
@@ -1655,10 +1501,10 @@ def test_snapshot_dv_change_feed_emits_deletes(spark, tmp_path):
 def test_snapshot_dv_optimize_and_compact_purge_debt(spark, tmp_path):
     """Physical maintenance materializes deletion vectors: optimize
     purges the packed files' entries (carrying the rest), and a full
-    compact leaves the table with NO deletion vector at all."""
+    rewrite (``dv_fraction=0``) leaves the table with NO deletion vector
+    at all."""
     from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        snapshot_compact,
         snapshot_delete,
         snapshot_optimize,
         snapshot_read,
@@ -1676,9 +1522,12 @@ def test_snapshot_dv_optimize_and_compact_purge_debt(spark, tmp_path):
     assert m.get("dv") is None
     assert {r["k"] for r in snapshot_read(spark, tdir).collect()} == live
 
-    # dv again, then full compact: also purged
+    # dv again, then a full rewrite of every file with debt: also purged
     snapshot_delete(spark, tdir, [("k", "=", 50)], mode="dv")
-    v2, _ = snapshot_compact(spark, tdir, target_file_bytes=1 << 20)
+    v2, rewritten2, _ = snapshot_optimize(
+        spark, tdir, target_file_bytes=1 << 20, dv_fraction=0.0
+    )
+    assert rewritten2 > 0
     m2 = read_manifest(tdir, v2)
     assert m2.get("dv") is None
     assert {r["k"] for r in snapshot_read(spark, tdir).collect()} == live - {50}
@@ -3030,8 +2879,8 @@ def test_manifest_log_checkpoint(spark, tmp_path, monkeypatch):
     assert st.snapshot_version(spark, tdir) == 12
     assert st.snapshot_history(spark, tdir) == hist_full
 
-    # explicit checkpoint repairs the pointer at the CURRENT version
-    assert st.snapshot_checkpoint(spark, tdir) == 12
+    # an explicit checkpoint repairs the pointer at the CURRENT version
+    snaplog.write_checkpoint(tdir, st.snapshot_version(spark, tdir))
     ck = snaplog.read_checkpoint(tdir)
     assert ck is not None and ck["version"] == 12 and len(ck["log"]) == 12
     assert [r["version"] for r in ck["log"]] == list(range(1, 13))
@@ -3425,7 +3274,6 @@ def test_snapshot_model_fuzz(spark, tmp_path):
     from f1_data_pipeline_spark.storage import (
         snapshot_append,
         snapshot_apply_cdc,
-        snapshot_compact,
         snapshot_delete,
         snapshot_merge,
         snapshot_optimize,
@@ -3520,7 +3368,11 @@ def test_snapshot_model_fuzz(spark, tmp_path):
         elif op == "optimize":
             snapshot_optimize(spark, tdir, target_file_bytes=1 << 20, dv_fraction=0.5)
         elif op == "compact":
-            snapshot_compact(spark, tdir, target_file_bytes=1 << 20)
+            # a full rewrite: every file, deletion-vector debt or not
+            snapshot_optimize(
+                spark, tdir, target_file_bytes=1 << 20,
+                small_file_bytes=1 << 30, dv_fraction=0.0,
+            )
         elif op == "restamp":
             snapshot_restamp(spark, tdir, {"step": step})
         elif op == "restore":
@@ -4139,10 +3991,6 @@ _INHERITANCE_CASES = {
         "full", _op("snapshot_write", lambda s: _kv_rows(s, range(5)), stats_cols=["k"]),
         "write",
         dict(constraints=_PARENT, bloom_spec=None, cdf=True, dv=False, properties=None),
-    ),
-    "compact": (
-        "full", _op("snapshot_compact"), "compact",
-        dict(constraints=_PARENT, bloom_spec=_PARENT, cdf=True, dv=False, properties=_PARENT),
     ),
     "append": (
         "full", _op("snapshot_append", lambda s: _kv_rows(s, range(200, 203))), "append",

@@ -433,52 +433,6 @@ def test_socket_source_live_feed(spark, wire_dir, tmp_path):
         strm.stop_all(qs)
 
 
-def test_stream_document_curation_matches_batch(spark, tmp_path):
-    """The streaming curation gate (Gopher keep + PII redaction) must
-    produce exactly the batch operators' results, restart-safely: two
-    document drops, two availableNow passes against one checkpoint, no
-    re-emission of the first drop's output."""
-    from f1_data_pipeline_spark.operators.text import gopher_keep, with_pii
-
-    src = tmp_path / "docs_src"
-    out = tmp_path / "docs_out"
-    ckpt = tmp_path / "docs_ckpt"
-    src.mkdir()
-
-    good = "the " + " ".join(["word"] * 40)
-    rows1 = [
-        (1, good + " mail me x@y.io", "en", "src0", 1),
-        (2, "too short", "en", "src0", 1),  # gated out
-    ]
-    rows2 = [
-        (3, good + " call 555-123-4567", "en", "src1", 1),
-    ]
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-    spark.createDataFrame(rows1, schema).write.mode("append").parquet(str(src))
-
-    q = strm.stream_document_curation(spark, str(src), str(ckpt), str(out))
-    assert q.awaitTermination(120)
-    first = {r["doc_id"]: r["text"] for r in spark.read.parquet(str(out)).collect()}
-    assert set(first) == {1}
-    assert first[1].endswith("mail me [EMAIL]")
-
-    spark.createDataFrame(rows2, schema).write.mode("append").parquet(str(src))
-    q2 = strm.stream_document_curation(spark, str(src), str(ckpt), str(out))
-    assert q2.awaitTermination(120)
-    got = spark.read.parquet(str(out))
-    assert got.count() == 2  # doc 1 not re-emitted, doc 3 appended once
-    texts = {r["doc_id"]: r["text"] for r in got.collect()}
-    assert texts[3].endswith("call [PHONE]")
-
-    # batch equivalence on the full source
-    batch = with_pii(
-        spark.read.parquet(str(src)).where(gopher_keep("text"))
-    ).select("doc_id", F.col("redacted").alias("text"), "source")
-    assert sorted(map(tuple, batch.collect())) == sorted(
-        map(tuple, got.select("doc_id", "text", "source").collect())
-    )
-
-
 def test_gopher_keep_predicate_matches_signal_frame(spark):
     """gopher_keep (the reusable predicate) and gopher_quality (the signal
     frame) must agree on every document — they share constants but build
@@ -499,89 +453,6 @@ def test_gopher_keep_predicate_matches_signal_frame(spark):
     }
     via_pred = {r["doc_id"] for r in df.where(gopher_keep("text")).collect()}
     assert via_frame == via_pred == {1}
-
-
-def test_stream_incremental_dedup_store_carries_cross_batch(spark, tmp_path):
-    """Continuous-ingest dedup: the fingerprint STORE (not stream state)
-    must drop re-crawls across micro-batches and checkpoint restarts —
-    drop 1 seeds the store; drop 2's exact re-crawl of doc 1 (new id)
-    vanishes while its new doc survives; the store holds each fp once."""
-    src = tmp_path / "ing_src"
-    out = tmp_path / "ing_out"
-    ckpt = tmp_path / "ing_ckpt"
-    store = tmp_path / "ing_store"
-    src.mkdir()
-
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
-    spark.createDataFrame(
-        [(1, "alpha beta gamma", "en", "s", 1), (2, "delta epsilon", "en", "s", 1)],
-        schema,
-    ).write.mode("append").parquet(str(src))
-
-    q = strm.stream_incremental_dedup(
-        spark, str(src), str(ckpt), str(out), str(store)
-    )
-    assert q.awaitTermination(120)
-    assert {r["doc_id"] for r in spark.read.parquet(str(out)).collect()} == {1, 2}
-
-    spark.createDataFrame(
-        [(100001, "alpha beta gamma", "en", "s", 1),  # re-crawl of doc 1
-         (3, "zeta eta theta", "en", "s", 1)],
-        schema,
-    ).write.mode("append").parquet(str(src))
-    q2 = strm.stream_incremental_dedup(
-        spark, str(src), str(ckpt), str(out), str(store)
-    )
-    assert q2.awaitTermination(120)
-    assert {r["doc_id"] for r in spark.read.parquet(str(out)).collect()} == {1, 2, 3}
-    fps = [r["fp"] for r in spark.read.parquet(str(store)).collect()]
-    assert len(fps) == len(set(fps)) == 3
-
-
-def test_stream_stream_interval_join_matches_batch(spark, wire_dir, tmp_path):
-    """Stream-stream interval join replays to exactly the batch join over
-    the same decode + interval predicate (T-family completeness: the
-    two-stream topology)."""
-    q = strm.stream_telemetry_position_join(
-        spark, wire_dir, str(tmp_path / "ckpt"), query_name="tpj"
-    )
-    assert q.awaitTermination(180), "stream did not finish"
-    got = spark.sql("SELECT * FROM tpj")
-
-    from f1_data_pipeline_spark.ingest import decode as dec
-
-    bronze = read_bronze(spark, f"{wire_dir}/wire.txt")
-    tel = dec.decode_car_telemetry(bronze).select(
-        F.col("driver_number").alias("t_driver"),
-        F.col("timestamp").alias("t_ts"),
-        "speed",
-        "rpm",
-    )
-    pos = dec.decode_car_positions(bronze).select(
-        F.col("driver_number").alias("p_driver"),
-        F.col("timestamp").alias("p_ts"),
-        "x_coord",
-        "y_coord",
-    )
-    want = tel.join(
-        pos,
-        (F.col("t_driver") == F.col("p_driver"))
-        & (F.col("p_ts") > F.col("t_ts") - F.expr("INTERVAL 5 seconds"))
-        & (F.col("p_ts") <= F.col("t_ts")),
-    )
-    assert got.count() == want.count()
-    assert got.count() > 0, "fixture produced no overlapping tel/pos samples"
-    # exact row-set equality on the joined projection
-    key = ["driver_number", "timestamp", "position_ts", "speed", "x_coord"]
-    g = sorted(
-        (str(r.driver_number), str(r.timestamp), str(r.position_ts), r.speed, r.x_coord)
-        for r in got.select(*key).collect()
-    )
-    w = sorted(
-        (str(r.t_driver), str(r.t_ts), str(r.p_ts), r.speed, r.x_coord)
-        for r in want.select("t_driver", "t_ts", "p_ts", "speed", "x_coord").collect()
-    )
-    assert g == w
 
 
 def test_stream_heavy_hitter_candidates_guarantee_across_batches(spark, tmp_path):
@@ -664,76 +535,6 @@ def test_stream_heavy_hitters_query_matches_batch_twin(spark):
     assert [f.name for f in df.schema.fields] == ["event_type", "cnt"]
     cnts = [r["cnt"] for r in rows]
     assert cnts == sorted(cnts, reverse=True) and all(c > 0 for c in cnts)
-
-
-def test_stream_hll_distinct_across_drops_matches_batch_identity(spark, tmp_path):
-    """Streaming HLL distinct over TWO availableNow drops on one
-    checkpoint: the state-store fold across the drop boundary must carry
-    the sketch's accuracy guarantee — estimates agree with a batch build
-    over the union of both drops and with the exact count within the
-    lg_k=12 error envelope. (Bit equality with the batch build is NOT
-    asserted: DataSketches HLL promotes sparse→dense at fold-dependent
-    points, so differently-ordered merges give slightly different — but
-    equally-guaranteed — estimates.) Per-key state is one register
-    buffer, not one entry per distinct value."""
-    import os
-
-    src = tmp_path / "vals"
-    ck = str(tmp_path / "ck")
-    os.makedirs(src)
-
-    def write_drop(name, pairs):
-        with open(src / name, "w") as f:
-            f.write("\n".join(f"{g},{v}" for g, v in pairs) + "\n")
-
-    # drop 1: group a sees 0..599, group b sees 0..199
-    write_drop("d1.txt", [("a", i) for i in range(600)] + [("b", i) for i in range(200)])
-
-    final: dict[str, int] = {}
-
-    def run_drop():
-        raw = spark.readStream.format("text").load(str(src))
-        values = raw.select(
-            F.split("value", ",")[0].alias("g"),
-            F.split("value", ",")[1].cast("long").alias("v"),
-        )
-        out = strm.stream_hll_distinct(values, ["g"], "v", lg_k=12)
-
-        def sink(df, epoch_id):
-            for r in df.select("g", "approx_distinct").collect():
-                final[r["g"]] = r["approx_distinct"]
-
-        q = (
-            out.writeStream.outputMode("complete")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(180)
-
-    run_drop()
-    # drop 2: group a repeats 300..599 (no new) and adds 600..799; b adds 200..499
-    write_drop(
-        "d2.txt",
-        [("a", i) for i in range(300, 800)] + [("b", i) for i in range(200, 500)],
-    )
-    run_drop()
-
-    # batch twin over the union of both drops, same lg_k
-    batch = spark.createDataFrame(
-        [("a", i) for i in range(800)] + [("b", i) for i in range(500)], "g string, v long"
-    )
-    expected = {
-        r["g"]: r["approx_distinct"]
-        for r in batch.groupBy("g")
-        .agg(F.hll_sketch_agg("v", F.lit(12)).alias("sk"))
-        .select("g", F.hll_sketch_estimate("sk").alias("approx_distinct"))
-        .collect()
-    }
-    for g, exact in {"a": 800, "b": 500}.items():
-        assert abs(final[g] - expected[g]) <= 0.05 * exact, (g, final, expected)
-        assert abs(final[g] - exact) <= max(3, 0.05 * exact), (g, final[g])
 
 
 def test_stream_snapshot_upsert_maintains_versioned_table(spark, tmp_path):
@@ -933,29 +734,32 @@ def test_lap_stream_into_snapshot_table_k5_parity(spark, wire_dir, tmp_path):
     assert snapshot_version(spark, tdir) >= 2  # replay recorded as versions
 
 
-def test_stream_to_table_to_downstream_sync_via_change_feed(spark, tmp_path):
+def test_stream_to_table_to_downstream_sync_via_change_feed(
+    spark, tmp_path, monkeypatch
+):
     """The full lakehouse loop: a change stream maintains the primary
-    snapshot table (copy-on-write commits), and a DOWNSTREAM table syncs
-    from it through the offset-acked change-data-feed consumer — initial
-    load, then per-span incremental applies. After every sync the
-    downstream content equals the primary exactly; a crash between feed
-    and ack re-delivers and converges through the idempotent apply."""
+    snapshot table (copy-on-write commits), and a DOWNSTREAM replica syncs
+    from it through the change data feed (``sync_replica_from_changes``:
+    initial load, then per-span incremental applies stamped with the
+    source version in the replica's own commit). After every sync the
+    downstream content equals the primary exactly; a sync that dies
+    before its commit leaves the stamp behind and the next sync redoes
+    the span; a caught-up sync commits nothing."""
     import os
 
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+    import f1_data_pipeline_spark.storage as st
+    from f1_data_pipeline_spark.analytics import sync_replica_from_changes
     from f1_data_pipeline_spark.storage import (
-        snapshot_ack,
-        snapshot_apply_cdc,
-        snapshot_changes_since,
+        snapshot_changes,
         snapshot_read,
-        snapshot_write,
+        snapshot_version,
     )
 
     src = tmp_path / "changes"
     tdir = str(tmp_path / "primary")
     ddir = str(tmp_path / "downstream")
-    odir = str(tmp_path / "offsets")
     os.makedirs(src)
     schema = StructType(
         [StructField("k", LongType()), StructField("v", StringType())]
@@ -968,28 +772,9 @@ def test_stream_to_table_to_downstream_sync_via_change_feed(spark, tmp_path):
         assert q.awaitTermination(180)
 
     def sync_downstream():
-        feed, ver = snapshot_changes_since(spark, tdir, "k", odir)
-        batch = (
-            feed.where(F.col("_change_type") != "update_preimage")
-            .withColumn(
-                "op",
-                F.when(F.col("_change_type") == "delete", F.lit("D")).otherwise(
-                    F.lit("U")
-                ),
-            )
-            .drop("_change_type")
-        )
-        if batch.isEmpty():
-            snapshot_ack(spark, odir, ver)
-            return
-        try:
-            snapshot_read(spark, ddir)
-            snapshot_apply_cdc(spark, ddir, batch, key="k")
-        except FileNotFoundError:
-            snapshot_write(
-                batch.where(F.col("op") != "D").drop("op"), ddir, stats_cols=["k"]
-            )
-        snapshot_ack(spark, odir, ver)
+        rep_ver, src_ver = sync_replica_from_changes(spark, tdir, "k", ddir)
+        assert src_ver == snapshot_version(spark, tdir)
+        return rep_ver
 
     def table(d):
         return {r["k"]: r["v"] for r in snapshot_read(spark, d).collect()}
@@ -1007,24 +792,33 @@ def test_stream_to_table_to_downstream_sync_via_change_feed(spark, tmp_path):
         [(i, f"b-{i}") for i in range(48, 55)], schema
     ).repartitionByRange(4, "k").write.parquet(str(src / "d2"))
     run(str(tmp_path / "ck"))
-    feed, ver = snapshot_changes_since(spark, tdir, "k", odir)
     # incremental, not a re-load: only the changed span flows
+    feed = snapshot_changes(spark, tdir, "k", 1, snapshot_version(spark, tdir))
     assert feed.count() == 2 + 2 + 5  # 2 updates (pre+post) + 5 inserts
     sync_downstream()
     assert table(ddir) == table(tdir)
 
-    # crash between feed and ack: the span re-delivers, apply converges
+    # a sync that dies after reading the feed, before its commit: the
+    # replica keeps its old version and stamp, the next sync redoes it
     spark.createDataFrame(
         [(0, "c-0")], schema
     ).write.parquet(str(src / "d3"))
     run(str(tmp_path / "ck"))
-    feed, ver = snapshot_changes_since(spark, tdir, "k", odir)
-    assert feed.count() > 0  # read but NOT acked — simulated crash
-    sync_downstream()  # re-reads the same span, applies, acks
+    before = snapshot_version(spark, ddir)
+
+    def crash(*a, **k):
+        raise RuntimeError("simulated crash before the replica commit")
+
+    monkeypatch.setattr(st, "snapshot_apply_cdc", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        sync_downstream()
+    monkeypatch.undo()
+    assert snapshot_version(spark, ddir) == before
+    assert table(ddir) != table(tdir)
+    synced = sync_downstream()  # re-reads the same span and applies it
     assert table(ddir) == table(tdir)
-    # caught up: the next sync is a no-op
-    feed, _ = snapshot_changes_since(spark, tdir, "k", odir)
-    assert feed.count() == 0
+    # caught up: the next sync commits nothing
+    assert sync_downstream() == synced == snapshot_version(spark, ddir)
 
 
 def test_stream_snapshot_upsert_bloom_bootstrap_survives_maintenance(spark, tmp_path):
@@ -1077,8 +871,8 @@ def test_stream_snapshot_upsert_bloom_bootstrap_survives_maintenance(spark, tmp_
 def test_stream_snapshot_upsert_mid_stream_schema_evolution(spark, tmp_path):
     """r8 judge ask #5: the realistic CDC schema change — the maintainer
     redeploys with a widened source schema mid-stream — evolves the
-    snapshot table additively from its checkpoint, and a downstream
-    CDF-synced rollup survives the evolution (the feed reads every
+    snapshot table additively from its checkpoint, and the change data
+    feed a downstream consumer reads crosses the evolution (it reads every
     version through its own committed schema)."""
     import os
 
@@ -1090,12 +884,14 @@ def test_stream_snapshot_upsert_mid_stream_schema_evolution(spark, tmp_path):
         StructType,
     )
 
-    from f1_data_pipeline_spark.analytics import sync_rollup_from_changes
-    from f1_data_pipeline_spark.storage import snapshot_read, snapshot_version
+    from f1_data_pipeline_spark.storage import (
+        snapshot_changes,
+        snapshot_read,
+        snapshot_version,
+    )
 
     src = tmp_path / "changes"
     tdir = str(tmp_path / "tbl")
-    roll = str(tmp_path / "rollup")
     ck = str(tmp_path / "ck")
     os.makedirs(src)
 
@@ -1116,7 +912,6 @@ def test_stream_snapshot_upsert_mid_stream_schema_evolution(spark, tmp_path):
     )
     assert q.awaitTermination(180)
     assert snapshot_version(spark, tdir) == 1
-    sync_rollup_from_changes(spark, tdir, "k", roll, ["g"], "x")
 
     # redeploy: same checkpoint, widened schema, evolve_schema on; the
     # new drop carries the added column and updates a key band
@@ -1136,21 +931,21 @@ def test_stream_snapshot_upsert_mid_stream_schema_evolution(spark, tmp_path):
     assert rows[30]["region"] == "r0" and rows[30]["x"] == 300.0
     assert rows[39]["region"] == "r1"
 
-    # the CDF-synced rollup crosses the evolution and equals a recompute
-    sync_rollup_from_changes(spark, tdir, "k", roll, ["g"], "x")
-    from pyspark.sql import functions as F
-
-    expect = {
-        (r["g"], r["n"], round(r["s"], 6))
-        for r in cur.groupBy("g")
-        .agg(F.count("x").alias("n"), F.sum("x").alias("s"))
-        .collect()
-    }
-    got = {
-        (r["g"], r["n"], round(r["s"], 6))
-        for r in snapshot_read(spark, roll).collect()
-    }
-    assert got == expect
+    # the change feed across the evolution: pre-images read through the
+    # v1 schema (region null-filled), post-images and inserts carry it
+    feed = snapshot_changes(spark, tdir, "k", 1, 2)
+    assert "region" in feed.columns
+    by_kind: dict[str, dict] = {}
+    for r in feed.collect():
+        by_kind.setdefault(r["_change_type"], {})[r["k"]] = r
+    assert set(by_kind) == {"update_preimage", "update_postimage", "insert"}
+    assert set(by_kind["update_preimage"]) == set(range(25, 30))
+    assert set(by_kind["update_postimage"]) == set(range(25, 30))
+    assert set(by_kind["insert"]) == set(range(30, 40))
+    assert all(r["region"] is None for r in by_kind["update_preimage"].values())
+    assert by_kind["update_preimage"][27]["x"] == 27.0
+    assert by_kind["update_postimage"][27]["x"] == 270.0
+    assert by_kind["update_postimage"][27]["region"] == "r1"
 
     # without evolve_schema a widened batch against a v1-schema table
     # must fail loudly, not silently drop the column: bootstrap a second

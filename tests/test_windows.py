@@ -134,7 +134,7 @@ def test_ewma_matches_pure_python_replay(spark):
     """applyInPandas EWMA equals the scalar recurrence replayed in pure
     Python per key, and is invariant under input partitioning."""
     from f1_data_pipeline_spark.catalog import load_tables
-    from f1_data_pipeline_spark.operators.windows import ewma
+    from tests.reference_forms import ewma
     from tests.conftest import SF_DIR as _SF
 
     ev = load_tables(spark, _SF).events
@@ -175,7 +175,8 @@ def test_ewma_partitioned_matches_keyed(spark):
     boundaries mid-key (forced tiny batches)."""
     import random
 
-    from f1_data_pipeline_spark.operators.windows import ewma, ewma_partitioned
+    from f1_data_pipeline_spark.operators.windows import ewma_partitioned
+    from tests.reference_forms import ewma
 
     rng = random.Random(7)
     rows = [
@@ -215,7 +216,8 @@ def test_ewma_preserves_input_key_and_order_types(spark):
     paths (r5 advisor finding: the output schema was hardcoded to
     long/timestamp/double, so non-long keys cast-errored or silently
     mangled)."""
-    from f1_data_pipeline_spark.operators.windows import ewma, ewma_partitioned
+    from f1_data_pipeline_spark.operators.windows import ewma_partitioned
+    from tests.reference_forms import ewma
 
     rows = [
         ("alice", 1, 10.0), ("alice", 2, 20.0), ("alice", 3, 30.0),
