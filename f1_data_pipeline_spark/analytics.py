@@ -310,6 +310,9 @@ def sync_replica_from_changes(
             op_col="op",
             stats_cols=[key],
             cluster_files=cluster_files,
+            # the feed's columns follow the source's schema at src_ver: a
+            # column the source gained is added to the replica too
+            evolve_schema=True,
             properties={"source_version": src_ver},
             expected_version=rep_ver,
         )

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from f1_data_pipeline_spark.catalog import Tables
 from f1_data_pipeline_spark.operators.text import tokens
-from f1_data_pipeline_spark.queries import query
+from f1_data_pipeline_spark.queries import _scratch_dir, query
 
 
 def hashed_features(
@@ -331,7 +331,7 @@ def x_quality_clf(t: Tables) -> DataFrame:
     partition-invariance are pinned in tests/test_classify.py."""
     scored = quality_classifier_scores(
         t.documents, F.col("source").isin("src0", "src1"),
-        iters=8, lr=5.0, tol=1e-4,
+        iters=8, lr=5.0, tol=1e-4, scratch_dir=_scratch_dir("clf", t.sf_dir),
     )
     return (
         scored.join(t.documents.select("doc_id", "source"), "doc_id")

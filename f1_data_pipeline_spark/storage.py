@@ -14,6 +14,7 @@ from __future__ import annotations
 import functools
 import os
 import shutil
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -747,13 +748,47 @@ def _manifest_schema(manifest: dict):
     return StructType.fromJson(json.loads(sch)) if sch else None
 
 
-def _manifest_reader(spark: SparkSession, manifest: dict):
-    """A reader honoring the manifest's schema contract: files committed
-    before a schema evolution surface NULL for columns added later, and
-    no multi-file footer-inference pass is paid. Falls back to plain
-    inference only for v1-era records with no recorded schema."""
-    sch = _manifest_schema(manifest)
-    return spark.read.schema(sch) if sch is not None else spark.read
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_LISTING_LOCK = threading.Lock()
+
+
+def _read_files(
+    spark: SparkSession, table_dir: str, paths: list[str], schema: T.StructType | None
+) -> DataFrame:
+    """The parquet scan of manifest-listed files (entry ``paths``,
+    resolved against ``table_dir``) under ``schema``, the read contract:
+    files committed before a schema evolution surface NULL for columns
+    added later, and no footer-inference pass is paid. ``None`` (v1-era
+    records with no recorded schema) falls back to inference.
+
+    Spark lists a relation's files when it resolves it, here, and the
+    scan reuses that listing. Past ``_LISTING_THRESHOLD`` files (default
+    32) it lists them in a distributed job, one task per file, which
+    costs far more than listing them on the driver (SCALE.md "Scan
+    layer"). The manifest already names every file, so the threshold is
+    raised to the file count while this one relation resolves and then
+    restored. Raise and restore happen under one lock, so concurrent
+    engine reads never restore each other's value, and the session's
+    own setting is what it was after every call, a raising one included.
+    """
+    base = table_dir.rstrip("/")
+    uris = [_entry_uri(base, p) for p in paths]
+    reader = spark.read.schema(schema) if schema is not None else spark.read
+    with _LISTING_LOCK:
+        prior = spark.conf.get(_LISTING_THRESHOLD)
+        if len(uris) <= int(prior):
+            return reader.parquet(*uris)
+        was_set = spark._jsparkSession.sessionState().conf().contains(
+            _LISTING_THRESHOLD
+        )
+        spark.conf.set(_LISTING_THRESHOLD, str(len(uris)))
+        try:
+            return reader.parquet(*uris)
+        finally:
+            if was_set:
+                spark.conf.set(_LISTING_THRESHOLD, prior)
+            else:
+                spark.conf.unset(_LISTING_THRESHOLD)
 
 
 def check_expectations(df: DataFrame, expectations: dict[str, str]) -> None:
@@ -980,15 +1015,12 @@ def snapshot_write(
                 # change any type; scanning old files with the new
                 # schema would crash the diff). O(old+new) — the
                 # honest cost of a replace, paid once at write time.
-                old_paths = [
-                    _entry_uri(table_dir.rstrip("/"), x["path"])
-                    for x in prior_manifest["files"]
-                ]
+                old_paths = [x["path"] for x in prior_manifest["files"]]
                 prior_schema = _manifest_schema(prior_manifest)
                 if old_paths and prior_schema is not None:
                     prior_names = {f.name for f in prior_schema.fields}
                     old_live = _apply_dv(
-                        spark.read.schema(prior_schema).parquet(*old_paths),
+                        _read_files(spark, table_dir, old_paths, prior_schema),
                         _dv_read(spark, table_dir, prior_manifest),
                         _dv_deleted(prior_manifest),
                     ).select(
@@ -1683,10 +1715,9 @@ def snapshot_read(
     if not entries:
         empty = _empty_frame(spark, _manifest_schema(manifest))
         return empty.where(_where_expr(where)) if where else empty
-    base = table_dir.rstrip("/")
     try:
-        df = _manifest_reader(spark, manifest).parquet(
-            *[_entry_uri(base, e["path"]) for e in entries]
+        df = _read_files(
+            spark, table_dir, [e["path"] for e in entries], _manifest_schema(manifest)
         )
     except AnalysisException as e:
         raise FileNotFoundError(
@@ -1893,16 +1924,13 @@ def _merge_into_snapshot(
                 upserts = upserts.withColumn(f.name, F.lit(None).cast(f.dataType))
     cols = table_cols + extra
     upserts = upserts.select(cols)
-    base = table_dir.rstrip("/")
     old_dv = _dv_read(spark, table_dir, manifest)
     if touched:
         # read survivors with the COMMITTED schema (carried files cannot
         # hold evolved columns), then null-fill any newly added columns;
         # deletion-vectored rows must not resurrect through the rewrite
         existing = _apply_dv(
-            _manifest_reader(spark, manifest).parquet(
-                *[_entry_uri(base, p) for p in sorted(touched)]
-            ),
+            _read_files(spark, table_dir, sorted(touched), tschema),
             old_dv,
             _dv_deleted(manifest),
         )
@@ -2098,7 +2126,6 @@ def snapshot_merge(
         if isinstance(not_matched_by_source_condition, list)
         else None
     )
-    base = table_dir.rstrip("/")
     touched = _probe_merge_batch(spark, entries, keys, source, "snapshot_merge")
     if when_not_matched_by_source:
         if nbs_triples is not None:
@@ -2125,9 +2152,7 @@ def snapshot_merge(
         # committed read contract: carried/touched files cannot hold
         # evolved columns — null-fill them with the SOURCE's types
         tgt = _apply_dv(
-            _manifest_reader(spark, manifest).parquet(
-                *[_entry_uri(base, p) for p in sorted(touched)]
-            ),
+            _read_files(spark, table_dir, sorted(touched), tschema),
             _dv_read(spark, table_dir, manifest),
             _dv_deleted(manifest),
         )
@@ -2446,7 +2471,6 @@ def _state_diff_sides(
     cols = [f.name for f in schema.fields]
     from_paths = {e["path"] for e in m_from["files"]}
     to_paths = {e["path"] for e in m_to["files"]}
-    base = table_dir.rstrip("/")
     # columns follow m_to's schema, but each side's FILES are read under
     # their OWN manifest schema and projected onto it with try_cast —
     # diffing across a type-changing replace (int v1, string v2, restore
@@ -2461,9 +2485,7 @@ def _state_diff_sides(
             return _empty_frame(spark, schema)
         # explicit schema: pre-evolution files fill missing columns with
         # NULL, and no footer-merging schema inference pass is paid
-        return spark.read.schema(src).parquet(
-            *[_entry_uri(base, p) for p in sorted(paths)]
-        )
+        return _read_files(spark, table_dir, sorted(paths), src)
 
     # each endpoint's LIVE rows honor that endpoint's deletion vector
     # (_metadata only resolves on a real file scan, so skip empty sides)
@@ -2675,13 +2697,10 @@ def snapshot_stats_agg(
                 acc[c] = v_ if acc[c] is None else better(acc[c], v_)
 
     if dirty:
-        base = table_dir.rstrip("/")
         dirty_keys = sorted({_dv_key(e["path"]) for e in dirty})
         dv = _dv_read(spark, table_dir, manifest)
         scanned = _apply_dv(
-            _manifest_reader(spark, manifest).parquet(
-                *[_entry_uri(base, e["path"]) for e in dirty]
-            ),
+            _read_files(spark, table_dir, [e["path"] for e in dirty], schema),
             dv.where(F.col("path").isin(dirty_keys)) if dv is not None else None,
             _dv_deleted(manifest),
         )
@@ -2707,7 +2726,13 @@ def snapshot_stats_agg(
         out.append(F.lit(mins[c]).cast(t).alias(f"min_{c}"))
         out.append(F.lit(maxs[c]).cast(t).alias(f"max_{c}"))
         out.append(F.lit(int(nulls[c])).cast("long").alias(f"nulls_{c}"))
-    return spark.range(1).select(*out)
+    # projected over a one-row Arrow table (a local relation), the
+    # literals fold into a LocalTableScan when the plan is optimized: the
+    # answer compiles no class, where a Range under them compiled two per
+    # call (each call's values are new literals in generated code)
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table({"_": [0]})).select(*out)
 
 
 def snapshot_count(
@@ -2759,12 +2784,12 @@ def snapshot_count(
         else:
             partial.append(e)
     if partial:
-        base = table_dir.rstrip("/")
         dirty_keys = sorted({_dv_key(e["path"]) for e in partial})
         dv = _dv_read(spark, table_dir, manifest)
         scanned = _apply_dv(
-            _manifest_reader(spark, manifest).parquet(
-                *[_entry_uri(base, e["path"]) for e in partial]
+            _read_files(
+                spark, table_dir, [e["path"] for e in partial],
+                _manifest_schema(manifest),
             ),
             dv.where(F.col("path").isin(dirty_keys)) if dv is not None else None,
             _dv_deleted(manifest),
@@ -2832,11 +2857,11 @@ def snapshot_delete(
         return current, 0  # no file can hold a match: nothing to commit
     candidate_paths = {c["path"] for c in candidates}
     carried = [e for e in entries if e["path"] not in candidate_paths]
-    base = table_dir.rstrip("/")
     old_dv = _dv_read(spark, table_dir, manifest)
     if mode == "dv":
-        cand_df = _manifest_reader(spark, manifest).parquet(
-            *[_entry_uri(base, e["path"]) for e in candidates]
+        cand_df = _read_files(
+            spark, table_dir, [e["path"] for e in candidates],
+            _manifest_schema(manifest),
         )
         matches = (
             cand_df.withColumn(
@@ -2879,8 +2904,9 @@ def snapshot_delete(
     # candidate files can differ in width — inferring from one footer
     # could rewrite survivors minus an evolved column
     live = _apply_dv(
-        _manifest_reader(spark, manifest).parquet(
-            *[_entry_uri(base, e["path"]) for e in candidates]
+        _read_files(
+            spark, table_dir, [e["path"] for e in candidates],
+            _manifest_schema(manifest),
         ),
         old_dv,
         _dv_deleted(manifest),
@@ -3601,13 +3627,12 @@ def snapshot_optimize(
         return v, 0, len(entries)
     if stats_cols is None:
         stats_cols = snaplog.tracked_stats(entries)
-    base = table_dir.rstrip("/")
     total_small = sum(e.get("bytes", 0) for e in small)
     n = max(1, math.ceil(total_small / target_file_bytes))
     old_dv = _dv_read(spark, table_dir, manifest)
     packed = _apply_dv(
-        _manifest_reader(spark, manifest).parquet(
-            *[_entry_uri(base, e["path"]) for e in small]
+        _read_files(
+            spark, table_dir, [e["path"] for e in small], _manifest_schema(manifest)
         ),
         old_dv,
         _dv_deleted(manifest),

@@ -229,6 +229,46 @@ def test_misra_gries_guarantee_at_threshold(spark):
     assert "HH" in cands
 
 
+def test_sync_replica_follows_schema_evolution(spark, tmp_path):
+    """A source that gains a column through an evolving upsert is
+    followed: the replica gains it too and stays row-identical, and the
+    next sync is a no-op."""
+    from pyspark.sql import functions as F
+
+    from f1_data_pipeline_spark.analytics import sync_replica_from_changes
+    import f1_data_pipeline_spark.storage as S
+
+    src = str(tmp_path / "src")
+    rep = str(tmp_path / "replica")
+
+    def rows(d):
+        df = S.snapshot_read(spark, d)
+        return df.columns, sorted(tuple(r) for r in df.collect())
+
+    S.snapshot_write(
+        spark.range(10).select(F.col("id").alias("k"), (F.col("id") * 2).alias("x")),
+        src,
+        stats_cols=["k"],
+    )
+    sync_replica_from_changes(spark, src, "k", rep)
+    S.snapshot_upsert(
+        spark,
+        src,
+        spark.range(5, 12).select(
+            F.col("id").alias("k"),
+            (F.col("id") * 3).alias("x"),
+            F.concat(F.lit("r"), F.col("id").cast("string")).alias("region"),
+        ),
+        key="k",
+        evolve_schema=True,
+    )
+    v, sv = sync_replica_from_changes(spark, src, "k", rep)
+    assert sv == S.snapshot_version(spark, src)
+    assert rows(rep) == rows(src)
+    assert rows(rep)[0] == ["k", "x", "region"]
+    assert sync_replica_from_changes(spark, src, "k", rep) == (v, sv)
+
+
 def test_sync_replica_from_changes_exactly_once(spark, tmp_path):
     """CDF-driven table replication: the replica is row-identical to the
     source after inserts, updates, copy-on-write deletes AND

@@ -149,10 +149,11 @@ def test_features_bitwise_match_catalyst_reference(spark):
         assert got[d][1] == want[d][1], d  # exact float equality, all 256
 
 
-def test_composed_scores_on_documents(spark):
+def test_composed_scores_on_documents(spark, tmp_path):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     out = quality_classifier_scores(
-        docs, F.col("source").isin("src0", "src1"), iters=3
+        docs, F.col("source").isin("src0", "src1"), iters=3,
+        scratch_dir=str(tmp_path),
     )
     rows = out.collect()
     assert len(rows) == docs.count()

@@ -19,10 +19,11 @@ ROOT = pathlib.Path(__file__).resolve().parents[1]
 
 def test_scratch_dirs_do_not_outlive_the_process(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    build = all_queries()["x_meta_count"].builder
-    for _ in range(2):
-        build(spark, SF_DIR).collect()
-    assert len(glob.glob(f"{tmp_path}/f1dp_*")) == 1
+    for name, tag in (("x_meta_count", "meta_count"), ("x_quality_clf", "clf")):
+        build = all_queries()[name].builder
+        for _ in range(2):
+            build(spark, SF_DIR).collect()
+        assert len(glob.glob(f"{tmp_path}/f1dp_{tag}_*")) == 1
 
     # a fresh interpreter's scratch dir is gone once it exits
     probe = tmp_path / "exit"

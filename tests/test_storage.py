@@ -4095,3 +4095,199 @@ def test_commit_record_inheritance_matrix(spark, inheritance_bases, tmp_path, ca
         k: (parent.get(k) if v == _PARENT else v) for k, v in want.items()
     }
     assert got == expect
+
+
+# -- manifest-listed reads ----------------------------------------------------
+
+_LISTING = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _jobs(spark, fn):
+    """``(fn(), number of Spark jobs it launched)``, counted through a
+    job group on the calling thread."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def wide_table(spark, tmp_path_factory):
+    """A table past Spark's default parallel-listing threshold (32 files):
+    v1 writes k in [0, 480) over 48 files (stats on k only); v2 upserts
+    k in [470, 490) and adds column w; v3 DV-deletes k < 5. Returns the
+    table dir and each version's rows as {k: (v, w)}."""
+    from f1_data_pipeline_spark.storage import (
+        snapshot_delete,
+        snapshot_upsert,
+        snapshot_write,
+    )
+
+    tdir = str(tmp_path_factory.mktemp("wide") / "tbl")
+    v1 = spark.range(0, 480).select(
+        F.col("id").alias("k"), (F.col("id") * 1.5).alias("v")
+    )
+    snapshot_write(v1.repartitionByRange(48, "k"), tdir, stats_cols=["k"])
+    snapshot_upsert(
+        spark,
+        tdir,
+        spark.range(470, 490).select(
+            F.col("id").alias("k"),
+            (F.col("id") * 2.0).alias("v"),
+            F.concat(F.lit("w"), F.col("id").cast("string")).alias("w"),
+        ),
+        key="k",
+        evolve_schema=True,
+    )
+    snapshot_delete(spark, tdir, [("k", "<", 5)], mode="dv")
+    m1 = {k: (k * 1.5, None) for k in range(480)}
+    m2 = {**m1, **{k: (k * 2.0, f"w{k}") for k in range(470, 490)}}
+    m3 = {k: r for k, r in m2.items() if k >= 5}
+    return tdir, {1: m1, 2: m2, 3: m3}
+
+
+def test_manifest_read_lists_files_on_the_driver(spark, wide_table):
+    """A read of a version past 32 files resolves its file list on the
+    driver: the scan is the only Spark job. An unstatted-column
+    stats_agg runs only its dirty-file aggregate (no listing job, and
+    its one-row answer is local)."""
+    from f1_data_pipeline_spark.snaplog import read_manifest
+    from f1_data_pipeline_spark.storage import snapshot_read, snapshot_stats_agg
+
+    tdir, _ = wide_table
+    assert len(read_manifest(tdir, 1)["files"]) > 32
+    _, n = _jobs(
+        spark,
+        lambda: snapshot_read(spark, tdir, version=1)
+        .write.format("noop").mode("overwrite").save(),
+    )
+    assert n == 1
+    row, n = _jobs(
+        spark, lambda: snapshot_stats_agg(spark, tdir, ["v"], version=1).head()
+    )
+    assert row["max_v"] == 479 * 1.5
+    assert n == 2
+
+
+def test_manifest_read_restores_the_listing_threshold(spark, wide_table):
+    """The session's threshold is what it was after a read, an explicit
+    value and an unset one alike, and after a read that raises."""
+    import os
+
+    from f1_data_pipeline_spark.snaplog import read_manifest
+    from f1_data_pipeline_spark.storage import snapshot_read
+
+    tdir, _ = wide_table
+    jconf = spark._jsparkSession.sessionState().conf()
+    hidden = read_manifest(tdir, 1)["files"][0]["path"]
+    for setting in (None, "8"):
+        if setting is None:
+            spark.conf.unset(_LISTING)
+        else:
+            spark.conf.set(_LISTING, setting)
+        before = spark.conf.get(_LISTING)
+        _, n = _jobs(spark, lambda: snapshot_read(spark, tdir, version=1))
+        assert n == 0  # resolving the relation listed on the driver
+        assert spark.conf.get(_LISTING) == before
+        assert jconf.contains(_LISTING) == (setting is not None)
+        os.rename(f"{tdir}/{hidden}", f"{tdir}/{hidden}.hidden")
+        try:
+            with pytest.raises(FileNotFoundError, match="missing data"):
+                snapshot_read(spark, tdir, version=1)
+        finally:
+            os.rename(f"{tdir}/{hidden}.hidden", f"{tdir}/{hidden}")
+        assert spark.conf.get(_LISTING) == before
+        assert jconf.contains(_LISTING) == (setting is not None)
+    spark.conf.unset(_LISTING)
+
+
+def test_concurrent_manifest_reads_restore_the_listing_threshold(
+    spark, wide_table
+):
+    """Two threads reading at once each list on the driver, and neither
+    restores the other's raised value over the session's own."""
+    import threading
+
+    from f1_data_pipeline_spark.storage import snapshot_read
+
+    tdir, _ = wide_table
+    spark.conf.set(_LISTING, "8")
+    jobs: list[int] = []
+    errors: list[BaseException] = []
+
+    def reader(version):
+        try:
+            for _ in range(4):
+                jobs.append(
+                    _jobs(spark, lambda: snapshot_read(spark, tdir, version=version))[1]
+                )
+        except BaseException as e:  # surfaced on the main thread
+            errors.append(e)
+
+    threads = [threading.Thread(target=reader, args=(v,)) for v in (1, 2)]
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert not errors
+        assert jobs == [0] * 8
+        assert spark.conf.get(_LISTING) == "8"
+    finally:
+        spark.conf.unset(_LISTING)
+
+
+def test_manifest_reads_match_the_table_model(spark, wide_table):
+    """snapshot_read (each version), snapshot_changes and
+    snapshot_stats_agg over a schema-evolved, deletion-vectored table
+    past 32 files equal the rows the writes put there."""
+    from f1_data_pipeline_spark.storage import (
+        snapshot_changes,
+        snapshot_read,
+        snapshot_stats_agg,
+    )
+
+    tdir, model = wide_table
+    for v, rows in model.items():
+        df = snapshot_read(spark, tdir, version=v)
+        assert df.columns == (["k", "v"] if v == 1 else ["k", "v", "w"])
+        got = {r["k"]: (r["v"], r["w"] if v > 1 else None) for r in df.collect()}
+        assert got == rows
+    feed = snapshot_changes(spark, tdir, "k", 1, 3)
+    got = sorted(
+        (r["_change_type"], r["k"], r["v"], r["w"]) for r in feed.collect()
+    )
+    m1, m3 = model[1], model[3]
+    want = sorted(
+        [("delete", k, *m1[k]) for k in range(5)]
+        + [("update_preimage", k, *m1[k]) for k in range(470, 480)]
+        + [("update_postimage", k, *m3[k]) for k in range(470, 480)]
+        + [("insert", k, *m3[k]) for k in range(480, 490)]
+    )
+    assert got == want
+    r = snapshot_stats_agg(spark, tdir, ["k", "v", "w"]).head()
+    ws = [w for _, w in m3.values() if w is not None]
+    assert (r["n_rows"], r["min_k"], r["max_k"], r["nulls_k"]) == (485, 5, 489, 0)
+    assert (r["min_v"], r["max_v"]) == (7.5, 489 * 2.0)
+    assert (r["min_w"], r["max_w"], r["nulls_w"]) == (min(ws), max(ws), 485 - 20)
+
+
+def test_snapshot_stats_agg_compiles_its_answer_once(spark, wide_table, compilations):
+    """The one-row answer is a local relation: a second metadata-only
+    call, with new values, compiles no class."""
+    from f1_data_pipeline_spark.storage import snapshot_stats_agg
+
+    tdir, _ = wide_table
+    snapshot_stats_agg(spark, tdir, ["k"], version=1).collect()
+    c0 = compilations()
+    out = snapshot_stats_agg(spark, tdir, ["k"], version=2)
+    assert out.inputFiles() == []
+    assert out.head()["max_k"] == 489
+    assert compilations() - c0 == 0
