@@ -284,13 +284,13 @@ def sync_replica_from_changes(
     if last == src_ver:
         return rep_ver, src_ver  # caught up: no empty commit
     feed = snapshot_changes(spark, source_dir, key, last, src_ver)
-    # PERSIST the folded span: the merge core evaluates its input three
-    # times (duplicate-key gate, envelope join, staged write), and the
-    # CDF plan above it (endpoint diff + full-outer net + DV delta) is
-    # the expensive part of a sync — re-running it per evaluation
-    # triples the sync cost. The cached set is at most one row per
-    # changed key (disk-spillable), exactly the working set a replicator
-    # must hold anyway.
+    # PERSIST the folded span: the keyed rewrite evaluates its input
+    # twice (the probe job — duplicate-key gate and envelope join — and
+    # the staging write), and the CDF plan above it (endpoint diff +
+    # full-outer net + DV delta) is the expensive part of a sync —
+    # re-running it per evaluation doubles the sync cost. The cached set
+    # is at most one row per changed key (disk-spillable), exactly the
+    # working set a replicator must hold anyway.
     ops = (
         feed.where(F.col("_change_type") != "update_preimage")
         .withColumn(

@@ -119,16 +119,6 @@ def _norm_dir(path: str) -> str:
     return path.rstrip("/")
 
 
-def _abs_entry(table_dir: str, path: str) -> str:
-    # shallow-clone manifests hold ABSOLUTE entry paths; regular entries
-    # are table-relative (same resolution rule as storage._entry_uri).
-    # Either form is handed to pq.read_table verbatim — it resolves
-    # plain paths, file: URIs and object-store URIs alike.
-    if path.startswith("/") or "://" in path or path.startswith("file:"):
-        return path
-    return f"{table_dir}/{path}"
-
-
 class _FeedFile(InputPartition):
     """One appended (or initial-snapshot) data file; ``dv_dir`` names the
     version's deletion-vector dataset when positions must be subtracted.
@@ -369,7 +359,7 @@ def _live_file_partitions(
         )
     dv = m.get("dv")
     dv_files = (dv or {}).get("files", {})
-    dv_dir = _abs_entry(table_dir, dv["dir"]) if dv else None
+    dv_dir = snaplog.entry_uri(table_dir, dv["dir"]) if dv else None
     parts: list[_FeedFile] = []
     for entry in m["files"]:
         if not entry.get("rows", 0):
@@ -379,7 +369,7 @@ def _live_file_partitions(
         key = _dv_key(entry["path"])
         parts.append(
             _FeedFile(
-                _abs_entry(table_dir, entry["path"]),
+                snaplog.entry_uri(table_dir, entry["path"]),
                 dv_dir if dv_files.get(key) else None,
                 key,
                 version=version,
@@ -433,52 +423,6 @@ def _parse_ts_option(opt, name: str) -> float:
     if ts.tzinfo is None:
         ts = ts.replace(tzinfo=datetime.timezone.utc)
     return ts.timestamp()
-
-
-def _version_bound_asof(
-    table_dir: str, ts: float, after: bool, latest: int, ck: dict | None
-) -> int:
-    """Version bounds from commit times, checkpoint-accelerated and
-    skew-clamped exactly like ``storage.snapshot_version_asof`` (each
-    version's EFFECTIVE time is the running max of all earlier stamps, so
-    versions never travel back in time). ``after=True`` → the FIRST
-    version committed at-or-after ``ts`` (latest+1 when every commit
-    predates it — start-at-next-commit, the Delta startingTimestamp
-    shape); ``after=False`` → the LAST version committed at-or-before
-    ``ts`` (0 when the first commit is later) — an exactly-at-``ts``
-    stamp belongs to BOTH bounds, so the stop test is ``>=`` for after
-    and strict ``>`` for before (``snapshot_version_asof``'s contract; a
-    shared ``>=`` silently dropped the equal-stamped commit from
-    ``endingTimestamp``). Pre-stamp-era records count as infinitely old;
-    retention-expired manifests in the tail are skipped, as there.
-    ``latest`` and ``ck`` (``snaplog.read_checkpoint``) come from the
-    caller so a two-bound resolution parses the compacted log once."""
-    eff = float("-inf")
-    best_before = 0
-
-    def _past(v: float) -> bool:
-        return v >= ts if after else v > ts
-
-    start = 1
-    if ck is not None:
-        for rec in ck["log"]:
-            if rec.get("ts") is not None:
-                eff = max(eff, float(rec["ts"]))
-            if _past(eff):
-                return int(rec["version"]) if after else best_before
-            best_before = int(rec["version"])
-        start = int(ck["version"]) + 1
-    for v in range(start, latest + 1):
-        try:
-            m = snaplog.read_manifest(table_dir, v)
-        except FileNotFoundError:
-            continue  # retention-expired record: resolve past the gap
-        if m.get("ts") is not None:
-            eff = max(eff, float(m["ts"]))
-        if _past(eff):
-            return v if after else best_before
-        best_before = v
-    return (latest + 1) if after else best_before
 
 
 def _replay_span_partitions(
@@ -537,7 +481,7 @@ def _replay_span_partitions(
                 if entry.get("rows", 0):
                     parts.append(
                         _FeedFile(
-                            _abs_entry(table_dir, entry["path"]),
+                            snaplog.entry_uri(table_dir, entry["path"]),
                             version=v,
                             change_file=True,
                         )
@@ -555,9 +499,9 @@ def _replay_span_partitions(
             cur_counts = (cur_dv or {}).get("files", {})
             prev_counts = (prev_dv or {}).get("files", {})
             by_key = {_dv_key(x["path"]): x for x in m["files"]}
-            cur_dir = _abs_entry(table_dir, cur_dv["dir"]) if cur_dv else None
+            cur_dir = snaplog.entry_uri(table_dir, cur_dv["dir"]) if cur_dv else None
             prev_dir = (
-                _abs_entry(table_dir, prev_dv["dir"]) if prev_dv else None
+                snaplog.entry_uri(table_dir, prev_dv["dir"]) if prev_dv else None
             )
             for key in sorted(set(cur_counts) | set(prev_counts)):
                 if (
@@ -579,7 +523,7 @@ def _replay_span_partitions(
                     continue
                 parts.append(
                     _FeedFile(
-                        _abs_entry(table_dir, by_key[key]["path"]),
+                        snaplog.entry_uri(table_dir, by_key[key]["path"]),
                         cur_dir,
                         key,
                         version=v,
@@ -594,7 +538,7 @@ def _replay_span_partitions(
                 ):
                     parts.append(
                         _FeedFile(
-                            _abs_entry(table_dir, entry["path"]),
+                            snaplog.entry_uri(table_dir, entry["path"]),
                             version=v,
                         )
                     )
@@ -615,7 +559,7 @@ def _replay_span_partitions(
                 exact and _entry_prunable(entry, exact)
             ):
                 parts.append(
-                    _FeedFile(_abs_entry(table_dir, entry["path"]), version=v)
+                    _FeedFile(snaplog.entry_uri(table_dir, entry["path"]), version=v)
                 )
     return parts
 
@@ -903,7 +847,7 @@ class SnapshotFeedChangesReader(DataSourceReader):
         s = self._start
         if s is None:
             # first commit at-or-after the instant (Delta startingTimestamp)
-            s = _version_bound_asof(
+            s = snaplog.version_asof(
                 self._dir, self._start_ts, after=True, latest=latest, ck=ck
             )
         e = self._end
@@ -912,7 +856,7 @@ class SnapshotFeedChangesReader(DataSourceReader):
                 latest
                 if self._end_ts is None
                 # last commit at-or-before the instant (TIMESTAMP AS OF)
-                else _version_bound_asof(
+                else snaplog.version_asof(
                     self._dir, self._end_ts, after=False, latest=latest, ck=ck
                 )
             )
@@ -1165,7 +1109,7 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
             # the Delta startingTimestamp shape: replay every commit made
             # at-or-after the instant; all-older tables start at the next
             # commit (latest+1 is valid for startingVersion too)
-            v = _version_bound_asof(
+            v = snaplog.version_asof(
                 self._dir,
                 self._starting_ts,
                 after=True,

@@ -1701,7 +1701,7 @@ def x_cdf_timestamps(t: Tables) -> DataFrame:
     slice as v1, append v2, DV-delete a band (v3), append v4 — then read
     the changeFeed with ``startingTimestamp`` set EXACTLY EQUAL to v2's
     commit stamp and ``endingTimestamp`` exactly equal to v3's. The
-    boundary contract (``_version_bound_asof``: ``>=`` for the starting
+    boundary contract (``snaplog.version_asof``: ``>=`` for the starting
     bound, strict ``>`` for the ending bound — an exactly-at-stamp
     commit belongs to BOTH bounds) is what the hash verifies: a wrong
     ``>`` on the start drops v2's inserts, a wrong ``>=`` on the end

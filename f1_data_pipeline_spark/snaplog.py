@@ -103,6 +103,16 @@ def resolve(path: str):
     return pafs.FileSystem.from_uri(path)
 
 
+def entry_uri(table_dir: str, path: str) -> str:
+    """Resolve a manifest entry path (a data file, a DV dir): relative
+    entries live under the table dir; absolute ones (a URI, a ``file:``
+    URI with a single slash, or /-rooted — how a SHALLOW CLONE references
+    its source's files) pass through untouched."""
+    if "://" in path or path.startswith(("/", "file:")):
+        return path
+    return f"{table_dir.rstrip('/')}/{path}"
+
+
 def _found(f, p: str) -> bool:
     from pyarrow import fs as pafs
 
@@ -453,6 +463,54 @@ def read_checkpoint(table_dir: str) -> dict | None:
         return ck
     except Exception:
         return None
+
+
+def version_asof(
+    table_dir: str, ts: float, after: bool, latest: int, ck: dict | None
+) -> int:
+    """The version bound of unix time ``ts`` from commit stamps.
+    ``after=True`` → the FIRST version committed at-or-after ``ts``
+    (``latest + 1`` when every commit predates it — the Delta
+    startingTimestamp shape); ``after=False`` → the LAST version
+    committed at-or-before ``ts`` (0 when the first commit is later —
+    TIMESTAMP AS OF). An exactly-at-``ts`` stamp belongs to BOTH bounds,
+    so the stop test is ``>=`` for after and strict ``>`` for before.
+
+    Clock skew between writers is handled the way Delta handles
+    non-monotonic commit times: each version's EFFECTIVE time is the
+    running max of all earlier stamps, so versions never travel back in
+    time, and the scan stops at the first effective time past ``ts``
+    (O(answer) manifest reads for an old bound). Pre-stamp-era records
+    count as infinitely old; retention-expired manifests in the tail are
+    skipped. ``latest`` and ``ck`` (``read_checkpoint``) come from the
+    caller so a two-bound resolution parses the compacted log once; the
+    compacted log is walked first — tiny records, zero manifest reads."""
+    eff = float("-inf")
+    best_before = 0
+
+    def _past(v: float) -> bool:
+        return v >= ts if after else v > ts
+
+    start = 1
+    if ck is not None:
+        for rec in ck["log"]:
+            if rec.get("ts") is not None:
+                eff = max(eff, float(rec["ts"]))
+            if _past(eff):
+                return int(rec["version"]) if after else best_before
+            best_before = int(rec["version"])
+        start = int(ck["version"]) + 1
+    for v in range(start, latest + 1):
+        try:
+            m = read_manifest(table_dir, v)
+        except FileNotFoundError:
+            continue  # retention-expired record: resolve past the gap
+        if m.get("ts") is not None:
+            eff = max(eff, float(m["ts"]))
+        if _past(eff):
+            return v if after else best_before
+        best_before = v
+    return (latest + 1) if after else best_before
 
 
 # ---------------------------------------------------------------------------

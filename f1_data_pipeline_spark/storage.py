@@ -211,42 +211,16 @@ def snapshot_version_asof(spark: SparkSession, table_dir: str, ts: float) -> int
     time, so this is a pure manifest scan. Raises if the table's first
     commit is later than ``ts``.
 
-    Clock skew between writers is handled the way Delta handles
-    non-monotonic commit times — each version's EFFECTIVE time is
-    clamped to the running maximum of all earlier commits, so versions
-    never travel back in time and the answer is always a version that
-    was genuinely current at ``ts``. Under clamping the qualifying set
-    is exactly every version BEFORE the first commit stamped after
-    ``ts``, so the scan stops at that first late record instead of
-    reading every manifest (O(answer) reads for an old as-of).
-    Pre-stamp-era records (no ``ts`` field) are treated as infinitely
-    old: they never terminate the scan and any as-of reaches past them.
-
-    With a manifest-log checkpoint the scan walks the compacted
-    (version, ts) log first — tiny records, zero manifest reads — and
-    touches real manifests only for the post-checkpoint tail."""
-    best = 0
-    ck = snaplog.read_checkpoint(table_dir)
-    start, stopped = 1, False
-    if ck is not None:
-        for rec in ck["log"]:
-            if rec.get("ts") is not None and float(rec["ts"]) > ts:
-                stopped = True
-                break
-            best = int(rec["version"])
-        start = int(ck["version"]) + 1
-    if not stopped:
-        for v in range(start, snapshot_version(spark, table_dir) + 1):
-            try:
-                m = snaplog.read_manifest(table_dir, v)
-            except FileNotFoundError:
-                continue
-            if m.get("ts") is not None and float(m["ts"]) > ts:
-                # clamped times are monotone: every later version's
-                # effective time is at least this one's — nothing further
-                # can qualify
-                break
-            best = v
+    The scan is ``snaplog.version_asof``, shared with the
+    ``snapshotfeed`` timestamp bounds: commit times are clamped to the
+    running max (writer clock skew never resolves an as-of to a version
+    that was not current at ``ts``) and the scan stops at the first late
+    commit."""
+    best = snaplog.version_asof(
+        table_dir, ts, after=False,
+        latest=snapshot_version(spark, table_dir),
+        ck=snaplog.read_checkpoint(table_dir),
+    )
     if best < 1:
         raise FileNotFoundError(
             f"no snapshot committed at or before ts={ts} in {table_dir}"
@@ -365,7 +339,6 @@ def _stage(
     constraints: dict | None = None,
     cluster_by: list[str] | None = None,
     cluster_files: int | None = None,
-    observed: bool = False,
 ) -> tuple[int, str]:
     """Stage ``df`` as the next version — the one staging sequence of
     every writer that stages rows: CLAIM and write ``v=N``
@@ -391,9 +364,8 @@ def _stage(
 
     ``cluster_by`` range-clusters the staged rows (into ``cluster_files``
     files when given). repartitionByRange samples its input (a second
-    evaluation), so a frame carrying Observation counters — the
-    constraints', or the caller's own when ``observed`` — is persisted
-    first to keep them single-fire."""
+    evaluation), so a frame carrying the constraints' Observation
+    counters is persisted first to keep them single-fire."""
     from pyspark.sql import Observation
 
     names = sorted(constraints or {})
@@ -408,7 +380,7 @@ def _stage(
         ])
     cached = None
     if cluster_by:
-        if obs is not None or observed:
+        if obs is not None:
             cached = df = df.persist()
         df = (
             df.repartitionByRange(cluster_files, *cluster_by)
@@ -739,7 +711,7 @@ def _staged_entries(
 def _manifest_schema(manifest: dict):
     """The committed read-contract schema as a StructType (None for
     pre-schema v1-era records). Single parse point for every consumer —
-    snapshot_read, the merge core, the change feed, delete, optimize."""
+    snapshot_read, the keyed rewrite, the change feed, delete, optimize."""
     import json
 
     from pyspark.sql.types import StructType
@@ -771,8 +743,7 @@ def _read_files(
     engine reads never restore each other's value, and the session's
     own setting is what it was after every call, a raising one included.
     """
-    base = table_dir.rstrip("/")
-    uris = [_entry_uri(base, p) for p in paths]
+    uris = [snaplog.entry_uri(table_dir, p) for p in paths]
     reader = spark.read.schema(schema) if schema is not None else spark.read
     with _LISTING_LOCK:
         prior = spark.conf.get(_LISTING_THRESHOLD)
@@ -1552,13 +1523,6 @@ def _where_expr(where: list[tuple], qualify: str | None = None):
 _DV_RELPATH_RE = r"(v=\d+/[^/]+)$"
 
 
-def _entry_uri(base: str, path: str) -> str:
-    """Resolve a manifest entry path: relative entries live under the
-    table dir; absolute entries (URI or /-rooted — how a SHALLOW CLONE
-    references its source's files) pass through untouched."""
-    return path if "://" in path or path.startswith("/") else f"{base}/{path}"
-
-
 def _dv_key(entry_path: str) -> str:
     """A manifest entry path's deletion-vector key: the last two path
     segments ("v=K/part-….parquet") — the same normalization
@@ -1586,7 +1550,7 @@ def _dv_read(spark: SparkSession, table_dir: str, manifest: dict) -> DataFrame |
     if not dv:
         return None
     return spark.read.schema(_DV_SCHEMA).parquet(
-        _entry_uri(table_dir.rstrip("/"), dv["dir"])
+        snaplog.entry_uri(table_dir, dv["dir"])
     )
 
 
@@ -1763,16 +1727,17 @@ def snapshot_upsert(
     the reference's K4 shape. ``"coalesce"`` merges column-wise: a NULL
     in the update keeps the stored value (K5, ``COALESCE(EXCLUDED.c,
     t.c)`` — the partial-update semantics the reference's lap merge
-    uses); cost is one extra equi-join on rows of the touched files only.
+    uses).
 
-    The Delta-MERGE cost model, not the full-rewrite one: files whose
+    The upsert is ``snapshot_merge`` with its default clauses (matched
+    rows updated, unmatched rows inserted; ``coalesce`` updates with
+    ``coalesce(s.c, t.c)``), so it has MERGE's cost model: files whose
     ``key`` min/max envelope cannot contain any update key are CARRIED
     into the new version's manifest by reference — their bytes are never
     read, rewritten, or moved, and their stats entries come along
-    verbatim. Only files that might hold a matching key are read,
-    anti-joined against the update keys, and re-staged together with the
-    updates. On a 100 TB table a keyed CDC batch therefore costs
-    O(touched files + updates), not O(table).
+    verbatim. Only files that might hold a matching key are read, joined
+    with the updates, and re-staged. On a 100 TB table a keyed CDC batch
+    therefore costs O(touched files + updates), not O(table).
 
     Touched-file selection is itself a Spark job — the (KB-scale) manifest
     envelope table broadcast against the DISTINCT update keys — so update
@@ -1793,22 +1758,27 @@ def snapshot_upsert(
     the columns in order. Everything below reads "key" as "key tuple".
 
     ``cluster_files`` range-partitions the staged (rewritten) rows by
-    ``key`` into that many files. Without it the staged files inherit
-    whatever layout the update batch arrived in — after a hash shuffle
-    that means every file's key envelope spans the whole range and
-    NOTHING can be skipped next round. Min/max skipping is only as good
-    as the physical clustering under it (the reason Delta/Iceberg pair
-    stats with clustering); any table maintained by repeated upserts
-    should cluster."""
+    ``key`` into that many files. Without it the staged files take the
+    join's output partitioning, so a file's key envelope may span the
+    whole touched range. Min/max skipping is only as good as the
+    physical clustering under it (the reason Delta/Iceberg pair stats
+    with clustering); any table maintained by repeated upserts should
+    cluster."""
     if expectations:
         check_expectations(updates, expectations)
-    keys = [key] if isinstance(key, str) else list(key)
-    delete_keys = updates.select(*keys).limit(0)
-    return _merge_into_snapshot(
-        spark, table_dir, updates, delete_keys, key, stats_cols, cluster_files,
-        what="snapshot_upsert", merge_mode=merge_mode, evolve_schema=evolve_schema,
-        properties=properties, expected_version=expected_version,
+    if merge_mode not in ("replace", "coalesce"):
+        raise ValueError(f"snapshot_upsert: unknown merge_mode {merge_mode!r}")
+    update_set = (
+        {c: f"coalesce(s.`{c}`, t.`{c}`)" for c in updates.columns}
+        if merge_mode == "coalesce"
+        else None
     )
+    return _keyed_rewrite(
+        spark, table_dir, updates, key, "snapshot_upsert", "upsert",
+        update_set=update_set, exact_columns=True, stats_cols=stats_cols,
+        cluster_files=cluster_files, evolve_schema=evolve_schema,
+        properties=properties, expected_version=expected_version,
+    )[0]
 
 
 def snapshot_apply_cdc(
@@ -1834,173 +1804,27 @@ def snapshot_apply_cdc(
     ``merge.cdc_apply`` for batch logs, or the per-batch ``max_by`` fold
     the streaming maintainer does; this function then applies upserts
     AND deletes against one shared touched-file set, so a mixed batch
-    still costs O(touched files + batch), never two table passes."""
+    still costs O(touched files + batch), never two table passes.
+
+    It runs ``snapshot_merge``'s plan with the CDC clause set: a matched
+    tombstone deletes and any other matched row updates; an unmatched
+    tombstone is skipped and any other unmatched row inserts. A batch
+    that changes no row (say, tombstones of keys the table does not
+    hold) commits nothing and returns the current version."""
     # NULL op must not make a row vanish from BOTH sides (isin is NULL on
     # NULL input): anything not provably a delete is an upsert
     is_delete = F.coalesce(F.col(op_col).isin(*delete_ops), F.lit(False))
-    ups = changes.where(~is_delete).drop(op_col)
     if expectations:
         # gate the UPSERT rows only: a delete tombstone carries no
         # payload for a CHECK constraint to hold over
-        check_expectations(ups, expectations)
-    keys = [key] if isinstance(key, str) else list(key)
-    delete_keys = changes.where(is_delete).select(*keys)
-    return _merge_into_snapshot(
-        spark, table_dir, ups, delete_keys, key, stats_cols, cluster_files,
-        what="snapshot_apply_cdc", evolve_schema=evolve_schema,
-        properties=properties, expected_version=expected_version,
-    )
-
-
-def _merge_into_snapshot(
-    spark: SparkSession,
-    table_dir: str,
-    upserts: DataFrame,
-    delete_keys: DataFrame,
-    key: str | list[str],
-    stats_cols: list[str] | None,
-    cluster_files: int | None,
-    what: str,
-    merge_mode: str = "replace",
-    evolve_schema: bool = False,
-    properties: dict | None = None,
-    expected_version: int | None = None,
-) -> int:
-    """Shared copy-on-write merge core for ``snapshot_upsert`` (no
-    deletes) and ``snapshot_apply_cdc`` (upserts + tombstones): one
-    envelope join selects the files any change key could live in; those
-    files' rows are anti-joined against ALL change keys and re-staged
-    together with the upserts; everything else is carried by reference."""
-    keys = [key] if isinstance(key, str) else list(key)
-    current = snapshot_version(spark, table_dir)
-    if current < 1:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    if expected_version is not None and current != expected_version:
-        raise SnapshotConflictError(
-            f"{what}: table {table_dir} is at version {current} but the "
-            f"change batch was derived from version {expected_version} — "
-            f"a concurrent writer committed in between; re-read and re-derive"
-        )
-    manifest = snaplog.read_manifest(table_dir, current)
-    entries = manifest.get("files")
-    if entries is None or any(
-        "stats" not in e or any(k not in e["stats"] for k in keys)
-        for e in entries
-        if e.get("rows", 0) > 0
-    ):
-        raise ValueError(
-            f"{what} needs per-file stats for {keys!r} in the current "
-            f"manifest — rewrite the table once with "
-            f"snapshot_write(df, table_dir, stats_cols={keys!r} + ...)"
-        )
-    if stats_cols is None:
-        stats_cols = snaplog.tracked_stats(entries) or list(keys)
-
-    all_keys = upserts.select(*keys).unionByName(delete_keys.select(*keys))
-    touched = _probe_merge_batch(spark, entries, keys, all_keys, what)
-    carried = [e for e in entries if e["path"] not in touched]
-
-    if merge_mode not in ("replace", "coalesce"):
-        raise ValueError(f"{what}: unknown merge_mode {merge_mode!r}")
-    # column reconciliation against the committed table schema: a batch
-    # with extra columns EVOLVES the schema (old rows read as NULL) and a
-    # batch with missing columns null-fills them — both only under
-    # evolve_schema=True; otherwise mismatches raise instead of silently
-    # dropping table columns from the rewritten files
-    tschema = _manifest_schema(manifest)
-    table_cols = [f.name for f in tschema.fields] if tschema else upserts.columns
-    extra = [c for c in upserts.columns if c not in table_cols]
-    missing = [c for c in table_cols if c not in upserts.columns]
-    if (extra or missing) and not evolve_schema:
-        raise ValueError(
-            f"{what}: change batch columns {sorted(upserts.columns)} do not "
-            f"match the table schema {sorted(table_cols)} "
-            f"(extra {extra}, missing {missing}) — pass evolve_schema=True "
-            f"to add new columns / null-fill omitted ones"
-        )
-    if missing and tschema is not None:
-        for f in tschema.fields:
-            if f.name in missing:
-                upserts = upserts.withColumn(f.name, F.lit(None).cast(f.dataType))
-    cols = table_cols + extra
-    upserts = upserts.select(cols)
-    old_dv = _dv_read(spark, table_dir, manifest)
-    if touched:
-        # read survivors with the COMMITTED schema (carried files cannot
-        # hold evolved columns), then null-fill any newly added columns;
-        # deletion-vectored rows must not resurrect through the rewrite
-        existing = _apply_dv(
-            _read_files(spark, table_dir, sorted(touched), tschema),
-            old_dv,
-            _dv_deleted(manifest),
-        )
-        for c in extra:
-            existing = existing.withColumn(
-                c, F.lit(None).cast(upserts.schema[c].dataType)
-            )
-        survivors = existing.select(cols).join(all_keys, keys, "left_anti")
-        if merge_mode == "coalesce":
-            # column-wise K5 merge: matched rows keep stored values where
-            # the update is NULL; update keys absent from the touched
-            # files are pure inserts (the envelopes prove they exist
-            # nowhere else)
-            val_cols = [c for c in cols if c not in keys]
-            renamed = upserts.select(
-                *keys, *[F.col(c).alias(f"__new_{c}") for c in val_cols]
-            )
-            matched = (
-                existing.select(cols)
-                .join(renamed, keys)
-                .select(
-                    *keys,
-                    *[
-                        F.coalesce(F.col(f"__new_{c}"), F.col(c)).alias(c)
-                        for c in val_cols
-                    ],
-                )
-                .select(cols)
-            )
-            inserts = upserts.join(
-                existing.select(*keys), keys, "left_anti"
-            )
-            staged_df = survivors.unionByName(matched).unionByName(inserts)
-        else:
-            staged_df = survivors.unionByName(upserts)
-    elif upserts.isEmpty():
-        return current  # pure delete of absent keys: nothing to commit
-    else:
-        staged_df = upserts
-    version, vdir = _stage(
-        staged_df, table_dir, what, current, manifest.get("constraints"),
-        keys if cluster_files else None, cluster_files,
-    )
-    staged = _staged_entries(
-        spark, table_dir, version, stats_cols, manifest.get("bloom_spec")
-    )
-    dv = _carried_dv(spark, table_dir, version, old_dv, carried)
-    changes = None
-    if manifest.get("cdf") and touched:
-        # materialize this rewrite's CDC rows so changeFeed consumers
-        # replay it instead of refusing: old = the touched files' live
-        # rows (already DV-applied above), new = the staged files just
-        # written — the diff never scans carried files. Explicit schema:
-        # a rewrite that deletes every touched row stages ZERO data
-        # files, and schema inference over an empty dir would fail
-        changes = _write_change_files(
-            spark, table_dir, version,
-            existing.select(cols),
-            spark.read.schema(staged_df.schema).parquet(vdir).select(cols),
-            keys, cols,
-        )
-    # an evolved batch commits the MERGED schema (readers null-fill
-    # carried files); otherwise the committed schema carries forward
-    snaplog.commit(table_dir, version, snaplog.next_record(
-        manifest, version,
-        {"snapshot_upsert": "upsert", "snapshot_apply_cdc": "cdc"}.get(what, what),
-        staged + carried, properties=properties,
-        staged_schema=staged_df.schema.json(), dv=dv, changes=changes,
-    ))
-    return version
+        check_expectations(changes.where(~is_delete).drop(op_col), expectations)
+    return _keyed_rewrite(
+        spark, table_dir, changes.withColumn(op_col, is_delete), key,
+        "snapshot_apply_cdc", "cdc", delete_col=op_col, exact_columns=True,
+        stats_cols=stats_cols, cluster_files=cluster_files,
+        evolve_schema=evolve_schema, properties=properties,
+        expected_version=expected_version,
+    )[0]
 
 
 def snapshot_merge(
@@ -2063,20 +1887,15 @@ def snapshot_merge(
     key column's [min,max], and the cardinality rule applies to the
     tuple.
 
-    Mechanics shared with the upsert core: one full-outer join on the
-    touched files' live rows (deletion vectors applied — DV'd rows can
-    neither match nor resurrect), row counts observed inside the staging
-    write (``Observation`` — no second pass), rewritten files' DV entries
-    purged / carried files' entries ride along, ``expected_version`` CAS
-    and ``properties`` stamp as on ``snapshot_write``. Duplicate or NULL
-    source keys raise (a target row must match at most one source row —
-    the ANSI MERGE cardinality rule).
+    This is the one keyed rewrite (``_keyed_rewrite``); ``snapshot_upsert``
+    and ``snapshot_apply_cdc`` are clause sets over it. A merge that
+    updates, deletes and inserts nothing commits nothing. Duplicate or
+    NULL source keys raise (a target row must match at most one source
+    row — the ANSI MERGE cardinality rule).
 
     Re-expresses (and generalizes) the reference's ON CONFLICT upsert
     loaders (reference loader.py:165-193, supabase_loader.py:140-172) as
     a declarative lakehouse commit."""
-    from pyspark.sql import Observation
-
     if when_matched not in ("update", "delete", None):
         raise ValueError(f"snapshot_merge: when_matched={when_matched!r}")
     if when_not_matched not in ("insert", None):
@@ -2086,15 +1905,72 @@ def snapshot_merge(
             f"snapshot_merge: when_not_matched_by_source="
             f"{when_not_matched_by_source!r}"
         )
+    return _keyed_rewrite(
+        spark, table_dir, source, key, "snapshot_merge", "merge",
+        when_matched=when_matched, matched_condition=matched_condition,
+        update_set=update_set, when_not_matched=when_not_matched,
+        not_matched_condition=not_matched_condition,
+        when_not_matched_by_source=when_not_matched_by_source,
+        not_matched_by_source_condition=not_matched_by_source_condition,
+        stats_cols=stats_cols, cluster_files=cluster_files,
+        properties=properties, expected_version=expected_version,
+        evolve_schema=evolve_schema,
+    )
+
+
+def _keyed_rewrite(
+    spark: SparkSession,
+    table_dir: str,
+    source: DataFrame,
+    key: str | list[str],
+    what: str,
+    op: str,
+    *,
+    when_matched: str | None = "update",
+    matched_condition: str | None = None,
+    update_set: dict[str, str] | None = None,
+    when_not_matched: str | None = "insert",
+    not_matched_condition: str | None = None,
+    when_not_matched_by_source: str | None = None,
+    not_matched_by_source_condition: str | list[tuple] | None = None,
+    delete_col: str | None = None,
+    exact_columns: bool = False,
+    stats_cols: list[str] | None = None,
+    cluster_files: int | None = None,
+    properties: dict | None = None,
+    expected_version: int | None = None,
+    evolve_schema: bool = False,
+) -> tuple[int, dict]:
+    """The one keyed copy-on-write rewrite of the merge family, with
+    ``snapshot_merge``'s clauses (see there), committed under the op
+    label ``op`` (history and the snapshotfeed change feed read it) and
+    raising as ``what``; returns ``(version, metrics)``. The plan: one
+    probe job (source-key cardinality and the envelope-touched files),
+    the touched files' live rows (deletion vectors applied — DV'd rows
+    can neither match nor resurrect), ONE full-outer join with the
+    source tagged per row by clause outcome, the outcome counts observed
+    inside the staging write (no second pass), staged entries, the
+    carried files' DV entries, the change files on a ``cdf`` table, and
+    the commit. A call whose outcome updates, deletes and inserts
+    nothing removes its stage and returns the current version.
+
+    ``delete_col`` (CDC apply) names a boolean source column that is
+    not stored: a matched row where it is true is deleted and an
+    unmatched one is skipped, before the other clauses apply.
+    ``exact_columns`` (upsert, CDC apply) also refuses a source that
+    omits a table column unless ``evolve_schema``."""
+    from pyspark.sql import Observation
+
+    keys = [key] if isinstance(key, str) else list(key)
     current = snapshot_version(spark, table_dir)
     if current < 1:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
     if expected_version is not None and current != expected_version:
         raise SnapshotConflictError(
-            f"snapshot_merge: table {table_dir} is at version {current}, "
-            f"caller expected {expected_version}"
+            f"{what}: table {table_dir} is at version {current} but the "
+            f"change batch was derived from version {expected_version} — "
+            f"a concurrent writer committed in between; re-read and re-derive"
         )
-    keys = [key] if isinstance(key, str) else list(key)
     manifest = snaplog.read_manifest(table_dir, current)
     entries = manifest.get("files")
     if entries is None or any(
@@ -2103,21 +1979,32 @@ def snapshot_merge(
         if e.get("rows", 0) > 0
     ):
         raise ValueError(
-            f"snapshot_merge needs per-file stats for {keys!r} in the "
-            f"current manifest — rewrite the table once with "
+            f"{what} needs per-file stats for {keys!r} in the current "
+            f"manifest — rewrite the table once with "
             f"snapshot_write(df, table_dir, stats_cols={keys!r} + ...)"
         )
     if stats_cols is None:
         stats_cols = snaplog.tracked_stats(entries) or list(keys)
+    # column reconciliation against the committed read contract: extra
+    # source columns EVOLVE the schema (carried files read them as NULL)
+    # only under evolve_schema; omitted ones are null-filled (with
+    # exact_columns, only under evolve_schema too)
     tschema = _manifest_schema(manifest)
     cols = [f.name for f in tschema.fields]
-    extra = [c for c in source.columns if c not in cols]
-    if any(k not in source.columns for k in keys) or (extra and not evolve_schema):
+    batch_cols = [c for c in source.columns if c != delete_col]
+    extra = [c for c in batch_cols if c not in cols]
+    missing = [c for c in cols if c not in batch_cols]
+    if (
+        any(k not in batch_cols for k in keys)
+        or (extra and not evolve_schema)
+        or (missing and exact_columns and not evolve_schema)
+    ):
         raise ValueError(
-            f"snapshot_merge: source columns {sorted(source.columns)} must "
-            f"be a subset of the table schema {sorted(cols)} and include "
-            f"{keys!r} (extra: {extra}) — pass evolve_schema=True to add "
-            f"new columns"
+            f"{what}: source columns {sorted(batch_cols)} must include "
+            f"{keys!r} and be a subset of the table schema {sorted(cols)}"
+            f"{', covering it' if exact_columns else ''} (extra: {extra}, "
+            f"missing: {missing}) — pass evolve_schema=True to add new "
+            f"columns / null-fill omitted ones"
         )
     cols = cols + extra
 
@@ -2126,7 +2013,7 @@ def snapshot_merge(
         if isinstance(not_matched_by_source_condition, list)
         else None
     )
-    touched = _probe_merge_batch(spark, entries, keys, source, "snapshot_merge")
+    touched = _probe_merge_batch(spark, entries, keys, source, what)
     if when_not_matched_by_source:
         if nbs_triples is not None:
             # a file whose envelope PROVES no row satisfies the by-source
@@ -2142,18 +2029,16 @@ def snapshot_merge(
 
     src = source
     for f in tschema.fields:
-        if f.name not in source.columns:
+        if f.name not in batch_cols:
             src = src.withColumn(f.name, F.lit(None).cast(f.dataType))
-    src = src.select(cols)
-    join_cond = F.lit(True)
-    for k in keys:
-        join_cond = join_cond & (F.col(f"t.{k}") == F.col(f"s.{k}"))
+    src = src.select(cols + ([delete_col] if delete_col else []))
+    old_dv = _dv_read(spark, table_dir, manifest)
     if touched:
         # committed read contract: carried/touched files cannot hold
         # evolved columns — null-fill them with the SOURCE's types
         tgt = _apply_dv(
             _read_files(spark, table_dir, sorted(touched), tschema),
-            _dv_read(spark, table_dir, manifest),
+            old_dv,
             _dv_deleted(manifest),
         )
         for c in extra:
@@ -2161,7 +2046,10 @@ def snapshot_merge(
         tgt = tgt.select(cols)
     else:
         # no file can hold a source key: every source row is unmatched
-        tgt = _empty_frame(spark, src.schema)
+        tgt = _empty_frame(spark, src.select(cols).schema)
+    join_cond = F.lit(True)
+    for k in keys:
+        join_cond = join_cond & (F.col(f"t.{k}") == F.col(f"s.{k}"))
     # side-presence MARKERS, not key nullability: a target row whose key
     # column is NULL (legal in the table — only the SOURCE is validated
     # non-null) never equi-matches, and classifying it by t.key IS NULL
@@ -2178,7 +2066,8 @@ def snapshot_merge(
     )
 
     t_k, s_k = F.col("t.__t"), F.col("s.__s")
-    true_ = F.lit(True)
+    true_, false_ = F.lit(True), F.lit(False)
+    deleting = F.col(f"s.{delete_col}") if delete_col else false_
     m_cond = F.expr(matched_condition) if matched_condition else true_
     i_cond = F.expr(not_matched_condition) if not_matched_condition else true_
     if nbs_triples is not None:
@@ -2191,7 +2080,9 @@ def snapshot_merge(
         F.when(
             t_k.isNull(),
             F.when(
-                F.lit(when_not_matched == "insert") & F.coalesce(i_cond, F.lit(False)),
+                ~deleting
+                & F.lit(when_not_matched == "insert")
+                & F.coalesce(i_cond, false_),
                 F.lit("I"),
             ).otherwise(F.lit("skip")),
         )
@@ -2199,17 +2090,18 @@ def snapshot_merge(
             s_k.isNull(),
             F.when(
                 F.lit(when_not_matched_by_source == "delete")
-                & F.coalesce(d_cond, F.lit(False)),
+                & F.coalesce(d_cond, false_),
                 F.lit("D"),
             ).otherwise(F.lit("C")),
         )
         .otherwise(
-            F.when(
-                F.lit(when_matched == "update") & F.coalesce(m_cond, F.lit(False)),
+            F.when(deleting, F.lit("MD"))
+            .when(
+                F.lit(when_matched == "update") & F.coalesce(m_cond, false_),
                 F.lit("U"),
             )
             .when(
-                F.lit(when_matched == "delete") & F.coalesce(m_cond, F.lit(False)),
+                F.lit(when_matched == "delete") & F.coalesce(m_cond, false_),
                 F.lit("MD"),
             )
             .otherwise(F.lit("C"))
@@ -2230,60 +2122,61 @@ def snapshot_merge(
             .alias(c)
         )
 
-    obs = Observation()
-    tagged = j.withColumn("__action", action).observe(
-        obs,
-        F.sum((F.col("__action") == "U").cast("long")).alias("updated"),
-        F.sum(F.col("__action").isin("D", "MD").cast("long")).alias("deleted"),
-        F.sum((F.col("__action") == "I").cast("long")).alias("inserted"),
-        F.sum((F.col("__action") == "C").cast("long")).alias("copied"),
+    rows = j.withColumn("__action", action).select(
+        *[F.coalesce(F.col(f"t.{k}"), F.col(f"s.{k}")).alias(k) for k in keys],
+        *[_value(c) for c in cols if c not in keys],
+        "__action",
     )
+    if cluster_files:
+        # range-cluster BELOW the metrics node: repartitionByRange samples
+        # its input in a job of its own, which would fire a CollectMetrics
+        # node inside the sampled plan twice and double every count
+        rows = rows.repartitionByRange(cluster_files, *keys)
+    obs = Observation()
     staged_df = (
-        tagged.where(~F.col("__action").isin("skip", "D", "MD"))
-        .select(
-            *[
-                F.coalesce(F.col(f"t.{k}"), F.col(f"s.{k}")).alias(k)
-                for k in keys
-            ],
-            *[_value(c) for c in cols if c not in keys],
+        rows.observe(
+            obs,
+            F.sum((F.col("__action") == "U").cast("long")).alias("updated"),
+            F.sum(F.col("__action").isin("D", "MD").cast("long")).alias("deleted"),
+            F.sum((F.col("__action") == "I").cast("long")).alias("inserted"),
+            F.sum((F.col("__action") == "C").cast("long")).alias("copied"),
         )
+        .where(~F.col("__action").isin("skip", "D", "MD"))
         .select(cols)
     )
-    # repartitionByRange SAMPLES its input (a second full evaluation) —
-    # without the persist `observed` asks for, the CollectMetrics nodes
-    # would fire twice and every observed count would double
     version, vdir = _stage(
-        staged_df, table_dir, "snapshot_merge", current,
-        manifest.get("constraints"), keys if cluster_files else None,
-        cluster_files, observed=True,
+        staged_df, table_dir, what, current, manifest.get("constraints")
     )
     metrics = {k: int(v or 0) for k, v in obs.get.items()}
     if not (metrics["updated"] or metrics["deleted"] or metrics["inserted"]):
-        # pure no-op merge: don't commit a version that only re-copies
+        # pure no-op: don't commit a version that only re-copies
         snaplog.remove(vdir)
         return current, metrics
     staged = _staged_entries(
         spark, table_dir, version, stats_cols, manifest.get("bloom_spec")
     )
-    dv = _carried_dv(
-        spark, table_dir, version, _dv_read(spark, table_dir, manifest), carried
-    )
+    dv = _carried_dv(spark, table_dir, version, old_dv, carried)
     changes = None
     if manifest.get("cdf") and touched:
-        # same CDF materialization as the upsert core: tgt holds the
-        # touched files' pre-merge live rows, the staged dir the
-        # post-merge state of that region
-        changes = _write_change_files(
+        # materialize this rewrite's NET row-level diff so changeFeed
+        # consumers replay it instead of refusing (Delta's
+        # enableChangeDataFeed trade: O(changed rows) once, at write
+        # time): tgt holds the touched files' pre-rewrite live rows, the
+        # staged dir the post-rewrite state of that region — the diff
+        # never scans carried files. Explicit schema: a rewrite that
+        # deletes every touched row stages ZERO data files, and schema
+        # inference over an empty dir would fail
+        staged_rows = spark.read.schema(staged_df.schema).parquet(vdir)
+        changes = _materialize_changes(
             spark, table_dir, version,
-            tgt.select(cols),
-            spark.read.schema(staged_df.schema).parquet(vdir).select(cols),
-            keys, cols,
+            _keyed_diff(tgt, staged_rows.select(cols), keys, cols),
         )
-    # an evolved merge commits the WIDENED schema (carried files
+    # an evolved rewrite commits the WIDENED schema (carried files
     # null-fill the new columns through the read contract)
     record = snaplog.next_record(
-        manifest, version, "merge", staged + carried, properties=properties,
-        staged_schema=staged_df.schema.json(), dv=dv, changes=changes,
+        manifest, version, op, staged + carried,
+        properties=properties, staged_schema=staged_df.schema.json(),
+        dv=dv, changes=changes,
     )
     try:
         snaplog.commit(table_dir, version, record)
@@ -2343,38 +2236,15 @@ def _keyed_diff(
     )
 
 
-def _write_change_files(
-    spark: SparkSession,
-    table_dir: str,
-    version: int,
-    old_df: DataFrame,
-    new_df: DataFrame,
-    keys: list[str],
-    cols: list[str],
-) -> list[dict]:
-    """Materialize a rewrite commit's NET row-level diff as parquet under
-    ``_changes/v=N/`` and return its manifest entries (``path/rows/
-    bytes``, paths table-relative) — Delta's enableChangeDataFeed trade:
-    pay O(changed rows) once at write time so changeFeed consumers replay
-    the rewrite as CDC rows instead of refusing (or re-deriving the diff
-    per consumer). ``old_df``/``new_df`` are the touched files' live rows
-    before and after the commit, so the diff never scans carried files —
-    the upsert cost model extends to its change feed. Crash debris from
-    a previous attempt at the SAME version is overwritten: the staging
-    claim for N is already ours, and the records only publish with the
-    commit."""
-    return _materialize_changes(
-        spark, table_dir, version, _keyed_diff(old_df, new_df, keys, cols)
-    )
-
-
 def _materialize_changes(
     spark: SparkSession, table_dir: str, version: int, changes: DataFrame
 ) -> list[dict]:
     """Write an already-typed change DataFrame (data columns +
     ``_change_type``) under ``_changes/v=N/`` and return its manifest
-    entries — the storage half shared by the keyed-diff (upsert/MERGE),
-    predicate-delete, and restore materializations."""
+    entries — the storage half shared by the keyed-rewrite, predicate-
+    delete, and restore materializations. Crash debris from a previous
+    attempt at the SAME version is overwritten: the staging claim for N
+    is already ours, and the records only publish with the commit."""
     changes = changes.withColumn(
         "_change_type", F.col("_change_type").cast("string")
     )
@@ -2609,7 +2479,7 @@ def snapshot_history(
                 )
             else:
                 rec["available"] = all(
-                    snaplog.exists(_entry_uri(table_dir.rstrip("/"), e["path"]))
+                    snaplog.exists(snaplog.entry_uri(table_dir, e["path"]))
                     for e in files
                 )
         out.append(rec)
@@ -3002,15 +2872,17 @@ def snapshot_clone(
             constraints=manifest.get("constraints"),
         )
     src_base = source_dir.rstrip("/")
-    # _entry_uri keeps a clone-of-a-clone from double-prefixing entries
+    # entry_uri keeps a clone-of-a-clone from double-prefixing entries
     # the source itself holds by absolute reference
-    abs_entries = [{**e, "path": _entry_uri(src_base, e["path"])} for e in entries]
+    abs_entries = [
+        {**e, "path": snaplog.entry_uri(src_base, e["path"])} for e in entries
+    ]
     dv = manifest.get("dv")
     # a new table: no properties; the deletion vector is re-pointed at the
     # source's dataset
     snaplog.commit(clone_dir, 1, snaplog.next_record(
         manifest, 1, "clone", abs_entries, props="reset",
-        dv={**dv, "dir": _entry_uri(src_base, dv["dir"])} if dv else None,
+        dv={**dv, "dir": snaplog.entry_uri(src_base, dv["dir"])} if dv else None,
         cloned_from={"table": src_base, "version": current},
     ))
     # register with the source so ITS vacuum can protect the pinned
@@ -3236,10 +3108,10 @@ def snapshot_restore(spark: SparkSession, table_dir: str, to_version: int) -> in
     missing = [
         e["path"]
         for e in files
-        if not snaplog.exists(_entry_uri(table_dir.rstrip("/"), e["path"]))
+        if not snaplog.exists(snaplog.entry_uri(table_dir, e["path"]))
     ]
     if manifest.get("dv") and not snaplog.exists(
-        _entry_uri(table_dir.rstrip("/"), manifest["dv"]["dir"])
+        snaplog.entry_uri(table_dir, manifest["dv"]["dir"])
     ):
         missing.append(manifest["dv"]["dir"])
     if missing:

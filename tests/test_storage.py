@@ -832,6 +832,11 @@ def test_snapshot_apply_cdc_mixed_batch_one_commit(spark, tmp_path):
     ghost = spark.createDataFrame([(50_000, None, "D")], "k long, v string, op string")
     assert snapshot_apply_cdc(spark, tdir, ghost, key="k") == 2
     assert snapshot_version(spark, tdir) == 2
+    # nor of a key inside a file's envelope that no live row holds (5 was
+    # deleted above): the touched file is read, but nothing changes
+    gone = spark.createDataFrame([(5, None, "D")], "k long, v string, op string")
+    assert snapshot_apply_cdc(spark, tdir, gone, key="k") == 2
+    assert snapshot_version(spark, tdir) == 2
 
     # a key appearing twice (even as U then D) is an unfolded log: refuse
     unfolded = spark.createDataFrame(
@@ -1662,6 +1667,43 @@ def test_snapshot_clone_deep_copies_data(spark, tmp_path):
     assert snapshot_read(spark, cl).count() == 50
 
 
+def test_shallow_clone_of_a_file_uri_table(spark, tmp_path):
+    """A shallow clone of a table addressed as ``file:/…`` (one slash)
+    references ``file:/…`` entries. storage resolves them as absolute,
+    as the snapshotfeed source does: reads, the source's deletion
+    vector, history's availability probe and restore's existence check
+    all find the source's files."""
+    from f1_data_pipeline_spark.ingest import feedsource
+    from f1_data_pipeline_spark.storage import (
+        snapshot_clone,
+        snapshot_delete,
+        snapshot_history,
+        snapshot_read,
+        snapshot_restore,
+        snapshot_upsert,
+        snapshot_write,
+    )
+
+    src = f"file:{tmp_path / 'src'}"
+    cl = str(tmp_path / "clone")
+    snapshot_write(
+        spark.range(10).withColumnRenamed("id", "k"), src, stats_cols=["k"]
+    )
+    snapshot_delete(spark, src, [("k", "=", 3)], mode="dv")
+    snapshot_clone(spark, src, cl)
+    want = set(range(10)) - {3}
+    assert {r["k"] for r in snapshot_read(spark, cl).collect()} == want
+    feedsource.register(spark)
+    feed = spark.read.format("snapshotfeed").load(cl)
+    assert {r["k"] for r in feed.collect()} == want
+    snapshot_upsert(
+        spark, cl, spark.range(20, 22).withColumnRenamed("id", "k"), key="k"
+    )
+    assert all(h["available"] for h in snapshot_history(spark, cl, True))
+    snapshot_restore(spark, cl, 1)
+    assert {r["k"] for r in snapshot_read(spark, cl).collect()} == want
+
+
 def test_snapshot_timestamp_as_of_and_history_ts(spark, tmp_path):
     """Commit records carry wall-clock stamps: TIMESTAMP AS OF resolves
     the version committed at-or-before a time, history surfaces the
@@ -2157,6 +2199,36 @@ def test_snapshot_merge_update_insert_defaults(spark, tmp_path):
     )
     got1 = snapshot_read(spark, tdir).where("k = 1").head()
     assert got1["val"] == 111.0 and got1["tag"] == "old"
+
+
+def test_upsert_and_default_merge_share_one_plan(spark, tmp_path):
+    """snapshot_upsert is snapshot_merge with its default clauses: on the
+    same batch against the same table both launch the same number of
+    Spark jobs and commit the same rows."""
+    from f1_data_pipeline_spark.storage import (
+        snapshot_merge,
+        snapshot_read,
+        snapshot_upsert,
+        snapshot_write,
+    )
+
+    batch = _keyed(spark, 950, 1050, tag="upd")  # half updates, half inserts
+    runs = {}
+    for name, write in (
+        ("upsert", lambda t: snapshot_upsert(spark, t, batch, key="k")),
+        ("merge", lambda t: snapshot_merge(spark, t, batch, key="k")),
+    ):
+        tdir = str(tmp_path / name)
+        snapshot_write(
+            _keyed(spark, 0, 1000).repartitionByRange(8, "k"), tdir,
+            stats_cols=["k"],
+        )
+        _, jobs = _jobs(spark, lambda: write(tdir))
+        rows = sorted(tuple(r) for r in snapshot_read(spark, tdir).collect())
+        runs[name] = (jobs, rows)
+    assert runs["upsert"][0] == runs["merge"][0]
+    assert runs["upsert"][1] == runs["merge"][1]
+    assert len(runs["upsert"][1]) == 1050
 
 
 def test_snapshot_merge_conditions_and_delete_clauses(spark, tmp_path):
