@@ -97,20 +97,8 @@ from f1_data_pipeline_spark.snaplog import SnapshotConflictError
 
 # commit ops that never change table CONTENT — the stream skips them
 # silently (re-emitting rows a rewrite merely moved would duplicate the
-# feed). Pre-op-era manifests are recognized by their marker keys.
-_MAINTENANCE_OPS = {
-    "optimize",
-    "compact",
-    "restamp",
-    "add-constraint",
-    "drop-constraint",
-}
-_MAINTENANCE_KEYS = (
-    "optimized_from",
-    "restamped_from",
-    "constraint_added",
-    "constraint_dropped",
-)
+# feed)
+_MAINTENANCE_OPS = {"optimize", "restamp", "add-constraint", "drop-constraint"}
 
 
 def _norm_dir(path: str) -> str:
@@ -352,11 +340,6 @@ def _live_file_partitions(
     from f1_data_pipeline_spark.storage import _dv_key, _entry_prunable
 
     m = snaplog.read_manifest(table_dir, version)
-    if m.get("files") is None:
-        raise ValueError(
-            "snapshotfeed needs file-list manifests — rewrite the table "
-            "once with snapshot_write (v1-era record found)"
-        )
     dv = m.get("dv")
     dv_files = (dv or {}).get("files", {})
     dv_dir = snaplog.entry_uri(table_dir, dv["dir"]) if dv else None
@@ -447,17 +430,10 @@ def _replay_span_partitions(
     for v in range(s + 1, e + 1):
         m = snaplog.read_manifest(table_dir, v)
         op = m.get("op")
-        if op in _MAINTENANCE_OPS or (
-            op is None and any(k in m for k in _MAINTENANCE_KEYS)
-        ):
+        if op in _MAINTENANCE_OPS:
             continue  # content-preserving: nothing to emit
         # v=1 is table birth: its predecessor is the empty table
         prev = snaplog.read_manifest(table_dir, v - 1) if v > 1 else {"files": []}
-        if m.get("files") is None or prev.get("files") is None:
-            raise ValueError(
-                "snapshotfeed needs file-list manifests on both "
-                "span endpoints (v1-era record found)"
-            )
         prev_paths = {x["path"] for x in prev["files"]}
         added = [x for x in m["files"] if x["path"] not in prev_paths]
         removed = prev_paths - {x["path"] for x in m["files"]}
@@ -1159,15 +1135,8 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
             prev = None  # carried forward: one manifest read per version
             while v < cur:
                 m = snaplog.read_manifest(self._dir, v + 1)
-                op = m.get("op")
-                if op in _MAINTENANCE_OPS or (
-                    op is None and any(k in m for k in _MAINTENANCE_KEYS)
-                ):
+                if m.get("op") in _MAINTENANCE_OPS:
                     v += 1
-                    prev = m
-                    continue
-                if m.get("files") is None:
-                    v += 1  # v1-era record: partitions() raises its own error
                     prev = m
                     continue
                 if prev is None:
@@ -1176,11 +1145,7 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
                         if v > 0
                         else {"files": []}
                     )
-                prev_paths = (
-                    {x["path"] for x in prev["files"]}
-                    if prev.get("files") is not None
-                    else set()
-                )
+                prev_paths = {x["path"] for x in prev["files"]}
                 if self._change_feed and m.get("changes") is not None:
                     # a materialized-CDF rewrite streams its change
                     # files, not its staged data files — budget the
@@ -1438,12 +1403,6 @@ def _commit_staged(
                             f"{root.rstrip('/')}/{_STAGING}/{m.subdir}/{m.name}"
                         )
                     return None
-            if cur.get("files") is None:
-                raise ValueError(
-                    "snapshotfeed writer needs file-list manifests — "
-                    "rewrite the table once with snapshot_write (v1-era "
-                    "record found)"
-                )
             if cur.get("constraints"):
                 raise ValueError(
                     "snapshotfeed writer: the table carries CHECK "
@@ -1467,16 +1426,11 @@ def _commit_staged(
                     "storage.snapshot_append instead"
                 )
             if not overwrite:
-                sch = cur.get("schema")
-                table_types = (
-                    {
-                        x.name: x.dataType.simpleString()
-                        for x in StructType.fromJson(json.loads(sch)).fields
-                    }
-                    if sch
-                    else None
-                )
-                if table_types is not None and table_types != write_types:
+                table_types = {
+                    x.name: x.dataType.simpleString()
+                    for x in StructType.fromJson(json.loads(cur["schema"])).fields
+                }
+                if table_types != write_types:
                     raise ValueError(
                         f"snapshotfeed writer: batch schema {write_types} "
                         f"does not match the committed table schema "
@@ -1669,15 +1623,9 @@ class SnapshotFeedDataSource(DataSource):
         # (a later evolution must not leak columns into an old snapshot)
         v = self.options.get("version")
         m = snaplog.read_manifest(tdir, int(v) if v is not None else latest)
-        sch = m.get("schema")
-        if not sch:
-            raise ValueError(
-                "snapshotfeed: the table carries no committed schema "
-                "(v1-era record) — rewrite it once with snapshot_write"
-            )
         from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-        base = StructType.fromJson(json.loads(sch))
+        base = StructType.fromJson(json.loads(m["schema"]))
         if str(
             self.options.get("changefeed", self.options.get("changeFeed", "false"))
         ).lower() in ("true", "1"):

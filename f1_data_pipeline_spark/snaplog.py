@@ -38,7 +38,8 @@ typed at first touch, naming the pyarrow equivalent.
 
 The commit record's format is here too: every writer derives its next
 record from its parent's through ``next_record``, the one statement of
-what a commit inherits.
+what a commit inherits, and every reader gets it from ``read_manifest``,
+the one check of its shape.
 """
 
 from __future__ import annotations
@@ -420,13 +421,25 @@ def latest_version(table_dir: str) -> int:
 
 
 def read_manifest(table_dir: str, version: int) -> dict:
-    """The commit record of ``version``. A missing record at or below the
+    """The commit record of ``version``: the one check of a record's
+    shape, so every reader may rely on its ``files`` list and non-empty
+    ``schema`` (every ``next_record`` result holds both); a record
+    without them raises ``ValueError``. A missing record at or below the
     checkpoint pointer was provably committed once (the pointer only
     trails commits), so the error names log retention, not corruption."""
     try:
-        return read_json(f"{_mdir(table_dir)}/{version}.json")
+        m = read_json(f"{_mdir(table_dir)}/{version}.json")
     except FileNotFoundError:
         pass
+    else:
+        missing = [k for k in ("files", "schema") if m.get(k) in (None, "")]
+        if missing:
+            raise ValueError(
+                f"snapshot log: the commit record of version {version} of "
+                f"{table_dir} has no {' or '.join(missing)} — not a record "
+                f"any writer of this format publishes"
+            )
+        return m
     ck = checkpoint_version(table_dir)
     if ck is not None and version <= ck:
         raise FileNotFoundError(
@@ -531,23 +544,16 @@ def history_rec(v: int, m: dict) -> dict:
               "cloned_from", "constraint_added", "constraint_dropped"):
         if k in m:
             rec[k] = m[k]
-    files = m.get("files")
-    if files is None:
-        rec.update(
-            {"n_files": None, "rows": None, "bytes": None,
-             "n_staged": None, "n_carried": None}
-        )
-    else:
-        own = f"v={v}/"
-        rec.update(
-            {
-                "n_files": len(files),
-                "rows": sum(e.get("rows", 0) for e in files),
-                "bytes": sum(e.get("bytes", 0) for e in files),
-                "n_staged": sum(e["path"].startswith(own) for e in files),
-                "n_carried": sum(not e["path"].startswith(own) for e in files),
-            }
-        )
+    files, own = m["files"], f"v={v}/"
+    rec.update(
+        {
+            "n_files": len(files),
+            "rows": sum(e.get("rows", 0) for e in files),
+            "bytes": sum(e.get("bytes", 0) for e in files),
+            "n_staged": sum(e["path"].startswith(own) for e in files),
+            "n_carried": sum(not e["path"].startswith(own) for e in files),
+        }
+    )
     return rec
 
 

@@ -234,9 +234,11 @@ def _probe_merge_batch(
     keys: list[str],
     probe_df: DataFrame,
     what: str,
-) -> set[str]:
-    """ONE Spark job serving both pre-stage gates of the merge family —
-    previously two separate passes over the change batch per commit:
+    delete_col: str | None = None,
+) -> tuple[set[str], bool]:
+    """ONE query over the change batch serving the pre-stage gates of
+    the merge family — previously separate passes per commit (under AQE
+    its shuffle and broadcast stages still run as jobs of their own):
 
     1. ANSI MERGE cardinality (at most one change row per key tuple,
        key components non-null) — raises typed on violation.
@@ -246,19 +248,24 @@ def _probe_merge_batch(
        admits its component — the per-column conjunction Delta/Iceberg
        stats give). Collected driver-side because it IS the rewrite
        plan, bounded by the FILE count, never the change count.
+    3. Whether any change row may insert: none may when the batch is
+       empty or every row is a tombstone (boolean ``delete_col`` true).
 
-    The fused plan is one groupBy over the change keys (the same shuffle
-    the old distinct() paid) left-joined against the broadcast
-    (KB-scale) envelope table, folded to a single row — so update
-    batches of any size make one pass and never round-trip rows through
-    the driver."""
+    Returns ``(touched paths, may insert)``. The fused plan is one
+    groupBy over the change keys (the same shuffle the old distinct()
+    paid) left-joined against the broadcast (KB-scale) envelope table,
+    folded to a single row — so update batches of any size make one
+    pass and never round-trip rows through the driver."""
     import pyarrow as pa
 
     knames = [f"__k{i}" for i in range(len(keys))]
+    ins = ~F.col(delete_col) if delete_col else F.lit(True)
     keyed = (
-        probe_df.select(*[F.col(k).alias(n) for k, n in zip(keys, knames)])
+        probe_df.select(
+            *[F.col(k).alias(n) for k, n in zip(keys, knames)], ins.alias("__ins")
+        )
         .groupBy(*knames)
-        .agg(F.count(F.lit(1)).alias("__n"))
+        .agg(F.count(F.lit(1)).alias("__n"), F.max("__ins").alias("__ins"))
     )
     nonnull = F.lit(True)
     for n in knames:
@@ -294,6 +301,7 @@ def _probe_merge_batch(
         F.max("__n").alias("__mx"),
         F.max(F.when(nonnull, 0).otherwise(1)).alias("__has_null"),
         F.collect_set(path_col).alias("__touched"),
+        F.max("__ins").alias("__ins"),
     ).head()
     if row["__has_null"]:
         raise ValueError(f"{what}: change batch has NULL {keys!r} keys")
@@ -303,7 +311,8 @@ def _probe_merge_batch(
             f"row must match at most one change row; fold the batch to one "
             f"row per key (e.g. merge.cdc_apply) first"
         )
-    return set(row["__touched"])
+    # __ins is NULL on an empty batch
+    return set(row["__touched"]), bool(row["__ins"])
 
 
 def _stage_version(df: DataFrame, table_dir: str) -> tuple[int, str]:
@@ -363,9 +372,9 @@ def _stage(
        become a committed version.
 
     ``cluster_by`` range-clusters the staged rows (into ``cluster_files``
-    files when given). repartitionByRange samples its input (a second
-    evaluation), so a frame carrying the constraints' Observation
-    counters is persisted first to keep them single-fire."""
+    files when given). repartitionByRange samples its input in a job of
+    its own, so the batch is persisted first: it is evaluated once, and
+    the constraints' Observation counters fire once."""
     from pyspark.sql import Observation
 
     names = sorted(constraints or {})
@@ -380,8 +389,7 @@ def _stage(
         ])
     cached = None
     if cluster_by:
-        if obs is not None:
-            cached = df = df.persist()
+        cached = df = df.persist()
         df = (
             df.repartitionByRange(cluster_files, *cluster_by)
             if cluster_files
@@ -410,6 +418,22 @@ def _stage(
             f"snapshot_drop_constraint first"
         )
     return version, vdir
+
+
+def _publish_staged(table_dir: str, version: int, record: dict) -> int:
+    """Commit ``record`` as ``version`` for a writer holding the ``v=N``
+    claim, and return the version. A lost commit race (say, a
+    metadata-only commit took N without claiming it) removes this
+    writer's never-committed ``v=N`` and ``_changes/v=N`` before
+    re-raising, so the loser leaves nothing that blocks the next claim."""
+    try:
+        snaplog.commit(table_dir, version, record)
+    except SnapshotConflictError:
+        base = table_dir.rstrip("/")
+        snaplog.remove(f"{base}/v={version}")
+        snaplog.remove(f"{base}/_changes/v={version}")
+        raise
+    return version
 
 
 # Parquet physical types whose FOOTER statistics decode to the same
@@ -708,16 +732,13 @@ def _staged_entries(
     return entries
 
 
-def _manifest_schema(manifest: dict):
-    """The committed read-contract schema as a StructType (None for
-    pre-schema v1-era records). Single parse point for every consumer —
-    snapshot_read, the keyed rewrite, the change feed, delete, optimize."""
+def _manifest_schema(manifest: dict) -> T.StructType:
+    """The committed read-contract schema as a StructType. Single parse
+    point for every consumer — snapshot_read, the keyed rewrite, the
+    change feed, delete, optimize."""
     import json
 
-    from pyspark.sql.types import StructType
-
-    sch = manifest.get("schema")
-    return StructType.fromJson(json.loads(sch)) if sch else None
+    return T.StructType.fromJson(json.loads(manifest["schema"]))
 
 
 _LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
@@ -725,13 +746,12 @@ _LISTING_LOCK = threading.Lock()
 
 
 def _read_files(
-    spark: SparkSession, table_dir: str, paths: list[str], schema: T.StructType | None
+    spark: SparkSession, table_dir: str, paths: list[str], schema: T.StructType
 ) -> DataFrame:
     """The parquet scan of manifest-listed files (entry ``paths``,
     resolved against ``table_dir``) under ``schema``, the read contract:
     files committed before a schema evolution surface NULL for columns
-    added later, and no footer-inference pass is paid. ``None`` (v1-era
-    records with no recorded schema) falls back to inference.
+    added later, and no footer-inference pass is paid.
 
     Spark lists a relation's files when it resolves it, here, and the
     scan reuses that listing. Past ``_LISTING_THRESHOLD`` files (default
@@ -744,7 +764,7 @@ def _read_files(
     own setting is what it was after every call, a raising one included.
     """
     uris = [snaplog.entry_uri(table_dir, p) for p in paths]
-    reader = spark.read.schema(schema) if schema is not None else spark.read
+    reader = spark.read.schema(schema)
     with _LISTING_LOCK:
         prior = spark.conf.get(_LISTING_THRESHOLD)
         if len(uris) <= int(prior):
@@ -818,7 +838,7 @@ def snapshot_write(
     Every commit record carries an ``op`` label (the Delta
     ``commitInfo.operation`` shape) so history and the ``snapshotfeed``
     streaming source can tell CONTENT-PRESERVING maintenance (optimize /
-    compact / restamp / constraint DDL) from data changes without
+    restamp / constraint DDL) from data changes without
     guessing structurally. ``_op`` is internal plumbing for the
     maintenance wrappers that stage through this function.
 
@@ -943,7 +963,6 @@ def snapshot_write(
                     f"{expected_version} — a concurrent writer committed in "
                     f"between; re-read and re-derive"
                 )
-        vdir = None
         try:
             # persistent CHECK constraints survive a full-replace write
             # (Delta semantics: constraints live on the TABLE until
@@ -967,12 +986,7 @@ def snapshot_write(
             )
             entries = _staged_entries(spark, table_dir, version, stats_cols, bloom_spec)
             changes = None
-            if (
-                cdf
-                and _op == "write"
-                and cur >= 1
-                and prior_manifest.get("files") is not None
-            ):
+            if cdf and _op == "write" and cur >= 1:
                 # a full REPLACE on a cdf table materializes the
                 # NETTED multiset diff of old state vs staged state
                 # (old rows leaving emit as deletes, new rows as
@@ -987,8 +1001,8 @@ def snapshot_write(
                 # schema would crash the diff). O(old+new) — the
                 # honest cost of a replace, paid once at write time.
                 old_paths = [x["path"] for x in prior_manifest["files"]]
-                prior_schema = _manifest_schema(prior_manifest)
-                if old_paths and prior_schema is not None:
+                if old_paths:
+                    prior_schema = _manifest_schema(prior_manifest)
                     prior_names = {f.name for f in prior_schema.fields}
                     old_live = _apply_dv(
                         _read_files(spark, table_dir, old_paths, prior_schema),
@@ -1019,17 +1033,12 @@ def snapshot_write(
             # a full replace derives nothing from its parent record: the
             # persistent constraints and the feed flag are stated here,
             # and the Bloom spec, deletion vector and txn stamps reset
-            snaplog.commit(table_dir, version, snaplog.next_record(
+            return _publish_staged(table_dir, version, snaplog.next_record(
                 None, version, _op, entries, properties=properties,
                 schema=df.schema.json(), constraints=effective,
                 bloom_spec=bloom_spec, cdf=cdf, changes=changes,
             ))
-            return version
         except SnapshotConflictError:
-            # our stage (if we got that far) was never committed — remove
-            # the orphan so it can't trip the next claimant's exists-check
-            if vdir is not None:
-                snaplog.remove(vdir)
             if attempt + 1 >= attempts or expected_version is not None:
                 raise
             import time
@@ -1105,7 +1114,6 @@ def snapshot_append(
                     f"snapshot_append: table {table_dir} is at version "
                     f"{cur0}, caller expected {expected_version}"
                 )
-        vdir = None
         try:
             cur = snapshot_version(spark, table_dir)
             if cur < 1:
@@ -1135,18 +1143,9 @@ def snapshot_append(
                     _op="append",
                 )
             manifest = snaplog.read_manifest(table_dir, cur)
-            entries = manifest.get("files")
-            if entries is None:
-                raise ValueError(
-                    "snapshot_append needs a file-list manifest — rewrite "
-                    "the table once with snapshot_write (v1-era record)"
-                )
+            entries = manifest["files"]
             tschema = _manifest_schema(manifest)
-            table_cols = (
-                [f.name for f in tschema.fields]
-                if tschema is not None
-                else list(df.columns)
-            )
+            table_cols = [f.name for f in tschema.fields]
             extra = [c for c in df.columns if c not in table_cols]
             missing = [c for c in table_cols if c not in df.columns]
             if (extra or missing) and not evolve_schema:
@@ -1156,35 +1155,33 @@ def snapshot_append(
                     f"(extra {extra}, missing {missing}) — pass "
                     f"evolve_schema=True to widen / null-fill"
                 )
-            if tschema is not None:
-                # name-only matching would let a type-drifted batch commit
-                # under the old manifest schema and poison every later read
-                # ("Parquet column cannot be converted") — reject it here
-                batch_types = dict(df.dtypes)
-                drift = {
-                    f.name: (f.dataType.simpleString(), batch_types[f.name])
-                    for f in tschema.fields
-                    if f.name in batch_types
-                    and f.dataType.simpleString() != batch_types[f.name]
-                }
-                if drift:
-                    raise ValueError(
-                        f"snapshot_append: batch column types diverge from "
-                        f"the table schema (column: (table, batch)): {drift} "
-                        f"— cast the batch before appending"
-                    )
+            # name-only matching would let a type-drifted batch commit
+            # under the old manifest schema and poison every later read
+            # ("Parquet column cannot be converted") — reject it here
+            batch_types = dict(df.dtypes)
+            drift = {
+                f.name: (f.dataType.simpleString(), batch_types[f.name])
+                for f in tschema.fields
+                if f.name in batch_types
+                and f.dataType.simpleString() != batch_types[f.name]
+            }
+            if drift:
+                raise ValueError(
+                    f"snapshot_append: batch column types diverge from "
+                    f"the table schema (column: (table, batch)): {drift} "
+                    f"— cast the batch before appending"
+                )
             appended = df
-            if missing and tschema is not None:
-                for f in tschema.fields:
-                    if f.name in missing:
-                        appended = appended.withColumn(
-                            f.name, F.lit(None).cast(f.dataType)
-                        )
+            for f in tschema.fields:
+                if f.name in missing:
+                    appended = appended.withColumn(
+                        f.name, F.lit(None).cast(f.dataType)
+                    )
             appended = appended.select(table_cols + extra)
             # unconditional staleness gate (CAS subsumed): the carried
             # file list came from `cur`'s manifest — a concurrent commit
             # in between would be erased by committing it
-            version, vdir = _stage(
+            version, _ = _stage(
                 appended, table_dir, "snapshot_append", cur,
                 manifest.get("constraints"), cluster_by, cluster_files,
             )
@@ -1207,14 +1204,11 @@ def snapshot_append(
             # chronological: carried files first, this batch's last; the
             # carried files keep their deletion-vector entries, the new
             # ones have none by construction
-            snaplog.commit(table_dir, version, snaplog.next_record(
+            return _publish_staged(table_dir, version, snaplog.next_record(
                 manifest, version, "append", entries + new_entries,
                 properties=properties, staged_schema=widened.json(),
             ))
-            return version
         except SnapshotConflictError:
-            if vdir is not None:
-                snaplog.remove(vdir)
             if attempt + 1 >= attempts or expected_version is not None:
                 raise
             import time
@@ -1666,14 +1660,7 @@ def snapshot_read(
     if v < 1:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
     manifest = snaplog.read_manifest(table_dir, v)
-    entries = manifest.get("files")
-    if entries is None:
-        # v1 record (no file list): whole-directory read, filter only
-        vdir = f"{table_dir.rstrip('/')}/v={v}"
-        if not snaplog.exists(f"{vdir}/_SUCCESS"):
-            raise FileNotFoundError(f"snapshot version {v} not found in {table_dir}")
-        df = spark.read.parquet(vdir)
-        return df.where(_where_expr(where)) if where else df
+    entries = manifest["files"]
     if where:
         entries = [e for e in entries if not _entry_prunable(e, where)]
     if not entries:
@@ -1951,8 +1938,10 @@ def _keyed_rewrite(
     source tagged per row by clause outcome, the outcome counts observed
     inside the staging write (no second pass), staged entries, the
     carried files' DV entries, the change files on a ``cdf`` table, and
-    the commit. A call whose outcome updates, deletes and inserts
-    nothing removes its stage and returns the current version.
+    the commit. A call whose probe proves it can change nothing (no
+    touched file, no by-source clause, no row that may insert) stops
+    there; one whose outcome updates, deletes and inserts nothing
+    removes its stage. Both return the current version.
 
     ``delete_col`` (CDC apply) names a boolean source column that is
     not stored: a matched row where it is true is deleted and an
@@ -1972,8 +1961,8 @@ def _keyed_rewrite(
             f"a concurrent writer committed in between; re-read and re-derive"
         )
     manifest = snaplog.read_manifest(table_dir, current)
-    entries = manifest.get("files")
-    if entries is None or any(
+    entries = manifest["files"]
+    if any(
         "stats" not in e or any(k not in e["stats"] for k in keys)
         for e in entries
         if e.get("rows", 0) > 0
@@ -2013,7 +2002,17 @@ def _keyed_rewrite(
         if isinstance(not_matched_by_source_condition, list)
         else None
     )
-    touched = _probe_merge_batch(spark, entries, keys, source, what)
+    touched, may_insert = _probe_merge_batch(
+        spark, entries, keys, source, what, delete_col
+    )
+    if not (
+        touched
+        or when_not_matched_by_source
+        or (when_not_matched == "insert" and may_insert)
+    ):
+        # no file can hold a source key and no source row can insert:
+        # the probe alone proves the rewrite changes nothing
+        return current, dict.fromkeys(("updated", "deleted", "inserted", "copied"), 0)
     if when_not_matched_by_source:
         if nbs_triples is not None:
             # a file whose envelope PROVES no row satisfies the by-source
@@ -2173,17 +2172,11 @@ def _keyed_rewrite(
         )
     # an evolved rewrite commits the WIDENED schema (carried files
     # null-fill the new columns through the read contract)
-    record = snaplog.next_record(
+    return _publish_staged(table_dir, version, snaplog.next_record(
         manifest, version, op, staged + carried,
         properties=properties, staged_schema=staged_df.schema.json(),
         dv=dv, changes=changes,
-    )
-    try:
-        snaplog.commit(table_dir, version, record)
-    except SnapshotConflictError:
-        snaplog.remove(vdir)  # never committed
-        raise
-    return version, metrics
+    )), metrics
 
 
 def _keyed_diff(
@@ -2327,17 +2320,7 @@ def _state_diff_sides(
     survivors appear in both sides when restoring across a COW
     rewrite). Only files unique to one side, plus DV-delta positions
     in shared files, are ever opened."""
-    if m_from.get("files") is None or m_to.get("files") is None:
-        raise ValueError(
-            f"{caller} needs file-list manifests on both endpoints "
-            f"(v1-era whole-directory records carry no file identity)"
-        )
     schema = _manifest_schema(m_to)
-    if schema is None:
-        raise ValueError(
-            f"{caller}: the target version carries no schema "
-            f"(v1-era record) — rewrite the table once with snapshot_write"
-        )
     cols = [f.name for f in schema.fields]
     from_paths = {e["path"] for e in m_from["files"]}
     to_paths = {e["path"] for e in m_to["files"]}
@@ -2347,7 +2330,7 @@ def _state_diff_sides(
     # to v1) would otherwise crash the old-side parquet scan with a
     # physical-type mismatch; added columns NULL-fill, dropped columns
     # leave the comparison
-    from_schema = _manifest_schema(m_from) or schema
+    from_schema = _manifest_schema(m_from)
 
     def _read(paths: set[str], src=None) -> DataFrame:
         src = src if src is not None else schema
@@ -2472,16 +2455,10 @@ def snapshot_history(
             continue
         rec = snaplog.history_rec(v, m)
         if check_available:
-            files = m.get("files")
-            if files is None:
-                rec["available"] = snaplog.exists(
-                    f"{table_dir.rstrip('/')}/v={v}/_SUCCESS"
-                )
-            else:
-                rec["available"] = all(
-                    snaplog.exists(snaplog.entry_uri(table_dir, e["path"]))
-                    for e in files
-                )
+            rec["available"] = all(
+                snaplog.exists(snaplog.entry_uri(table_dir, e["path"]))
+                for e in m["files"]
+            )
         out.append(rec)
     return out
 
@@ -2517,18 +2494,8 @@ def snapshot_stats_agg(
     if v < 1:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
     manifest = snaplog.read_manifest(table_dir, v)
-    entries = manifest.get("files")
-    if entries is None:
-        raise ValueError(
-            "snapshot_stats_agg needs a file-list manifest — rewrite the "
-            "table once with snapshot_write (v1-era record found)"
-        )
+    entries = manifest["files"]
     schema = _manifest_schema(manifest)
-    if schema is None:
-        raise ValueError(
-            "snapshot_stats_agg: the version carries no schema (v1-era "
-            "record) — rewrite the table once with snapshot_write"
-        )
     cols = list(cols or [])
     types = {f.name: f.dataType for f in schema.fields}
     unknown = [c for c in cols if c not in types]
@@ -2629,12 +2596,7 @@ def snapshot_count(
     if v < 1:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
     manifest = snaplog.read_manifest(table_dir, v)
-    entries = manifest.get("files")
-    if entries is None:
-        raise ValueError(
-            "snapshot_count needs a file-list manifest — rewrite the "
-            "table once with snapshot_write (v1-era record found)"
-        )
+    entries = manifest["files"]
     dv_counts = (manifest.get("dv") or {}).get("files", {})
     if not where:
         return sum(e.get("rows", 0) for e in entries) - (
@@ -2711,12 +2673,7 @@ def snapshot_delete(
     if current < 1:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
     manifest = snaplog.read_manifest(table_dir, current)
-    entries = manifest.get("files")
-    if entries is None:
-        raise ValueError(
-            f"snapshot_delete needs a file-list manifest — rewrite the "
-            f"table once with snapshot_write (any stats_cols) under {table_dir}"
-        )
+    entries = manifest["files"]
     if stats_cols is None:
         stats_cols = snaplog.tracked_stats(entries)
 
@@ -2760,15 +2717,9 @@ def snapshot_delete(
             snaplog.remove(vdir)  # no match: nothing to commit
             return current, 0
         # every data file carried by reference
-        record = snaplog.next_record(
+        return _publish_staged(table_dir, version, snaplog.next_record(
             manifest, version, "delete", entries, dv=dv_block
-        )
-        try:
-            snaplog.commit(table_dir, version, record)
-        except SnapshotConflictError:
-            snaplog.remove(vdir)  # never committed
-            raise
-        return version, deleted_now
+        )), deleted_now
     keep = ~F.coalesce(_where_expr(where), F.lit(False))
     # manifest schema = read contract: after a schema evolution the
     # candidate files can differ in width — inferring from one footer
@@ -2808,11 +2759,10 @@ def snapshot_delete(
         )
     # deletes cannot create violating rows: the constraints carry
     # unchecked
-    snaplog.commit(table_dir, version, snaplog.next_record(
+    return _publish_staged(table_dir, version, snaplog.next_record(
         manifest, version, "delete", staged + carried,
         staged_schema=survivors.schema.json(), dv=dv, changes=changes,
-    ))
-    return version, deleted
+    )), deleted
 
 
 def snapshot_clone(
@@ -2856,9 +2806,7 @@ def snapshot_clone(
             f"snapshot_clone: {clone_dir} already holds a committed table"
         )
     manifest = snaplog.read_manifest(source_dir, current)
-    entries = manifest.get("files")
-    if entries is None:
-        raise ValueError("snapshot_clone needs a file-list manifest")
+    entries = manifest["files"]
     if not shallow:
         df = snapshot_read(spark, source_dir)
         spec = manifest.get("bloom_spec") or {}
@@ -2924,8 +2872,6 @@ def snapshot_restamp(
             f"caller expected {expected_version}"
         )
     manifest = snaplog.read_manifest(table_dir, current)
-    if manifest.get("files") is None:
-        raise ValueError("snapshot_restamp needs a file-list manifest")
     # the NEW properties replace the old wholesale (that is what a
     # restamp is) — except streaming writers' txn idempotence stamps,
     # which must survive every commit or a crash-replayed micro-batch
@@ -2964,10 +2910,15 @@ def snapshot_clean_orphans(
     the real run would delete, without deleting).
 
     Safety: only UNCOMMITTED stages above the current version qualify.
-    A claimed-but-uncommitted stage at or below the current version is
-    impossible under the protocol (the version number was consumed by
-    whoever committed it); directories without a _CLAIM marker are
-    pre-protocol data and are left alone. NOTE: a LIVE writer's stage
+    A version at or below it was taken by a commit, possibly a
+    metadata-only one (restamp, constraint DDL, a restore without change
+    files), which takes a version without claiming its dir. A staged
+    writer that loses such a race removes its own ``v=N`` and
+    ``_changes/v=N`` before raising; what a writer that crashed inside
+    that window leaves is referenced by no manifest, so
+    ``snapshot_vacuum`` reclaims it once the version falls out of
+    ``keep_last``. Directories without a _CLAIM marker are left alone.
+    NOTE: a LIVE writer's stage
     looks identical to a crashed one mid-write — run this only when no
     writer is active, exactly like VACUUM's single-operator assumption."""
     import re
@@ -3045,8 +2996,6 @@ def snapshot_add_constraint(
     if current < 1:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
     manifest = snaplog.read_manifest(table_dir, current)
-    if manifest.get("files") is None:
-        raise ValueError("snapshot_add_constraint needs a file-list manifest")
     existing = dict(manifest.get("constraints") or {})
     if existing.get(name) == expr:
         return current  # idempotent re-add: nothing to commit
@@ -3098,13 +3047,7 @@ def snapshot_restore(spark: SparkSession, table_dir: str, to_version: int) -> in
     target's data is no longer fully present (vacuumed) — restoring to a
     hole would commit a version that cannot be read."""
     manifest = snaplog.read_manifest(table_dir, to_version)
-    files = manifest.get("files")
-    if files is None:
-        raise ValueError(
-            f"snapshot_restore: version {to_version} in {table_dir} has a "
-            f"v1 (no-file-list) manifest — read it and snapshot_write the "
-            f"rows instead"
-        )
+    files = manifest["files"]
     missing = [
         e["path"]
         for e in files
@@ -3127,12 +3070,7 @@ def snapshot_restore(spark: SparkSession, table_dir: str, to_version: int) -> in
     # (either endpoint's flag keeps it on)
     cdf = manifest.get("cdf") or m_cur.get("cdf")
     claimed = changes = None
-    if (
-        cdf
-        and m_cur.get("files") is not None
-        and m_cur.get("schema")
-        and manifest.get("schema")
-    ):
+    if cdf:
         # hold the v=N claim while writing _changes/v=N: a
         # concurrent writer deriving the same next version must not
         # interleave its own change files into our directory (the
@@ -3166,15 +3104,10 @@ def snapshot_restore(spark: SparkSession, table_dir: str, to_version: int) -> in
         manifest, version, "restore", files, props="carry", cdf=cdf,
         restored_from=to_version, changes=changes,
     )
-    try:
+    if claimed is None:
         snaplog.commit(table_dir, version, record)
-    except SnapshotConflictError:
-        if claimed is not None:
-            # our claim and change files were never published — remove
-            # them so the next claimant's exists-check doesn't trip
-            snaplog.remove(claimed)
-            snaplog.remove(f"{table_dir.rstrip('/')}/_changes/v={version}")
-        raise
+    else:
+        _publish_staged(table_dir, version, record)
     return version
 
 
@@ -3342,26 +3275,21 @@ def snapshot_vacuum(
     ``snapshot_expire_log`` retires them, and it clamps below live clone
     pins) — time travel to a vacuumed version raises FileNotFoundError
     because its data is gone, while the current version can never be
-    deleted: ``keep_last`` is clamped to >= 1. A v1 manifest (no file
-    list) keeps its whole directory. If a LIVE clone's pinned manifest is
-    missing (out-of-band loss), vacuum fails typed rather than guess."""
+    deleted: ``keep_last`` is clamped to >= 1. If a LIVE clone's pinned
+    manifest is missing (out-of-band loss), vacuum fails typed rather
+    than guess."""
     import re
 
     keep_last = max(1, keep_last)
     current = snapshot_version(spark, table_dir)
     reachable: set[str] = set()
-    whole_dirs: set[str] = set()
     dv_dirs: set[str] = set()
     for v in range(max(1, current - keep_last + 1), current + 1):
         try:
             m = snaplog.read_manifest(table_dir, v)
         except FileNotFoundError:
             continue
-        files = m.get("files")
-        if files is None:
-            whole_dirs.add(f"v={v}")
-        else:
-            reachable.update(e["path"] for e in files)
+        reachable.update(e["path"] for e in m["files"])
         if m.get("dv"):
             # a kept version's deletion vector is part of its state; the
             # dataset may live in an OLDER version's dir (carried by a
@@ -3391,11 +3319,7 @@ def snapshot_vacuum(
                     f"_clones/ registration), or run force=True to "
                     f"reclaim as if no clones existed"
                 ) from None
-            files = m.get("files")
-            if files is None:
-                whole_dirs.add(f"v={pin}")
-            else:
-                reachable.update(e["path"] for e in files)
+            reachable.update(e["path"] for e in m["files"])
             if m.get("dv"):
                 dv_dirs.add(m["dv"]["dir"])
     base = table_dir.rstrip("/")
@@ -3403,7 +3327,7 @@ def snapshot_vacuum(
     for info in snaplog.listdir(base):
         name = info.base_name
         m = re.fullmatch(r"v=(\d+)", name)
-        if not m or name in whole_dirs:
+        if not m:
             continue
         v = int(m.group(1))
         if v > current - keep_last:
@@ -3476,12 +3400,7 @@ def snapshot_optimize(
     if v < 1:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
     manifest = snaplog.read_manifest(table_dir, v)
-    entries = manifest.get("files")
-    if entries is None:
-        raise ValueError(
-            "snapshot_optimize needs a file-list manifest — rewrite once "
-            "with snapshot_write (v1-era record found)"
-        )
+    entries = manifest["files"]
     cutoff = small_file_bytes if small_file_bytes is not None else target_file_bytes // 2
     dv_counts = (manifest.get("dv") or {}).get("files", {})
 
@@ -3553,7 +3472,7 @@ def snapshot_optimize(
     )
     # packing moves rows, never changes them: the constraints carry
     # unchecked and the exactly-once consumer stamp carries wholesale
-    snaplog.commit(table_dir, version, snaplog.next_record(
+    _publish_staged(table_dir, version, snaplog.next_record(
         manifest, version, "optimize", staged + carried, props="carry",
         staged_schema=packed.schema.json(),
         dv=_carried_dv(spark, table_dir, version, old_dv, carried),

@@ -15,6 +15,16 @@ import pytest
 from f1_data_pipeline_spark import snaplog
 from f1_data_pipeline_spark.snaplog import SnapshotConflictError
 
+_SCHEMA = json.dumps(
+    {"type": "struct",
+     "fields": [{"name": "k", "type": "long", "nullable": True, "metadata": {}}]}
+)
+
+
+def _record(v: int, **fields) -> dict:
+    """A commit record of the shape every writer publishes."""
+    return {"version": v, "files": [], "schema": _SCHEMA, "op": "append", **fields}
+
 
 def test_scheme_classifies_without_connecting():
     assert snaplog.scheme("/tmp/x") == "file"
@@ -120,9 +130,9 @@ def test_publish_once_never_trusts_a_clobbering_move(tmp_path, monkeypatch):
     assert wins == [True, False, False, False]
     with open(f"{tmp_path}/tbl/_manifests/1.json", "rb") as fh:
         assert fh.read() == b"w0"
-    snaplog.commit(tdir, 2, {"version": 2, "writer": "a"})
+    snaplog.commit(tdir, 2, _record(2, writer="a"))
     with pytest.raises(SnapshotConflictError):
-        snaplog.commit(tdir, 2, {"version": 2, "writer": "b"})
+        snaplog.commit(tdir, 2, _record(2, writer="b"))
     assert snaplog.read_manifest(tdir, 2)["writer"] == "a"
     assert snaplog.claim_version(tdir, 3) == f"{tdir}/v=3"
     with pytest.raises(SnapshotConflictError):
@@ -182,7 +192,7 @@ def test_commit_race_leaves_exactly_one_record(tmp_path):
 
     def commit(i):
         try:
-            snaplog.commit(tdir, 1, {"version": 1, "writer": i})
+            snaplog.commit(tdir, 1, _record(1, writer=i))
             results.append(i)
         except SnapshotConflictError:
             results.append(None)
@@ -218,7 +228,7 @@ def test_nonconflict_link_failure_is_a_plain_runtime_error(tmp_path, monkeypatch
 
 def _commits(tdir: str, n: int) -> None:
     for v in range(1, n + 1):
-        snaplog.commit(tdir, v, {"version": v, "files": [], "op": "append"})
+        snaplog.commit(tdir, v, _record(v))
 
 
 def test_checkpoint_cadence_and_tail_probe(tmp_path, monkeypatch):
@@ -276,10 +286,11 @@ def test_missing_manifest_names_retention_or_absence(tmp_path, monkeypatch):
 
 
 def test_every_commit_publishes_a_next_record_result():
-    """Structural guard: every ``snaplog.commit`` in the package publishes
-    a ``snaplog.next_record`` result, and no module but ``snaplog`` spells
-    a commit record as a dict literal — so what a commit inherits from
-    its parent stays stated once."""
+    """Structural guard: every ``snaplog.commit`` in the package — and
+    every ``storage._publish_staged``, the commit of a claimed stage —
+    publishes a ``snaplog.next_record`` result, and no module but
+    ``snaplog`` spells a commit record as a dict literal — so what a
+    commit inherits from its parent stays stated once."""
     import ast
     import pathlib
 
@@ -307,6 +318,8 @@ def test_every_commit_publishes_a_next_record_result():
         for fn in ast.walk(tree):
             if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 continue
+            if fn.name == "_publish_staged":
+                continue  # commits its caller's record: checked at the calls
             built = {
                 t.id
                 for node in ast.walk(fn)
@@ -316,10 +329,82 @@ def test_every_commit_publishes_a_next_record_result():
                 if isinstance(t, ast.Name)
             }
             for node in ast.walk(fn):
-                if is_snaplog_call(node, "commit"):
+                if is_snaplog_call(node, "commit") or (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Name)
+                    and node.func.id == "_publish_staged"
+                ):
                     rec = node.args[2]
                     assert is_snaplog_call(rec, "next_record") or (
                         isinstance(rec, ast.Name) and rec.id in built
                     ), f"{path.name}:{node.lineno} commits a record not built by next_record"
                     commits.add((path.name, node.lineno))
     assert len(commits) >= 12  # the walk found the commit sites
+
+
+def test_read_manifest_refuses_a_record_without_files_or_schema(tmp_path):
+    """``read_manifest`` is the one check of a record's shape: a record
+    without a ``files`` list or a ``schema`` raises a ``ValueError``
+    naming the table, the version and the missing key, so no reader
+    branches on either."""
+    tdir = str(tmp_path / "tbl")
+    snaplog.commit(tdir, 1, _record(1))
+    assert snaplog.read_manifest(tdir, 1)["files"] == []
+    for v, drop in ((2, "files"), (3, "schema")):
+        rec = _record(v)
+        del rec[drop]
+        snaplog.commit(tdir, v, rec)
+        with pytest.raises(ValueError, match=rf"version {v} of .*tbl has no {drop}"):
+            snaplog.read_manifest(tdir, v)
+    snaplog.commit(tdir, 4, _record(4, schema=""))
+    with pytest.raises(ValueError, match="has no schema"):
+        snaplog.read_manifest(tdir, 4)
+
+
+def test_record_shape_is_checked_only_in_snaplog():
+    """Structural guard: no package module but ``snaplog`` compares a
+    record's ``files`` or ``schema`` with None, names a ``v1-era`` record,
+    or detects maintenance commits by marker keys — ``read_manifest``
+    owns the record's shape, and a commit's ``op`` names its kind."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(snaplog.__file__).parent
+
+    def shape_key(node) -> bool:
+        # m.get("files") / m.get("schema") / m["files"] / m["schema"]
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            args = node.args
+            return (
+                node.func.attr == "get"
+                and bool(args)
+                and isinstance(args[0], ast.Constant)
+                and args[0].value in ("files", "schema")
+            )
+        return (
+            isinstance(node, ast.Subscript)
+            and isinstance(node.slice, ast.Constant)
+            and node.slice.value in ("files", "schema")
+        )
+
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pathlib.Path(snaplog.__file__):
+            continue
+        text = path.read_text()
+        if "v1-era" in text:
+            found.append(f"{path.name}: mentions v1-era records")
+        for node in ast.walk(ast.parse(text)):
+            if isinstance(node, ast.Compare) and any(
+                isinstance(c, ast.Constant) and c.value is None
+                for c in node.comparators
+            ) and shape_key(node.left):
+                found.append(f"{path.name}:{node.lineno} tests a record's shape")
+            if isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                if any(
+                    isinstance(t, ast.Name) and t.id.endswith("MAINTENANCE_KEYS")
+                    for t in targets
+                ):
+                    found.append(f"{path.name}:{node.lineno} defines marker-key detection")
+    assert not found, found

@@ -246,6 +246,7 @@ def test_snapshot_commit_race_is_typed_and_retryable(spark, tmp_path, monkeypatc
 
     tdir = str(tmp_path / "tbl")
     snapshot_write(spark.range(3).withColumnRenamed("id", "k"), tdir)
+    schema = _manifest(tdir, 1)["schema"]
 
     # interleave: an interloper publishes the v=2 commit record while our
     # writer is between staging and committing (the narrowest race the
@@ -258,7 +259,9 @@ def test_snapshot_commit_race_is_typed_and_retryable(spark, tmp_path, monkeypatc
             fired["done"] = True
             with open(os.path.join(tdir, "_manifests", "2.json"), "w") as f:
                 json.dump(
-                    {"version": 2, "dir": "v=1", "files": [], "schema": None}, f
+                    {"version": 2, "dir": "v=1", "files": [], "schema": schema,
+                     "op": "restamp"},
+                    f,
                 )
         return real_entries(sp, table_dir, version, stats_cols)
 
@@ -278,7 +281,9 @@ def test_snapshot_commit_race_is_typed_and_retryable(spark, tmp_path, monkeypatc
         if fired2["n"] == 1:
             with open(os.path.join(tdir, "_manifests", "3.json"), "w") as f:
                 json.dump(
-                    {"version": 3, "dir": "v=1", "files": [], "schema": None}, f
+                    {"version": 3, "dir": "v=1", "files": [], "schema": schema,
+                     "op": "restamp"},
+                    f,
                 )
         return real_entries(sp, table_dir, version, stats_cols)
 
@@ -4363,3 +4368,186 @@ def test_snapshot_stats_agg_compiles_its_answer_once(spark, wide_table, compilat
     assert out.inputFiles() == []
     assert out.head()["max_k"] == 489
     assert compilations() - c0 == 0
+
+
+def _writer_cycle(spark, root) -> dict[str, str]:
+    """Every package writer, once, over small tables under ``root``:
+    returns ``{name: table_dir}``. Deterministic content, so two builds
+    of the package can be compared table by table."""
+    import os
+
+    from f1_data_pipeline_spark import storage as S
+    from f1_data_pipeline_spark.ingest import feedsource
+    from f1_data_pipeline_spark.streaming import stream_snapshot_append
+
+    root = str(root)
+    main, first = f"{root}/main", f"{root}/first"
+
+    def rows(lo, hi, tag):
+        return spark.createDataFrame(
+            [(k, f"{tag}-{k}") for k in range(lo, hi)], "k long, v string"
+        )
+
+    S.snapshot_write(
+        rows(0, 40, "w").repartitionByRange(4, "k"), main, stats_cols=["k"],
+        change_files=True,
+    )
+    S.snapshot_append(rows(40, 50, "a"), first)  # first commit creates it
+    S.snapshot_append(
+        rows(50, 60, "e").withColumn("w", F.col("k") * 2), main,
+        evolve_schema=True,
+    )
+    S.snapshot_upsert(spark, main, rows(35, 45, "u"), key="k", evolve_schema=True)
+    S.snapshot_apply_cdc(
+        spark, main,
+        rows(0, 3, "c").withColumn("op", F.when(F.col("k") == 0, "D").otherwise("U")),
+        key="k", evolve_schema=True,
+    )
+    S.snapshot_merge(spark, main, rows(55, 65, "m"), key="k", evolve_schema=True)
+    S.snapshot_delete(spark, main, [("k", "<", 5)], mode="dv")
+    S.snapshot_delete(spark, main, [("k", ">=", 60)], mode="cow")
+    S.snapshot_optimize(spark, main)
+    S.snapshot_restamp(spark, main, {"step": "restamp"})
+    S.snapshot_add_constraint(spark, main, "k_nonneg", "k >= 0")
+    S.snapshot_drop_constraint(spark, main, "k_nonneg")
+    S.snapshot_restore(spark, main, 2)
+    S.snapshot_clone(spark, main, f"{root}/clone")
+    feedsource.register(spark)
+    feed = f"{root}/feed"
+    for mode, lo in (("append", 0), ("append", 10), ("overwrite", 20)):
+        rows(lo, lo + 10, mode).coalesce(1).write.format("snapshotfeed").mode(
+            mode
+        ).save(feed)
+    src = f"{root}/stream-in"
+    rows(0, 5, "s").coalesce(1).write.parquet(src)
+    q = stream_snapshot_append(
+        spark.readStream.schema("k long, v string").parquet(src),
+        f"{root}/stream", os.path.join(root, "stream-ckpt"),
+    )
+    q.awaitTermination(120)
+    return {
+        "main": main, "first": first, "clone": f"{root}/clone", "feed": feed,
+        "stream": f"{root}/stream",
+    }
+
+
+def test_every_writer_publishes_files_schema_and_op(spark, tmp_path):
+    """The record-shape invariant ``snaplog.read_manifest`` checks: every
+    writer's commit record holds a ``files`` list, a non-empty ``schema``
+    and an ``op`` label (read here as raw JSON, not through the check)."""
+    from f1_data_pipeline_spark import snaplog
+
+    ops = set()
+    for name, tdir in _writer_cycle(spark, tmp_path).items():
+        latest = snaplog.latest_version(tdir)
+        assert latest >= 1, name
+        for v in range(1, latest + 1):
+            m = _manifest(tdir, v)
+            assert isinstance(m.get("files"), list), (name, v)
+            assert m.get("schema"), (name, v)
+            assert m.get("op"), (name, v)
+            ops.add(m["op"])
+            assert snaplog.read_manifest(tdir, v) == m
+    assert ops == {
+        "write", "append", "upsert", "cdc", "merge", "delete", "optimize",
+        "restamp", "add-constraint", "drop-constraint", "restore", "clone",
+    }
+
+
+def test_cdc_that_cannot_change_a_row_stops_after_its_probe(spark, tmp_path):
+    """Tombstones of keys no file envelope admits change nothing: the
+    probe proves it, so the call launches the probe's jobs alone (its
+    shuffle and broadcast stages run as jobs of their own under AQE),
+    stages nothing and keeps the version. A NULL op is an upsert, so
+    such a row still inserts."""
+    import os
+
+    from f1_data_pipeline_spark import snaplog
+    from f1_data_pipeline_spark.storage import (
+        _probe_merge_batch,
+        snapshot_apply_cdc,
+        snapshot_read,
+        snapshot_version,
+        snapshot_write,
+    )
+
+    tdir = str(tmp_path / "tbl")
+    snapshot_write(
+        _keyed(spark, 0, 1000).repartitionByRange(4, "k"), tdir, stats_cols=["k"]
+    )
+    tomb = spark.createDataFrame(
+        [(5000, "x", "D"), (5001, "y", "delete")], "k long, v string, op string"
+    )
+    entries = snaplog.read_manifest(tdir, 1)["files"]
+    _, probe_jobs = _jobs(
+        spark, lambda: _probe_merge_batch(spark, entries, ["k"], tomb, "probe")
+    )
+    v, jobs = _jobs(spark, lambda: snapshot_apply_cdc(spark, tdir, tomb, key="k"))
+    assert (v, jobs) == (1, probe_jobs)
+    assert snapshot_version(spark, tdir) == 1
+    assert sorted(os.listdir(tdir)) == ["_manifests", "v=1"]
+    null_op = spark.createDataFrame(
+        [(5000, "x", "D"), (5002, "z", None)], "k long, v string, op string"
+    )
+    assert snapshot_apply_cdc(spark, tdir, null_op, key="k") == 2
+    assert snapshot_read(spark, tdir).where("k >= 5000").collect()[0]["k"] == 5002
+
+
+@pytest.mark.parametrize("writer", ["cow_delete", "optimize", "cdf_upsert"])
+def test_staged_writer_losing_to_a_metadata_commit_leaves_no_stage(
+    spark, tmp_path, monkeypatch, writer
+):
+    """A metadata-only commit (here a restamp) takes version N without
+    claiming ``v=N``; a staged writer whose commit it beats raises the
+    typed conflict and removes its ``v=N`` and ``_changes/v=N``."""
+    import os
+
+    import f1_data_pipeline_spark.storage as S
+
+    tdir = str(tmp_path / "tbl")
+    S.snapshot_write(
+        _keyed(spark, 0, 100).repartitionByRange(4, "k"), tdir, stats_cols=["k"],
+        change_files=writer == "cdf_upsert",
+    )
+    real_entries = S._staged_file_entries
+
+    def racy_entries(sp, table_dir, version, stats_cols):
+        if table_dir == tdir and S.snapshot_version(sp, tdir) < version:
+            S.snapshot_restamp(sp, tdir, {"by": "interloper"})
+        return real_entries(sp, table_dir, version, stats_cols)
+
+    monkeypatch.setattr(S, "_staged_file_entries", racy_entries)
+    write = {
+        "cow_delete": lambda: S.snapshot_delete(spark, tdir, [("k", "<", 10)]),
+        "optimize": lambda: S.snapshot_optimize(spark, tdir),
+        "cdf_upsert": lambda: S.snapshot_upsert(
+            spark, tdir, _keyed(spark, 95, 105, tag="u"), key="k"
+        ),
+    }[writer]
+    with pytest.raises(S.SnapshotConflictError, match="committed first"):
+        write()
+    assert S.snapshot_version(spark, tdir) == 2
+    assert S.snapshot_properties(spark, tdir) == {"by": "interloper"}
+    assert not os.path.exists(os.path.join(tdir, "v=2"))
+    assert not os.path.exists(os.path.join(tdir, "_changes", "v=2"))
+    assert S.snapshot_read(spark, tdir).count() == 100
+
+
+def test_range_clustered_append_evaluates_its_batch_once(spark, tmp_path):
+    """repartitionByRange samples its input in a job of its own; the
+    staged batch is persisted first, so a clustered append evaluates
+    each batch row once."""
+    from f1_data_pipeline_spark.storage import snapshot_append, snapshot_write
+
+    tdir = str(tmp_path / "tbl")
+    snapshot_write(spark.range(10).withColumnRenamed("id", "k"), tdir)
+    evals = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def counted(k):
+        evals.add(1)
+        return k
+
+    batch = spark.range(100, 200, numPartitions=4).select(counted("id").alias("k"))
+    snapshot_append(batch, tdir, cluster_by=["k"], cluster_files=2)
+    assert evals.value / 100 == 1.0
