@@ -34,10 +34,9 @@ a streaming source:
   write time. A downstream keyed apply (``snapshot_apply_cdc`` with
   ``op_col='_change_type'``, folding by ``_commit_version``) turns the
   feed into an exactly-once maintained replica.
-  Content-preserving maintenance (OPTIMIZE / restamp /
-  constraint DDL, identified by the commit's ``op`` label) is always
-  skipped silently: the rows did not change, so the stream must not
-  re-emit them.
+  Content-preserving maintenance (OPTIMIZE / restamp, identified by
+  the commit's ``op`` label) is always skipped silently: the rows did
+  not change, so the stream must not re-emit them.
 * **maxVersionsPerBatch=N** rate-limits steady-state reads (the
   ``maxFilesPerTrigger`` admission-control analog, in commit units).
   The FIRST batch of a reader's lifetime is uncapped: the engine asks
@@ -53,7 +52,7 @@ Why a first-class source instead of a batch consumer (``snapshot_changes``
 over a caller-kept offset): such a consumer is at-least-once with a
 caller-managed two-phase ack; this source rides the
 engine's own offset log and watermark/trigger machinery, so a downstream
-``stream_snapshot_upsert`` or windowed aggregate gets checkpointed
+``stream_keyed_upsert`` or windowed aggregate gets checkpointed
 exactly-once semantics with zero consumer bookkeeping — the reference's
 continuous extract→load loop (extractor.py:21-58 feeding loader.py)
 becomes one ``readStream``/``writeStream`` pair end to end.
@@ -98,7 +97,7 @@ from f1_data_pipeline_spark.snaplog import SnapshotConflictError
 # commit ops that never change table CONTENT — the stream skips them
 # silently (re-emitting rows a rewrite merely moved would duplicate the
 # feed)
-_MAINTENANCE_OPS = {"optimize", "restamp", "add-constraint", "drop-constraint"}
+_MAINTENANCE_OPS = {"optimize", "restamp"}
 
 
 def _norm_dir(path: str) -> str:
@@ -337,7 +336,7 @@ def _live_file_partitions(
     the manifest envelope/Bloom stats against pushed-down where-triples
     — a superset guarantee (pruning never drops a matching row; the
     engine still applies the exact filters to the surviving rows)."""
-    from f1_data_pipeline_spark.storage import _dv_key, _entry_prunable
+    from f1_data_pipeline_spark.storage import _entry_prunable
 
     m = snaplog.read_manifest(table_dir, version)
     dv = m.get("dv")
@@ -349,7 +348,7 @@ def _live_file_partitions(
             continue
         if where and _entry_prunable(entry, where):
             continue
-        key = _dv_key(entry["path"])
+        key = entry["path"]
         parts.append(
             _FeedFile(
                 snaplog.entry_uri(table_dir, entry["path"]),
@@ -424,7 +423,7 @@ def _replay_span_partitions(
     resurrected inserts) when ``change_feed``, maintenance commits emit
     nothing, and rewrite commits raise (``remedy`` names the consumer's
     way out) unless ``skip_changes``. Pure manifest JSON; no data IO."""
-    from f1_data_pipeline_spark.storage import _dv_key, _entry_prunable
+    from f1_data_pipeline_spark.storage import _entry_prunable
 
     parts: list[_FeedFile] = []
     for v in range(s + 1, e + 1):
@@ -474,7 +473,7 @@ def _replay_span_partitions(
             cur_dv, prev_dv = m.get("dv"), prev.get("dv")
             cur_counts = (cur_dv or {}).get("files", {})
             prev_counts = (prev_dv or {}).get("files", {})
-            by_key = {_dv_key(x["path"]): x for x in m["files"]}
+            by_key = {x["path"]: x for x in m["files"]}
             cur_dir = snaplog.entry_uri(table_dir, cur_dv["dir"]) if cur_dv else None
             prev_dir = (
                 snaplog.entry_uri(table_dir, prev_dv["dir"]) if prev_dv else None
@@ -853,7 +852,7 @@ class SnapshotFeedChangesReader(DataSourceReader):
             # effective CDF floor is ONE ABOVE the oldest retained
             # version (the checkpoint log keeps summaries, not file
             # lists — the base file-set is not reconstructible). Probe
-            # the base up front so the error names the real constraint
+            # the base up front so the error names the real limit
             # instead of surfacing as a confusing miss on a version the
             # caller never asked for.
             try:
@@ -1235,13 +1234,13 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
 # the driver-side commit moves them under `v=N/` and publishes the
 # manifest with the SAME atomic create-no-overwrite protocol storage.py
 # uses (hard-link publish on local paths; object stores keep the
-# documented single-writer caveat). Tables carrying CHECK constraints or
-# Bloom specs refuse this path loudly — constraints need SQL evaluation
-# and Bloom filters a Spark build, both of which storage.snapshot_append
-# provides — rather than silently committing unvalidated/unindexed files;
-# so does an overwrite of a change-data-feed table, whose netted replace
-# diff needs storage.snapshot_write. The record itself comes from
-# snaplog.next_record, so an append carries every table-level field.
+# documented single-writer caveat). Tables carrying Bloom specs refuse
+# this path loudly — Bloom filters need a Spark build, which
+# storage.snapshot_append provides — rather than silently committing
+# unindexed files; so does an overwrite of a change-data-feed table,
+# whose netted replace diff needs storage.snapshot_write. The record
+# itself comes from snaplog.next_record, so an append carries every
+# table-level field.
 # --------------------------------------------------------------------------
 
 _STAGING = "_staging"
@@ -1390,8 +1389,8 @@ def _commit_staged(
         if cur is not None:
             # txn replay gate FIRST (SetTransaction semantics): a batchId
             # at or below the stamped watermark already committed — skip
-            # before ANY refusal check, or a post-crash constraint/schema/
-            # bloom change would permanently fail a replayed batch that
+            # before ANY refusal check, or a post-crash schema/bloom
+            # change would permanently fail a replayed batch that
             # needs no write at all
             if txn_app is not None and txn_batch is not None:
                 stamped = ((cur.get("properties") or {}).get("txn") or {}).get(
@@ -1403,13 +1402,6 @@ def _commit_staged(
                             f"{root.rstrip('/')}/{_STAGING}/{m.subdir}/{m.name}"
                         )
                     return None
-            if cur.get("constraints"):
-                raise ValueError(
-                    "snapshotfeed writer: the table carries CHECK "
-                    "constraints, which need SQL evaluation at write time "
-                    "— write through storage.snapshot_append / "
-                    "snapshot_write instead"
-                )
             if overwrite and cur.get("cdf"):
                 raise ValueError(
                     "snapshotfeed writer: the table records a change data "

@@ -105,12 +105,8 @@ def resolve(path: str):
 
 
 def entry_uri(table_dir: str, path: str) -> str:
-    """Resolve a manifest entry path (a data file, a DV dir): relative
-    entries live under the table dir; absolute ones (a URI, a ``file:``
-    URI with a single slash, or /-rooted — how a SHALLOW CLONE references
-    its source's files) pass through untouched."""
-    if "://" in path or path.startswith(("/", "file:")):
-        return path
+    """Resolve a manifest entry path (a data file, a DV dir): every entry
+    is relative to the table dir."""
     return f"{table_dir.rstrip('/')}/{path}"
 
 
@@ -255,7 +251,7 @@ def commit(table_dir: str, version: int, payload: dict) -> None:
 
 # table-level fields: a commit inherits each from its parent record unless
 # the writer passes a replacement
-INHERITED = ("schema", "constraints", "bloom_spec", "cdf", "dv")
+INHERITED = ("schema", "bloom_spec", "cdf", "dv")
 
 
 def json_safe(v):
@@ -338,8 +334,8 @@ def next_record(
     record the write was read from (None: a full replace, which states
     every field itself). The one rule for what a commit inherits:
 
-    * ``INHERITED`` fields (schema, constraints, Bloom spec, change-data-
-      feed flag, deletion vector) come from the parent unless ``fields``
+    * ``INHERITED`` fields (schema, Bloom spec, change-data-feed flag,
+      deletion vector) come from the parent unless ``fields``
       passes a replacement; a None or empty replacement drops the field.
       ``staged_schema`` (the staged rows' schema) replaces the parent's
       schema when it adds columns (schema evolution) or the parent
@@ -347,10 +343,9 @@ def next_record(
     * ``properties`` by ``props`` mode: ``"merge"`` — data-changing
       commits — stamps ``properties`` with the parent's ``txn`` map
       merged under them (``merge_txn``); ``"carry"`` — content-preserving
-      maintenance — keeps the parent's properties wholesale; ``"reset"``
-      keeps ``properties`` alone.
-    * every other field (``changes``, ``restored_from``, ``cloned_from``
-      …) passes through unless None."""
+      maintenance — keeps the parent's properties wholesale.
+    * every other field (``changes``, ``restored_from`` …) passes
+      through unless None."""
     parent = parent or {}
     if "schema" not in fields and staged_schema is not None:
         prior = parent.get("schema")
@@ -364,7 +359,7 @@ def next_record(
     if props == "carry":
         p = parent.get("properties")
     else:
-        p = merge_txn(parent, properties) if props == "merge" else properties
+        p = merge_txn(parent, properties)
         p = props_payload(p) if p else None
     if p:
         rec["properties"] = p
@@ -540,8 +535,7 @@ def history_rec(v: int, m: dict) -> dict:
         rec["ts"] = m["ts"]
     if m.get("op"):
         rec["op"] = m["op"]
-    for k in ("restored_from", "optimized_from", "restamped_from",
-              "cloned_from", "constraint_added", "constraint_dropped"):
+    for k in ("restored_from", "optimized_from", "restamped_from"):
         if k in m:
             rec[k] = m[k]
     files, own = m["files"], f"v={v}/"

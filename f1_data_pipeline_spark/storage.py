@@ -192,12 +192,6 @@ def staged_swap(base: str, tmp: str) -> None:
 # create-no-overwrite, so single-writer discipline (or a commit service)
 # is required, as with every log-structured table format.
 
-class ConstraintViolationError(ValueError):
-    """A PERSISTENT table CHECK constraint (``snapshot_add_constraint``)
-    rejected rows a write tried to stage. Nothing was committed — the
-    orphan stage is removed before raising."""
-
-
 def snapshot_version(spark: SparkSession, table_dir: str) -> int:
     """Current committed version (0 = no commit yet), resolved from the
     manifest-log checkpoint plus O(tail) existence probes
@@ -345,48 +339,27 @@ def _stage(
     table_dir: str,
     what: str,
     derived_from: int | None,
-    constraints: dict | None = None,
     cluster_by: list[str] | None = None,
     cluster_files: int | None = None,
 ) -> tuple[int, str]:
     """Stage ``df`` as the next version — the one staging sequence of
     every writer that stages rows: CLAIM and write ``v=N``
-    (``_stage_version``), then two gates, each of which removes the
-    never-committed stage before raising. Returns ``(version,
+    (``_stage_version``), then the staleness gate. Returns ``(version,
     staging_dir)``.
 
-    1. Staleness, for read-modify-write writers: a commit derived from
-       version ``derived_from`` must stage as ``derived_from + 1``. If a
-       concurrent writer committed in the window between the caller's
-       manifest read and its staging claim, the carried file list is
-       STALE — committing it would silently erase the concurrent
-       commit's files (a lost update the create-no-overwrite commit
-       record cannot catch, because the versions differ): a retryable
-       conflict is raised instead. None for blind writes, which carry
-       nothing.
-    2. The table's persistent CHECK ``constraints``: one violation
-       counter per rule rides the staging write (a single
-       ``Observation`` — no extra table pass; NULL rule results count as
-       violations, matching ``check_expectations``), and any violation
-       raises typed with per-rule counts, so a bad batch can never
-       become a committed version.
+    Staleness, for read-modify-write writers: a commit derived from
+    version ``derived_from`` must stage as ``derived_from + 1``. If a
+    concurrent writer committed in the window between the caller's
+    manifest read and its staging claim, the carried file list is STALE
+    — committing it would silently erase the concurrent commit's files
+    (a lost update the create-no-overwrite commit record cannot catch,
+    because the versions differ): the never-committed stage is removed
+    and a retryable conflict is raised instead. None for blind writes,
+    which carry nothing.
 
     ``cluster_by`` range-clusters the staged rows (into ``cluster_files``
     files when given). repartitionByRange samples its input in a job of
-    its own, so the batch is persisted first: it is evaluated once, and
-    the constraints' Observation counters fire once."""
-    from pyspark.sql import Observation
-
-    names = sorted(constraints or {})
-    obs = None
-    if names:
-        obs = Observation()
-        df = df.observe(obs, *[
-            F.sum(
-                (~F.coalesce(F.expr(constraints[n]), F.lit(False))).cast("long")
-            ).alias(f"c{i}")
-            for i, n in enumerate(names)
-        ])
+    its own, so the batch is persisted first: it is evaluated once."""
     cached = None
     if cluster_by:
         cached = df = df.persist()
@@ -406,16 +379,6 @@ def _stage(
             f"{what}: staged v={version} but the write was derived from "
             f"v={derived_from} — a concurrent writer committed in between "
             f"and the carried file list is stale; re-read and re-derive"
-        )
-    got = obs.get if obs is not None else {}
-    bad = {n: int(got[f"c{i}"] or 0) for i, n in enumerate(names)}
-    bad = {n: c for n, c in bad.items() if c}
-    if bad:
-        snaplog.remove(vdir)
-        raise ConstraintViolationError(
-            f"{what}: table CHECK constraint violations {bad} under "
-            f"{table_dir} — nothing was committed; fix the batch or "
-            f"snapshot_drop_constraint first"
         )
     return version, vdir
 
@@ -782,43 +745,20 @@ def _read_files(
                 spark.conf.unset(_LISTING_THRESHOLD)
 
 
-def check_expectations(df: DataFrame, expectations: dict[str, str]) -> None:
-    """CHECK-constraint gate: every row must satisfy every expectation
-    (``name -> SQL boolean expression``). ONE scan counts all violations
-    together (sum-of-cases aggregate, map-side combined — not one job per
-    rule); raises with per-rule counts if any row fails. NULL results
-    count as violations — an expectation must be provably true."""
-    if not expectations:
-        return
-    aggs = [
-        F.sum(
-            F.when(F.coalesce(F.expr(cond), F.lit(False)), 0).otherwise(1)
-        ).alias(name)
-        for name, cond in expectations.items()
-    ]
-    row = df.agg(*aggs).head()
-    bad = {name: int(row[name] or 0) for name in expectations if (row[name] or 0) > 0}
-    if bad:
-        raise ValueError(
-            "expectations violated: "
-            + ", ".join(f"{n} ({c} rows, rule: {expectations[n]!r})" for n, c in sorted(bad.items()))
-        )
-
-
 def snapshot_write(
     df: DataFrame,
     table_dir: str,
     stats_cols: list[str] | None = None,
-    expectations: dict[str, str] | None = None,
     bloom_cols: list[str] | None = None,
     bloom_bits: int = 16384,
     bloom_hashes: int = 5,
     properties: dict | None = None,
     expected_version: int | None = None,
     retries: int = 0,
-    constraints: dict[str, str] | None = None,
     change_files: bool | None = None,
     _op: str = "write",
+    _cluster_by: list[str] | None = None,
+    _cluster_files: int | None = None,
 ) -> int:
     """Commit ``df`` as the next table version and return it.
 
@@ -838,9 +778,10 @@ def snapshot_write(
     Every commit record carries an ``op`` label (the Delta
     ``commitInfo.operation`` shape) so history and the ``snapshotfeed``
     streaming source can tell CONTENT-PRESERVING maintenance (optimize /
-    restamp / constraint DDL) from data changes without
-    guessing structurally. ``_op`` is internal plumbing for the
-    maintenance wrappers that stage through this function.
+    restamp) from data changes without guessing structurally. ``_op``,
+    ``_cluster_by`` and ``_cluster_files`` are internal plumbing for the
+    writers that stage through this function (``snapshot_append``'s
+    first commit passes its label and range clustering).
 
     Concurrency controls (optimistic, Delta-style):
 
@@ -917,13 +858,7 @@ def snapshot_write(
     guard; the remedy is stated in the error (delete the orphan — the
     missing commit record proves it was never committed). True
     multi-writer commit needs a coordination service (what Delta's commit
-    coordinator provides), exactly as for any log-structured format.
-
-    ``expectations`` (``name -> SQL boolean expression``) gate the commit
-    like Delta CHECK constraints: one aggregate scan counts violations of
-    every rule together BEFORE anything is staged; any violation raises
-    with per-rule counts and nothing is written — a bad batch can never
-    become a committed version."""
+    coordinator provides), exactly as for any log-structured format."""
     spark = df.sparkSession
     if bloom_cols and (
         bloom_bits < 64 or bloom_bits % 64 or bloom_hashes < 1
@@ -938,8 +873,6 @@ def snapshot_write(
         # fail BEFORE staging on an unsupported key type (the builder
         # re-checks, but by then a claim dir exists)
         _bloom_ctypes(df, list(bloom_cols))
-    if expectations:
-        check_expectations(df, expectations)
     if expected_version is not None and retries:
         raise ValueError(
             "snapshot_write: expected_version and retries are mutually "
@@ -964,25 +897,19 @@ def snapshot_write(
                     f"between; re-read and re-derive"
                 )
         try:
-            # persistent CHECK constraints survive a full-replace write
-            # (Delta semantics: constraints live on the TABLE until
-            # dropped); ``constraints`` adds/declares rules at write time
-            # (the fresh-table and deep-clone path). Both sets gate the
-            # new rows INSIDE the staging write — no extra pass.
             cur = snapshot_version(spark, table_dir)
             prior_manifest = (
                 snaplog.read_manifest(table_dir, cur) if cur >= 1 else {}
             )
-            prior = prior_manifest.get("constraints")
             cdf = (
                 bool(change_files)
                 if change_files is not None
                 else bool(prior_manifest.get("cdf"))
             )
-            effective = {**(prior or {}), **(constraints or {})} or None
             # the CAS pin doubles as the staleness gate
             version, vdir = _stage(
-                df, table_dir, "snapshot_write", expected_version, effective
+                df, table_dir, "snapshot_write", expected_version,
+                _cluster_by, _cluster_files,
             )
             entries = _staged_entries(spark, table_dir, version, stats_cols, bloom_spec)
             changes = None
@@ -1031,12 +958,12 @@ def snapshot_write(
                     ),
                 )
             # a full replace derives nothing from its parent record: the
-            # persistent constraints and the feed flag are stated here,
-            # and the Bloom spec, deletion vector and txn stamps reset
+            # feed flag is stated here, and the Bloom spec, deletion
+            # vector and txn stamps reset
             return _publish_staged(table_dir, version, snaplog.next_record(
                 None, version, _op, entries, properties=properties,
-                schema=df.schema.json(), constraints=effective,
-                bloom_spec=bloom_spec, cdf=cdf, changes=changes,
+                schema=df.schema.json(), bloom_spec=bloom_spec, cdf=cdf,
+                changes=changes,
             ))
         except SnapshotConflictError:
             if attempt + 1 >= attempts or expected_version is not None:
@@ -1079,9 +1006,6 @@ def snapshot_append(
       widens the table with new columns and NULL-fills omitted ones
       (the commit records the merged schema; carried files null-fill
       through the read contract).
-    - persistent CHECK constraints gate the NEW rows only (existing rows
-      already passed at their own commit time) via one Observation inside
-      the staging write — no extra pass.
     - per-file stats (default: the same columns the current manifest
       tracks) and Bloom filters (the table's spec) are built for the new
       files only, so skipping power is uniform across the table.
@@ -1127,20 +1051,15 @@ def snapshot_append(
                 # snapshot_write's own CAS/staged-version check raise a
                 # retryable SnapshotConflictError instead, and the retry
                 # re-reads cur>=1 and takes the append path.
-                first = df
-                if cluster_by:
-                    first = (
-                        df.repartitionByRange(cluster_files, *cluster_by)
-                        if cluster_files
-                        else df.repartitionByRange(*cluster_by)
-                    )
                 return snapshot_write(
-                    first,
+                    df,
                     table_dir,
                     stats_cols=stats_cols,
                     properties=properties,
                     expected_version=0 if expected_version is None else expected_version,
                     _op="append",
+                    _cluster_by=cluster_by,
+                    _cluster_files=cluster_files,
                 )
             manifest = snaplog.read_manifest(table_dir, cur)
             entries = manifest["files"]
@@ -1183,7 +1102,7 @@ def snapshot_append(
             # in between would be erased by committing it
             version, _ = _stage(
                 appended, table_dir, "snapshot_append", cur,
-                manifest.get("constraints"), cluster_by, cluster_files,
+                cluster_by, cluster_files,
             )
             new_entries = _staged_entries(
                 spark, table_dir, version,
@@ -1517,14 +1436,6 @@ def _where_expr(where: list[tuple], qualify: str | None = None):
 _DV_RELPATH_RE = r"(v=\d+/[^/]+)$"
 
 
-def _dv_key(entry_path: str) -> str:
-    """A manifest entry path's deletion-vector key: the last two path
-    segments ("v=K/part-….parquet") — the same normalization
-    ``_apply_dv`` extracts from ``_metadata.file_path``, so it matches
-    whether the entry is table-relative or absolute (shallow clones)."""
-    return "/".join(entry_path.rstrip("/").split("/")[-2:])
-
-
 def _dv_deleted(manifest: dict) -> int | None:
     """The manifest's total deleted-position count (None when the version
     carries no deletion vector) — the broadcast-gate input."""
@@ -1617,11 +1528,10 @@ def _carried_dv(
 ) -> dict | None:
     """The deletion-vector block of a rewrite commit: rewritten files
     dropped their deleted rows physically, so only the CARRIED files'
-    entries survive (matched on the two-segment key — entry paths may be
-    absolute on a shallow clone). None when nothing survives."""
+    entries survive. None when nothing survives."""
     if old_dv is None:
         return None
-    keys = sorted({_dv_key(e["path"]) for e in carried})
+    keys = sorted({e["path"] for e in carried})
     return _write_dv(
         spark, table_dir, version,
         old_dv.where(F.col("path").isin(keys)) if keys else None,
@@ -1688,7 +1598,6 @@ def snapshot_upsert(
     cluster_files: int | None = None,
     merge_mode: str = "replace",
     evolve_schema: bool = False,
-    expectations: dict[str, str] | None = None,
     properties: dict | None = None,
     expected_version: int | None = None,
 ) -> int:
@@ -1696,12 +1605,6 @@ def snapshot_upsert(
     ``properties`` / ``expected_version`` behave as on ``snapshot_write``
     (exactly-once stamp committed atomically with the data; CAS against
     the version the batch was derived from).
-
-    ``expectations`` gate the commit exactly as on ``snapshot_write``:
-    every rule is checked against the INCOMING batch (one aggregate
-    scan, before anything stages or any touched file is read) — survivor
-    rows already passed the gate when their own version committed, so
-    re-checking the table would be O(table) for nothing.
 
     ``evolve_schema=True`` accepts a batch whose columns differ from the
     committed schema: new columns are ADDED to the table (rows in carried
@@ -1751,8 +1654,6 @@ def snapshot_upsert(
     physical clustering under it (the reason Delta/Iceberg pair stats
     with clustering); any table maintained by repeated upserts should
     cluster."""
-    if expectations:
-        check_expectations(updates, expectations)
     if merge_mode not in ("replace", "coalesce"):
         raise ValueError(f"snapshot_upsert: unknown merge_mode {merge_mode!r}")
     update_set = (
@@ -1778,7 +1679,6 @@ def snapshot_apply_cdc(
     stats_cols: list[str] | None = None,
     cluster_files: int | None = None,
     evolve_schema: bool = False,
-    expectations: dict[str, str] | None = None,
     properties: dict | None = None,
     expected_version: int | None = None,
 ) -> int:
@@ -1788,8 +1688,7 @@ def snapshot_apply_cdc(
     ``delete_ops`` remove their key; every other row upserts
     last-write-wins (the op column itself is not stored). Folding a raw
     I/U/D log down to one row per key is the caller's step —
-    ``merge.cdc_apply`` for batch logs, or the per-batch ``max_by`` fold
-    the streaming maintainer does; this function then applies upserts
+    ``merge.cdc_apply`` for batch logs; this function then applies upserts
     AND deletes against one shared touched-file set, so a mixed batch
     still costs O(touched files + batch), never two table passes.
 
@@ -1801,10 +1700,6 @@ def snapshot_apply_cdc(
     # NULL op must not make a row vanish from BOTH sides (isin is NULL on
     # NULL input): anything not provably a delete is an upsert
     is_delete = F.coalesce(F.col(op_col).isin(*delete_ops), F.lit(False))
-    if expectations:
-        # gate the UPSERT rows only: a delete tombstone carries no
-        # payload for a CHECK constraint to hold over
-        check_expectations(changes.where(~is_delete).drop(op_col), expectations)
     return _keyed_rewrite(
         spark, table_dir, changes.withColumn(op_col, is_delete), key,
         "snapshot_apply_cdc", "cdc", delete_col=op_col, exact_columns=True,
@@ -2143,9 +2038,7 @@ def _keyed_rewrite(
         .where(~F.col("__action").isin("skip", "D", "MD"))
         .select(cols)
     )
-    version, vdir = _stage(
-        staged_df, table_dir, what, current, manifest.get("constraints")
-    )
+    version, vdir = _stage(staged_df, table_dir, what, current)
     metrics = {k: int(v or 0) for k, v in obs.get.items()}
     if not (metrics["updated"] or metrics["deleted"] or metrics["inserted"]):
         # pure no-op: don't commit a version that only re-copies
@@ -2375,18 +2268,12 @@ def _state_diff_sides(
         f_dv = dv_from if dv_from is not None else empty_dv
         t_dv = dv_to if dv_to is not None else empty_dv
         shared = from_paths & to_paths
-        # DV keys are two-segment; map back to the manifest entry paths
-        # (possibly absolute on a clone) to locate the files to open
-        shared_by_key = {_dv_key(p): p for p in shared}
 
         def _dv_delta_rows(delta: DataFrame) -> DataFrame:
             delta = delta.where(
-                F.col("path").isin(sorted(shared_by_key))
-                if shared_by_key
-                else F.lit(False)
+                F.col("path").isin(sorted(shared)) if shared else F.lit(False)
             )
-            keys = [r["path"] for r in delta.select("path").distinct().collect()]
-            paths = [shared_by_key[k] for k in keys]
+            paths = [r["path"] for r in delta.select("path").distinct().collect()]
             if not paths:
                 return _empty_frame(spark, schema)
             rows = (
@@ -2510,7 +2397,7 @@ def snapshot_stats_agg(
     def _dirty(e: dict) -> bool:
         if e.get("rows", 0) == 0:
             return False  # nothing to contribute either way
-        if dv_counts.get(_dv_key(e["path"]), 0) > 0:
+        if dv_counts.get(e["path"], 0) > 0:
             return True  # stats may describe tombstoned rows
         st = e.get("stats") or {}
         return any(c not in st for c in cols)
@@ -2534,7 +2421,7 @@ def snapshot_stats_agg(
                 acc[c] = v_ if acc[c] is None else better(acc[c], v_)
 
     if dirty:
-        dirty_keys = sorted({_dv_key(e["path"]) for e in dirty})
+        dirty_keys = sorted({e["path"] for e in dirty})
         dv = _dv_read(spark, table_dir, manifest)
         scanned = _apply_dv(
             _read_files(spark, table_dir, [e["path"] for e in dirty], schema),
@@ -2609,14 +2496,14 @@ def snapshot_count(
             continue
         if _entry_prunable(e, where):
             continue  # proves zero matching rows — contributes nothing
-        if not dv_counts.get(_dv_key(e["path"]), 0) and _entry_all_match(
+        if not dv_counts.get(e["path"], 0) and _entry_all_match(
             e, where
         ):
             total += e["rows"]  # proves every row matches — no scan
         else:
             partial.append(e)
     if partial:
-        dirty_keys = sorted({_dv_key(e["path"]) for e in partial})
+        dirty_keys = sorted({e["path"] for e in partial})
         dv = _dv_read(spark, table_dir, manifest)
         scanned = _apply_dv(
             _read_files(
@@ -2739,7 +2626,7 @@ def snapshot_delete(
     )
     dv_counts = (manifest.get("dv") or {}).get("files", {})
     live_candidates = sum(
-        e.get("rows", 0) - dv_counts.get(_dv_key(e["path"]), 0) for e in candidates
+        e.get("rows", 0) - dv_counts.get(e["path"], 0) for e in candidates
     )
     deleted = live_candidates - sum(e["rows"] for e in staged)
     dv = _carried_dv(spark, table_dir, version, old_dv, carried)
@@ -2757,100 +2644,10 @@ def snapshot_delete(
             live.where(F.coalesce(_where_expr(where), F.lit(False)))
             .withColumn("_change_type", F.lit("delete")),
         )
-    # deletes cannot create violating rows: the constraints carry
-    # unchecked
     return _publish_staged(table_dir, version, snaplog.next_record(
         manifest, version, "delete", staged + carried,
         staged_schema=survivors.schema.json(), dv=dv, changes=changes,
     )), deleted
-
-
-def snapshot_clone(
-    spark: SparkSession,
-    source_dir: str,
-    clone_dir: str,
-    shallow: bool = True,
-) -> int:
-    """Clone the source table's CURRENT state into a NEW table directory.
-
-    ``shallow=True`` (the Delta SHALLOW CLONE shape): the clone's v1
-    manifest references the source's data files (and deletion vector) by
-    ABSOLUTE URI — zero bytes move, the clone costs one manifest read
-    and one atomic commit regardless of table size. The clone is a fully
-    independent table from that instant: upserts/deletes/CDC on it stage
-    their own (relative) files and simply carry the absolute entries,
-    the change feed diffs as usual, and ITS vacuum never touches the
-    source's files (reachability only sweeps under the clone's own
-    directory). The dev/test-against-prod and experiment-branch shape.
-
-    A shallow clone REGISTERS itself under the source's ``_clones/``
-    directory (one small JSON per clone: clone path + pinned source
-    version). ``snapshot_vacuum`` on the source reads the registry and
-    protects every live registered clone's pinned version — files a
-    clone still depends on survive reclamation, closing the
-    vacuum-breaks-clones hole Delta merely documents. The narrowed
-    residual caveat: a clone whose directory was deleted out-of-band is
-    detected and its registration dropped, but a clone REACHED ONLY
-    through a deleted intermediate clone (grandclone chains) loses its
-    protection with the intermediate; ``snapshot_vacuum(force=True)``
-    ignores registrations entirely (the old behavior).
-
-    ``shallow=False`` copies the data: one ``snapshot_read`` →
-    ``snapshot_write`` with the source's stats/bloom spec re-derived —
-    O(table), fully independent lifecycle."""
-    current = snapshot_version(spark, source_dir)
-    if current < 1:
-        raise FileNotFoundError(f"no committed snapshot in {source_dir}")
-    if snapshot_version(spark, clone_dir) > 0:
-        raise ValueError(
-            f"snapshot_clone: {clone_dir} already holds a committed table"
-        )
-    manifest = snaplog.read_manifest(source_dir, current)
-    entries = manifest["files"]
-    if not shallow:
-        df = snapshot_read(spark, source_dir)
-        spec = manifest.get("bloom_spec") or {}
-        return snapshot_write(
-            df,
-            clone_dir,
-            stats_cols=snaplog.tracked_stats(entries),
-            bloom_cols=spec.get("cols"),
-            bloom_bits=spec.get("m", 16384),
-            bloom_hashes=spec.get("h", 5),
-            constraints=manifest.get("constraints"),
-        )
-    src_base = source_dir.rstrip("/")
-    # entry_uri keeps a clone-of-a-clone from double-prefixing entries
-    # the source itself holds by absolute reference
-    abs_entries = [
-        {**e, "path": snaplog.entry_uri(src_base, e["path"])} for e in entries
-    ]
-    dv = manifest.get("dv")
-    # a new table: no properties; the deletion vector is re-pointed at the
-    # source's dataset
-    snaplog.commit(clone_dir, 1, snaplog.next_record(
-        manifest, 1, "clone", abs_entries, props="reset",
-        dv={**dv, "dir": snaplog.entry_uri(src_base, dv["dir"])} if dv else None,
-        cloned_from={"table": src_base, "version": current},
-    ))
-    # register with the source so ITS vacuum can protect the pinned
-    # version (idempotent create; registration loss only reopens the
-    # documented keep_last caveat, never corrupts either table)
-    import json
-    import uuid
-
-    # publish-once of a fresh name: a crash mid-write leaves only a
-    # dot-hidden tmp (invisible to vacuum's registry scan), never a torn
-    # .json that would block every future non-force vacuum on the source
-    reg = f"{src_base}/_clones/{uuid.uuid4().hex}.json"
-    body = {"clone": clone_dir.rstrip("/"), "source_version": current}
-    if not snaplog.publish_once(reg, json.dumps(body).encode()):
-        raise RuntimeError(
-            f"snapshot_clone: failed to publish clone registration {reg} — "
-            f"the clone is committed but unprotected from the source's "
-            f"vacuum; re-run registration or vacuum with care"
-        )
-    return 1
 
 
 def snapshot_restamp(
@@ -2911,8 +2708,8 @@ def snapshot_clean_orphans(
 
     Safety: only UNCOMMITTED stages above the current version qualify.
     A version at or below it was taken by a commit, possibly a
-    metadata-only one (restamp, constraint DDL, a restore without change
-    files), which takes a version without claiming its dir. A staged
+    metadata-only one (restamp, a restore without change files), which
+    takes a version without claiming its dir. A staged
     writer that loses such a race removes its own ``v=N`` and
     ``_changes/v=N`` before raising; what a writer that crashed inside
     that window leaves is referenced by no manifest, so
@@ -2963,77 +2760,6 @@ def snapshot_clean_orphans(
         if not leftover and not dry_run:
             snaplog.remove(sdir)
     return sorted(removed) + sorted(swept)
-
-
-def snapshot_constraints(spark: SparkSession, table_dir: str) -> dict:
-    """The table's persistent CHECK constraints (``name -> SQL boolean
-    expression``), empty when none were ever added."""
-    v = snapshot_version(spark, table_dir)
-    if v < 1:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    return dict(snaplog.read_manifest(table_dir, v).get("constraints") or {})
-
-
-def snapshot_add_constraint(
-    spark: SparkSession, table_dir: str, name: str, expr: str
-) -> int:
-    """ALTER TABLE ADD CONSTRAINT (the Delta shape): validate that every
-    CURRENT row satisfies ``expr`` (one aggregate scan — adding a
-    constraint a table already violates must fail, not lie), then commit
-    a metadata-only version carrying the file list verbatim plus the new
-    rule. From that version on, EVERY write path — ``snapshot_write``
-    (full replace), ``snapshot_upsert`` / ``snapshot_apply_cdc`` (and
-    the streaming maintainer built on them), ``snapshot_merge`` —
-    enforces the rule on the rows it stages, counting violations inside
-    the staging write itself (an ``Observation``, no extra pass) and
-    aborting the commit typed (``ConstraintViolationError``) before the
-    record is published. Maintenance that moves rows without changing
-    them (delete, optimize, restore, clones, restamp) carries
-    the constraint set; enforcement on staged rows is therefore
-    inductive over the whole history. NULL rule results count as
-    violations, as in ``check_expectations``."""
-    current = snapshot_version(spark, table_dir)
-    if current < 1:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    manifest = snaplog.read_manifest(table_dir, current)
-    existing = dict(manifest.get("constraints") or {})
-    if existing.get(name) == expr:
-        return current  # idempotent re-add: nothing to commit
-    if name in existing:
-        raise ValueError(
-            f"snapshot_add_constraint: {name!r} already exists with a "
-            f"different expression ({existing[name]!r}) — drop it first"
-        )
-    check_expectations(snapshot_read(spark, table_dir), {name: expr})
-    snaplog.commit(table_dir, current + 1, snaplog.next_record(
-        manifest, current + 1, "add-constraint", manifest["files"],
-        props="carry", constraints={**existing, name: expr},
-        constraint_added=name,
-    ))
-    return current + 1
-
-
-def snapshot_drop_constraint(
-    spark: SparkSession, table_dir: str, name: str
-) -> int:
-    """ALTER TABLE DROP CONSTRAINT: metadata-only commit without the
-    named rule. Raises KeyError if the constraint does not exist (a
-    typo'd drop must not silently succeed)."""
-    current = snapshot_version(spark, table_dir)
-    if current < 1:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    manifest = snaplog.read_manifest(table_dir, current)
-    existing = dict(manifest.get("constraints") or {})
-    if name not in existing:
-        raise KeyError(
-            f"snapshot_drop_constraint: no constraint {name!r} on {table_dir}"
-        )
-    del existing[name]
-    snaplog.commit(table_dir, current + 1, snaplog.next_record(
-        manifest, current + 1, "drop-constraint", manifest["files"],
-        props="carry", constraints=existing, constraint_dropped=name,
-    ))
-    return current + 1
 
 
 def snapshot_restore(spark: SparkSession, table_dir: str, to_version: int) -> int:
@@ -3098,8 +2824,8 @@ def snapshot_restore(spark: SparkSession, table_dir: str, to_version: int) -> in
             ),
         )
     # the restored state is the TARGET version's, so its record is the
-    # parent: its deletion vector (version-relative, vacuum-protected),
-    # the constraint set its rows passed and its stamp all travel with it
+    # parent: its deletion vector (version-relative, vacuum-protected)
+    # and its stamp travel with it
     record = snaplog.next_record(
         manifest, version, "restore", files, props="carry", cdf=cdf,
         restored_from=to_version, changes=changes,
@@ -3109,53 +2835,6 @@ def snapshot_restore(spark: SparkSession, table_dir: str, to_version: int) -> in
     else:
         _publish_staged(table_dir, version, record)
     return version
-
-
-def _live_clone_pins(
-    spark: SparkSession, table_dir: str, caller: str, drop_stale: bool
-) -> list[tuple[str, int]]:
-    """LIVE shallow-clone registrations under ``_clones/`` as
-    ``(clone_dir, pinned_source_version)`` pairs — the versions that both
-    ``snapshot_vacuum`` (reachability) and ``snapshot_expire_log``
-    (expiry clamp) must honor. Registrations whose clone table no longer
-    exists are stale: deleted when ``drop_stale`` (a real maintenance
-    run), kept and ignored otherwise (dry runs must not mutate). A torn
-    registration fails typed — it is indistinguishable from a live
-    clone's protection record, and silently skipping it could let the
-    caller destroy state that clone still reads."""
-    cdir = f"{table_dir.rstrip('/')}/_clones"
-    regs = [
-        f"{cdir}/{r.base_name}"
-        for r in snaplog.listdir(cdir)
-        # dot-hidden names are in-flight registration tmps
-        if r.base_name.endswith(".json") and not r.base_name.startswith(".")
-    ]
-    pins: list[tuple[str, int]] = []
-    for rpath in regs:
-        try:
-            reg = snaplog.read_json(rpath)
-            clone, pin = reg["clone"], int(reg["source_version"])
-        except (ValueError, KeyError, TypeError) as e:
-            # a torn registration (clone writer crashed mid-write on a
-            # pre-atomic-rename layout) could belong to a LIVE clone —
-            # fail typed and actionable instead of guessing (force=True
-            # on vacuum ignores registrations entirely)
-            raise ValueError(
-                f"{caller}: unreadable clone registration {rpath} "
-                f"— if no live clone references this table, delete the "
-                f"file (or, for vacuum, run force=True, which ignores "
-                f"clone protection entirely): {e}"
-            ) from e
-        try:
-            alive = snapshot_version(spark, clone) >= 1
-        except Exception:
-            alive = False  # unreachable storage: assume gone
-        if not alive:
-            if drop_stale:
-                snaplog.remove(rpath)  # stale registration
-            continue
-        pins.append((clone, pin))
-    return pins
 
 
 def snapshot_expire_log(
@@ -3188,18 +2867,7 @@ def snapshot_expire_log(
     N)`` / ``restore`` / ``snapshotfeed startingVersion=N``) to an
     expired version raises FileNotFoundError — the same contract every
     log-structured format has past its retention horizon. ``keep_last``
-    is clamped to >= 1 (the current version is never expirable).
-
-    Live shallow clones (registered under ``_clones/``) pin a source
-    version whose manifest is the ONLY record of which files they carry
-    — checkpoint summaries hold counts, not file lists — and clone-aware
-    ``snapshot_vacuum`` reads exactly that manifest to protect the
-    clone's data. Expiring it would blind vacuum and make the clone's
-    files reclaimable, so the cut is CLAMPED below the oldest live
-    clone's pin (expiry past a long-lived clone is a no-op until the
-    clone is dropped or its registration removed). Stale registrations
-    are dropped in passing (kept under ``dry_run``); a torn registration
-    fails typed, exactly as in ``snapshot_vacuum``."""
+    is clamped to >= 1 (the current version is never expirable)."""
     keep_last = max(1, int(keep_last))
     current = snapshot_version(spark, table_dir)
     if current < 1:
@@ -3207,13 +2875,6 @@ def snapshot_expire_log(
     cut = current - keep_last  # expire versions <= cut
     if cut < 1:
         return []
-    pins = _live_clone_pins(
-        spark, table_dir, "snapshot_expire_log", drop_stale=not dry_run
-    )
-    if pins:
-        cut = min(cut, min(p for _, p in pins) - 1)
-        if cut < 1:
-            return []
     expired = [v for v in snaplog.list_versions(table_dir) if v <= cut]
     if dry_run or not expired:
         return expired
@@ -3250,21 +2911,11 @@ def snapshot_vacuum(
     table_dir: str,
     keep_last: int = 2,
     dry_run: bool = False,
-    force: bool = False,
 ) -> list[int]:
     """Reclaim data not reachable from the newest ``keep_last`` versions;
     returns the versions whose directories were removed or emptied.
     ``dry_run=True`` reports the same list without deleting anything —
     the look-before-you-reclaim step.
-
-    Shallow clones made from this table (registered under ``_clones/``
-    at clone time) are PROTECTED: each live clone's pinned source
-    version counts as reachable, so reclaiming can never break a
-    registered clone's unrewritten entries. Registrations whose clone
-    table no longer exists are stale — dropped during a real run, kept
-    (and still honored) under ``dry_run``. ``force=True`` ignores the
-    registry and reclaims as if no clones existed — the explicit
-    I-know-better flag for abandoned clones on unreachable storage.
 
     Reachability, not age, decides: copy-on-write upserts make newer
     manifests reference files living in OLDER version directories, so an
@@ -3272,12 +2923,10 @@ def snapshot_vacuum(
     lists survives in place, the rest is deleted, and the dir goes only
     when nothing reachable remains in it. Vacuum itself never deletes
     commit records (they are the table history, like Delta's log; only
-    ``snapshot_expire_log`` retires them, and it clamps below live clone
-    pins) — time travel to a vacuumed version raises FileNotFoundError
-    because its data is gone, while the current version can never be
-    deleted: ``keep_last`` is clamped to >= 1. If a LIVE clone's pinned
-    manifest is missing (out-of-band loss), vacuum fails typed rather
-    than guess."""
+    ``snapshot_expire_log`` retires them) — time travel to a vacuumed
+    version raises FileNotFoundError because its data is gone, while the
+    current version can never be deleted: ``keep_last`` is clamped to
+    >= 1."""
     import re
 
     keep_last = max(1, keep_last)
@@ -3295,33 +2944,6 @@ def snapshot_vacuum(
             # dataset may live in an OLDER version's dir (carried by a
             # restore), so protect it by name like any reachable file
             dv_dirs.add(m["dv"]["dir"])
-    if not force:
-        # live registered shallow clones pin their cloned source version
-        for clone, pin in _live_clone_pins(
-            spark, table_dir, "snapshot_vacuum", drop_stale=not dry_run
-        ):
-            try:
-                m = snaplog.read_manifest(table_dir, pin)
-            except FileNotFoundError:
-                # the pin's manifest is the ONLY file-level record of what
-                # the clone carries (checkpoint summaries are counts, not
-                # file lists) — proceeding blind would delete a LIVE
-                # clone's data. snapshot_expire_log clamps below live pins
-                # so this is unreachable through the APIs; it means
-                # out-of-band record loss (or a pre-clamp expiry). Fail
-                # typed, never silently reclaim.
-                raise FileNotFoundError(
-                    f"snapshot_vacuum: live clone {clone} pins source "
-                    f"version {pin}, but _manifests/{pin}.json is gone "
-                    f"(expired out-of-band?) — without its file list "
-                    f"vacuum cannot tell which files the clone still "
-                    f"reads. Drop or re-clone the clone (then delete its "
-                    f"_clones/ registration), or run force=True to "
-                    f"reclaim as if no clones existed"
-                ) from None
-            reachable.update(e["path"] for e in m["files"])
-            if m.get("dv"):
-                dv_dirs.add(m["dv"]["dir"])
     base = table_dir.rstrip("/")
     removed = []
     for info in snaplog.listdir(base):
@@ -3408,7 +3030,7 @@ def snapshot_optimize(
         if dv_fraction is None or not dv_counts:
             return False
         rows = e.get("rows") or 0
-        return rows > 0 and dv_counts.get(_dv_key(e["path"]), 0) / rows >= dv_fraction
+        return rows > 0 and dv_counts.get(e["path"], 0) / rows >= dv_fraction
 
     small = [e for e in entries if e.get("bytes", 0) < cutoff or _dv_heavy(e)]
     carried = [e for e in entries if e.get("bytes", 0) >= cutoff and not _dv_heavy(e)]
@@ -3470,8 +3092,8 @@ def snapshot_optimize(
     staged = _staged_entries(
         spark, table_dir, version, stats_cols, manifest.get("bloom_spec")
     )
-    # packing moves rows, never changes them: the constraints carry
-    # unchecked and the exactly-once consumer stamp carries wholesale
+    # packing moves rows, never changes them: the exactly-once consumer
+    # stamp carries wholesale
     _publish_staged(table_dir, version, snaplog.next_record(
         manifest, version, "optimize", staged + carried, props="carry",
         staged_schema=packed.schema.json(),

@@ -482,161 +482,6 @@ def stream_heavy_hitter_candidates(
     )
 
 
-def stream_snapshot_upsert(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint: str,
-    table_dir: str,
-    key: str | list[str],
-    schema,
-    stats_cols: list[str] | None = None,
-    cluster_files: int = 4,
-    expectations: dict[str, str] | None = None,
-    quarantine_dir: str | None = None,
-    op_col: str | None = None,
-    delete_ops: tuple[str, ...] = ("D", "d", "delete"),
-    trigger: dict | None = None,
-    bloom_cols: list[str] | None = None,
-    evolve_schema: bool = False,
-):
-    """Continuously maintain a versioned snapshot TABLE from a stream of
-    keyed change batches: per micro-batch, fold to one row per key
-    (last-write-wins in arrival order) and commit it through the
-    copy-on-write ``storage.snapshot_upsert`` — only files whose key
-    envelope intersects the batch's keys are rewritten, so a steady
-    trickle of updates against a 100 TB table costs O(touched files +
-    batch) per trigger, and every commit is atomic (readers always see a
-    complete version, never a half-applied batch).
-
-    Every commit is range-clustered on ``key`` into ``cluster_files``
-    files: min/max skipping is only as good as the physical clustering
-    under it — a hash-shuffled write gives every file a full-range key
-    envelope and the NEXT batch would have to rewrite everything.
-
-    Delivery: at-least-once batches × key-idempotent merge =
-    effectively-once CONTENT — replaying a batch re-asserts the same
-    (key → latest row) mapping, so the table converges to the same state;
-    only the version history records the replay. The first batch
-    bootstraps the table with ``snapshot_write`` carrying ``key`` stats,
-    so upserts can skip files from version 2 onward.
-
-    ``expectations`` (``name -> SQL boolean rule``) apply the DLT policy
-    shape, not the batch CHECK-constraint one: a failing row must not
-    poison the stream (at-least-once redelivery would replay the same
-    bad batch forever), so violating rows are DIVERTED — appended to
-    ``quarantine_dir`` tagged with the rules they failed — and only the
-    clean remainder is folded and committed. NULL rule results count as
-    violations, matching ``storage.check_expectations``. The quarantine
-    side inherits the source's at-least-once delivery (a replayed batch
-    re-appends its bad rows) — quarantine is an investigation feed, not
-    a keyed table; dedup on read if exact counts matter.
-
-    PERSISTENT table constraints (``storage.snapshot_add_constraint``)
-    compose differently from ``expectations``: expectations DIVERT bad
-    rows to quarantine and keep the stream alive (the DLT policy shape),
-    while a committed CHECK constraint ABORTS the violating batch typed
-    (``ConstraintViolationError`` surfaces as the stream's exception) —
-    an invariant the table's owner declared must stop the pipeline, not
-    leak past it. Use both: expectations for per-deployment hygiene
-    rules, constraints for table-contract invariants.
-
-    ``op_col`` names a changelog op column: after the per-key fold, a key
-    whose LATEST row is a tombstone (op in ``delete_ops``) is removed
-    from the table instead of upserted — a Debezium-style keyed change
-    stream maintains the table end-to-end, deletes included, through
-    ``storage.snapshot_apply_cdc`` (upserts and deletes share one
-    touched-file set and one atomic commit per batch). The fold keeps
-    arrival order, so insert-then-delete of a key within one batch
-    correctly deletes.
-
-    ``evolve_schema=True`` passes through to the per-batch merge: the
-    realistic mid-stream column addition is a REDEPLOY — the maintainer
-    restarts from its checkpoint with the widened source ``schema`` —
-    and from that point batches carrying the new column evolve the table
-    contract additively (old rows read NULL), exactly the batch
-    ``snapshot_upsert(evolve_schema=True)`` semantics. Batches replayed
-    from pre-evolution files surface the new column as NULL through the
-    widened reader schema, which the merge accepts. Downstream CDF
-    consumers survive the evolution because the change feed reads every
-    version through its own committed schema (e2e-pinned in
-    test_streaming_sinks.py, r8 judge ask #5)."""
-    from f1_data_pipeline_spark.storage import (
-        snapshot_apply_cdc,
-        snapshot_upsert,
-        snapshot_version,
-        snapshot_write,
-    )
-
-    keys = [key] if isinstance(key, str) else list(key)
-    scols = stats_cols or list(keys)
-    if expectations and not quarantine_dir:
-        raise ValueError("expectations need a quarantine_dir to divert violations to")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        b = batch_df.sparkSession
-        if expectations:
-            ok = F.lit(True)
-            failed_tags = []
-            for name, cond in expectations.items():
-                passes = F.coalesce(F.expr(cond), F.lit(False))
-                ok = ok & passes
-                failed_tags.append(F.when(~passes, F.lit(name)))
-            tagged = batch_df.withColumn(
-                "__failed", F.array_compact(F.array(*failed_tags))
-            )
-            bad = tagged.where(~ok).withColumn(
-                "failed_rules", F.concat_ws(",", "__failed")
-            ).drop("__failed")
-            bad.write.mode("append").parquet(quarantine_dir)
-            batch_df = tagged.where(ok).drop("__failed")
-            if batch_df.isEmpty():
-                return
-        others = [c for c in batch_df.columns if c not in keys]
-        folded = (
-            batch_df.withColumn("__ord", F.monotonically_increasing_id())
-            .groupBy(*keys)
-            .agg(F.max_by(F.struct(*others), F.col("__ord")).alias("__s"))
-            .select(*keys, "__s.*")
-        )
-        if snapshot_version(b, table_dir) < 1:
-            if op_col:
-                # same NULL-op rule as snapshot_apply_cdc: not provably a
-                # delete => upsert (bare ~isin is NULL on NULL op and drops)
-                folded = folded.where(
-                    ~F.coalesce(F.col(op_col).isin(*delete_ops), F.lit(False))
-                ).drop(op_col)
-            # bloom_cols only matters at bootstrap: the spec persists in
-            # the commit record and every later upsert/CDC commit
-            # rebuilds filters for the files it stages
-            snapshot_write(
-                folded.repartitionByRange(cluster_files, *keys),
-                table_dir,
-                stats_cols=scols,
-                bloom_cols=bloom_cols,
-            )
-        elif op_col:
-            snapshot_apply_cdc(
-                b, table_dir, folded, key=key, op_col=op_col,
-                delete_ops=delete_ops, stats_cols=scols,
-                cluster_files=cluster_files, evolve_schema=evolve_schema,
-            )
-        else:
-            snapshot_upsert(
-                b, table_dir, folded, key=key, stats_cols=scols,
-                cluster_files=cluster_files, evolve_schema=evolve_schema,
-            )
-
-    changes = spark.readStream.schema(schema).parquet(source_dir)
-    return (
-        changes.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
-
-
 def stream_snapshot_append(
     stream: DataFrame,
     table_dir: str,
@@ -724,108 +569,6 @@ def stream_snapshot_append(
                 import time
 
                 time.sleep(0.05 * (attempt + 1))
-
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
-
-
-def stream_snapshot_cdc_apply(
-    stream: DataFrame,
-    table_dir: str,
-    checkpoint: str,
-    key: str | list[str],
-    stats_cols: list[str] | None = None,
-    cluster_files: int = 4,
-    trigger: dict | None = None,
-    op_col: str = "_change_type",
-    version_col: str = "_commit_version",
-    delete_ops: tuple[str, ...] = ("delete",),
-    evolve_schema: bool = False,
-):
-    """Maintain a snapshot-table REPLICA from a change-data stream — the
-    consuming half of ``snapshotfeed``'s ``changeFeed=true`` (and any
-    stream shaped like it: rows + ``_change_type`` + a monotone
-    ``_commit_version``). Together they close the loop the append sink
-    can't: a source table maintained by appends AND deletion-vector
-    deletes replicates end-to-end, deletes included, with only engine
-    checkpoints for state.
-
-    Per micro-batch: drop ``update_preimage`` rows (the postimage is the
-    content; preimages only matter to auditors), fold to ONE row per key
-    by (commit version, arrival order) — so a delete-then-reinsert
-    across commits inside one batch resolves by version, not luck — and
-    apply through ``storage.snapshot_apply_cdc``: one copy-on-write
-    commit per batch, touched files only. The version column is stripped
-    before the write (a replica stores content, not feed bookkeeping).
-
-    Delivery: at-least-once batches × key-idempotent CDC apply =
-    effectively-once CONTENT (replaying a batch re-asserts the same
-    key → latest-state mapping), the same contract as
-    ``stream_snapshot_upsert`` — no txn stamp needed, unlike the append
-    sink, because keyed applies converge under replay by construction."""
-    from f1_data_pipeline_spark.storage import (
-        snapshot_apply_cdc,
-        snapshot_version,
-        snapshot_write,
-    )
-
-    keys = [key] if isinstance(key, str) else list(key)
-    scols = stats_cols or list(keys)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        b = batch_df.sparkSession
-        batch_df = batch_df.where(F.col(op_col) != F.lit("update_preimage"))
-        if batch_df.isEmpty():
-            return
-        others = [c for c in batch_df.columns if c not in keys and c != version_col]
-        # tie-break WITHIN one commit version deterministically: a commit
-        # can emit both a delete (new tombstone) and an insert (restored
-        # or newly-appended position) for the same key — e.g. a restore
-        # that swaps the deletion vector — and a key with any live
-        # position at the END of the commit is live, so live ops outrank
-        # deletes. __ord (partition-layout arrival order) only breaks
-        # ties the feed itself never disambiguates (duplicate live rows
-        # for one key in one version — a malformed keyed feed anyway).
-        live_rank = F.when(
-            F.coalesce(F.col(op_col).isin(*delete_ops), F.lit(False)),
-            F.lit(0),
-        ).otherwise(F.lit(1))
-        folded = (
-            batch_df.withColumn("__ord", F.monotonically_increasing_id())
-            .groupBy(*keys)
-            .agg(
-                F.max_by(
-                    F.struct(*others),
-                    F.struct(F.col(version_col), live_rank, F.col("__ord")),
-                ).alias("__s")
-            )
-            .select(*keys, "__s.*")
-        )
-        if snapshot_version(b, table_dir) < 1:
-            inserts = folded.where(
-                ~F.coalesce(F.col(op_col).isin(*delete_ops), F.lit(False))
-            ).drop(op_col)
-            snapshot_write(
-                inserts.repartitionByRange(cluster_files, *keys),
-                table_dir,
-                stats_cols=scols,
-            )
-        else:
-            snapshot_apply_cdc(
-                b,
-                table_dir,
-                folded,
-                key=key,
-                op_col=op_col,
-                delete_ops=delete_ops,
-                stats_cols=scols,
-                cluster_files=cluster_files,
-                evolve_schema=evolve_schema,
-            )
 
     return (
         stream.writeStream.foreachBatch(sink)

@@ -20,12 +20,7 @@ SLOW_TESTS: dict[str, set[str]] = {
         "test_jdbc_upsert_distributed_idempotent",
         "test_lap_stream_into_snapshot_table_k5_parity",
         "test_socket_source_live_feed",
-        "test_stream_snapshot_upsert_applies_tombstones",
-        "test_stream_snapshot_upsert_bloom_bootstrap_survives_maintenance",
-        "test_stream_snapshot_upsert_maintains_versioned_table",
-        "test_stream_snapshot_upsert_mid_stream_schema_evolution",
         "test_stream_static_enrichment",
-        "test_stream_to_table_to_downstream_sync_via_change_feed",
     },
     "test_operators.py": {
         "test_blocked_near_dup_equals_exhaustive_across_blocks",
@@ -87,20 +82,18 @@ SLOW_TESTS: dict[str, set[str]] = {
         "test_rate_observer_collects_progress",
         "test_sync_replica_from_changes_exactly_once",
         "test_table_counts_and_freshness",
+        "test_table_to_downstream_sync_via_change_feed",
     },
     "test_postgres.py": {
         "test_reference_coalesce_merge_dialect",
         "test_reference_upsert_dialect_last_write_wins",
     },
     "test_storage.py": {
-        "test_cdc_apply_same_version_insert_beats_delete",
         "test_cdf_restore_vs_append_race_leaves_no_torn_changes",
         "test_composite_key_upsert_cdc_and_merge",
         "test_concurrent_appends_no_lost_updates",
         "test_footer_stats_decline_truncated_min",
         "test_snapshot_apply_cdc_mixed_batch_one_commit",
-        "test_snapshot_clone_shallow_zero_copy_and_independent",
-        "test_snapshot_constraints_lifecycle_and_enforcement",
         "test_snapshot_dv_change_feed_emits_deletes",
         "test_snapshot_merge_cost_model_and_guards",
         "test_snapshot_merge_update_insert_defaults",

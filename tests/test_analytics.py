@@ -323,3 +323,68 @@ def test_sync_replica_from_changes_exactly_once(spark, tmp_path):
     # and the next sync is a clean no-op (the stamp really moved)
     v5, _ = sync_replica_from_changes(spark, src, "k", rep)
     assert v5 == v4
+
+
+def test_table_to_downstream_sync_via_change_feed(spark, tmp_path, monkeypatch):
+    """Keyed commits maintain the primary snapshot table (copy-on-write
+    upserts), and a DOWNSTREAM replica syncs from it through the change
+    data feed (``sync_replica_from_changes``: initial load, then per-span
+    incremental applies stamped with the source version in the replica's
+    own commit). After every sync the downstream content equals the
+    primary exactly; a sync that dies before its commit leaves the stamp
+    behind and the next sync redoes the span; a caught-up sync commits
+    nothing."""
+    import pytest
+
+    import f1_data_pipeline_spark.storage as st
+    from f1_data_pipeline_spark.analytics import sync_replica_from_changes
+
+    tdir = str(tmp_path / "primary")
+    ddir = str(tmp_path / "downstream")
+
+    def rows(keys, tag):
+        return spark.createDataFrame(
+            [(k, f"{tag}-{k}") for k in keys], "k long, v string"
+        )
+
+    def sync_downstream():
+        rep_ver, src_ver = sync_replica_from_changes(spark, tdir, "k", ddir)
+        assert src_ver == st.snapshot_version(spark, tdir)
+        return rep_ver
+
+    def table(d):
+        return {r["k"]: r["v"] for r in st.snapshot_read(spark, d).collect()}
+
+    # the first commit creates the primary; downstream takes the initial load
+    st.snapshot_write(
+        rows(range(50), "a").repartitionByRange(4, "k"), tdir, stats_cols=["k"]
+    )
+    sync_downstream()
+    assert table(ddir) == table(tdir)
+
+    # updates + inserts flow through as one incremental span
+    st.snapshot_upsert(spark, tdir, rows(range(48, 55), "b"), key="k", cluster_files=4)
+    # incremental, not a re-load: only the changed span flows
+    feed = st.snapshot_changes(spark, tdir, "k", 1, st.snapshot_version(spark, tdir))
+    assert feed.count() == 2 + 2 + 5  # 2 updates (pre+post) + 5 inserts
+    sync_downstream()
+    assert table(ddir) == table(tdir)
+
+    # a sync that dies after reading the feed, before its commit: the
+    # replica keeps its old version and stamp, the next sync redoes it
+    st.snapshot_upsert(spark, tdir, rows([0], "c"), key="k", cluster_files=4)
+    before = st.snapshot_version(spark, ddir)
+
+    def crash(*a, **k):
+        raise RuntimeError("simulated crash before the replica commit")
+
+    monkeypatch.setattr(st, "snapshot_apply_cdc", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        sync_downstream()
+    monkeypatch.undo()
+    assert st.snapshot_version(spark, ddir) == before
+    assert table(ddir) != table(tdir)
+    synced = sync_downstream()  # re-reads the same span and applies it
+    assert table(ddir) == table(tdir)
+    # caught up: the next sync commits nothing
+    assert sync_downstream() == synced == st.snapshot_version(spark, ddir)

@@ -468,38 +468,75 @@ def test_change_feed_restore_resurrects(spark, tmp_path):
     assert res.select("_change_type").distinct().head()[0] == "insert"
 
 
-def test_change_feed_maintains_replica_with_deletes(spark, tmp_path):
-    """The full CDC loop: source table (appends + DV deletes) →
-    changeFeed stream → stream_snapshot_cdc_apply replica. The replica
-    must track the source's LIVE rows — deletes included, which the
-    plain append sink cannot express — across restarts, idempotently."""
-    from f1_data_pipeline_spark.storage import snapshot_read
-    from f1_data_pipeline_spark.streaming import stream_snapshot_cdc_apply
+def _feed_replica(spark, src, rep, where=None):
+    """A changeFeed → ``snapshot_apply_cdc`` replica loop, one batch
+    changeFeed read and one keyed apply per span. Returns ``sync()``,
+    which applies every source commit since its previous call. The span
+    folds to one row per key: the latest commit version wins, and within
+    one version a live row outranks a delete (a restore can emit both for
+    one key)."""
+    from f1_data_pipeline_spark.storage import (
+        snapshot_apply_cdc,
+        snapshot_version,
+    )
 
-    src, rep, ckpt = tmp_path / "src", tmp_path / "rep", tmp_path / "ck"
-    snapshot_append(_batch(spark, 0, 50), str(src), stats_cols=["k"])
-    snapshot_delete(spark, str(src), [("k", "<", 3)], mode="dv")
     feedsource.register(spark)
+    synced = [0]
 
     def sync():
-        q = stream_snapshot_cdc_apply(
-            spark.readStream.format("snapshotfeed")
+        head = snapshot_version(spark, str(src))
+        if head == synced[0]:
+            return
+        reader = (
+            spark.read.format("snapshotfeed")
             .option("changeFeed", "true")
-            .load(str(src)),
-            str(rep),
-            str(ckpt),
-            key="k",
+            .option("startingVersion", synced[0] + 1)
+            .option("endingVersion", head)
         )
-        q.awaitTermination(180)
+        if where:
+            reader = reader.option("where", where)
+        feed = reader.load(str(src)).where("_change_type != 'update_preimage'")
+        payload = [c for c in feed.columns if not c.startswith("_commit") and c != "k"]
+        live = F.when(F.col("_change_type") == "delete", 0).otherwise(1)
+        folded = (
+            feed.groupBy("k")
+            .agg(F.max_by(F.struct(*payload), F.struct("_commit_version", live)).alias("s"))
+            .select("k", "s.*")
+        )
+        if snapshot_version(spark, str(rep)) < 1:
+            snapshot_write(
+                folded.where("_change_type != 'delete'").drop("_change_type"),
+                str(rep), stats_cols=["k"],
+            )
+        else:
+            snapshot_apply_cdc(
+                spark, str(rep), folded, key="k", op_col="_change_type",
+                delete_ops=("delete",),
+            )
+        synced[0] = head
+
+    return sync
+
+
+def test_change_feed_maintains_replica_with_deletes(spark, tmp_path):
+    """The full CDC loop: source table (appends + DV deletes) →
+    changeFeed spans → ``snapshot_apply_cdc`` replica. The replica must
+    track the source's LIVE rows — deletes included, which the plain
+    append sink cannot express — span after span, idempotently."""
+    from f1_data_pipeline_spark.storage import snapshot_read
+
+    src, rep = tmp_path / "src", tmp_path / "rep"
+    snapshot_append(_batch(spark, 0, 50), str(src), stats_cols=["k"])
+    snapshot_delete(spark, str(src), [("k", "<", 3)], mode="dv")
+    sync = _feed_replica(spark, src, rep)
 
     def live(tdir):
         return sorted(r["k"] for r in snapshot_read(spark, str(tdir)).collect())
 
     sync()
-    assert live(rep) == live(src)  # 47 rows; pre-stream deletes absent
+    assert live(rep) == live(src)  # 47 rows; pre-sync deletes absent
 
-    # tail: deletes AND appends replicate (single-batch fallback: one
-    # commit span per run is fine — the feed batches by version span)
+    # tail: deletes AND appends replicate as one span
     snapshot_delete(spark, str(src), [("k", ">=", 40), ("k", "<=", 44)], mode="dv")
     snapshot_append(_batch(spark, 100, 105), str(src))
     sync()
@@ -1159,26 +1196,13 @@ def test_where_in_option_batch_and_stream(spark, tmp_path):
 
 
 def test_where_filtered_replica(spark, tmp_path):
-    """A filtered changeFeed stream maintains a PARTIAL replica: only
-    matching rows flow, deletes included."""
+    """A filtered changeFeed maintains a PARTIAL replica: only matching
+    rows flow, deletes included."""
     from f1_data_pipeline_spark.storage import snapshot_read
-    from f1_data_pipeline_spark.streaming import stream_snapshot_cdc_apply
 
-    src, rep, ckpt = tmp_path / "src", tmp_path / "rep", tmp_path / "ck"
+    src, rep = tmp_path / "src", tmp_path / "rep"
     snapshot_append(_batch(spark, 0, 50).coalesce(1), str(src), stats_cols=["k"])
-    feedsource.register(spark)
-
-    def sync():
-        q = stream_snapshot_cdc_apply(
-            spark.readStream.format("snapshotfeed")
-            .option("changeFeed", "true")
-            .option("where", '[["k", "<", 20]]')
-            .load(str(src)),
-            str(rep),
-            str(ckpt),
-            key="k",
-        )
-        q.awaitTermination(180)
+    sync = _feed_replica(spark, src, rep, where='[["k", "<", 20]]')
 
     sync()
     assert sorted(r["k"] for r in snapshot_read(spark, str(rep)).collect()) == list(
@@ -1307,7 +1331,6 @@ def test_datasource_writer_batch(spark, tmp_path):
     interoperable with every storage.py reader."""
     from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        snapshot_add_constraint,
         snapshot_history,
         snapshot_read,
         snapshot_version,
@@ -1349,10 +1372,10 @@ def test_datasource_writer_batch(spark, tmp_path):
     assert snapshot_read(spark, tdir).count() == 1
     assert read_manifest(tdir, 4)["op"] == "write"
 
-    # a table with CHECK constraints refuses the writer path loudly
-    snapshot_add_constraint(spark, tdir, "k_pos", "k >= 0")
-    with pytest.raises(Exception, match="CHECK constraints"):
-        _batch(spark, 0, 5).write.format("snapshotfeed").mode("append").save(tdir)
+    # a table with a Bloom spec refuses the writer's unindexed appends
+    snapshot_write(_batch(spark, 0, 5), tdir, bloom_cols=["k"])
+    with pytest.raises(Exception, match="Bloom-filter"):
+        _batch(spark, 5, 10).write.format("snapshotfeed").mode("append").save(tdir)
 
 
 def test_datasource_writer_streaming_exactly_once(spark, tmp_path):
@@ -1423,15 +1446,16 @@ def test_datasource_writer_streaming_exactly_once(spark, tmp_path):
     props = snapshot_properties(spark, tdir)["txn"]
     assert props["app1"] == 1 and "e2e" in props  # stamps coexist per app
 
-    # replay AFTER a post-crash constraint DDL: the stamp must prove the
-    # batch already landed BEFORE the constraint refusal fires (the gate
+    # replay AFTER a post-crash schema evolution: the stamp must prove
+    # the batch already landed BEFORE the schema refusal fires (the gate
     # runs first), while a genuinely NEW batch still refuses loudly
-    from f1_data_pipeline_spark.storage import snapshot_add_constraint
-
-    snapshot_add_constraint(spark, tdir, "k_pos", "k >= 0")
+    snapshot_append(
+        _batch(spark, 300, 301).withColumn("w", F.lit(1.0)), tdir,
+        evolve_schema=True,
+    )
     w.commit(stage(10, 15), 1)  # replayed batchId: silent skip
-    assert snapshot_read(spark, tdir).count() == 45
-    with pytest.raises(Exception, match="CHECK constraints"):
+    assert snapshot_read(spark, tdir).count() == 46
+    with pytest.raises(Exception, match="does not match the committed"):
         w.commit(stage(200, 205), 2)
 
 

@@ -50,10 +50,7 @@ COVERED = {
 
 # Only tests call these either; kept for the reason given.
 _SILVER_DDL = "silver DDL contract checked by test_silver_schema_contracts"
-_MANIFEST = (
-    "shares commit-record fields and pins with snaplog, feedsource and "
-    "streaming; removing it changes the manifest format"
-)
+_MAINTENANCE = "table maintenance an operator runs; no engine path calls it"
 KEPT = {
     "connector": "pgwire's DB-API connection factory for the K4/K5 PostgreSQL tests",
     "DERBY_EMBEDDED_DRIVER": "the S4 JDBC tests' embedded Derby driver class",
@@ -65,15 +62,9 @@ KEPT = {
     "CAR_POSITIONS": _SILVER_DDL,
     "RACE_CONTROL": _SILVER_DDL,
     "WEATHER": _SILVER_DDL,
-    "snapshot_clone": _MANIFEST,
-    "snapshot_constraints": _MANIFEST,
-    "snapshot_add_constraint": _MANIFEST,
-    "snapshot_drop_constraint": _MANIFEST,
-    "snapshot_vacuum": _MANIFEST,
-    "snapshot_optimize": _MANIFEST,
-    "snapshot_clean_orphans": _MANIFEST,
-    "stream_snapshot_upsert": _MANIFEST,
-    "stream_snapshot_cdc_apply": _MANIFEST,
+    "snapshot_vacuum": _MAINTENANCE,
+    "snapshot_optimize": _MAINTENANCE,
+    "snapshot_clean_orphans": _MAINTENANCE,
 }
 
 

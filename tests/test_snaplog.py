@@ -339,7 +339,7 @@ def test_every_commit_publishes_a_next_record_result():
                         isinstance(rec, ast.Name) and rec.id in built
                     ), f"{path.name}:{node.lineno} commits a record not built by next_record"
                     commits.add((path.name, node.lineno))
-    assert len(commits) >= 12  # the walk found the commit sites
+    assert len(commits) >= 10  # the walk found the commit sites
 
 
 def test_read_manifest_refuses_a_record_without_files_or_schema(tmp_path):

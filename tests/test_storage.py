@@ -717,41 +717,6 @@ def test_snapshot_upsert_pure_insert_touches_nothing(spark, tmp_path):
     assert cur.where("k = 5002").head()["v"] == "new-5002"
 
 
-def test_snapshot_write_expectations_gate_the_commit(spark, tmp_path):
-    """CHECK-constraint gate: a violating batch raises with per-rule
-    counts and commits NOTHING (no staging dir, no version); a clean
-    batch passes; NULL expectation results count as violations."""
-    import os
-
-    import pytest
-
-    from pyspark.sql import functions as F
-
-    from f1_data_pipeline_spark.storage import (
-        snapshot_version,
-        snapshot_write,
-    )
-
-    tdir = str(tmp_path / "tbl")
-    rules = {"k_nonneg": "k >= 0", "v_present": "v IS NOT NULL"}
-    bad = _keyed(spark, 0, 100).withColumn(
-        "v", F.when(F.col("k") % 10 == 0, None).otherwise(F.col("v"))
-    ).withColumn("k", F.when(F.col("k") == 7, -1).otherwise(F.col("k")))
-    with pytest.raises(ValueError, match=r"k_nonneg \(1 rows.*v_present \(10 rows"):
-        snapshot_write(bad, tdir, stats_cols=["k"], expectations=rules)
-    assert snapshot_version(spark, tdir) == 0
-    assert not os.path.exists(os.path.join(tdir, "v=1"))
-    # NULL rule results violate: k > 0 is NULL for NULL k
-    nully = _keyed(spark, 1, 50).withColumn(
-        "k", F.when(F.col("k") == 5, None).otherwise(F.col("k"))
-    )
-    with pytest.raises(ValueError, match="k_pos"):
-        snapshot_write(nully, tdir, expectations={"k_pos": "k > 0"})
-    # clean batch commits
-    v = snapshot_write(_keyed(spark, 0, 100), tdir, stats_cols=["k"], expectations=rules)
-    assert v == 1
-
-
 def test_snapshot_stats_on_zorder_clustering_prune_both_dimensions(spark, tmp_path):
     """The two layout levers compose: Z-order clustering gives every file
     a tight envelope in EVERY interleaved dimension, so a snapshot
@@ -1051,50 +1016,6 @@ def test_snapshot_delete_preserves_evolved_columns(spark, tmp_path):
     assert cur.where("k = 10").count() == 0
     assert cur.where("k = 60").head()["score"] == 61.5  # survived the rewrite
     assert cur.count() == 149
-
-
-def test_snapshot_upsert_expectations_gate_the_merge(spark, tmp_path):
-    """Merge-path CHECK constraints: a violating batch raises BEFORE
-    anything stages (no new version, no touched file read), on both the
-    upsert and the CDC-apply path; delete tombstones are exempt (no
-    payload to check)."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from f1_data_pipeline_spark.storage import (
-        snapshot_apply_cdc,
-        snapshot_upsert,
-        snapshot_version,
-        snapshot_write,
-    )
-
-    tdir = str(tmp_path / "tbl")
-    snapshot_write(_keyed(spark, 0, 100), tdir, stats_cols=["k"])
-    rules = {"v_nonnull": "v IS NOT NULL"}
-    bad = _keyed(spark, 5, 8).withColumn(
-        "v", F.when(F.col("k") == 6, None).otherwise(F.col("v"))
-    )
-    with pytest.raises(ValueError, match="v_nonnull"):
-        snapshot_upsert(spark, tdir, bad, key="k", expectations=rules)
-    assert snapshot_version(spark, tdir) == 1  # nothing committed
-
-    ok = _keyed(spark, 5, 8, tag="upd")
-    assert snapshot_upsert(spark, tdir, ok, key="k", expectations=rules) == 2
-
-    # CDC path: the delete tombstone's NULL payload must NOT trip the gate
-    cdc = (
-        _keyed(spark, 9, 10, tag="cdc")
-        .withColumn("op", F.lit("U"))
-        .unionByName(
-            spark.createDataFrame([(99,)], "k long")
-            .withColumn("v", F.lit(None).cast("string"))
-            .withColumn("op", F.lit("D"))
-        )
-    )
-    assert snapshot_apply_cdc(spark, tdir, cdc, key="k", expectations=rules) == 3
-    badcdc = cdc.withColumn("op", F.lit("U"))  # now the NULL row is an upsert
-    with pytest.raises(ValueError, match="v_nonnull"):
-        snapshot_apply_cdc(spark, tdir, badcdc, key="k", expectations=rules)
 
 
 def test_snapshot_bloom_point_lookup_skips_files(spark, tmp_path):
@@ -1566,149 +1487,6 @@ def test_snapshot_dv_vacuum_protects_referenced_vectors(spark, tmp_path):
     assert {r["k"] for r in snapshot_read(spark, tdir).collect()} == set(range(35))
 
 
-def test_snapshot_clone_shallow_zero_copy_and_independent(spark, tmp_path):
-    """Shallow clone: v1 references the source's files by absolute URI —
-    zero bytes move — and the clone is an independent table from that
-    instant: reads (incl. the source's deletion vector at clone time),
-    upserts that stage only the clone's own files, CDF, and a clone's
-    vacuum that never touches source data."""
-    import os
-
-    from f1_data_pipeline_spark.snaplog import read_manifest
-    from f1_data_pipeline_spark.storage import (
-        snapshot_changes,
-        snapshot_clone,
-        snapshot_delete,
-        snapshot_read,
-        snapshot_upsert,
-        snapshot_vacuum,
-        snapshot_write,
-    )
-
-    src = str(tmp_path / "src")
-    cl = str(tmp_path / "clone")
-    df = (
-        spark.range(100)
-        .select(
-            F.col("id").alias("k"),
-            (F.col("id") % 5).cast("string").alias("g"),
-            (F.col("id") * 1.0).alias("x"),
-        )
-        .repartitionByRange(4, "k")
-    )
-    snapshot_write(df, src, stats_cols=["k"])
-    snapshot_delete(spark, src, [("k", "=", 42)], mode="dv")
-
-    v = snapshot_clone(spark, src, cl)
-    assert v == 1
-    # zero copy: no data directory in the clone at all
-    assert not any(d.startswith("v=") for d in os.listdir(cl))
-    m = read_manifest(cl, 1)
-    assert all(e["path"].startswith(src) for e in m["files"])
-    # the clone sees the source state INCLUDING its deletion vector
-    got = {r["k"] for r in snapshot_read(spark, cl).collect()}
-    assert got == set(range(100)) - {42}
-
-    # mutations are independent: upsert the clone, source unchanged
-    ups = spark.createDataFrame(
-        [(1, "upd", 99.0), (200, "new", 1.0)], "k long, g string, x double"
-    )
-    v2 = snapshot_upsert(spark, cl, ups, key="k", cluster_files=1)
-    cur = {r["k"]: r for r in snapshot_read(spark, cl).collect()}
-    assert cur[1]["g"] == "upd" and 200 in cur and 42 not in cur
-    assert {r["k"] for r in snapshot_read(spark, src).collect()} == set(
-        range(100)
-    ) - {42}
-    # staged files are the clone's own (relative); untouched source files
-    # stay carried by absolute reference
-    m2 = read_manifest(cl, v2)
-    assert any(e["path"].startswith("v=2/") for e in m2["files"])
-    assert any(e["path"].startswith(src) for e in m2["files"])
-    # CDF works across the clone's own history
-    feed = snapshot_changes(spark, cl, "k", 1, v2)
-    assert {r["k"] for r in feed.where("_change_type = 'insert'").collect()} == {200}
-    # the clone's vacuum must not reclaim SOURCE data it references
-    snapshot_vacuum(spark, cl, keep_last=1)
-    assert {r["k"] for r in snapshot_read(spark, src).collect()} == set(
-        range(100)
-    ) - {42}
-    assert snapshot_read(spark, cl).count() == 100  # 100 - {42} + {200}
-
-    # a clone-side DV delete over SOURCE-owned (absolute-entry) files:
-    # positions key on the two-segment suffix, so they match either way
-    v3, n3 = snapshot_delete(spark, cl, [("k", "=", 7)], mode="dv")
-    assert n3 == 1
-    assert 7 not in {r["k"] for r in snapshot_read(spark, cl).collect()}
-    assert 7 in {r["k"] for r in snapshot_read(spark, src).collect()}
-
-    # clone-of-a-clone must not double-prefix absolute entries
-    cl2 = str(tmp_path / "clone2")
-    snapshot_clone(spark, cl, cl2)
-    assert snapshot_read(spark, cl2).count() == 99
-    import pytest
-
-    with pytest.raises(ValueError, match="already holds"):
-        snapshot_clone(spark, src, cl)
-
-
-def test_snapshot_clone_deep_copies_data(spark, tmp_path):
-    """Deep clone: O(table) copy, fully independent lifecycle — the
-    source can be deleted outright afterwards."""
-    import shutil
-
-    from f1_data_pipeline_spark.storage import (
-        snapshot_clone,
-        snapshot_read,
-        snapshot_write,
-    )
-
-    src = str(tmp_path / "src")
-    cl = str(tmp_path / "deep")
-    snapshot_write(
-        spark.range(50).withColumnRenamed("id", "k"), src, stats_cols=["k"]
-    )
-    snapshot_clone(spark, src, cl, shallow=False)
-    shutil.rmtree(src)
-    assert snapshot_read(spark, cl).count() == 50
-
-
-def test_shallow_clone_of_a_file_uri_table(spark, tmp_path):
-    """A shallow clone of a table addressed as ``file:/…`` (one slash)
-    references ``file:/…`` entries. storage resolves them as absolute,
-    as the snapshotfeed source does: reads, the source's deletion
-    vector, history's availability probe and restore's existence check
-    all find the source's files."""
-    from f1_data_pipeline_spark.ingest import feedsource
-    from f1_data_pipeline_spark.storage import (
-        snapshot_clone,
-        snapshot_delete,
-        snapshot_history,
-        snapshot_read,
-        snapshot_restore,
-        snapshot_upsert,
-        snapshot_write,
-    )
-
-    src = f"file:{tmp_path / 'src'}"
-    cl = str(tmp_path / "clone")
-    snapshot_write(
-        spark.range(10).withColumnRenamed("id", "k"), src, stats_cols=["k"]
-    )
-    snapshot_delete(spark, src, [("k", "=", 3)], mode="dv")
-    snapshot_clone(spark, src, cl)
-    want = set(range(10)) - {3}
-    assert {r["k"] for r in snapshot_read(spark, cl).collect()} == want
-    feedsource.register(spark)
-    feed = spark.read.format("snapshotfeed").load(cl)
-    assert {r["k"] for r in feed.collect()} == want
-    snapshot_upsert(
-        spark, cl, spark.range(20, 22).withColumnRenamed("id", "k"), key="k"
-    )
-    assert all(h["available"] for h in snapshot_history(spark, cl, True))
-    snapshot_restore(spark, cl, 1)
-    assert {r["k"] for r in snapshot_read(spark, cl).collect()} == want
-
-
 def test_snapshot_timestamp_as_of_and_history_ts(spark, tmp_path):
     """Commit records carry wall-clock stamps: TIMESTAMP AS OF resolves
     the version committed at-or-before a time, history surfaces the
@@ -2012,7 +1790,6 @@ def test_snapshot_optimize_dv_fraction_trigger(spark, tmp_path):
     carried untouched with their entries intact."""
     from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _dv_key,
         snapshot_delete,
         snapshot_optimize,
         snapshot_read,
@@ -2031,7 +1808,7 @@ def test_snapshot_optimize_dv_fraction_trigger(spark, tmp_path):
     snapshot_delete(spark, tdir, [("k", "=", 90)], mode="dv")
     v0 = 3
     m0 = read_manifest(tdir, v0)
-    by_key = {_dv_key(e["path"]): e for e in m0["files"]}
+    by_key = {e["path"]: e for e in m0["files"]}
     heavy = [k for k, c in m0["dv"]["files"].items() if c / by_key[k]["rows"] >= 0.5]
     light = [k for k, c in m0["dv"]["files"].items() if c / by_key[k]["rows"] < 0.5]
     assert heavy and light
@@ -2046,7 +1823,7 @@ def test_snapshot_optimize_dv_fraction_trigger(spark, tmp_path):
     )
     assert v == v0 + 1 and rewritten == len(heavy) and carried == 3
     m = read_manifest(tdir, v)
-    paths = {_dv_key(e["path"]) for e in m["files"]}
+    paths = {e["path"] for e in m["files"]}
     assert not set(heavy) & paths  # heavy file replaced by its survivors
     assert set(light) <= paths  # light file carried by reference
     assert set(m["dv"]["files"]) == set(light)  # debt purged, light entries kept
@@ -2106,55 +1883,6 @@ def test_snapshot_version_asof_clamps_clock_skew(spark, tmp_path):
     restamp(1, None)
     assert snapshot_version_asof(spark, tdir, 999.0) == 1
     assert snapshot_version_asof(spark, tdir, 1700.0) == 1
-
-
-def test_snapshot_vacuum_protects_registered_clones(spark, tmp_path):
-    """Source-side vacuum honors the clone registry: a live shallow
-    clone's pinned source version stays reachable (its files survive
-    reclamation and the clone keeps reading), force=True restores the
-    old reclaim-everything behavior, and a registration whose clone was
-    deleted out-of-band is dropped as stale."""
-    import os
-    import shutil
-
-    from f1_data_pipeline_spark.storage import (
-        snapshot_clone,
-        snapshot_read,
-        snapshot_vacuum,
-        snapshot_write,
-    )
-
-    src = str(tmp_path / "src")
-    cl = str(tmp_path / "clone")
-    snapshot_write(spark.range(50).withColumnRenamed("id", "k"), src)  # v1
-    snapshot_clone(spark, src, cl)  # pins source v1
-    # two full rewrites: v1's files become unreachable from keep_last=1
-    snapshot_write(spark.range(50, 60).withColumnRenamed("id", "k"), src)
-    snapshot_write(spark.range(60, 70).withColumnRenamed("id", "k"), src)
-
-    # dry run reports nothing to reclaim from v=1 (clone pins it); the
-    # middle version is reclaimable either way
-    removed = snapshot_vacuum(spark, src, keep_last=1, dry_run=True)
-    assert 1 not in removed
-    removed = snapshot_vacuum(spark, src, keep_last=1)
-    assert 1 not in removed and 2 in removed
-    assert snapshot_read(spark, cl).count() == 50  # clone still whole
-
-    # force ignores the registry — the clone's entries break, as before
-    removed = snapshot_vacuum(spark, src, keep_last=1, force=True)
-    assert 1 in removed
-    import pytest
-
-    with pytest.raises(FileNotFoundError):
-        snapshot_read(spark, cl).count()
-
-    # stale registration: clone dir deleted out-of-band → dropped on a
-    # real run, and vacuum proceeds as if unregistered
-    shutil.rmtree(cl)
-    regs = os.listdir(os.path.join(src, "_clones"))
-    assert regs
-    snapshot_vacuum(spark, src, keep_last=1)
-    assert os.listdir(os.path.join(src, "_clones")) == []
 
 
 # ---------------------------------------------------------------------------
@@ -2360,150 +2088,6 @@ def test_snapshot_merge_respects_deletion_vectors(spark, tmp_path):
     rows = {r["k"]: r for r in snapshot_read(spark, tdir).collect()}
     assert rows[2]["tag"] == "back" and rows[3]["tag"] == "upd"
     assert len(rows) == 8
-
-
-# ---------------------------------------------------------------------------
-# persistent CHECK constraints
-# ---------------------------------------------------------------------------
-
-
-def test_snapshot_constraints_lifecycle_and_enforcement(spark, tmp_path):
-    """ADD CONSTRAINT validates the existing table, then every write
-    path enforces the rule on the rows it stages (violation = typed
-    abort, nothing committed, table still writable); maintenance carries
-    the set; DROP removes enforcement."""
-    import pytest
-
-    from f1_data_pipeline_spark.storage import (
-        ConstraintViolationError,
-        snapshot_add_constraint,
-        snapshot_apply_cdc,
-        snapshot_constraints,
-        snapshot_drop_constraint,
-        snapshot_merge,
-        snapshot_read,
-        snapshot_upsert,
-        snapshot_version,
-        snapshot_write,
-    )
-
-    tdir = str(tmp_path / "cons")
-    df = spark.createDataFrame(
-        [(k, float(k)) for k in range(1, 9)], "k long, val double"
-    ).repartitionByRange(2, "k")
-    snapshot_write(df, tdir, stats_cols=["k"])
-
-    # adding a rule the table violates fails and commits nothing
-    with pytest.raises(ValueError, match="val_big"):
-        snapshot_add_constraint(spark, tdir, "val_big", "val > 100")
-    assert snapshot_version(spark, tdir) == 1
-
-    v = snapshot_add_constraint(spark, tdir, "val_pos", "val >= 0")
-    assert v == 2 and snapshot_constraints(spark, tdir) == {"val_pos": "val >= 0"}
-    assert snapshot_add_constraint(spark, tdir, "val_pos", "val >= 0") == 2  # idempotent
-    with pytest.raises(ValueError, match="drop it first"):
-        snapshot_add_constraint(spark, tdir, "val_pos", "val > 1")
-
-    # upsert: clean batch commits, violating batch aborts typed
-    ok = spark.createDataFrame([(1, 10.0)], "k long, val double")
-    v = snapshot_upsert(spark, tdir, ok, key="k", cluster_files=1)
-    with pytest.raises(ConstraintViolationError, match="val_pos"):
-        snapshot_upsert(
-            spark, tdir,
-            spark.createDataFrame([(2, -5.0)], "k long, val double"),
-            key="k", cluster_files=1,
-        )
-    assert snapshot_version(spark, tdir) == v  # aborted commit left no version
-    # ... and no orphan stage blocks the next writer
-    v2 = snapshot_upsert(
-        spark, tdir, spark.createDataFrame([(2, 5.5)], "k long, val double"),
-        key="k", cluster_files=1,
-    )
-    assert v2 == v + 1
-
-    # apply_cdc and merge enforce the same set
-    with pytest.raises(ConstraintViolationError, match="val_pos"):
-        snapshot_apply_cdc(
-            spark, tdir,
-            spark.createDataFrame([(3, -1.0, "U")], "k long, val double, op string"),
-            key="k",
-        )
-    with pytest.raises(ConstraintViolationError, match="val_pos"):
-        snapshot_merge(
-            spark, tdir,
-            spark.createDataFrame([(3, -1.0)], "k long, val double"),
-            key="k",
-        )
-    # full-replace write enforces AND carries the set
-    with pytest.raises(ConstraintViolationError, match="val_pos"):
-        snapshot_write(
-            spark.createDataFrame([(1, -9.0)], "k long, val double"), tdir
-        )
-    v3 = snapshot_write(
-        spark.createDataFrame([(1, 9.0)], "k long, val double"), tdir,
-        stats_cols=["k"],
-    )
-    assert snapshot_constraints(spark, tdir) == {"val_pos": "val >= 0"}
-
-    # drop: enforcement ends; unknown name raises
-    snapshot_drop_constraint(spark, tdir, "val_pos")
-    assert snapshot_constraints(spark, tdir) == {}
-    with pytest.raises(KeyError):
-        snapshot_drop_constraint(spark, tdir, "val_pos")
-    snapshot_upsert(
-        spark, tdir, spark.createDataFrame([(2, -5.0)], "k long, val double"),
-        key="k", cluster_files=1,
-    )
-    assert snapshot_read(spark, tdir).where("val < 0").count() == 1
-
-
-def test_snapshot_constraints_carried_by_maintenance(spark, tmp_path):
-    """Delete / optimize / restore / clones / fresh-write declaration all
-    preserve the constraint set; a restored version travels with ITS
-    constraint set."""
-    import pytest
-
-    from f1_data_pipeline_spark.storage import (
-        ConstraintViolationError,
-        snapshot_add_constraint,
-        snapshot_clone,
-        snapshot_constraints,
-        snapshot_delete,
-        snapshot_optimize,
-        snapshot_restore,
-        snapshot_upsert,
-        snapshot_write,
-    )
-
-    tdir = str(tmp_path / "consm")
-    snapshot_write(
-        spark.createDataFrame([(k, float(k)) for k in range(20)],
-                              "k long, val double").repartition(4),
-        tdir, stats_cols=["k"],
-        constraints={"val_pos": "val >= 0"},  # declared at creation
-    )
-    assert snapshot_constraints(spark, tdir) == {"val_pos": "val >= 0"}
-    pre = snapshot_add_constraint(spark, tdir, "k_small", "k < 1000") - 1
-    snapshot_delete(spark, tdir, [("k", "=", 3)], mode="dv")
-    snapshot_delete(spark, tdir, [("k", "=", 4)])
-    snapshot_optimize(spark, tdir, target_file_bytes=1 << 30)
-    assert set(snapshot_constraints(spark, tdir)) == {"val_pos", "k_small"}
-
-    # clones inherit (shallow and deep)
-    for shallow, name in ((True, "sh"), (False, "dp")):
-        cdir = str(tmp_path / f"cl_{name}")
-        snapshot_clone(spark, tdir, cdir, shallow=shallow)
-        assert set(snapshot_constraints(spark, cdir)) == {"val_pos", "k_small"}
-        with pytest.raises(ConstraintViolationError):
-            snapshot_upsert(
-                spark, cdir,
-                spark.createDataFrame([(1, -1.0)], "k long, val double"),
-                key="k", cluster_files=1,
-            )
-
-    # restore to the pre-k_small version: only val_pos travels back
-    snapshot_restore(spark, tdir, pre)
-    assert snapshot_constraints(spark, tdir) == {"val_pos": "val >= 0"}
 
 
 def test_snapshot_clean_orphans(spark, tmp_path):
@@ -2795,10 +2379,8 @@ def test_snapshot_append_carries_files_untouched(spark, tmp_path):
         assert hi1 < lo2  # disjoint ranges: range clustering worked
 
 
-def test_snapshot_append_schema_and_constraints(spark, tmp_path):
+def test_snapshot_append_schema_evolution_and_cas(spark, tmp_path):
     from f1_data_pipeline_spark.storage import (
-        ConstraintViolationError,
-        snapshot_add_constraint,
         snapshot_append,
         snapshot_read,
         snapshot_version,
@@ -2819,16 +2401,7 @@ def test_snapshot_append_schema_and_constraints(spark, tmp_path):
     )
     rows = {r["k"]: (r["s"], r["w"]) for r in snapshot_read(spark, tdir).collect()}
     assert rows == {1: ("a", None), 2: (None, 1.5)}
-
-    # persistent CHECK constraints gate the NEW rows; nothing commits
-    snapshot_add_constraint(spark, tdir, "k_pos", "k >= 0")
     v = snapshot_version(spark, tdir)
-    with pytest.raises(ConstraintViolationError):
-        snapshot_append(
-            spark.createDataFrame([(-5, None, None)], "k long, s string, w double"),
-            tdir,
-        )
-    assert snapshot_version(spark, tdir) == v
 
     # CAS: a stale expected_version refuses
     from f1_data_pipeline_spark.storage import SnapshotConflictError
@@ -3117,76 +2690,6 @@ def test_snapshot_expire_log(spark, tmp_path, monkeypatch):
     assert st.snapshot_expire_log(spark, tdir, keep_last=5) == []
 
 
-def test_expire_log_clamps_below_live_clone_pins(spark, tmp_path, monkeypatch):
-    """Retention × clones composition: a live shallow clone's pinned
-    manifest is the only file-level record of what it carries, so
-    snapshot_expire_log must clamp its cut below the pin — and the full
-    clone → commits-past-horizon → expire → vacuum pipeline must leave
-    every clone row readable. Dropping the clone lifts the clamp."""
-    import os
-    import shutil
-
-    import f1_data_pipeline_spark.storage as st
-    from f1_data_pipeline_spark import snaplog
-
-    monkeypatch.setattr(snaplog, "SNAPSHOT_CHECKPOINT_INTERVAL", 1000)
-    tdir, cdir = str(tmp_path / "tbl"), str(tmp_path / "clone")
-    b = lambda lo, hi: spark.range(lo, hi).select(  # noqa: E731
-        F.col("id").alias("k"), (F.col("id") * 2.0).alias("v")
-    )
-    for i in range(5):
-        st.snapshot_append(b(i * 10, i * 10 + 10), tdir)
-    st.snapshot_clone(spark, tdir, cdir)  # pins source version 5
-    for i in range(5, 15):
-        st.snapshot_append(b(i * 10, i * 10 + 10), tdir)
-
-    # unclamped cut would be 10; the live pin at 5 clamps it to 4
-    assert st.snapshot_expire_log(spark, tdir, keep_last=5, dry_run=True) == [
-        1, 2, 3, 4,
-    ]
-    assert st.snapshot_expire_log(spark, tdir, keep_last=5) == [1, 2, 3, 4]
-    assert os.path.exists(f"{tdir}/_manifests/5.json")  # the pin survives
-
-    # vacuum still resolves the pin and protects the clone's files
-    st.snapshot_vacuum(spark, tdir, keep_last=1)
-    got = {r["k"] for r in st.snapshot_read(spark, cdir).collect()}
-    assert got == set(range(50))
-
-    # pin already at the floor: expiry is a clean no-op, not an error
-    assert st.snapshot_expire_log(spark, tdir, keep_last=1) == []
-
-    # dropping the clone lifts the clamp (stale registration swept)
-    shutil.rmtree(cdir)
-    assert st.snapshot_expire_log(spark, tdir, keep_last=5) == list(range(5, 11))
-    assert os.listdir(f"{tdir}/_clones") == []
-
-
-def test_vacuum_fails_typed_on_missing_live_pin_manifest(spark, tmp_path):
-    """Defense-in-depth: if a LIVE clone's pinned manifest vanished
-    out-of-band, vacuum must refuse typed — silently continuing used to
-    reclaim the clone's data files. force=True remains the escape hatch."""
-    import os
-
-    import f1_data_pipeline_spark.storage as st
-
-    tdir, cdir = str(tmp_path / "tbl"), str(tmp_path / "clone")
-    b = lambda lo, hi: spark.range(lo, hi).select(  # noqa: E731
-        F.col("id").alias("k"), (F.col("id") * 2.0).alias("v")
-    )
-    st.snapshot_append(b(0, 10), tdir)
-    st.snapshot_clone(spark, tdir, cdir)  # pins v1
-    for i in range(1, 4):
-        st.snapshot_append(b(i * 10, i * 10 + 10), tdir)
-    os.remove(f"{tdir}/_manifests/1.json")  # simulate out-of-band loss
-    with pytest.raises(FileNotFoundError, match="live clone .*pins source"):
-        st.snapshot_vacuum(spark, tdir, keep_last=1)
-    # dry_run takes the same protected walk — same refusal, no deletes
-    with pytest.raises(FileNotFoundError, match="force=True"):
-        st.snapshot_vacuum(spark, tdir, keep_last=1, dry_run=True)
-    st.snapshot_vacuum(spark, tdir, keep_last=1, force=True)  # explicit override
-    assert st.snapshot_read(spark, tdir).count() == 40
-
-
 def test_history_check_available_serves_expired_versions(
     spark, tmp_path, monkeypatch
 ):
@@ -3216,49 +2719,6 @@ def test_history_check_available_serves_expired_versions(
     assert [
         {k: v for k, v in r.items() if k != "available"} for r in avail
     ] == base
-
-
-def test_cdc_apply_same_version_insert_beats_delete(spark, tmp_path):
-    """Within ONE feed commit version a key can carry both a delete (new
-    tombstone) and an insert (restored or newly-appended position) — e.g.
-    a restore that swaps the deletion vector. A key with any live
-    position at the END of the commit is live, so the fold must prefer
-    live ops over deletes deterministically — never partition-layout
-    arrival order. Across versions, the version still dominates."""
-    from f1_data_pipeline_spark.storage import snapshot_read
-    from f1_data_pipeline_spark.streaming import stream_snapshot_cdc_apply
-
-    feed, rep, ckpt = tmp_path / "feed", tmp_path / "rep", tmp_path / "ck"
-    schema = "k long, v double, _change_type string, _commit_version long"
-    # two separate files so monotonically_increasing_id orders them by
-    # partition layout — the nondeterminism the op-rank must override
-    spark.createDataFrame(
-        [(7, 1.0, "insert", 5), (1, 10.0, "insert", 5)], schema
-    ).coalesce(1).write.parquet(str(feed))
-    spark.createDataFrame([(7, 2.0, "delete", 5)], schema).coalesce(
-        1
-    ).write.mode("append").parquet(str(feed))
-
-    def sync():
-        q = stream_snapshot_cdc_apply(
-            spark.readStream.schema(schema).parquet(str(feed)),
-            str(rep),
-            str(ckpt),
-            key="k",
-        )
-        q.awaitTermination(180)
-
-    sync()
-    rows = {r["k"]: r["v"] for r in snapshot_read(spark, str(rep)).collect()}
-    assert rows == {7: 1.0, 1: 10.0}
-
-    # a LATER version's delete still wins over the v5 insert
-    spark.createDataFrame([(7, 0.0, "delete", 6)], schema).coalesce(
-        1
-    ).write.mode("append").parquet(str(feed))
-    sync()
-    rows = {r["k"]: r["v"] for r in snapshot_read(spark, str(rep)).collect()}
-    assert rows == {1: 10.0}
 
 
 def test_snapshot_stats_agg_metadata_only(spark, tmp_path):
@@ -3302,11 +2762,9 @@ def test_snapshot_stats_agg_metadata_only(spark, tmp_path):
     import os
 
     from f1_data_pipeline_spark.snaplog import read_manifest
-    from f1_data_pipeline_spark.storage import _dv_key
-
     m = read_manifest(tdir, 3)
     dirty_keys = set((m.get("dv") or {}).get("files", {}))
-    clean = [e["path"] for e in m["files"] if _dv_key(e["path"]) not in dirty_keys]
+    clean = [e["path"] for e in m["files"] if e["path"] not in dirty_keys]
     assert clean  # the band deletes must not have touched every file
     for p in clean:
         os.rename(f"{tdir}/{p}", f"{tdir}/{p}.hidden")
@@ -3615,39 +3073,6 @@ def test_restamp_carries_txn_stamps(spark, tmp_path):
     assert props["txn"] == {"ingest": 4}
 
 
-def test_vacuum_survives_clone_registration_states(spark, tmp_path):
-    """Clone registrations publish by write-then-rename (a crash leaves
-    only a dot-hidden tmp that vacuum ignores); a legacy TORN .json
-    fails vacuum typed and actionable instead of a bare JSONDecodeError,
-    and force=True still reclaims."""
-    import os
-
-    from f1_data_pipeline_spark.storage import (
-        snapshot_clone,
-        snapshot_vacuum,
-        snapshot_write,
-    )
-
-    tdir = str(tmp_path / "tbl")
-    df = spark.range(0, 20).select(F.col("id").alias("k"))
-    snapshot_write(df, tdir, stats_cols=["k"])
-    snapshot_clone(spark, tdir, str(tmp_path / "clone"))
-    regs = [r for r in os.listdir(f"{tdir}/_clones") if not r.startswith(".")]
-    assert regs and all(r.endswith(".json") for r in regs)
-
-    # in-flight tmp from a crashed registration: ignored by vacuum
-    open(f"{tdir}/_clones/.deadbeef.tmp", "w").write("{half")
-    snapshot_vacuum(spark, tdir, keep_last=1, dry_run=True)
-
-    # legacy torn registration: typed, actionable, force bypasses
-    open(f"{tdir}/_clones/torn.json", "w").write("")
-    with pytest.raises(ValueError, match="unreadable clone registration"):
-        snapshot_vacuum(spark, tdir, keep_last=1, dry_run=True)
-    snapshot_vacuum(spark, tdir, keep_last=1, dry_run=True, force=True)
-    os.remove(f"{tdir}/_clones/torn.json")
-    snapshot_vacuum(spark, tdir, keep_last=1, dry_run=True)
-
-
 def test_snapshot_count_opens_only_boundary_files(spark, tmp_path):
     """Predicate-pushed metadata count: files whose envelope proves
     all-rows-match are counted from the manifest — pinned physically by
@@ -3657,7 +3082,6 @@ def test_snapshot_count_opens_only_boundary_files(spark, tmp_path):
 
     from f1_data_pipeline_spark.snaplog import read_manifest
     from f1_data_pipeline_spark.storage import (
-        _dv_key,
         _entry_all_match,
         _entry_prunable,
         snapshot_count,
@@ -3992,13 +3416,11 @@ def _kv_rows(spark, keys):
 @pytest.fixture(scope="module")
 def inheritance_bases(spark, tmp_path_factory):
     """Two small tables whose head record carries every table-level field
-    at once: schema, a CHECK constraint (``full`` only), a Bloom spec
-    (``full`` only), the change-data-feed flag, a deletion vector on the
-    100s file and properties holding both a plain entry and a ``txn``
-    stamp. ``feed`` omits the constraint and the Bloom spec, which the
-    ``snapshotfeed`` writer refuses by design."""
+    at once: schema, a Bloom spec (``full`` only), the change-data-feed
+    flag, a deletion vector on the 100s file and properties holding both
+    a plain entry and a ``txn`` stamp. ``feed`` omits the Bloom spec,
+    which the ``snapshotfeed`` writer refuses by design."""
     from f1_data_pipeline_spark.storage import (
-        snapshot_add_constraint,
         snapshot_append,
         snapshot_delete,
         snapshot_restamp,
@@ -4014,8 +3436,6 @@ def inheritance_bases(spark, tmp_path_factory):
             bloom_cols=["k"] if full else None, change_files=True,
         )
         snapshot_append(_kv_rows(spark, range(100, 110)).coalesce(1), tdir)
-        if full:
-            snapshot_add_constraint(spark, tdir, "v_pos", "v >= 0")
         snapshot_delete(spark, tdir, [("k", "=", 105)], mode="dv")
         snapshot_restamp(spark, tdir, {"src": "matrix", "txn": {"app": 1}})
         bases[name] = tdir
@@ -4033,13 +3453,6 @@ def _op_feed_write(mode):
         return tdir
 
     return run
-
-
-def _op_clone(spark, tdir, tmp):
-    from f1_data_pipeline_spark.storage import snapshot_clone
-
-    snapshot_clone(spark, tdir, str(tmp / "clone"))
-    return str(tmp / "clone")
 
 
 def _op(fn_name, *args, **kwargs):
@@ -4062,21 +3475,21 @@ _TXN_ONLY = {"txn": {"app": 1}}
 # case -> (base, op, expected op label, expected table-level fields).
 # Data-changing commits keep only the parent's txn stamps; content-
 # preserving ones carry the parent's properties wholesale; a full
-# replace, a clone and a restore start from their own deliberate source.
+# replace and a restore start from their own deliberate source.
 _INHERITANCE_CASES = {
     "write": (
         "full", _op("snapshot_write", lambda s: _kv_rows(s, range(5)), stats_cols=["k"]),
         "write",
-        dict(constraints=_PARENT, bloom_spec=None, cdf=True, dv=False, properties=None),
+        dict(bloom_spec=None, cdf=True, dv=False, properties=None),
     ),
     "append": (
         "full", _op("snapshot_append", lambda s: _kv_rows(s, range(200, 203))), "append",
-        dict(constraints=_PARENT, bloom_spec=_PARENT, cdf=True, dv=True, properties=_TXN_ONLY),
+        dict(bloom_spec=_PARENT, cdf=True, dv=True, properties=_TXN_ONLY),
     ),
     "upsert": (
         "full", _op("snapshot_upsert", lambda s: _kv_rows(s, [3]), "k"),
         "upsert",
-        dict(constraints=_PARENT, bloom_spec=_PARENT, cdf=True, dv=True, properties=_TXN_ONLY),
+        dict(bloom_spec=_PARENT, cdf=True, dv=True, properties=_TXN_ONLY),
     ),
     "apply_cdc": (
         "full", _op(
@@ -4085,51 +3498,38 @@ _INHERITANCE_CASES = {
             "k",
         ),
         "cdc",
-        dict(constraints=_PARENT, bloom_spec=_PARENT, cdf=True, dv=True, properties=_TXN_ONLY),
+        dict(bloom_spec=_PARENT, cdf=True, dv=True, properties=_TXN_ONLY),
     ),
     "merge": (
         "full", _op("snapshot_merge", lambda s: _kv_rows(s, [2, 300]), "k"),
         "merge",
-        dict(constraints=_PARENT, bloom_spec=_PARENT, cdf=True, dv=True, properties=_TXN_ONLY),
+        dict(bloom_spec=_PARENT, cdf=True, dv=True, properties=_TXN_ONLY),
     ),
     "delete_cow": (
         "full", _op("snapshot_delete", [("k", "=", 1)], mode="cow"), "delete",
-        dict(constraints=_PARENT, bloom_spec=_PARENT, cdf=True, dv=True, properties=_TXN_ONLY),
+        dict(bloom_spec=_PARENT, cdf=True, dv=True, properties=_TXN_ONLY),
     ),
     "delete_dv": (
         "full", _op("snapshot_delete", [("k", "=", 1)], mode="dv"), "delete",
-        dict(constraints=_PARENT, bloom_spec=_PARENT, cdf=True, dv=True, properties=_TXN_ONLY),
-    ),
-    "clone": (
-        "full", _op_clone, "clone",
-        dict(constraints=_PARENT, bloom_spec=_PARENT, cdf=True, dv=True, properties=None),
+        dict(bloom_spec=_PARENT, cdf=True, dv=True, properties=_TXN_ONLY),
     ),
     "restamp": (
         "full", _op("snapshot_restamp", {"note": 2}), "restamp",
-        dict(constraints=_PARENT, bloom_spec=_PARENT, cdf=True, dv=True,
+        dict(bloom_spec=_PARENT, cdf=True, dv=True,
              properties={"note": 2, "txn": {"app": 1}}),
     ),
-    "add_constraint": (
-        "full", _op("snapshot_add_constraint", "k_nn", "k IS NOT NULL"), "add-constraint",
-        dict(constraints={"v_pos": "v >= 0", "k_nn": "k IS NOT NULL"}, bloom_spec=_PARENT,
-             cdf=True, dv=True, properties=_PARENT),
-    ),
-    "drop_constraint": (
-        "full", _op("snapshot_drop_constraint", "v_pos"), "drop-constraint",
-        dict(constraints=None, bloom_spec=_PARENT, cdf=True, dv=True, properties=_PARENT),
-    ),
     "restore": (
-        # v1 predates the constraint, the deletion vector and the stamp
+        # v1 predates the deletion vector and the stamp
         "full", _op("snapshot_restore", 1), "restore",
-        dict(constraints=None, bloom_spec=_PARENT, cdf=True, dv=False, properties=None),
+        dict(bloom_spec=_PARENT, cdf=True, dv=False, properties=None),
     ),
     "optimize": (
         "full", _op("snapshot_optimize"), "optimize",
-        dict(constraints=_PARENT, bloom_spec=_PARENT, cdf=True, dv=False, properties=_PARENT),
+        dict(bloom_spec=_PARENT, cdf=True, dv=False, properties=_PARENT),
     ),
     "feed_append": (
         "feed", _op_feed_write("append"), "append",
-        dict(constraints=None, bloom_spec=None, cdf=True, dv=True, properties=_TXN_ONLY),
+        dict(bloom_spec=None, cdf=True, dv=True, properties=_TXN_ONLY),
     ),
     # the SparkSession-less writer cannot materialize a replace's netted
     # diff, so an overwrite of a change-data-feed table is refused
@@ -4140,8 +3540,8 @@ _INHERITANCE_CASES = {
 @pytest.mark.parametrize("case", sorted(_INHERITANCE_CASES))
 def test_commit_record_inheritance_matrix(spark, inheritance_bases, tmp_path, case):
     """Every commit kind derives the table-level fields of its record
-    from the parent record by one rule (schema, constraints, Bloom spec,
-    change-data-feed flag, deletion vector, properties)."""
+    from the parent record by one rule (schema, Bloom spec, change-data-
+    feed flag, deletion vector, properties)."""
     import shutil
 
     from f1_data_pipeline_spark.snaplog import read_manifest
@@ -4162,7 +3562,6 @@ def test_commit_record_inheritance_matrix(spark, inheritance_bases, tmp_path, ca
     assert rec["op"] == label
     assert rec.get("schema") == parent["schema"]
     got = {
-        "constraints": rec.get("constraints"),
         "bloom_spec": rec.get("bloom_spec"),
         "cdf": rec.get("cdf"),
         "dv": bool(rec.get("dv")),
@@ -4408,10 +3807,7 @@ def _writer_cycle(spark, root) -> dict[str, str]:
     S.snapshot_delete(spark, main, [("k", ">=", 60)], mode="cow")
     S.snapshot_optimize(spark, main)
     S.snapshot_restamp(spark, main, {"step": "restamp"})
-    S.snapshot_add_constraint(spark, main, "k_nonneg", "k >= 0")
-    S.snapshot_drop_constraint(spark, main, "k_nonneg")
     S.snapshot_restore(spark, main, 2)
-    S.snapshot_clone(spark, main, f"{root}/clone")
     feedsource.register(spark)
     feed = f"{root}/feed"
     for mode, lo in (("append", 0), ("append", 10), ("overwrite", 20)):
@@ -4426,8 +3822,7 @@ def _writer_cycle(spark, root) -> dict[str, str]:
     )
     q.awaitTermination(120)
     return {
-        "main": main, "first": first, "clone": f"{root}/clone", "feed": feed,
-        "stream": f"{root}/stream",
+        "main": main, "first": first, "feed": feed, "stream": f"{root}/stream",
     }
 
 
@@ -4450,7 +3845,7 @@ def test_every_writer_publishes_files_schema_and_op(spark, tmp_path):
             assert snaplog.read_manifest(tdir, v) == m
     assert ops == {
         "write", "append", "upsert", "cdc", "merge", "delete", "optimize",
-        "restamp", "add-constraint", "drop-constraint", "restore", "clone",
+        "restamp", "restore",
     }
 
 
@@ -4536,11 +3931,11 @@ def test_staged_writer_losing_to_a_metadata_commit_leaves_no_stage(
 def test_range_clustered_append_evaluates_its_batch_once(spark, tmp_path):
     """repartitionByRange samples its input in a job of its own; the
     staged batch is persisted first, so a clustered append evaluates
-    each batch row once."""
-    from f1_data_pipeline_spark.storage import snapshot_append, snapshot_write
+    each batch row once — the first commit, which creates the table,
+    included."""
+    from f1_data_pipeline_spark.storage import snapshot_append
 
     tdir = str(tmp_path / "tbl")
-    snapshot_write(spark.range(10).withColumnRenamed("id", "k"), tdir)
     evals = spark.sparkContext.accumulator(0)
 
     @F.udf("long")
@@ -4551,3 +3946,5 @@ def test_range_clustered_append_evaluates_its_batch_once(spark, tmp_path):
     batch = spark.range(100, 200, numPartitions=4).select(counted("id").alias("k"))
     snapshot_append(batch, tdir, cluster_by=["k"], cluster_files=2)
     assert evals.value / 100 == 1.0
+    snapshot_append(batch, tdir, cluster_by=["k"], cluster_files=2)
+    assert evals.value / 100 == 2.0

@@ -537,156 +537,6 @@ def test_stream_heavy_hitters_query_matches_batch_twin(spark):
     assert cnts == sorted(cnts, reverse=True) and all(c > 0 for c in cnts)
 
 
-def test_stream_snapshot_upsert_maintains_versioned_table(spark, tmp_path):
-    """Streaming copy-on-write maintenance of a snapshot table: two
-    availableNow drops on one checkpoint land as successive versions;
-    within-batch duplicates fold last-write-wins in arrival order; files
-    the batch's keys cannot touch are carried by reference, not
-    rewritten; and replaying a batch (fresh checkpoint, same data)
-    converges to identical CONTENT — effectively-once through key
-    idempotence, with only the version history recording the replay."""
-    import os
-
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from f1_data_pipeline_spark.snaplog import read_manifest
-    from f1_data_pipeline_spark.storage import (
-        snapshot_read,
-        snapshot_version,
-    )
-
-    src = tmp_path / "changes"
-    tdir = str(tmp_path / "tbl")
-    os.makedirs(src)
-    schema = StructType(
-        [StructField("k", LongType()), StructField("v", StringType())]
-    )
-
-    def write_drop(name, rows):
-        spark.createDataFrame(rows, schema).repartitionByRange(4, "k").write.parquet(
-            str(src / name)
-        )
-
-    def run(ck):
-        q = strm.stream_snapshot_upsert(
-            spark, str(src) + "/*", ck, tdir, key="k", schema=schema
-        )
-        assert q.awaitTermination(180)
-
-    # drop 1 bootstraps the table (includes an in-batch duplicate: k=7
-    # arrives twice, later row must win)
-    write_drop("d1", [(i, f"a-{i}") for i in range(100)] + [(7, "a-7-final")])
-    run(str(tmp_path / "ck"))
-    assert snapshot_version(spark, tdir) == 1
-    t1 = {r["k"]: r["v"] for r in snapshot_read(spark, tdir).collect()}
-    assert len(t1) == 100 and t1[7] == "a-7-final"
-
-    # drop 2 updates a narrow key band + inserts: copy-on-write carries
-    # the untouched files of v=1 by reference
-    write_drop("d2", [(i, f"b-{i}") for i in range(98, 105)])
-    run(str(tmp_path / "ck"))
-    assert snapshot_version(spark, tdir) == 2
-    cur = {r["k"]: r["v"] for r in snapshot_read(spark, tdir).collect()}
-    assert len(cur) == 105
-    assert cur[5] == "a-5" and cur[98] == "b-98" and cur[104] == "b-104"
-    carried = [
-        e for e in read_manifest(tdir, 2)["files"] if e["path"].startswith("v=1/")
-    ]
-    assert carried  # untouched v=1 files referenced, not rewritten
-    # old version still time-travels
-    assert snapshot_read(spark, tdir, version=1).count() == 100
-
-    # replay both drops on a FRESH checkpoint: content identical
-    run(str(tmp_path / "ck2"))
-    assert snapshot_version(spark, tdir) > 2
-    again = {r["k"]: r["v"] for r in snapshot_read(spark, tdir).collect()}
-    assert again == cur
-
-
-def test_stream_snapshot_upsert_quarantines_expectation_violations(spark, tmp_path):
-    """DLT-policy expectations on the streaming maintainer: violating
-    rows are diverted to the quarantine table tagged with every rule
-    they failed (NULL rule results count as violations) and never reach
-    a committed version; the clean remainder upserts normally."""
-    import os
-
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from f1_data_pipeline_spark.storage import snapshot_read
-
-    src = tmp_path / "changes"
-    tdir = str(tmp_path / "tbl")
-    qdir = str(tmp_path / "quarantine")
-    os.makedirs(src)
-    schema = StructType(
-        [StructField("k", LongType()), StructField("v", StringType())]
-    )
-    rows = [(i, f"a-{i}") for i in range(20)]
-    rows[3] = (-3, "a-3")          # fails k_nonneg
-    rows[7] = (7, None)            # fails v_present (NULL rule result)
-    rows[9] = (-9, None)           # fails both
-    spark.createDataFrame(rows, schema).write.parquet(str(src / "d1"))
-
-    q = strm.stream_snapshot_upsert(
-        spark, str(src) + "/*", str(tmp_path / "ck"), tdir, key="k",
-        schema=schema,
-        expectations={"k_nonneg": "k >= 0", "v_present": "v IS NOT NULL"},
-        quarantine_dir=qdir,
-    )
-    assert q.awaitTermination(180)
-
-    table = {r["k"]: r["v"] for r in snapshot_read(spark, tdir).collect()}
-    assert len(table) == 17 and -3 not in table and 7 not in table and -9 not in table
-    quar = {r["k"]: r["failed_rules"] for r in spark.read.parquet(qdir).collect()}
-    assert quar == {-3: "k_nonneg", 7: "v_present", -9: "k_nonneg,v_present"}
-
-
-def test_stream_snapshot_upsert_applies_tombstones(spark, tmp_path):
-    """op_col changelog maintenance: the second drop's tombstones remove
-    keys, updates replace, and an insert-then-delete of the same key
-    within ONE batch deletes (the fold keeps arrival order)."""
-    import os
-
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from f1_data_pipeline_spark.storage import snapshot_read
-
-    src = tmp_path / "changes"
-    tdir = str(tmp_path / "tbl")
-    os.makedirs(src)
-    schema = StructType(
-        [
-            StructField("k", LongType()),
-            StructField("v", StringType()),
-            StructField("op", StringType()),
-        ]
-    )
-
-    def run():
-        q = strm.stream_snapshot_upsert(
-            spark, str(src) + "/*", str(tmp_path / "ck"), tdir, key="k",
-            schema=schema, op_col="op",
-        )
-        assert q.awaitTermination(180)
-
-    # drop 1: 50 inserts, plus k=42 inserted THEN deleted in the same batch
-    d1 = [(i, f"a-{i}", "I") for i in range(50)] + [(42, None, "D")]
-    spark.createDataFrame(d1, schema).coalesce(1).write.parquet(str(src / "d1"))
-    run()
-    t1 = {r["k"]: r["v"] for r in snapshot_read(spark, tdir).collect()}
-    assert len(t1) == 49 and 42 not in t1
-
-    # drop 2: update k=1, delete k=2, insert k=100
-    d2 = [(1, "b-1", "U"), (2, None, "D"), (100, "b-100", "I")]
-    spark.createDataFrame(d2, schema).coalesce(1).write.parquet(str(src / "d2"))
-    run()
-    t2 = {r["k"]: r["v"] for r in snapshot_read(spark, tdir).collect()}
-    assert len(t2) == 49  # 49 - 1 delete + 1 insert
-    assert t2[1] == "b-1" and 2 not in t2 and t2[100] == "b-100"
-    # the op column itself is never stored
-    assert "op" not in snapshot_read(spark, tdir).columns
-
-
 def test_lap_stream_into_snapshot_table_k5_parity(spark, wire_dir, tmp_path):
     """The reference's production lap flow re-targeted at the lakehouse:
     bronze wire replay → decode_lap_data (A3 in-batch merge) →
@@ -732,296 +582,6 @@ def test_lap_stream_into_snapshot_table_k5_parity(spark, wire_dir, tmp_path):
     want = sorted(tuple(str(r[c]) for c in cols) for r in batch.collect())
     assert got == want  # row-for-row parity with the batch decode
     assert snapshot_version(spark, tdir) >= 2  # replay recorded as versions
-
-
-def test_stream_to_table_to_downstream_sync_via_change_feed(
-    spark, tmp_path, monkeypatch
-):
-    """The full lakehouse loop: a change stream maintains the primary
-    snapshot table (copy-on-write commits), and a DOWNSTREAM replica syncs
-    from it through the change data feed (``sync_replica_from_changes``:
-    initial load, then per-span incremental applies stamped with the
-    source version in the replica's own commit). After every sync the
-    downstream content equals the primary exactly; a sync that dies
-    before its commit leaves the stamp behind and the next sync redoes
-    the span; a caught-up sync commits nothing."""
-    import os
-
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    import f1_data_pipeline_spark.storage as st
-    from f1_data_pipeline_spark.analytics import sync_replica_from_changes
-    from f1_data_pipeline_spark.storage import (
-        snapshot_changes,
-        snapshot_read,
-        snapshot_version,
-    )
-
-    src = tmp_path / "changes"
-    tdir = str(tmp_path / "primary")
-    ddir = str(tmp_path / "downstream")
-    os.makedirs(src)
-    schema = StructType(
-        [StructField("k", LongType()), StructField("v", StringType())]
-    )
-
-    def run(ck):
-        q = strm.stream_snapshot_upsert(
-            spark, str(src) + "/*", ck, tdir, key="k", schema=schema
-        )
-        assert q.awaitTermination(180)
-
-    def sync_downstream():
-        rep_ver, src_ver = sync_replica_from_changes(spark, tdir, "k", ddir)
-        assert src_ver == snapshot_version(spark, tdir)
-        return rep_ver
-
-    def table(d):
-        return {r["k"]: r["v"] for r in snapshot_read(spark, d).collect()}
-
-    # drop 1 bootstraps primary; downstream takes the initial load
-    spark.createDataFrame(
-        [(i, f"a-{i}") for i in range(50)], schema
-    ).repartitionByRange(4, "k").write.parquet(str(src / "d1"))
-    run(str(tmp_path / "ck"))
-    sync_downstream()
-    assert table(ddir) == table(tdir)
-
-    # drop 2: updates + inserts flow through as one incremental span
-    spark.createDataFrame(
-        [(i, f"b-{i}") for i in range(48, 55)], schema
-    ).repartitionByRange(4, "k").write.parquet(str(src / "d2"))
-    run(str(tmp_path / "ck"))
-    # incremental, not a re-load: only the changed span flows
-    feed = snapshot_changes(spark, tdir, "k", 1, snapshot_version(spark, tdir))
-    assert feed.count() == 2 + 2 + 5  # 2 updates (pre+post) + 5 inserts
-    sync_downstream()
-    assert table(ddir) == table(tdir)
-
-    # a sync that dies after reading the feed, before its commit: the
-    # replica keeps its old version and stamp, the next sync redoes it
-    spark.createDataFrame(
-        [(0, "c-0")], schema
-    ).write.parquet(str(src / "d3"))
-    run(str(tmp_path / "ck"))
-    before = snapshot_version(spark, ddir)
-
-    def crash(*a, **k):
-        raise RuntimeError("simulated crash before the replica commit")
-
-    monkeypatch.setattr(st, "snapshot_apply_cdc", crash)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        sync_downstream()
-    monkeypatch.undo()
-    assert snapshot_version(spark, ddir) == before
-    assert table(ddir) != table(tdir)
-    synced = sync_downstream()  # re-reads the same span and applies it
-    assert table(ddir) == table(tdir)
-    # caught up: the next sync commits nothing
-    assert sync_downstream() == synced == snapshot_version(spark, ddir)
-
-
-def test_stream_snapshot_upsert_bloom_bootstrap_survives_maintenance(spark, tmp_path):
-    """bloom_cols on the streaming maintainer: the bootstrap commit
-    stores the spec, later streamed upsert commits rebuild filters for
-    their staged files, and a point lookup on the hash-distributed key
-    prunes files after BOTH drops."""
-    import hashlib
-    import os
-
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    from f1_data_pipeline_spark.storage import snapshot_read, snapshot_version
-
-    src = tmp_path / "changes"
-    tdir = str(tmp_path / "tbl")
-    os.makedirs(src)
-    schema = StructType(
-        [StructField("h", StringType()), StructField("v", StringType())]
-    )
-
-    def drop(name, ids, tag):
-        rows = [(hashlib.md5(str(i).encode()).hexdigest(), f"{tag}-{i}") for i in ids]
-        spark.createDataFrame(rows, schema).repartition(4).write.parquet(
-            str(src / name)
-        )
-
-    def run(ck):
-        q = strm.stream_snapshot_upsert(
-            spark, str(src) + "/*", ck, tdir, key="h", schema=schema,
-            bloom_cols=["h"],
-        )
-        assert q.awaitTermination(180)
-
-    drop("d1", range(500), "a")
-    run(str(tmp_path / "ck"))
-    assert snapshot_version(spark, tdir) == 1
-    drop("d2", range(490, 520), "b")
-    run(str(tmp_path / "ck"))
-    assert snapshot_version(spark, tdir) == 2
-
-    total = len(snapshot_read(spark, tdir).inputFiles())
-    for probe_id, want in [(3, "a-3"), (515, "b-515")]:
-        probe = hashlib.md5(str(probe_id).encode()).hexdigest()
-        got = snapshot_read(spark, tdir, where=[("h", "=", probe)])
-        assert [r["v"] for r in got.collect()] == [want]
-        assert len(got.inputFiles()) < total  # bloom pruned on a hashed key
-
-
-def test_stream_snapshot_upsert_mid_stream_schema_evolution(spark, tmp_path):
-    """r8 judge ask #5: the realistic CDC schema change — the maintainer
-    redeploys with a widened source schema mid-stream — evolves the
-    snapshot table additively from its checkpoint, and the change data
-    feed a downstream consumer reads crosses the evolution (it reads every
-    version through its own committed schema)."""
-    import os
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from f1_data_pipeline_spark.storage import (
-        snapshot_changes,
-        snapshot_read,
-        snapshot_version,
-    )
-
-    src = tmp_path / "changes"
-    tdir = str(tmp_path / "tbl")
-    ck = str(tmp_path / "ck")
-    os.makedirs(src)
-
-    v1 = StructType(
-        [
-            StructField("k", LongType()),
-            StructField("g", StringType()),
-            StructField("x", DoubleType()),
-        ]
-    )
-    v2 = StructType(v1.fields + [StructField("region", StringType())])
-
-    spark.createDataFrame(
-        [(i, f"g{i % 3}", float(i)) for i in range(30)], v1
-    ).write.parquet(str(src / "d1"))
-    q = strm.stream_snapshot_upsert(
-        spark, str(src) + "/*", ck, tdir, key="k", schema=v1
-    )
-    assert q.awaitTermination(180)
-    assert snapshot_version(spark, tdir) == 1
-
-    # redeploy: same checkpoint, widened schema, evolve_schema on; the
-    # new drop carries the added column and updates a key band
-    spark.createDataFrame(
-        [(i, f"g{i % 3}", float(i) * 10.0, f"r{i % 2}") for i in range(25, 40)], v2
-    ).write.parquet(str(src / "d2"))
-    q = strm.stream_snapshot_upsert(
-        spark, str(src) + "/*", ck, tdir, key="k", schema=v2, evolve_schema=True
-    )
-    assert q.awaitTermination(180)
-    assert snapshot_version(spark, tdir) == 2
-
-    cur = snapshot_read(spark, tdir)
-    assert "region" in cur.columns and cur.count() == 40
-    rows = {r["k"]: r for r in cur.collect()}
-    assert rows[5]["region"] is None and rows[5]["x"] == 5.0  # pre-evolution row
-    assert rows[30]["region"] == "r0" and rows[30]["x"] == 300.0
-    assert rows[39]["region"] == "r1"
-
-    # the change feed across the evolution: pre-images read through the
-    # v1 schema (region null-filled), post-images and inserts carry it
-    feed = snapshot_changes(spark, tdir, "k", 1, 2)
-    assert "region" in feed.columns
-    by_kind: dict[str, dict] = {}
-    for r in feed.collect():
-        by_kind.setdefault(r["_change_type"], {})[r["k"]] = r
-    assert set(by_kind) == {"update_preimage", "update_postimage", "insert"}
-    assert set(by_kind["update_preimage"]) == set(range(25, 30))
-    assert set(by_kind["update_postimage"]) == set(range(25, 30))
-    assert set(by_kind["insert"]) == set(range(30, 40))
-    assert all(r["region"] is None for r in by_kind["update_preimage"].values())
-    assert by_kind["update_preimage"][27]["x"] == 27.0
-    assert by_kind["update_postimage"][27]["x"] == 270.0
-    assert by_kind["update_postimage"][27]["region"] == "r1"
-
-    # without evolve_schema a widened batch against a v1-schema table
-    # must fail loudly, not silently drop the column: bootstrap a second
-    # table from d1 only, then stream the widened drop at it
-    import pytest
-
-    tdir2 = str(tmp_path / "tbl2")
-    q = strm.stream_snapshot_upsert(
-        spark, str(src / "d1"), str(tmp_path / "ck2"), tdir2, key="k", schema=v1
-    )
-    assert q.awaitTermination(180)
-    q = strm.stream_snapshot_upsert(
-        spark, str(src / "d2"), str(tmp_path / "ck3"), tdir2, key="k", schema=v2
-    )
-    with pytest.raises(Exception, match="evolve_schema"):
-        q.awaitTermination(180)
-    assert "region" not in snapshot_read(spark, tdir2).columns
-
-
-def test_stream_snapshot_upsert_aborts_on_table_constraint(spark, tmp_path):
-    """Persistent table CHECK constraints compose with the streaming
-    maintainer the opposite way from expectations: a batch violating a
-    committed constraint ABORTS the stream typed (the table owner's
-    invariant must stop the pipeline), no violating version is
-    committed, and after fixing the data the same checkpoint resumes and
-    replays the batch."""
-    import os
-
-    import pytest
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from f1_data_pipeline_spark.storage import (
-        ConstraintViolationError,
-        snapshot_add_constraint,
-        snapshot_read,
-        snapshot_version,
-    )
-
-    src = tmp_path / "changes"
-    tdir = str(tmp_path / "tbl")
-    os.makedirs(src)
-    schema = StructType(
-        [StructField("k", LongType()), StructField("v", StringType())]
-    )
-    spark.createDataFrame(
-        [(i, f"a-{i}") for i in range(10)], schema
-    ).write.parquet(str(src / "d1"))
-    q = strm.stream_snapshot_upsert(
-        spark, str(src) + "/*", str(tmp_path / "ck"), tdir, key="k", schema=schema
-    )
-    assert q.awaitTermination(180)
-    snapshot_add_constraint(spark, tdir, "v_present", "v IS NOT NULL")
-    v0 = snapshot_version(spark, tdir)
-
-    # a violating drop kills the stream with the typed error
-    bad = str(src / "d2")
-    spark.createDataFrame([(3, None), (20, "b-20")], schema).write.parquet(bad)
-    q = strm.stream_snapshot_upsert(
-        spark, str(src) + "/*", str(tmp_path / "ck"), tdir, key="k", schema=schema
-    )
-    with pytest.raises(Exception) as ei:
-        q.awaitTermination(180)
-    assert "v_present" in str(ei.value)
-    assert snapshot_version(spark, tdir) == v0  # nothing committed
-
-    # fix the data in place; the SAME checkpoint replays the batch
-    import shutil
-
-    shutil.rmtree(bad)
-    spark.createDataFrame([(3, "fixed"), (20, "b-20")], schema).write.parquet(bad)
-    q = strm.stream_snapshot_upsert(
-        spark, str(src) + "/*", str(tmp_path / "ck"), tdir, key="k", schema=schema
-    )
-    assert q.awaitTermination(180)
-    table = {r["k"]: r["v"] for r in snapshot_read(spark, tdir).collect()}
-    assert table[3] == "fixed" and table[20] == "b-20" and len(table) == 11
 
 
 def test_stream_snapshot_append_exactly_once(spark, tmp_path):
